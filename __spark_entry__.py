@@ -46,7 +46,6 @@ from satellitetools_spark.operators import skew as SK
 from satellitetools_spark.operators import temporal as TEMPORAL
 from satellitetools_spark.operators import spatial as SP
 from satellitetools_spark.operators import text as TX
-from satellitetools_spark.operators.biophys_op import run_snap_biophys
 from satellitetools_spark.operators.knn_fill import knn_fill
 from satellitetools_spark.operators.indices import compute_vegetation_index
 from satellitetools_spark.operators.quality import (
@@ -117,7 +116,7 @@ def q_geo_qi(spark, sf_dir):
     """A1: per-scene SCL class percentages at QI scale."""
     docs = _geo_docs(spark, sf_dir)
     dim = doc_dimension(docs)
-    scl = decode_documents(docs, ["SCL"], gsd_override=20.0, dim=dim)
+    scl = decode_documents(docs, ["SCL"], gsd_override=20.0)
     qi = quality_information(scl, dim)
     cols = [F.round(c, 9).alias(c.lower()) for c in SCL_CLASSES]
     return qi.select("doc_id", "aoi", "tileid", "assetid", "productid", *cols)
@@ -128,7 +127,7 @@ def q_geo_qi_filter(spark, sf_dir):
     intended dedup, and tile-mode filtering."""
     docs = _geo_docs(spark, sf_dir)
     dim = doc_dimension(docs)
-    scl = decode_documents(docs, ["SCL"], gsd_override=20.0, dim=dim)
+    scl = decode_documents(docs, ["SCL"], gsd_override=20.0)
     qi = quality_information(scl, dim)
     surv = filter_docs_by_quality(dim, qi, qi_threshold=0.02)
     return surv.select("doc_id", "aoi", "tileid", "productid")
@@ -166,8 +165,7 @@ def q_geo_ndvi_timeseries(spark, sf_dir):
 def q_geo_lai_pixels(spark, sf_dir):
     """M1-M8: per-pixel SNAP LAI over every document (no QI filter)."""
     docs = _geo_docs(spark, sf_dir)
-    px = decode_documents(docs)
-    px = run_snap_biophys(px, "LAI")
+    px = decode_documents(docs, snap_vars=["LAI"])
     return px.select("doc_id", "x", "y", F.round("lai", 5).alias("lai"))
 
 
@@ -175,8 +173,7 @@ def q_geo_lai_timeseries(spark, sf_dir):
     """Full flagship: QI filter → SNAP LAI → stats + uncertainty + 95% CI
     (A3-A10)."""
     docs = _geo_docs(spark, sf_dir)
-    _qi, px = get_s2_qi_and_data(docs)
-    px = run_snap_biophys(px, "LAI")
+    _qi, px = get_s2_qi_and_data(docs, snap_vars=["LAI"])
     ts = dataset_to_timeseries(px, ["lai"], add_uncertainty=True,
                                add_confidence_intervals=True)
     return ts.select(
@@ -3077,20 +3074,13 @@ def q_emb_kcore(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is deliberate: the driver's correctness gate recorded only
-    # the FIRST 50 registered queries in rounds 1-2, so entries rotate
-    # per round — (a) queries that were red in the last driver artifact
-    # come first (their fixes must show up green), then (b) queries the
-    # driver has never checked, then (c) long-stable previously-green
-    # queries. Consumers (bench, tests, the driver) look up by key;
-    # nothing depends on position except the driver's check window.
-    q = {
-        # -- (a) red in CORRECTNESS_r02 (canonicalization fixed in r3) --
+    """Every registered query by name, in declaration order. Consumers
+    (the oracle gate, tests) look entries up by key."""
+    return {
         "docs_drift": q_docs_drift,
         "docs_snapshot_diff": q_docs_snapshot_diff,
         "docs_line_dedup": q_docs_line_dedup,
         "geo_scl_pivot": q_geo_scl_pivot,
-        # -- (b) never driver-checked before round 3 --
         "docs_char_entropy": q_docs_char_entropy,
         "docs_bpe_merges": q_docs_bpe_merges,
         "geo_scl_coarse_mode": q_geo_scl_coarse_mode,
@@ -3135,12 +3125,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo_distance_join": q_geo_distance_join,
         "docs_pps_sample": q_docs_pps_sample,
         "docs_wrs_sample": q_docs_wrs_sample,
-        # r1-checked only (green there), re-entering the window
         "docs_quality": q_docs_quality,
         "docs_token_stats": q_docs_token_stats,
-        # ---- window boundary (~50) under the r1/r2 driver cap ----
         "docs_lang_id": q_docs_lang_id,
-        # -- (c) green in CORRECTNESS_r02, stable --
         "geo_pixels": q_geo_pixels,
         "geo_qi": q_geo_qi,
         "geo_qi_filter": q_geo_qi_filter,
@@ -3187,8 +3174,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo_knn_join": q_geo_knn_join,
         "docs_quality_pctile": q_docs_quality_pctile,
         "docs_fuzzy_pairs": q_docs_fuzzy_pairs,
-        # -- new in round 3 (appended so the rotation window above is
-        #    undisturbed; enter the driver window in round 4) --
         "docs_bpe_encode": q_docs_bpe_encode,
         "events_transitions": q_events_transitions,
         "geo_hillshade": q_geo_hillshade,
@@ -3338,84 +3323,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_median_test": q_events_median_test,
         "docs_trend_test": q_docs_trend_test,
     }
-    # SELF-DRAINING rotation: the driver's correctness gate records only
-    # the FIRST ~50 registered queries each round, so ordering decides
-    # which queries ever receive a hard driver-side check. Entries with
-    # no row in ANY committed CORRECTNESS_r*.json artifact are hoisted
-    # to the front (priority prefix first — round 4 chose the 7
-    # formerly rows-only queries whose oracles became value-checked
-    # ground truth, then the inference/stats family with its 1-row
-    # float outputs, the canonicalization-drift bait, including every
-    # operator touched by the r4 fixes); already-checked entries sink.
-    # As each round's artifact lands in the repo, the next round's
-    # window automatically advances to the next 50 never-checked names
-    # — no manual reorder needed, and the registry stays frozen at 245.
-    checked = _driver_checked_rounds()
-    never = [k for k in q if k not in checked]
-    never_set = set(never)
-    # Already-checked entries sink, STALEST CHECK FIRST (r4 advisor):
-    # once the never-checked backlog is smaller than the ~50-query
-    # window (round 6: 48 left), the window's spare slots automatically
-    # re-check the queries whose driver evidence is oldest — a rolling
-    # regression re-check instead of check-once-forever. Ties break on
-    # registry name for determinism.
-    recheck = sorted((k for k in q if k in checked),
-                     key=lambda k: (checked[k], k))
-    order = ([k for k in _R4_DRIVER_WINDOW
-              if k in q and k in never_set]
-             + [k for k in never if k not in _R4_SET]
-             + recheck)
-    return {k: q[k] for k in order}
-
-
-def _driver_checked_rounds() -> dict:
-    """name → LATEST round number with a row in a committed driver
-    CORRECTNESS artifact (membership test == checked-at-all)."""
-    import glob as _glob
-    import json as _json
-    import re as _re
-    rounds: dict = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for p in sorted(_glob.glob(os.path.join(here,
-                                            "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)", os.path.basename(p))
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(p) as f:
-                d = _json.load(f)
-            if isinstance(d, dict):
-                for k in d:
-                    rounds[k] = max(rounds.get(k, 0), rnd)
-        except (OSError, ValueError):
-            continue
-    return rounds
-
-
-def _driver_checked_names() -> set:
-    """Names with a row in any committed driver CORRECTNESS artifact."""
-    return set(_driver_checked_rounds())
-
-
-_R4_DRIVER_WINDOW = [
-    # (a) rows-only -> value-checked upgrades
-    "geo_hull", "geo_simplify", "geo_clip", "geo_kriging",
-    "docs_isotonic", "events_dtw", "docs_logistic",
-    # (b) never-driver-checked stats/eval family + this round's fixes
-    "events_welch", "events_anova", "docs_mwu", "docs_kruskal",
-    "events_ks", "events_psi", "docs_roc_auc", "docs_calibration",
-    "docs_brier", "docs_gains", "docs_mi", "docs_cramers_v",
-    "events_jsd", "docs_fdr", "events_bootstrap", "docs_avg_precision",
-    "docs_confusion", "docs_kappa", "events_kendall", "docs_woe_iv",
-    "docs_fairness", "events_conformal", "docs_heavy_hitters",
-    "emb_retrieval_metrics", "emb_ivf_recall", "geo_domain_check",
-    "geo_span_profile", "events_cuped", "docs_hosmer_lemeshow",
-    "events_wilcoxon", "docs_mcnemar", "events_bland_altman",
-    "emb_rbo", "events_wasserstein", "events_cohens_d",
-    "events_brown_forsythe", "docs_vocab_richness", "emb_adamic_adar",
-    "emb_kcore", "docs_naive_bayes", "docs_allpairs_jaccard",
-    "events_haversine", "events_logrank",
-]
-_R4_SET = frozenset(_R4_DRIVER_WINDOW)
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 from importlib import resources
-from typing import Dict, Iterable, List
+from typing import Dict, List
 
 import numpy as np
 
@@ -161,18 +161,6 @@ def snap_sql_expr(variable: str, round_digits: int | None = None) -> str:
     if round_digits is not None:
         expr = f"ROUND({expr}, {round_digits})"
     return expr
-
-
-def features_from_pandas(pdf, band_cols: Iterable[str] = SNAP_BIO_BANDS) -> np.ndarray:
-    """Assemble the (N, 11) feature matrix from a pandas batch of wide pixel
-    rows (band columns + the four observation-geometry columns)."""
-    cols = [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in band_cols]
-    vz = np.cos(np.radians(pdf["view_zenith"].to_numpy(dtype=np.float64, na_value=np.nan)))
-    sz = np.cos(np.radians(pdf["sun_zenith"].to_numpy(dtype=np.float64, na_value=np.nan)))
-    ra = np.cos(np.radians(
-        pdf["sun_azimuth"].to_numpy(dtype=np.float64, na_value=np.nan)
-        - pdf["view_azimuth"].to_numpy(dtype=np.float64, na_value=np.nan)))
-    return np.column_stack(cols + [vz, sz, ra])
 
 
 # ---------------------------------------------------------------------------

@@ -105,23 +105,6 @@ SIZE_PRESETS = {
     "sf0.001": (["qvidja_ec", "multipolygon"], 4, 0),
     "sf0.01": (None, 10, 0),
     "sf0.1": (None, 60, 33),
-    # scaling-evidence datasets: compute-bound (≈48k / ≈95k documents) so
-    # the two-cluster-size throughput comparison measures the engine, not
-    # fixed per-job latency. No oracle tables (correctness runs at sf0.01).
-    "sfbench": (None, 240, 153),
-    "sfscale": (None, 480, 153),
-    # quarter-size scaling input: a full CPU-bound rep fits inside the
-    # short clean windows between this VM's host-contention episodes
-    # (BASELINE.md "Measurement noise"), and a smaller input UNDERSTATES
-    # efficiency (fewer task waves amortizing stragglers) so the evidence
-    # stays conservative for the >= 0.8 bar
-    "sfquarter": (None, 60, 153),
-    # 10x the bench gate scale (r4 verdict #4 "sf1 rehearsal"): same
-    # date range as sf0.1, ~10x the AOI count — validates that the
-    # scale-profile knobs (approx-median sketch, AQE skew) engage and
-    # nothing degrades super-linearly one decade above the evidence
-    # scale. No oracle tables (correctness stays at sf0.01).
-    "sf1": (None, 60, 384),
     # ragged-ingest variant of the correctness scale: a deterministic
     # subset of documents is malformed — one band is missing a chunk span,
     # so its per-band chunk counts disagree with its resolution group (the
@@ -129,7 +112,7 @@ SIZE_PRESETS = {
     # P9 consistency filter; no pixel oracle needed (docs-level check).
     "sf0.01r": (None, 10, 0),
 }
-NO_ORACLE_TAGS = {"sfbench", "sfscale", "sfquarter", "sf0.01r", "sf1"}
+NO_ORACLE_TAGS = {"sf0.01r"}
 RAGGED_TAGS = {"sf0.01r"}
 
 
@@ -436,7 +419,7 @@ def ensure_geodata(tag: str) -> str:
     os.makedirs(d, exist_ok=True)
     docs = build_documents(tag)
     # enough data files that the Spark scan natively yields >= 3x
-    # defaultParallelism splits at every bench core count (up to 32) under
+    # defaultParallelism splits at every core count up to 32 under
     # the session's decode-tuned split sizing — the decode mapInPandas then
     # fuses with the scan (no round-robin exchange; see decode.py)
     n_files = 128 if tag in NO_ORACLE_TAGS or tag == "sf0.1" else 32

@@ -7,5 +7,4 @@ from .quality import (  # noqa: F401
     filter_to_mode_tile,
 )
 from .indices import compute_vegetation_index, with_all_indices  # noqa: F401
-from .biophys_op import run_snap_biophys  # noqa: F401
 from .timeseries import dataset_to_timeseries  # noqa: F401

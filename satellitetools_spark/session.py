@@ -10,7 +10,8 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "satellitetools-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on (taskset/cgroup affinity)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_SHUFFLE_PARTITIONS", str(min(64, 2 * int(cpus) if cpus.isdigit() else 64))))
@@ -35,7 +36,7 @@ def get_spark(app: str = "satellitetools-spark", master: str | None = None,
         # that the decode mapInPandas fuses with it into ONE stage (no
         # round-robin exchange — the packed span strings never get
         # re-serialized through a shuffle; measured ~5 s of bandwidth-bound
-        # JVM time per exchange at sfbench scale) and (b) yield several task
+        # JVM time per exchange at ~48k documents) and (b) yield several task
         # waves per core for straggler amortization. On a production cluster
         # raise maxPartitionBytes toward 32-128 MB so tasks stay 10 s+.
         .config("spark.sql.files.maxPartitionBytes", "1m")

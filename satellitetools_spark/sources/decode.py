@@ -260,7 +260,6 @@ def decode_documents(
     docs: DataFrame,
     bands: Optional[Iterable[str]] = None,
     gsd_override: Optional[float] = None,
-    dim: Optional[DataFrame] = None,
     n_partitions: Optional[int] = None,
     vi_vars: Optional[Iterable[str]] = None,
     snap_vars: Optional[Iterable[str]] = None,
@@ -270,16 +269,15 @@ def decode_documents(
     ``bands`` limits decoding (projection pushdown analog: the media-span
     filter prunes unneeded chunks *before* any shuffle or decode work).
     ``gsd_override`` forces the output grid scale (the reference's separate
-    ``qi_evaluation_scale``). ``dim`` is accepted for API compatibility but
-    unused: the dimension columns are re-projected from the document row
-    itself, which costs nothing (codegen) and keeps this a single-input
-    operator.
+    ``qi_evaluation_scale``). The dimension columns are re-projected from
+    the document row itself, which costs nothing (codegen) and keeps this a
+    single-input operator.
 
-    ``vi_vars`` / ``snap_vars`` optionally FUSE vegetation-index and SNAP
-    neural-net computation into the same Python pass (identical NumPy
-    semantics as operators/indices.py and operators/biophys_op.py) — one
-    Arrow round-trip instead of three for the flagship pipeline. The
-    standalone operators remain the composable form.
+    ``vi_vars`` / ``snap_vars`` add vegetation-index and SNAP neural-net
+    columns computed in the same Python pass as the decode (the NumPy
+    semantics of operators/indices.py and biophys/nn.run_nn): one Arrow
+    round-trip instead of one per derived column. This is the only place
+    the SNAP nets run over pixels.
 
     ``n_partitions`` sets the decode parallelism explicitly (default
     4 × defaultParallelism). This matters twice: (a) the document rows are

@@ -1,16 +1,16 @@
 #!/usr/bin/env python
 """Production entrypoint — launch via ``spark-submit --py-files`` (north rule).
 
-Example (two cluster sizes; ``local[N]`` is the sandbox proxy for N executors)::
+Example (``local[N]`` is the sandbox proxy for N executors)::
 
-    scripts/submit.sh 8  --input .geodata/sf0.1/docs.parquet --output /tmp/out
-    scripts/submit.sh 32 --input .geodata/sf0.1/docs.parquet --output /tmp/out
+    scripts/submit.sh 4 --input .geodata/sf0.01/docs.parquet --output /tmp/out
 
-The job is the flagship pipeline (QI filter → decode+spatial join → SNAP
-biophys → per-pixel output) materialized **resumably**: per-document lineage
-+ row-count metrics are committed next to the output, and a rerun processes
-only documents absent from the lineage table (exact resume, idempotent
-append — plans/lineage.py). On a real cluster the same script runs unchanged
+The job is the flagship pipeline (QI filter → ONE Python pass of decode +
+spatial join fused with NDVI and the SNAP biophysical nets → per-pixel
+output) materialized **resumably**: per-document lineage + row-count
+metrics are committed next to the output, and a rerun processes only
+documents absent from the lineage table (exact resume, idempotent append —
+plans/lineage.py). On a real cluster the same script runs unchanged
 under ``spark-submit --master yarn/k8s --py-files satellitetools_spark.zip``.
 """
 
@@ -23,19 +23,17 @@ import time
 
 from pyspark.sql import SparkSession
 
-from satellitetools_spark.operators.biophys_op import run_snap_all
-from satellitetools_spark.operators.indices import compute_vegetation_index
 from satellitetools_spark.plans import get_s2_qi_and_data
 from satellitetools_spark.plans.lineage import run_resumable
 from satellitetools_spark.sources import read_documents
 
 
 def build_pipeline(args):
+    snap_vars = args.snap_vars.split(",") if args.snap_vars else []
+
     def build(docs):
-        _qi, px = get_s2_qi_and_data(docs, qi_threshold=args.qi_threshold)
-        px = compute_vegetation_index(px, "ndvi")
-        if args.snap_vars:
-            px = run_snap_all(px, args.snap_vars.split(","))
+        _qi, px = get_s2_qi_and_data(docs, qi_threshold=args.qi_threshold,
+                                     vi_vars=["ndvi"], snap_vars=snap_vars)
         return px
     return build
 

@@ -37,39 +37,3 @@ def test_all_queries_callable_and_oracles_sqlish():
         assert callable(fn), name
     for name, sql in E.oracle_sql().items():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
-
-
-def test_driver_window_self_rotation(monkeypatch):
-    """The first ~50 registered names must always be never-driver-checked
-    entries: as CORRECTNESS artifacts land, the window advances
-    automatically. Simulate the next round by marking the current
-    window as checked and assert a fresh 50 surface."""
-    import __spark_entry__ as E
-    base = list(E.queries())
-    checked_now = E._driver_checked_rounds()
-    # the never-checked prefix fills the window; once the backlog
-    # shrinks below 50 the remaining slots legitimately hold recheck
-    # names, so only the first min(50, backlog) must be fresh
-    n_backlog = len([n for n in base if n not in checked_now])
-    assert all(n not in checked_now
-               for n in base[:min(50, n_backlog)])
-    # simulate round N+1: today's window has artifacts (round 5)
-    future = dict(checked_now)
-    for n in base[:50]:
-        future[n] = 5
-    monkeypatch.setattr(E, "_driver_checked_rounds", lambda: future)
-    rotated = list(E.queries())
-    assert set(rotated) == set(base)          # registry frozen
-    fresh = [n for n in rotated[:50] if n not in future]
-    # everything never-checked (if any remain) sorts before checked
-    n_never = len([n for n in base if n not in future])
-    assert len(fresh) == min(50, n_never)
-    # spare window slots (48 never-checked left vs a 50 window) go to
-    # the STALEST previously-checked names (r4 advisor: rolling
-    # re-check instead of check-once-forever), oldest round first
-    spare = [n for n in rotated[:50] if n in future]
-    if spare:
-        min_round = min(future.values())
-        assert future[spare[0]] == min_round
-        rounds = [future[n] for n in spare]
-        assert rounds == sorted(rounds)
