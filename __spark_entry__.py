@@ -50,8 +50,7 @@ from satellitetools_spark.operators.knn_fill import knn_fill
 from satellitetools_spark.operators.indices import compute_vegetation_index
 from satellitetools_spark.operators.quality import (
     dedup_products,
-    filter_docs_by_quality,
-    quality_information,
+    select_survivors,
     tile_mode,
 )
 from satellitetools_spark.operators.timeseries import dataset_to_timeseries
@@ -63,6 +62,7 @@ from satellitetools_spark.sources import (
     read_documents,
     reassemble_documents,
 )
+from satellitetools_spark.sources.decode import qi_percentages
 
 NEARDUP_TAU = 0.45  # embedding-cosine near-dup threshold for this dataset
 
@@ -113,11 +113,9 @@ def q_geo_pixels(spark, sf_dir):
 
 
 def q_geo_qi(spark, sf_dir):
-    """A1: per-scene SCL class percentages at QI scale."""
-    docs = _geo_docs(spark, sf_dir)
-    dim = doc_dimension(docs)
-    scl = decode_documents(docs, ["SCL"], gsd_override=20.0)
-    qi = quality_information(scl, dim)
+    """A1: per-scene SCL class percentages at QI scale (the flagship's
+    fused QI pass)."""
+    qi = qi_percentages(_geo_docs(spark, sf_dir))
     cols = [F.round(c, 9).alias(c.lower()) for c in SCL_CLASSES]
     return qi.select("doc_id", "aoi", "tileid", "assetid", "productid", *cols)
 
@@ -125,11 +123,8 @@ def q_geo_qi(spark, sf_dir):
 def q_geo_qi_filter(spark, sf_dir):
     """P6+P7+W3+P5 composite: surviving documents after QI threshold,
     intended dedup, and tile-mode filtering."""
-    docs = _geo_docs(spark, sf_dir)
-    dim = doc_dimension(docs)
-    scl = decode_documents(docs, ["SCL"], gsd_override=20.0)
-    qi = quality_information(scl, dim)
-    surv = filter_docs_by_quality(dim, qi, qi_threshold=0.02)
+    qi = qi_percentages(_geo_docs(spark, sf_dir))
+    surv = select_survivors(qi, qi_threshold=0.02)
     return surv.select("doc_id", "aoi", "tileid", "productid")
 
 

@@ -1,14 +1,13 @@
-"""Quality-information operators: SCL class percentages, QI filtering,
-tile-mode selection, duplicate-product elimination.
+"""Quality-information operators: QI filtering, tile-mode selection,
+duplicate-product elimination, ragged-document drop.
 
 Reference semantics:
-- class percentages (A1): per scene, fraction of AOI pixels per SCL class,
-  denominator excludes SCL_NODATA=99 fill (aws.py:620-643). In the engine's
-  long format only inside-AOI pixels exist, so pct_c = avg(SCL == c).
+- class percentages (A1): per scene, fraction of AOI pixels per SCL class
+  (aws.py:620-643). The engine computes them in the fused per-document QI
+  pass (``sources/decode.qi_percentages``), whose output carries the scene
+  metadata — the reference's QI table (sentinel2.py:537-562).
 - QI filter (P6): drop scenes with NaN SCL stats; keep scenes where the sum
   of the filtered-class percentages ≤ threshold (sentinel2.py:778-808).
-- semi-join of surviving scenes back to documents (P7/J4,
-  sentinel2.py:595-622).
 - tile mode (P5): most-common tile per AOI, then filter to it
   (sentinel2.py:564-593, 811-812).
 - duplicate elimination (W3): among documents sharing (aoi, productid),
@@ -16,6 +15,9 @@ Reference semantics:
   This implements the reference's *intended* semantics — its
   ``remove_duplicate_items`` computes the filtered list but returns the
   input (aws.py:212-247, a real bug we do not reproduce).
+- ``select_survivors`` chains the three over the QI table; the plan
+  semi-joins its doc_ids back to the documents (P7/J4,
+  sentinel2.py:595-622).
 
 All operators are single hash-aggregations / window functions — partial
 aggregation map-side, no driver collects, broadcast-friendly outputs.
@@ -31,46 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..constants import S2_FILTER1, SCL_CLASSES
-
-_SCENE_COLS = ["aoi", "tileid", "assetid", "productid", "acquisition_time"]
-
-
-def class_percentages(scl_pixels: DataFrame, keys: Optional[List[str]] = None) -> DataFrame:
-    """A1: one hash-agg pass computing all 12 SCL class fractions per scene.
-
-    ``scl_pixels`` is the long inside-AOI pixel table with an ``SCL`` column;
-    grouping defaults to per-document scene identity.
-    """
-    keys = keys or ["doc_id"]
-    aggs = [
-        F.avg(F.when(F.col("SCL") == i, 1.0).otherwise(0.0)).alias(name)
-        for i, name in enumerate(SCL_CLASSES)
-    ]
-    return scl_pixels.groupBy(*keys).agg(*aggs)
-
-
-def quality_information(scl_pixels: DataFrame, dim: DataFrame) -> DataFrame:
-    """QI table: scene metadata + class percentages (sentinel2.py:537-562).
-
-    Scenes with zero AOI pixels (faulty SCL, aws.py:630-634) appear with
-    NULL percentages via the left join — the reference's NaN rows.
-    """
-    pcts = class_percentages(scl_pixels)
-    qi = dim.select(
-        "doc_id", "aoi", "tileid", "assetid", "productid",
-        "acquisition_time", "projection", "datasource", "processing",
-    ).join(pcts, "doc_id", "left")
-    return qi
-
-
-def quality_information_from_pcts(dim: DataFrame, pcts: DataFrame) -> DataFrame:
-    """QI table from the fused per-doc percentage pass
-    (sources/decode.qi_percentages) — same output as
-    :func:`quality_information`, without a pixel-level shuffle."""
-    return dim.select(
-        "doc_id", "aoi", "tileid", "assetid", "productid",
-        "acquisition_time", "projection", "datasource", "processing",
-    ).join(pcts, "doc_id", "left")
 
 
 def filter_by_quality(qi: DataFrame, qi_threshold: float = 0.02,
@@ -92,13 +54,6 @@ def tile_mode(qi_or_dim: DataFrame) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("aoi", "tileid")
     )
-
-
-def filter_to_mode_tile(df: DataFrame, mode_df: Optional[DataFrame] = None) -> DataFrame:
-    """Keep rows on each AOI's modal tile (broadcast semi-join — the mode
-    table has one row per AOI)."""
-    m = mode_df if mode_df is not None else tile_mode(df)
-    return df.join(F.broadcast(m), ["aoi", "tileid"], "left_semi")
 
 
 def dedup_products(df: DataFrame, priority_col: str = "processing") -> DataFrame:
@@ -138,20 +93,6 @@ def select_survivors(qi: DataFrame, qi_threshold: float = 0.02,
         .filter(F.col("tileid") == F.col("_mode_tile"))
         .drop("_tile_cnt", "_mode_tile")
     )
-
-
-def filter_docs_by_quality(dim: DataFrame, qi: DataFrame,
-                           qi_threshold: float = 0.02,
-                           qi_filter: Optional[List[str]] = None) -> DataFrame:
-    """Composite P8: QI filter → semi-join on assetid → dedup → tile mode.
-
-    Returns the surviving document dimension (to drive the full-band decode
-    pass — the reference's cheap-column-first two-phase plan, aws.py:306-360).
-    """
-    passing = filter_by_quality(qi, qi_threshold, qi_filter)
-    survivors = dim.join(passing.select("doc_id"), "doc_id", "left_semi")
-    survivors = dedup_products(survivors)
-    return filter_to_mode_tile(survivors, tile_mode(survivors))
 
 
 # --- P9: ragged-data consistency drop (reference gee.py:161-174) ----------

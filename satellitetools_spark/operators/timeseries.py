@@ -105,16 +105,11 @@ def dataset_to_timeseries(
                 unc = std
             unc = unc.alias(f"{v}_uncertainty")
             cols.append(unc)
-            if add_confidence_intervals:
-                lo = F.col(v) - F.lit(z) * F.col(f"{v}_uncertainty")
-                hi = F.col(v) + F.lit(z) * F.col(f"{v}_uncertainty")
-                if is_snap:
-                    lo = F.greatest(F.lit(0.0), lo)
-                # CI depends on the uncertainty column → second projection
         cols.append(((F.col("_aoi_pixels") - n) / F.col("_aoi_pixels"))
                     .alias(f"{v}_aoi_nan_percentage"))
 
     out = g.select(*cols)
+    # the CI reads the uncertainty column → second projection
     if add_confidence_intervals:
         for v in variables:
             lo = F.col(v) - F.lit(z) * F.col(f"{v}_uncertainty")

@@ -41,14 +41,15 @@ def get_s2_qi_and_data(
     bands: Optional[Iterable[str]] = None,
     qi_threshold: float = 0.02,
     qi_filter: Optional[List[str]] = None,
-    qi_scale: float = 20.0,
     vi_vars: Optional[Iterable[str]] = None,
     snap_vars: Optional[Iterable[str]] = None,
 ) -> Tuple[DataFrame, DataFrame]:
     """QI table + filtered long pixel table (reference wrappers.py:28-78).
 
-    ``vi_vars`` / ``snap_vars`` fuse index + NN computation into the decode
-    pass (see sources/decode.py).
+    The QI pass decodes SCL at each document's AOI ``qi_evaluation_scale``
+    and the pixel pass decodes ``bands`` at its ``target_gsd`` (both read
+    from the AOI record in the document). ``vi_vars`` / ``snap_vars`` fuse
+    index + NN computation into the decode pass (see sources/decode.py).
     """
     bands = list(bands) if bands is not None else S2_BANDS_10_20 + ["SCL"]
 
@@ -66,7 +67,7 @@ def get_s2_qi_and_data(
     # the DataFrame — no session-lifetime storage leak per invocation. (On
     # a real cluster with executor loss, swap for .checkpoint() to a
     # reliable dir; the plan is identical.)
-    qi = qi_percentages(docs, qi_scale=qi_scale).localCheckpoint(eager=False)
+    qi = qi_percentages(docs).localCheckpoint(eager=False)
 
     # Phase 2 — filter scenes, then full decode of survivors only. The
     # survivor id list is document-cardinality metadata (bytes per doc), so

@@ -202,11 +202,11 @@ def target_grid(bbox: Tuple[float, float, float, float], gsd: float) -> Tuple[np
 
 
 def assemble_window(refs_with_payload: Sequence[Tuple[str, np.ndarray]],
-                    ) -> Tuple[np.ndarray, float, int, int, int]:
+                    ) -> Tuple[np.ndarray, float, int, int]:
     """Scatter decoded chunks of ONE (product, band) into a dense window.
 
-    Returns (window, gsd, cx0, cy0, band-independent) where window[j, i] is
-    the pixel with center ((cx0*CHUNK_PX+i+0.5)*gsd, (cy0*CHUNK_PX+j+0.5)*gsd).
+    Returns (window, gsd, cx0, cy0) where window[j, i] is the pixel with
+    center ((cx0*CHUNK_PX+i+0.5)*gsd, (cy0*CHUNK_PX+j+0.5)*gsd).
     Missing chunks stay NaN.
     """
     parsed = [parse_media_ref(r) for r, _ in refs_with_payload]
@@ -221,7 +221,7 @@ def assemble_window(refs_with_payload: Sequence[Tuple[str, np.ndarray]],
         j0 = (cy - cy0) * CHUNK_PX
         i0 = (cx - cx0) * CHUNK_PX
         win[j0:j0 + CHUNK_PX, i0:i0 + CHUNK_PX] = payload
-    return win, float(gsd), cx0, cy0, 0
+    return win, float(gsd), cx0, cy0
 
 
 def dn_to_reflectance(dn: np.ndarray) -> np.ndarray:
@@ -233,14 +233,15 @@ def dn_to_reflectance(dn: np.ndarray) -> np.ndarray:
 
 def sample_grid(win: np.ndarray, gsd: float, cx0: int, cy0: int,
                 tgt_xs: np.ndarray, tgt_ys: np.ndarray,
-                method: str, productid: str, band: str) -> np.ndarray:
+                method: str) -> np.ndarray:
     """Sample a native window at target pixel centers (bilinear or nearest).
 
     ``win`` is in final value space (reflectance for spectral bands, class
-    codes for SCL). Bilinear needs a 1-source-pixel halo beyond the window
-    for edge targets; the halo is synthesized analytically — the moral
-    equivalent of the reference's buffered read (aws.py:491-498). NaN in any
-    bilinear support pixel propagates NaN, matching resampling over nodata.
+    codes for SCL). Targets whose support reaches past the window edge (a
+    document missing an edge chunk) read a 1-source-pixel NaN halo: a chunk
+    that was not fetched is no data, the same rule ``assemble_window``
+    applies inside the window. NaN in any bilinear support pixel propagates
+    NaN, matching resampling over nodata.
     """
     x_org = cx0 * CHUNK_PX * gsd   # window's left edge
     y_org = cy0 * CHUNK_PX * gsd
@@ -249,7 +250,7 @@ def sample_grid(win: np.ndarray, gsd: float, cx0: int, cy0: int,
     # fast path: when every support pixel of every target lies inside the
     # window (the normal case — the chunk cover includes a native-pixel
     # margin around the target grid), the halo is never read, so skip
-    # synthesizing it. Numerically identical to the general path.
+    # padding. Numerically identical to the general path.
     fx0 = (tgt_xs[None, :] - x_org) / gsd - 0.5
     fy0 = (tgt_ys[:, None] - y_org) / gsd - 0.5
     if method == "nearest":
@@ -271,13 +272,8 @@ def sample_grid(win: np.ndarray, gsd: float, cx0: int, cy0: int,
                 + win[iy0 + 1, ix0] * (1 - wx) * wy
                 + win[iy0 + 1, ix0 + 1] * wx * wy)
 
-    # pad with 1-pixel analytic halo (in the same value space as win)
-    xh2 = (x_org + (np.arange(-1, nx + 1) + 0.5) * gsd)[None, :]
-    yh2 = (y_org + (np.arange(-1, ny + 1) + 0.5) * gsd)[:, None]
-    if band == "SCL":
-        halo = native_scl(productid, xh2, yh2).astype(np.float64)
-    else:
-        halo = dn_to_reflectance_win(native_band_dn(band, productid, xh2, yh2))
+    # pad with a 1-pixel no-data halo
+    halo = np.full((ny + 2, nx + 2), np.nan)
     halo[1:-1, 1:-1] = win
     win = halo
     x_org -= gsd
@@ -308,11 +304,11 @@ def render_band_on_grid(band: str, productid: str,
                         ) -> np.ndarray:
     """Full per-band path: window (from chunks, or analytic when None) →
     scale → resample to the target grid. Returns float values (reflectance,
-    or SCL codes as float with NaN never present for SCL).
+    or SCL codes as float), NaN where no fetched chunk supports a target.
     """
     native_gsd = float(S2_BAND_GSD[band])
     if refs_with_payload:
-        win, gsd, cx0, cy0, _ = assemble_window(refs_with_payload)
+        win, gsd, cx0, cy0 = assemble_window(refs_with_payload)
     else:
         # oracle path: synthesize the native window covering the target grid
         gsd = native_gsd
@@ -332,15 +328,7 @@ def render_band_on_grid(band: str, productid: str,
             win = native_band_dn(band, productid, x2, y2)
 
     if band == "SCL":
-        method = "nearest"
-        vals = sample_grid(win, gsd, cx0, cy0, tgt_xs, tgt_ys, method, productid, band)
-        return vals
-    vals = sample_grid(dn_to_reflectance_win(win), gsd, cx0, cy0,
-                       tgt_xs, tgt_ys, "bilinear", productid, band)
-    return vals
+        return sample_grid(win, gsd, cx0, cy0, tgt_xs, tgt_ys, "nearest")
+    return sample_grid(dn_to_reflectance(win), gsd, cx0, cy0,
+                       tgt_xs, tgt_ys, "bilinear")
 
-
-def dn_to_reflectance_win(win: np.ndarray) -> np.ndarray:
-    v = win / S2_REFL_TRANS
-    v[win == DN_NODATA] = np.nan
-    return v

@@ -178,13 +178,14 @@ _DOCS_PER_FRAME = 128
 _PREFILTER_MAX = 2
 
 
-def _decode_one(raw: dict, bands: List[str], gsd_override: Optional[float],
+def _decode_one(raw: dict, bands: List[str],
                 vi_vars: List[str] = (), snap_vars: List[str] = (),
                 parsed: Optional[dict] = None) -> dict:
-    """Decode one document row → dict of column arrays (pixel rows)."""
+    """Decode one document row → dict of column arrays (pixel rows) on the
+    grid of ``target_gsd`` (of ``parsed`` when given)."""
     row = parsed if parsed is not None else _parse_doc_texts(raw)
     row["media_refs"] = raw["media_refs"]
-    gsd = float(gsd_override if gsd_override is not None else row["target_gsd"])
+    gsd = float(row["target_gsd"])
     txs, tys, px, py, cells, inside, aoi_px = _aoi_grid(
         row["aoi_geometry"], int(row["utm_zone"]), gsd)
 
@@ -239,7 +240,7 @@ def _decode_one(raw: dict, bands: List[str], gsd_override: Optional[float],
     return out
 
 
-def _make_batch_decoder(bands: List[str], gsd_override: Optional[float],
+def _make_batch_decoder(bands: List[str],
                         vi_vars: List[str] = (), snap_vars: List[str] = (),
                         extra_cols: List[str] = ()):
     cols = _OUT_COLS_HEAD + bands + list(extra_cols) + _OUT_COLS_TAIL
@@ -248,7 +249,7 @@ def _make_batch_decoder(bands: List[str], gsd_override: Optional[float],
         for pdf in batches:
             rows = pdf.to_dict("records")
             for i in range(0, len(rows), _DOCS_PER_FRAME):
-                outs = [_decode_one(r, bands, gsd_override, vi_vars, snap_vars)
+                outs = [_decode_one(r, bands, vi_vars, snap_vars)
                         for r in rows[i:i + _DOCS_PER_FRAME]]
                 yield pd.DataFrame(
                     {c: np.concatenate([o[c] for o in outs]) for c in cols})
@@ -259,8 +260,6 @@ def _make_batch_decoder(bands: List[str], gsd_override: Optional[float],
 def decode_documents(
     docs: DataFrame,
     bands: Optional[Iterable[str]] = None,
-    gsd_override: Optional[float] = None,
-    n_partitions: Optional[int] = None,
     vi_vars: Optional[Iterable[str]] = None,
     snap_vars: Optional[Iterable[str]] = None,
 ) -> DataFrame:
@@ -268,10 +267,9 @@ def decode_documents(
 
     ``bands`` limits decoding (projection pushdown analog: the media-span
     filter prunes unneeded chunks *before* any shuffle or decode work).
-    ``gsd_override`` forces the output grid scale (the reference's separate
-    ``qi_evaluation_scale``). The dimension columns are re-projected from
-    the document row itself, which costs nothing (codegen) and keeps this a
-    single-input operator.
+    Pixels lie on the grid of the document's own AOI ``target_gsd``. The
+    dimension columns are re-projected from the document row itself, which
+    costs nothing (codegen) and keeps this a single-input operator.
 
     ``vi_vars`` / ``snap_vars`` add vegetation-index and SNAP neural-net
     columns computed in the same Python pass as the decode (the NumPy
@@ -279,23 +277,25 @@ def decode_documents(
     round-trip instead of one per derived column. This is the only place
     the SNAP nets run over pixels.
 
-    ``n_partitions`` sets the decode parallelism explicitly (default
-    4 × defaultParallelism). This matters twice: (a) the document rows are
-    media_ref *strings* — kilobytes per document — while the decode work
-    per document is milliseconds of CPU, so AQE's byte-based partition
-    coalescing would pack thousands of CPU-bound documents into a handful
-    of tasks; an explicit repartition pins the parallelism (AQE honors
-    user-specified partition counts). (b) on a real multi-file Iceberg
-    table the scan provides natural parallelism and the repartition becomes
-    a cheap rebalance of one-row-per-doc records.
+    No-data (a DN_NODATA pixel, a missing chunk, a 0/0 index) leaves the
+    Python pass as NaN and arrives in Spark as NULL: the Arrow serializer
+    masks every null pandas value, so Spark never sees a NaN here (Spark
+    treats NaN as a groupable value and would poison ``avg``).
+
+    Decode parallelism comes from :func:`_maybe_repartition`: the document
+    rows are media_ref *strings* — kilobytes per document — while the
+    decode work per document is milliseconds of CPU, so AQE's byte-based
+    partition coalescing would pack thousands of CPU-bound documents into a
+    handful of tasks unless the partition count is pinned.
 
     Plan shape (the scale-critical property): media refs, AOI geometry and
     scene metadata all live in the SAME document row, so the decode input
     is ONE narrow projection — array ``filter``/``transform`` over
     ``spans`` inside whole-stage codegen, no explode, no join, no groupBy.
-    The only exchange is the round-robin repartition; the decode itself is
-    a ``mapInPandas`` over one-row-per-document batches (Arrow transfers
-    each geometry/metadata value once per document, not once per chunk).
+    The only exchange is the round-robin repartition of a too-coarse scan;
+    the decode itself is a ``mapInPandas`` over one-row-per-document batches
+    (Arrow transfers each geometry/metadata value once per document, not
+    once per chunk).
     """
     bands = list(bands) if bands is not None else S2_BANDS_10_20 + ["SCL"]
     vi_vars = [v.lower() for v in vi_vars] if vi_vars else []
@@ -307,21 +307,12 @@ def decode_documents(
     for c in extra:
         schema = schema.add(T.StructField(c, T.DoubleType()))
 
-    prep = _maybe_repartition(decode_input(docs, bands), n_partitions)
-    pixels = prep.mapInPandas(
-        _make_batch_decoder(bands, gsd_override, vi_vars, snap_vars, extra),
-        schema=schema)
-
-    # NaN → NULL: keep relational no-data semantics (Spark treats NaN as a
-    # groupable value and poisons avg; the reference's NaN maps to NULL here)
-    for b in bands + extra:
-        if b != "SCL":
-            pixels = pixels.withColumn(
-                b, F.when(~F.isnan(F.col(b)), F.col(b)))
-    return pixels
+    prep = _maybe_repartition(decode_input(docs, bands))
+    return prep.mapInPandas(
+        _make_batch_decoder(bands, vi_vars, snap_vars, extra), schema=schema)
 
 
-def _maybe_repartition(prep: DataFrame, n_partitions: Optional[int]) -> DataFrame:
+def _maybe_repartition(prep: DataFrame) -> DataFrame:
     """Guarantee CPU-saturating decode parallelism without forcing an
     exchange: if the scan already yields >= defaultParallelism partitions
     (the normal case for a real multi-file Iceberg table), the decode
@@ -330,8 +321,6 @@ def _maybe_repartition(prep: DataFrame, n_partitions: Optional[int]) -> DataFram
     Only a too-coarse input (few files) triggers a round-robin repartition,
     with an explicit count so AQE's byte-based coalescing cannot collapse
     the CPU-bound stage."""
-    if n_partitions is not None:
-        return prep.repartition(n_partitions)
     par = prep.sparkSession.sparkContext.defaultParallelism
     if prep.isStreaming:
         # probing the plan triggers batch planning (AnalysisException on a
@@ -397,17 +386,18 @@ _QI_META = ["aoi", "tileid", "assetid", "productid", "acquisition_time",
             "projection", "datasource", "processing"]
 
 
-def qi_percentages(docs: DataFrame, qi_scale: float = 20.0,
-                   n_partitions: Optional[int] = None) -> DataFrame:
-    """Fused QI pass: decode SCL at the QI scale and emit ONE row per
-    document — the scene metadata plus the 12 SCL class fractions (A1).
-    This is the map-side pre-aggregation form of ``decode +
-    class_percentages + quality_information``: output is
-    document-cardinality, so the downstream QI filter/dedup/tile-mode plan
+def qi_percentages(docs: DataFrame) -> DataFrame:
+    """Fused QI pass: decode SCL at each document's QI scale (the AOI
+    record's ``qi_evaluation_scale``) and emit ONE row per document — the
+    scene metadata plus the 12 SCL class fractions (A1; the reference's QI
+    table with class percentages, sentinel2.py:537-562, aws.py:620-643).
+    The fractions are computed map-side, so the output is
+    document-cardinality and the downstream QI filter/dedup/tile-mode plan
     shuffles kilobytes instead of the pixel table.
 
     Documents with zero inside-AOI pixels get NULL percentages (the
-    reference's faulty-SCL NaN rows, aws.py:630-634)."""
+    reference's faulty-SCL NaN rows, aws.py:630-634): the NaN row leaves
+    the Python pass and the Arrow serializer turns it into NULL."""
     from ..constants import SCL_CLASSES
     schema = T.StructType(
         [T.StructField("doc_id", T.StringType()),
@@ -429,9 +419,8 @@ def qi_percentages(docs: DataFrame, qi_scale: float = 20.0,
             metas, pcts = [], []
             for raw in recs:
                 meta = _parse_doc_texts(raw)
-                gsd = float(qi_scale if qi_scale is not None
-                            else meta["qi_scale"])
-                scl = _decode_one(raw, ["SCL"], gsd, parsed=dict(meta))["SCL"]
+                scl = _decode_one(raw, ["SCL"], parsed=dict(
+                    meta, target_gsd=meta["qi_scale"]))["SCL"]
                 metas.append(meta)
                 if len(scl):
                     pcts.append(np.bincount(scl, minlength=n_cls)[:n_cls]
@@ -447,8 +436,5 @@ def qi_percentages(docs: DataFrame, qi_scale: float = 20.0,
                 res[c] = arr[:, i]
             yield pd.DataFrame(res)
 
-    prep = _maybe_repartition(decode_input(docs, ["SCL"]), n_partitions)
-    qi = prep.mapInPandas(qi_batches, schema=schema)
-    for c in SCL_CLASSES:
-        qi = qi.withColumn(c, F.when(~F.isnan(F.col(c)), F.col(c)))
-    return qi
+    prep = _maybe_repartition(decode_input(docs, ["SCL"]))
+    return prep.mapInPandas(qi_batches, schema=schema)

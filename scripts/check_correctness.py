@@ -89,6 +89,10 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str:
 
 def main():
     only = sys.argv[1:] or None
+    qs = E.queries()
+    unknown = sorted(set(only or ()) - set(qs))
+    if unknown:
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
     spark = get_spark("correctness-check", master="local[8]", shuffle_partitions=8)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     con = duckdb.connect()
@@ -97,7 +101,6 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = E.queries()
     oracles = E.oracle_sql()
     failures = 0
     for name, fn in qs.items():

@@ -10,18 +10,29 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from satellitetools_spark.constants import S2_BANDS_10_20, SCL_CLASSES
+from satellitetools_spark.datagen import ensure_geodata
+from satellitetools_spark.rasterops import parse_media_ref
 from satellitetools_spark.sources import (
     decode_documents,
     explode_spans,
     read_documents,
     reassemble_documents,
 )
+from satellitetools_spark.sources.decode import qi_percentages
 
 
 @pytest.fixture(scope="module")
 def docs(spark, geodata_small):
     return read_documents(spark, os.path.join(geodata_small, "docs.parquet"))
+
+
+@pytest.fixture(scope="module")
+def docs_mid(spark, geodata_mid):
+    return read_documents(spark, os.path.join(geodata_mid, "docs.parquet"))
 
 
 @pytest.fixture(scope="module")
@@ -69,13 +80,102 @@ def test_decode_matches_oracle_rows_and_values(spark, docs, oracle):
     pd.testing.assert_series_equal(ga, wa, check_dtype=False)
 
 
-def test_decode_scl_only_projection(spark, docs, geodata_small):
-    """QI pass: band pruning decodes only SCL chunks at the 20 m QI scale."""
-    scl = decode_documents(docs, bands=["SCL"], gsd_override=20.0).toPandas()
-    want = pd.read_parquet(os.path.join(geodata_small, "oracle_scl20.parquet"))
-    want = want[want["inside"]]
-    assert len(scl) == len(want)
-    g = scl.sort_values(["doc_id", "x", "y"]).reset_index(drop=True)
-    w = want.sort_values(["doc_id", "x", "y"]).reset_index(drop=True)
-    np.testing.assert_array_equal(g["SCL"].to_numpy(), w["SCL"].to_numpy())
+def test_decode_scl_only_projection(spark, docs, oracle):
+    """Band pruning: ``bands=["SCL"]`` decodes only the SCL band, on the
+    document's target grid."""
+    scl = decode_documents(docs, bands=["SCL"]).toPandas()
+    want = oracle[oracle["inside"]]
     assert "B4" not in scl.columns
+    assert len(scl) == len(want)
+    key = ["doc_id", "x", "y"]
+    g = scl.sort_values(key).reset_index(drop=True)
+    w = want.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(g[key], w[key], check_exact=True)
+    np.testing.assert_array_equal(g["SCL"].to_numpy(), w["SCL"].to_numpy())
+
+
+def _nan_counts(df):
+    cols = [f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.DoubleType)]
+    row = df.select([F.sum(F.isnan(c).cast("long")).alias(c)
+                     for c in cols]).first()
+    return {c: row[c] for c in cols}
+
+
+def test_decode_outputs_null_not_nan(spark, docs_mid):
+    """No-data reaches Spark as NULL, never NaN, in both Python passes.
+    (``toPandas`` turns NULL back into NaN, so this is checked in Spark.)"""
+    px = decode_documents(docs_mid, vi_vars=["ndvi"], snap_vars=["LAI"])
+    for df in (px, qi_percentages(docs_mid)):
+        counts = _nan_counts(df)
+        assert counts and all(v == 0 for v in counts.values()), counts
+    missing = px.filter(F.col("aoi") == "problematic_missing").select(
+        [F.sum(F.col(b).isNull().cast("long")).alias(b)
+         for b in S2_BANDS_10_20]).first()
+    assert all(missing[b] > 0 for b in S2_BANDS_10_20), missing
+
+
+def test_qi_pass_uses_document_qi_scale(spark, docs_mid, geodata_mid):
+    """The QI pass decodes SCL at the AOI record's ``qi_evaluation_scale``:
+    set to 10 m on the 10 m-target AOIs, the class fractions equal those of
+    the target-grid pixel oracle."""
+    aois = ["multipolygon", "problematic_corner"]
+    docs10 = docs_mid.withColumn("spans", F.transform("spans", lambda s: (
+        s.withField("text", F.regexp_replace(
+            s["text"], r'"qi_evaluation_scale": 20\.0',
+            '"qi_evaluation_scale": 10.0')))))
+    got = (qi_percentages(docs10).filter(F.col("aoi").isin(aois))
+           .toPandas().set_index("doc_id").sort_index())
+    px = pd.read_parquet(os.path.join(geodata_mid, "oracle_pixels.parquet"))
+    px = px[px["inside"] & px["aoi"].isin(aois)]
+    want = pd.DataFrame({
+        c: (px["SCL"] == i).groupby(px["doc_id"]).mean()
+        for i, c in enumerate(SCL_CLASSES)}).sort_index()
+    assert len(got) == 20
+    assert list(got.index) == list(want.index)
+    np.testing.assert_allclose(
+        got[SCL_CLASSES].to_numpy(dtype=float),
+        want[SCL_CLASSES].to_numpy(dtype=float), rtol=0, atol=0)
+
+
+def _band_refs(data_dir):
+    d = pd.read_parquet(os.path.join(data_dir, "docs.parquet"))
+    return {r.doc_id: {s["media_ref"] for s in r.spans if s["media_ref"]}
+            for r in d.itertuples()}
+
+
+def test_torn_documents_decode_missing_chunks_as_no_data(spark, geodata_mid):
+    """The ragged dataset drops one chunk span from some documents. Its
+    decode must agree with the untorn decode wherever it has a value, and a
+    chunk dropped at the window edge must decode as NULL, not as values
+    made up beyond the fetched chunks."""
+    ragged = ensure_geodata("sf0.01r")
+    bands = ["B3", "B5"]
+
+    def decode(data_dir):
+        d = read_documents(spark, os.path.join(data_dir, "docs.parquet"))
+        return (decode_documents(d, bands=bands).toPandas()
+                .set_index(["doc_id", "x", "y"]).sort_index())
+
+    clean, torn = decode(geodata_mid), decode(ragged)
+    assert clean.index.equals(torn.index)
+    for b in bands:
+        ok = torn[b].notna()
+        np.testing.assert_array_equal(torn.loc[ok, b].to_numpy(),
+                                      clean.loc[ok, b].to_numpy())
+
+    # (doc, band) pairs whose dropped chunk lies outside the remaining
+    # chunks' extent: their targets reach past the assembled window
+    clean_refs, torn_refs = _band_refs(geodata_mid), _band_refs(ragged)
+    edge = []
+    for doc_id, refs in torn_refs.items():
+        for gone in clean_refs[doc_id] - refs:
+            _, _, band, _, cy, cx = parse_media_ref(gone)
+            rest = [parse_media_ref(r) for r in refs if f"/{band}/" in r]
+            if not (min(p[4] for p in rest) <= cy <= max(p[4] for p in rest)
+                    and min(p[5] for p in rest) <= cx <= max(p[5] for p in rest)):
+                edge.append((doc_id, band))
+    assert edge
+    for doc_id, band in edge:
+        c, t = clean.loc[doc_id, band], torn.loc[doc_id, band]
+        assert (t.isna() & c.notna()).any(), (doc_id, band)
