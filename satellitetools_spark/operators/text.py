@@ -28,8 +28,7 @@ LANG_MARKERS = {
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "on"]
 
 
-def spread_scan(df: DataFrame, factor: int = 1,
-                barrier: bool = False) -> DataFrame:
+def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     """Raise map-side parallelism for CPU-heavy per-document expression
     chains when the source yields fewer partitions than cores.
 
@@ -41,22 +40,19 @@ def spread_scan(df: DataFrame, factor: int = 1,
     (projections are never pushed through it), which is the cheap fix for
     the explode/agg operators.
 
-    FILTER conditions are different: Catalyst pushes deterministic
-    predicates straight through the exchange back onto the scan
-    (measured), so a pipeline that *filters* on heavy expressions needs
-    ``barrier=True`` — a lazy ``localCheckpoint`` after the repartition
-    is an optimizer fence that pins the condition above the exchange, at
-    the cost of persisting one copy of the (by construction small) input.
+    Catalyst does push deterministic predicates back through the
+    exchange onto the scan, so a pipeline that filters on heavy
+    expressions should project the predicate as a column and filter it
+    above a Window or exchange boundary (see plans/corpus.py).
 
     No-op when the source already spans >= defaultParallelism input
     files — the 100 TB case, where files number in the millions — so
-    wide tables never pay the shuffle or the checkpoint copy. The guard
-    reads ``inputFiles()`` (a listing on the analyzed plan), not
-    ``df.rdd.getNumPartitions()``, which would force a full batch
-    physical-planning pass on every call; file count understates task
-    count for large splittable files, erring toward a harmless
-    repartition of an already-parallel input. Batch-only (streaming
-    DataFrames return unchanged).
+    wide tables never pay the shuffle. The guard reads ``inputFiles()``
+    (a listing on the analyzed plan), not ``df.rdd.getNumPartitions()``,
+    which would force a full batch physical-planning pass on every call;
+    file count understates task count for large splittable files, erring
+    toward a harmless repartition of an already-parallel input.
+    Batch-only (streaming DataFrames return unchanged).
     """
     if df.isStreaming:
         return df
@@ -67,8 +63,7 @@ def spread_scan(df: DataFrame, factor: int = 1,
         n_files = 0
     if n_files >= par:
         return df
-    out = df.repartition(factor * par)
-    return out.localCheckpoint(eager=False) if barrier else out
+    return df.repartition(factor * par)
 
 
 def _word_count(text: Column, word: str) -> Column:

@@ -11,6 +11,11 @@ need data movement: the duplicate-keeper window (exchange on fingerprint)
 and the packing window (exchange on shard). Total: one scan, two
 exchanges, zero Python.
 
+The keep test is projected as a boolean column and applied above the
+keeper window, not as a Filter over the scored projection: Catalyst
+would push such a Filter below the projection and substitute the score
+aliases into it, so every score would be computed twice.
+
 Reference scope analog: the reference composes its quality screen +
 duplicate drop + timeseries in `get_s2_qi_and_data`
 (satellitetools/aws.py:94-150); this is the text-corpus counterpart over
@@ -49,31 +54,34 @@ def train_data_pipeline(docs: DataFrame,
     for every surviving document — the layout a sequence writer needs.
     """
     t = F.col(text_col)
-    # stage 0: spread a single-row-group hot table across cores — the
-    # filter below evaluates the full quality+repetition+language
-    # expression tree per document, and predicate pushdown would
-    # otherwise pin it onto the scan's (possibly single) task
-    docs = TX.spread_scan(docs, barrier=True)
+    # stage 0: spread a single-row-group hot table across cores, so the
+    # per-document scoring below runs above a round-robin exchange
+    # instead of on the scan's (possibly single) task
+    docs = TX.spread_scan(docs)
     # stage 1: repetition folds, carrying the text through
     rep = TX.repetition_stats(docs, text_col=text_col, keep=(text_col,))
     # stage 2: fuse quality / language / fingerprint into one projection;
     # the language score array is projected first so each marker count is
-    # evaluated once (see text.lang_scores)
+    # evaluated once (see text.lang_scores); the threshold test is
+    # projected as `_keep`, not filtered on (see the module docstring)
     scored = rep.select(
         "doc_id", text_col, "dup_line_frac", "top2gram_frac",
         TX.quality_exprs(t)["quality"].alias("quality"),
         TX.lang_scores(F.lower(t)).alias("_sc"),
         F.md5(F.lower(F.regexp_replace(t, "\\s+", " "))).alias("_fp"),
     ).withColumn("lang_pred", TX.lang_exprs(F.col("_sc"))["lang_pred"])
-    kept = scored.filter(
+    scored = scored.withColumn("_keep", (
         (F.col("quality") >= min_quality)
         & (F.col("dup_line_frac") <= max_dup_line_frac)
         & (F.col("top2gram_frac") <= max_top2gram_frac)
-        & F.col("lang_pred").isin(*allowed_langs))
-    # stage 3: exact-dedup keeper — min doc_id per fingerprint (exchange 1)
+        & F.col("lang_pred").isin(*allowed_langs)))
+    # stage 3: exact-dedup keeper — min kept doc_id per fingerprint
+    # (exchange 1); Catalyst does not push a predicate on non-partition
+    # columns through a Window, so the keep test stays above it
     w = Window.partitionBy("_fp")
-    surv = (kept.withColumn("_keeper", F.min("doc_id").over(w))
-            .filter(F.col("doc_id") == F.col("_keeper"))
+    keeper = F.min(F.when(F.col("_keep"), F.col("doc_id"))).over(w)
+    surv = (scored.withColumn("_keeper", keeper)
+            .filter(F.col("_keep") & (F.col("doc_id") == F.col("_keeper")))
             .select("doc_id", text_col))
     # stage 4: pack survivors (exchange 2)
     return SAMP.pack_sequences(surv, seq_len=seq_len, n_shards=n_shards,

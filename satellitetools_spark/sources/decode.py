@@ -24,6 +24,7 @@ Spark-first shape:
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Iterable, List, Optional
 
@@ -111,10 +112,6 @@ def pixel_schema(bands: List[str]) -> T.StructType:
     return T.StructType(fields)
 
 
-# executor-local memo: AOI geometry → (rings_utm, cover, grid) per gsd
-_AOI_CACHE: dict = {}
-
-
 def _sorted_member(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
     """Vectorized membership of ``values`` in a sorted int64 array."""
     if len(sorted_arr) == 0:
@@ -124,11 +121,9 @@ def _sorted_member(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
     return sorted_arr[idx] == values
 
 
+# executor-local LRU memo: (AOI geometry, zone, gsd) → target grid + mask
+@functools.lru_cache(maxsize=256)
 def _aoi_grid(aoi_geometry: str, zone: int, gsd: float):
-    key = (aoi_geometry, zone, gsd)
-    hit = _AOI_CACHE.get(key)
-    if hit is not None:
-        return hit
     rings4326 = G.rings_from_geojson(aoi_geometry)
     rings_utm = G.project_rings_to_utm(rings4326, zone)
     bbox = G.rings_bounds(rings_utm)
@@ -145,11 +140,7 @@ def _aoi_grid(aoi_geometry: str, zone: int, gsd: float):
     refine = is_part & ~is_full
     if refine.any():
         inside[refine] = G.points_in_rings(px[refine], py[refine], rings_utm)
-    val = (txs, tys, px, py, cells, inside, int(inside.sum()))
-    if len(_AOI_CACHE) > 256:
-        _AOI_CACHE.clear()
-    _AOI_CACHE[key] = val
-    return val
+    return txs, tys, px, py, cells, inside, int(inside.sum())
 
 
 _OUT_COLS_HEAD = ["doc_id", "aoi", "tileid", "assetid", "productid",

@@ -179,3 +179,23 @@ def test_torn_documents_decode_missing_chunks_as_no_data(spark, geodata_mid):
     for doc_id, band in edge:
         c, t = clean.loc[doc_id, band], torn.loc[doc_id, band]
         assert (t.isna() & c.notna()).any(), (doc_id, band)
+
+
+def test_aoi_grid_memo_evicts_lru_not_everything():
+    """Past 256 (AOI, zone, gsd) keys the memo evicts the least recently
+    used grid; a key that keeps being requested stays cached."""
+    from satellitetools_spark.sources.decode import _aoi_grid
+
+    aoi = ('{"type": "Polygon", "coordinates": [[[24.0, 61.0], '
+           '[24.002, 61.0], [24.002, 61.001], [24.0, 61.001], '
+           '[24.0, 61.0]]]}')
+    _aoi_grid.cache_clear()
+    hot = (aoi, 35, 20.0)
+    _aoi_grid(*hot)
+    for i in range(300):
+        _aoi_grid(aoi, 35, 10.0 + 0.01 * i)
+        hits = _aoi_grid.cache_info().hits
+        _aoi_grid(*hot)
+        assert _aoi_grid.cache_info().hits == hits + 1
+        assert _aoi_grid.cache_info().currsize <= 256
+    _aoi_grid.cache_clear()

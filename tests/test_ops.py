@@ -587,6 +587,25 @@ def test_train_data_pipeline_composition(spark):
         assert r["pack_pos"] == r["start_offset"] % 16
 
 
+def test_train_data_pipeline_keeper_is_min_kept_doc(spark):
+    """The dedup keeper is the min doc_id among the documents that pass
+    the filters, not the min over the whole fingerprint group: k0 and k9
+    share a fingerprint but only k9 passes (k0 repeats every line)."""
+    from satellitetools_spark.plans.corpus import train_data_pipeline
+
+    good = ("the cat and the dog of a house in the garden is on the hill "
+            "and the bird of a tree is in the yard on a fence the end "
+            "and then the story of a day is told in the words on a page")
+    rows = [
+        ("k0", "\n".join([good] * 3)),   # dup_line_frac 0.667 -> dropped
+        ("k9", " ".join([good] * 3)),     # same fingerprint, passes
+        ("k5", good),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    out = train_data_pipeline(df, seq_len=16, n_shards=2).collect()
+    assert {r["doc_id"] for r in out} == {"k5", "k9"}
+
+
 def test_scene_identity_parse(spark, geodata_small):
     """F6-F8: fields derived from the raw productid string must agree with
     the scene metadata carried alongside it (tile recompose, EPSG, and the

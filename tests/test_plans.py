@@ -569,3 +569,24 @@ def test_haversine_join_is_banded_equi_join(spark):
     assert "BroadcastHashJoin" in plan       # latband equi-join
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_train_data_pipeline_scores_each_doc_once(spark, tmp_path):
+    """The keep test must not be pushed below the scoring projection: a
+    pushed Filter substitutes every score alias into its condition, so
+    the executed plan would evaluate the heavy text expressions twice.
+    Eight input files on local[8] make spread_scan a no-op, as in the
+    benchmark and in production."""
+    from satellitetools_spark.plans.corpus import train_data_pipeline
+    rows = [(f"d{i}", f"the cat and the dog of a house number {i % 5}")
+            for i in range(64)]
+    path = str(tmp_path / "docs")
+    (spark.createDataFrame(rows, ["doc_id", "text"])
+     .repartition(8).write.parquet(path))
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) >= 8
+    out = train_data_pipeline(docs)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    plan = _plan(out)
+    for expr in ("regexp_extract_all", "split("):
+        assert plan.count(expr) <= analyzed.count(expr), expr
