@@ -124,7 +124,7 @@ def _aoi_registry(tag: str) -> Dict[str, Tuple[List[np.ndarray], List[str], int,
         rings, tiles, zone, gsd = BASE_AOIS[n]
         reg[n] = ([np.asarray(r, float) for r in rings], tiles, zone, gsd)
     # bench clones: translated qvidja copies, all on the hot tile 34VEM →
-    # deliberate key skew for the salted-repartition path
+    # deliberate key skew for the salted skew helpers (operators/skew.py)
     for k in range(n_clones):
         dlon = 0.018 * ((k % 8) + 1)
         dlat = 0.011 * ((k // 8) + 1)

@@ -53,19 +53,6 @@ def rings_to_geojson(rings: Sequence[Ring]) -> str:
     return json.dumps({"type": "MultiPolygon", "coordinates": coords})
 
 
-def rings_to_wkt(rings: Sequence[Ring]) -> str:
-    parts = []
-    for r in rings:
-        r = np.asarray(r, dtype=float)
-        if not np.array_equal(r[0], r[-1]):
-            r = np.vstack([r, r[:1]])
-        pts = ", ".join(f"{x:.10f} {y:.10f}" for x, y in r)
-        parts.append(f"(({pts}))")
-    if len(parts) == 1:
-        return "POLYGON " + parts[0]
-    return "MULTIPOLYGON (" + ", ".join(parts) + ")"
-
-
 # ---------------------------------------------------------------------------
 # Point-in-polygon (vectorized even-odd ray casting)
 # ---------------------------------------------------------------------------
@@ -101,11 +88,6 @@ def points_in_rings(px: np.ndarray, py: np.ndarray, rings: Sequence[Ring]) -> np
 def rings_bounds(rings: Sequence[Ring]) -> Tuple[float, float, float, float]:
     allv = np.vstack([np.asarray(r) for r in rings])
     return float(allv[:, 0].min()), float(allv[:, 1].min()), float(allv[:, 0].max()), float(allv[:, 1].max())
-
-
-def expand_bounds(b: Tuple[float, float, float, float], amount: float) -> Tuple[float, float, float, float]:
-    """Buffer a bbox by ``amount`` on all sides (vector.py:46-66 semantics)."""
-    return (b[0] - amount, b[1] - amount, b[2] + amount, b[3] + amount)
 
 
 # ---------------------------------------------------------------------------

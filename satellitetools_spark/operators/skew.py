@@ -1,30 +1,23 @@
-"""Skew handling: salted repartition on hot keys (Axis B).
+"""Skew handling: salted aggregation and joins on hot keys (Axis B).
 
-Hot tiles (one MGRS tile carrying a large share of all documents — the
-bench dataset deliberately places >50% of AOIs on one tile) make any
-tile-keyed shuffle skewed. Two defenses, both used by the engine:
+Hot tiles (one MGRS tile carrying a large share of all documents) make
+any tile-keyed shuffle skewed. Defenses:
 
 1. AQE skew-join splitting (enabled in session.py) — runtime splitting of
    oversized shuffle partitions;
-2. explicit salted repartition for tile-keyed stages:
-   ``repartition(concat(tileid, pmod(hash(doc_id), n_salt)))`` spreads a
-   hot tile over ``n_salt`` partitions while keeping doc locality.
+2. :func:`salted_group_count` — a two-stage count whose partial stage
+   groups on ``(key, salt)``, so a hot key spreads over ``n_salt`` tasks;
+3. :func:`salted_join` — a salted shuffle join against a hot-keyed
+   dimension too big to broadcast.
 
 Per-document operators (decode, kNN fill) key on doc_id — already uniform —
-so salting applies to tile-level aggregations and the standalone cell join.
+so salting applies to key-level aggregations and joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_repartition(df: DataFrame, key: str = "tileid",
-                       n_salt: int = 8, id_col: str = "doc_id") -> DataFrame:
-    """Spread hot ``key`` groups over ``n_salt`` partitions."""
-    salt = F.pmod(F.hash(F.col(id_col)), F.lit(n_salt))
-    return df.repartition(F.concat_ws("#", F.col(key), salt.cast("string")))
 
 
 def salted_group_count(df: DataFrame, key: str = "tileid",

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import json
 import math
-from typing import Dict, List, Tuple
+from typing import Dict, Tuple
 
 import numpy as np
 import pandas as pd
@@ -130,36 +130,6 @@ def cell_join_df(pixels: DataFrame, aois: DataFrame,
         F.col("is_full") | _pip_refine(F.col("rings_utm"),
                                        F.col("x"), F.col("y")))
     return inside.drop("is_full", "rings_utm")
-
-
-def cell_join(pixels: DataFrame, aois: List[dict],
-              cell_m: float = CELL_SIZE_M,
-              broadcast_cover: bool = True) -> DataFrame:
-    """List-of-dicts convenience wrapper over :func:`cell_join_df` for
-    small literal AOI dimensions (keys: aoi, tileid, geometry, utm_zone)."""
-    spark = pixels.sparkSession
-    aoi_df = spark.createDataFrame(
-        [(a["aoi"], a["tileid"], a["geometry"] if isinstance(a["geometry"], str)
-          else json.dumps(a["geometry"]), int(a["utm_zone"])) for a in aois],
-        "aoi string, tileid string, geometry string, utm_zone int")
-    return cell_join_df(pixels, aoi_df, cell_m, broadcast_cover)
-
-
-def aoi_cover_table(aois: List[dict], cell_m: float = CELL_SIZE_M) -> Tuple[List[tuple], Dict[str, list]]:
-    """Driver-side cover build for tests/tools: cover rows + geometry map
-    for a list of AOI dicts with keys (aoi, tileid, geometry, utm_zone)."""
-    rows = []
-    geoms: Dict[str, list] = {}
-    for a in aois:
-        rings4326 = G.rings_from_geojson(a["geometry"])
-        rings_utm = G.project_rings_to_utm(rings4326, int(a["utm_zone"]))
-        geoms[a["aoi"]] = [r.tolist() for r in rings_utm]
-        cover = G.polygon_cell_cover(rings_utm, cell_m)
-        for c in cover["full"]:
-            rows.append((a["aoi"], a["tileid"], int(c), True))
-        for c in cover["partial"]:
-            rows.append((a["aoi"], a["tileid"], int(c), False))
-    return rows, geoms
 
 
 def dem_lookup(pixels: DataFrame, dem: DataFrame,
@@ -3689,7 +3659,7 @@ def haversine_join(points: DataFrame, stations: DataFrame,
     exact haversine predicate, so the
     trig runs only on banded survivors. This is the formula-exact
     path; at planetary density the production candidate generator is
-    the existing S2-style `cell_join` cover. The shared haversine
+    the existing S2-style `cell_join_df` cover. The shared haversine
     formula STRING renders identically into the DuckDB oracle, which
     brute-forces all pairs — an independent check that banding loses
     nothing.

@@ -52,10 +52,7 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     which would force a full batch physical-planning pass on every call;
     file count understates task count for large splittable files, erring
     toward a harmless repartition of an already-parallel input.
-    Batch-only (streaming DataFrames return unchanged).
     """
-    if df.isStreaming:
-        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_files = len(df.inputFiles())

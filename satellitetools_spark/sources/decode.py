@@ -313,12 +313,6 @@ def _maybe_repartition(prep: DataFrame) -> DataFrame:
     with an explicit count so AQE's byte-based coalescing cannot collapse
     the CPU-bound stage."""
     par = prep.sparkSession.sparkContext.defaultParallelism
-    if prep.isStreaming:
-        # probing the plan triggers batch planning (AnalysisException on a
-        # streaming DataFrame); micro-batch size is governed by
-        # maxFilesPerTrigger upstream, so a fixed round-robin fan-out is
-        # the streaming-safe equivalent of the wave guard below
-        return prep.repartition(4 * par)
     # require several task waves, not just one-per-core: documents are
     # heterogeneous (a 10 m-GSD AOI decodes ~4x slower than a 20 m one),
     # and a single wave runs at the speed of its slowest straggler.

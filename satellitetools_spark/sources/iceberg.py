@@ -3,19 +3,18 @@
 The north rule's production layout is "Iceberg tables of interleaved
 text + media documents at 10^12-document scale". This module is the
 real wiring for that layout — catalog configuration, bucketed table
-creation, snapshot-incremental reads (the commit feed the streaming
-ingest consumes), and snapshot-pinned reads for exact resume — all
-through Spark's DataSourceV2, so scan pruning / predicate pushdown /
-AQE behave exactly as on the parquet stand-in used everywhere else in
-this repo (the sandbox ships no ``iceberg-spark-runtime`` jar; every
-entry point is therefore gated on :func:`iceberg_available`, and
-``tests/test_iceberg.py`` auto-skips without it).
+creation, snapshot-incremental reads, and snapshot-pinned reads for
+exact resume — all through Spark's DataSourceV2, so scan pruning /
+predicate pushdown / AQE behave exactly as on the parquet stand-in used
+everywhere else in this repo (the sandbox ships no
+``iceberg-spark-runtime`` jar; every entry point is therefore gated on
+:func:`iceberg_available`, and ``tests/test_iceberg.py`` auto-skips
+without it).
 
 Why bucket(doc_id): at 10^12 documents the engine's joins (quality
 semi-join, dedup keeper join, lineage anti-join) are all doc_id-equi.
 An Iceberg ``bucket(N, doc_id)`` hidden partition gives storage-aligned
-hash distribution those joins can exploit (see plans/bucketing.py for
-the parquet-native analog and the zero-Exchange plan it produces).
+hash distribution those joins can exploit.
 """
 
 from __future__ import annotations
@@ -116,7 +115,7 @@ def create_documents_table(docs: DataFrame, table: str,
 
 def append_documents(docs: DataFrame, table: str) -> None:
     """Transactional append — one Iceberg snapshot per call (the commit
-    granularity the incremental/streaming readers below consume)."""
+    granularity the incremental reader below consumes)."""
     docs.writeTo(table).append()
 
 
@@ -137,20 +136,11 @@ def read_appends_between(spark: SparkSession, table: str,
                          start_snapshot_id: int,
                          end_snapshot_id: int | None = None) -> DataFrame:
     """Incremental read: only rows appended after ``start_snapshot_id``
-    (exclusive), up to ``end_snapshot_id`` (inclusive) — the batch analog
-    of the streaming commit feed in streaming/ingest.py."""
+    (exclusive), up to ``end_snapshot_id`` (inclusive)."""
     return (spark.read.format("iceberg")
             .options(**incremental_read_options(start_snapshot_id,
                                                 end_snapshot_id))
             .load(table))
-
-
-def stream_documents(spark: SparkSession, table: str) -> DataFrame:
-    """Structured-streaming source over the table's commit feed; drop-in
-    for the file-based ``streaming.ingest.read_document_stream`` (same
-    schema, same downstream operators — streaming QI, windowed rollups,
-    stateful dedup all lift unchanged)."""
-    return spark.readStream.format("iceberg").load(table)
 
 
 def current_snapshot_id(spark: SparkSession, table: str) -> int | None:

@@ -97,10 +97,8 @@ def test_project_rings_preserves_shape():
     assert np.isfinite(out[0]).all()
 
 
-def test_wkt_and_geojson_roundtrip():
+def test_geojson_roundtrip():
     gj = G.rings_to_geojson(SQUARE)
     rings = G.rings_from_geojson(gj)
     assert len(rings) == 1
     np.testing.assert_allclose(rings[0], SQUARE[0])
-    wkt = G.rings_to_wkt(SQUARE)
-    assert wkt.startswith("POLYGON ((")

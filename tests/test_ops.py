@@ -20,7 +20,7 @@ from satellitetools_spark.operators import sampling as SAMP
 from satellitetools_spark.operators import similarity as SIM
 from satellitetools_spark.operators.knn_fill import knn_fill
 from satellitetools_spark.operators.skew import salted_group_count
-from satellitetools_spark.operators.spatial import cell_join
+from satellitetools_spark.operators.spatial import cell_join_df
 from satellitetools_spark.plans.lineage import run_resumable
 
 TESTDATA = "/root/testdata/sf0.001"
@@ -267,8 +267,10 @@ def test_cell_join_matches_bruteforce_pip(spark):
     py = bx[1] - 50 + rng.rand(500) * (bx[3] - bx[1] + 100)
     pts = spark.createDataFrame(
         pd.DataFrame({"tileid": "T1", "x": px, "y": py}))
-    got = cell_join(pts, [{"aoi": "a", "tileid": "T1",
-                           "geometry": geom, "utm_zone": 33}])
+    aoi = spark.createDataFrame(
+        [("a", "T1", geom, 33)],
+        "aoi string, tileid string, geometry string, utm_zone int")
+    got = cell_join_df(pts, aoi)
     # doubles round-trip bit-exactly through Spark — compare unrounded
     # (round(np.float64) and round(float) disagree in the last digit)
     got_set = {(float(r["x"]), float(r["y"])) for r in got.collect()}
@@ -284,7 +286,6 @@ def test_cell_join_df_thousand_cloned_aois(spark):
     # the dimension. Expected membership = driver-side brute-force PIP
     # with the same projection.
     import json as _json
-    from satellitetools_spark.operators.spatial import cell_join_df
     n_aoi = 1200
     aoi_rows, rings_utm_by_aoi = [], {}
     for i in range(n_aoi):

@@ -133,3 +133,22 @@ def test_flagship_timeseries_matches_oracle(spark, geodata_small, world):
         np.testing.assert_allclose(
             got[c].to_numpy(dtype=float), want[c].to_numpy(dtype=float),
             rtol=1e-9, atol=1e-12, equal_nan=True, err_msg=c)
+
+
+def test_timeseries_approx_median_close_to_exact(spark, geodata_small):
+    from satellitetools_spark.operators.timeseries import dataset_to_timeseries
+    from satellitetools_spark.plans.pipeline import get_s2_qi_and_data
+    from satellitetools_spark.sources import read_documents
+
+    docs = read_documents(spark, os.path.join(geodata_small, "docs.parquet"))
+    _qi, px = get_s2_qi_and_data(docs, vi_vars=["ndvi"])
+    exact = {(r["aoi"], r["time"]): r["ndvi_F050"] for r in
+             dataset_to_timeseries(px, ["ndvi"]).collect()}
+    approx = {(r["aoi"], r["time"]): r["ndvi_F050"] for r in
+              dataset_to_timeseries(px, ["ndvi"],
+                                    median_accuracy=10000).collect()}
+    assert set(exact) == set(approx) and exact
+    for key, v in exact.items():
+        # sketch rank error n/accuracy < 1 at this group size: the sketch
+        # returns a true element adjacent to the exact (interpolated) median
+        assert abs(approx[key] - v) <= 0.02, (key, approx[key], v)

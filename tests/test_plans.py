@@ -2,7 +2,7 @@
 were designed around, so a refactor that silently degrades a broadcast
 into a sort-merge join, or a heap top-k into a global sort, fails CI —
 the 100 TB properties are asserted, not just documented (complements
-the zero-Exchange assertions in test_bucketing and PLANS.md's audits).
+PLANS.md's audits).
 """
 
 import os
