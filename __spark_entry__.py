@@ -3719,7 +3719,9 @@ FROM fp
                          AS geom
                 FROM read_parquet('{_g("docs")}'), unnest(spans) u(s)
                 WHERE s.kind = 'text'
-                  AND json_extract_string(s.text, '$.type') = 'aoi'
+                  AND CASE WHEN s.kind = 'text'
+                      THEN json_extract_string(s.text, '$.type') END
+                      = 'aoi'
                 GROUP BY 1""",
             geom_col="geom", name_col="aoi"),
         "events_cusum": TEMPORAL.cusum_alarms_sql(

@@ -13,19 +13,25 @@ column at 10^12 rows the alphabet approaches the row count and the
 cumsum single-threads. This module removes that cliff: same outputs,
 bounded per-task work at any alphabet size.
 
-Shape (two-level scan, the same checkpoint-pinned scheme as
-``sampling.global_row_number``):
+Shape (two-level scan; ``sampling.global_row_number`` is its
+index-only form):
 
 1. ``repartitionByRange`` + ``sortWithinPartitions`` on the order keys
-   (ONE wide op), pinned with a lazy ``localCheckpoint`` so every
-   consumer sees identical partitions (no reliance on exchange reuse).
-2. Per-range-partition partial sums — #partitions rows, NOT data rows —
-   are collected to the driver and turned into literal per-partition
-   offsets (driver traffic O(partitions × columns), independent of row
-   count).
-3. The running sum is then a per-partition window (partitioned by the
-   stamped range-partition id — bounded task state) plus the literal
-   offset: a map-side projection.
+   (ONE wide op), stamped with the range-partition id, pinned with a
+   lazy ``localCheckpoint`` so every consumer sees identical partitions
+   (no reliance on exchange reuse).
+2. Per-range-partition partials — #partitions rows, NOT data rows —
+   are collected to the driver and turned into per-partition offsets
+   (driver traffic O(partitions × columns), independent of row count).
+   They reach the rows as ``element_at(array(lit…), pid + 1)``, which
+   Catalyst folds into one array literal per column.
+3. A running sum or lead is a window partitioned by the stamped
+   partition id plus that offset. The window costs one hash exchange on
+   ``_pspid``, but every task holds one range partition only. The
+   global index needs no window: ``monotonically_increasing_id``
+   stamped in step 1 already numbers each partition's rows in sorted
+   order, so an index-only scan is a projection over the checkpoint
+   (no window, no exchange).
 
 Exactness: all call sites sum COUNT columns (doubles holding integers),
 so regrouping the additions is bit-exact up to 2^53 — outputs are
@@ -43,22 +49,29 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Above this partition count the per-row literal offset array
-# (element_at(array(lit...), pid+1) — one N-wide array PER SUM COLUMN)
-# bloats codegen; prefix_sums switches to ONE broadcast (pid → offsets)
-# table joined map-side instead (r4 advisor). Both paths produce
-# identical values (pinned in tests/test_cumsum.py).
-LITERAL_OFFSET_MAX = 64
+# monotonically_increasing_id stamps pid<<33 | local row
+_MID_LOCAL_BITS = 33
+
+# Above this many (partition, group) partials grouped_prefix_sums stops
+# collecting them and uses the per-group window instead.
+MAX_PARTIALS_ROWS = 100_000
+
+
+def _per_partition(values, cast: str = None) -> Column:
+    """The entry of driver-side ``values`` for each row's range
+    partition."""
+    lits = [F.lit(v) if cast is None else F.lit(v).cast(cast)
+            for v in values]
+    return F.element_at(F.array(*lits), F.col("_pspid") + 1)
 
 
 def prefix_sums(df: DataFrame, order_by: Sequence[Column],
                 sum_cols: Sequence[str],
                 num_partitions: int = None,
-                prefix: str = "cum_",
                 return_totals: bool = False,
                 lead_of: str = None,
                 with_index: bool = False):
-    """Append inclusive running sums ``<prefix><col>`` of each
+    """Append inclusive running sums ``cum_<col>`` of each
     ``sum_cols`` entry in the total order ``order_by``.
 
     ``order_by`` must be a total order over the rows (the histogram
@@ -84,7 +97,8 @@ def prefix_sums(df: DataFrame, order_by: Sequence[Column],
     ``with_index=True`` appends ``_idx`` — the 1-based global rank in
     the total order (``ROW_NUMBER() OVER (ORDER BY ...)``), from the
     same per-partition counts, and puts the grand row count under
-    ``"_count"`` in the totals dict.
+    ``"_count"`` in the totals dict. It raises ``ValueError`` when a
+    range partition holds 2^33 rows or more (raise ``num_partitions``).
 
     DECIMAL sum columns keep exact ``decimal.Decimal`` offsets (no
     float round-trip), preserving the engine's decimal-exact
@@ -95,8 +109,10 @@ def prefix_sums(df: DataFrame, order_by: Sequence[Column],
         spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = (df.repartitionByRange(n, *order_by)
                 .sortWithinPartitions(*order_by)
-                .withColumn("_pspid", F.spark_partition_id())
-                .localCheckpoint(eager=False))
+                .withColumn("_pspid", F.spark_partition_id()))
+    if with_index:
+        ranged = ranged.withColumn("_mid", F.monotonically_increasing_id())
+    ranged = ranged.localCheckpoint(eager=False)
     aggs = [F.sum(c).alias(c) for c in sum_cols]
     if lead_of is not None:
         aggs.append(F.min(lead_of).alias("_head"))
@@ -104,20 +120,18 @@ def prefix_sums(df: DataFrame, order_by: Sequence[Column],
         aggs.append(F.count("*").alias("_cnt"))
     pdf = ranged.groupBy("_pspid").agg(*aggs)
     pschema = pdf.schema
-    partials = pdf.collect()
-    pmap = {int(r["_pspid"]): r for r in partials}
+    pmap = {int(r["_pspid"]): r for r in pdf.collect()}
 
     # Driver-side running offsets per partition (O(partitions) rows —
-    # independent of data row count), one list per sum column.
+    # independent of data row count).
+    out = ranged
     grand = {}
-    off_lists = {}
-    dec_cols = set()
+    w = (Window.partitionBy("_pspid").orderBy(*order_by)
+         .rowsBetween(Window.unboundedPreceding, 0))
     for c in sum_cols:
         # decimal detection by SCHEMA, not value sniffing: a partial
         # batch that is all-NULL must still accumulate as Decimal
         is_dec = isinstance(pschema[c].dataType, T.DecimalType)
-        if is_dec:
-            dec_cols.add(c)
         acc = decimal.Decimal(0) if is_dec else 0.0
         offs = []
         for i in range(n):
@@ -126,20 +140,29 @@ def prefix_sums(df: DataFrame, order_by: Sequence[Column],
             if r is not None and r[c] is not None:
                 acc += r[c] if is_dec else float(r[c])
         grand[c] = acc
-        off_lists[c] = offs
-    ioffs = None
+        out = out.withColumn("cum_" + c,
+                             F.sum(c).over(w) + _per_partition(offs))
     if with_index:
+        counts = [int(pmap[i]["_cnt"]) if i in pmap else 0
+                  for i in range(n)]
+        if max(counts) >= (1 << _MID_LOCAL_BITS):
+            # the local row would overflow into the pid bits of _mid
+            raise ValueError(
+                f"prefix_sums: a partition holds {max(counts)} rows "
+                f"(>= 2^{_MID_LOCAL_BITS}); raise num_partitions "
+                f"(currently {n})")
         acc, ioffs = 0, []
-        for i in range(n):
+        for cnt in counts:
             ioffs.append(acc)
-            r = pmap.get(i)
-            if r is not None:
-                acc += int(r["_cnt"])
+            acc += cnt
         grand["_count"] = acc
-    heads = None
+        local = F.col("_mid").bitwiseAND(
+            F.lit((1 << _MID_LOCAL_BITS) - 1))
+        out = out.withColumn(
+            "_idx", _per_partition(ioffs, "long") + local + 1)
     if lead_of is not None:
-        # next-partition heads: heads[pid] = the min of lead_of over
-        # the first NON-EMPTY partition after pid
+        # heads[pid] = the min of lead_of over the first NON-EMPTY
+        # partition after pid
         heads = [None] * n
         nxt = None
         for i in range(n - 1, -1, -1):
@@ -147,81 +170,12 @@ def prefix_sums(df: DataFrame, order_by: Sequence[Column],
             r = pmap.get(i)
             if r is not None and r["_head"] is not None:
                 nxt = r["_head"]
-
-    # Offsets reach the rows one of two ways. SMALL n: per-row literal
-    # arrays — zero extra operators, but each is an N-wide codegen
-    # expression per column. LARGE n: ONE broadcast (pid → offsets)
-    # table joined map-side (no shuffle; O(n) broadcast) — same
-    # values, codegen stays flat at production partition counts.
-    # Decimal offsets keep exact Decimal typing on BOTH paths (the
-    # broadcast table reuses the partial-agg column types).
-    use_join = n > LITERAL_OFFSET_MAX
-    out = ranged
-    if use_join:
-        fields = [T.StructField("_pspid", T.IntegerType())]
-        # offsets accumulate as Python floats for every non-Decimal
-        # dtype (matching the literal path's F.lit(float) semantics —
-        # long/int sums become double offsets there too), so the
-        # broadcast column must be DoubleType for them; only Decimal
-        # keeps its exact partial-agg type
-        fields += [T.StructField(
-            "_poff_" + c,
-            pschema[c].dataType if c in dec_cols else T.DoubleType())
-            for c in sum_cols]
-        if with_index:
-            fields.append(T.StructField("_pioff", T.LongType()))
-        if lead_of is not None:
-            fields.append(T.StructField("_phead", T.DoubleType()))
-        rows = []
-        for i in range(n):
-            row = [i]
-            row += [off_lists[c][i] for c in sum_cols]
-            if with_index:
-                row.append(int(ioffs[i]))
-            if lead_of is not None:
-                h = heads[i]
-                row.append(None if h is None else float(h))
-            rows.append(tuple(row))
-        odf = spark.createDataFrame(rows, T.StructType(fields))
-        out = out.join(F.broadcast(odf), "_pspid")
-        off_cols = {c: F.col("_poff_" + c) for c in sum_cols}
-        ioff_col = F.col("_pioff") if with_index else None
-        head_col = (F.col("_phead") if lead_of is not None else None)
-    else:
-        off_cols = {
-            c: F.element_at(
-                F.array(*[F.lit(o) for o in off_lists[c]]),
-                F.col("_pspid").cast("int") + 1)
-            for c in sum_cols}
-        ioff_col = (F.element_at(
-            F.array(*[F.lit(int(o)).cast("long") for o in ioffs]),
-            F.col("_pspid").cast("int") + 1) if with_index else None)
-        head_col = (F.element_at(
-            F.array(*[F.lit(h).cast("double") for h in heads]),
-            F.col("_pspid").cast("int") + 1)
-            if lead_of is not None else None)
-
-    w = (Window.partitionBy("_pspid").orderBy(*order_by)
-         .rowsBetween(Window.unboundedPreceding, 0))
-    for c in sum_cols:
-        out = out.withColumn(prefix + c, F.sum(c).over(w) + off_cols[c])
-    if with_index:
-        wrn = Window.partitionBy("_pspid").orderBy(*order_by)
-        out = out.withColumn(
-            "_idx", (F.row_number().over(wrn).cast("long") + ioff_col))
-    if lead_of is not None:
         wl = Window.partitionBy("_pspid").orderBy(*order_by)
         out = out.withColumn(
             "lead_" + lead_of,
-            F.coalesce(F.lead(lead_of).over(wl), head_col))
-    drop = ["_pspid"]
-    if use_join:
-        drop += ["_poff_" + c for c in sum_cols]
-        if with_index:
-            drop.append("_pioff")
-        if lead_of is not None:
-            drop.append("_phead")
-    out = out.drop(*drop)
+            F.coalesce(F.lead(lead_of).over(wl),
+                       _per_partition(heads, "double")))
+    out = out.drop("_pspid", "_mid")
     return (out, grand) if return_totals else out
 
 
@@ -229,14 +183,9 @@ def grouped_prefix_sums(df: DataFrame, group_cols: Sequence[str],
                         order_by: Sequence[Column],
                         sum_cols: Sequence[str],
                         num_partitions: int = None,
-                        prefix: str = "cum_",
-                        totals_prefix: str = "tot_",
-                        with_index: bool = False,
-                        many_groups_threshold: int = 100_000,
-                        max_partials_rows: int = 2_000_000
-                        ) -> DataFrame:
-    """Per-group running sums in a per-group total order, plus the
-    per-group grand totals — the two-level form of
+                        with_index: bool = False) -> DataFrame:
+    """Per-group running sums ``cum_<col>`` in a per-group total order,
+    plus the per-group grand totals ``tot_<col>`` — the two-level form of
     ``SUM(c) OVER (PARTITION BY g ORDER BY ...)`` +
     ``SUM(c) OVER (PARTITION BY g)`` for the FEW-GROUPS × HUGE-ALPHABET
     regime (per-event-type value histograms), where the plain
@@ -246,35 +195,21 @@ def grouped_prefix_sums(df: DataFrame, group_cols: Sequence[str],
     contiguous across partitions; the per-(partition, group) partials
     (≤ partitions + groups − 1 rows, since each partition holds a
     contiguous slice) come back to the driver, turn into a broadcast
-    offsets/totals table, and rejoin null-safely. With MANY small
-    groups the ordinary ``Window.partitionBy(g)`` is already parallel
-    and should be used instead — the partials collect is the
-    constraint, not the scan.
+    offsets/totals table, and rejoin null-safely.
+
+    The partials collect is bounded: it takes at most
+    ``MAX_PARTIALS_ROWS + 1`` rows, and when more come back (MANY small
+    groups) the function uses the ordinary ``Window.partitionBy(g)``
+    form over the same pinned range partition instead — at that
+    cardinality the window is parallel across groups.
+    The choice is exact, and outputs are identical on both paths
+    (pinned in tests/test_cumsum.py).
 
     Count columns stay bit-exact (integer doubles); see
     :func:`prefix_sums` for the general fp note. ``with_index=True``
     appends ``_idx`` — the 1-based rank WITHIN the group in the given
     order (``ROW_NUMBER() OVER (PARTITION BY g ORDER BY ...)``), from
     the same partials.
-
-    SELF-GUARDING (r4 verdict #3): the two-level plan is only right in
-    the few-groups × huge-alphabet regime — its partials collect and
-    broadcast offsets table are O(partitions + groups). The function
-    probes the group cardinality off the pinned range partition (one
-    cheap approx agg, the same adaptive-split pattern as
-    ``segment.rfm_segments``) and, above ``many_groups_threshold``
-    (default 10⁵ — the two-level scan stays preferable as long as its
-    O(partitions + groups) partials/broadcast stay cheap, because it
-    bounds per-task state even when individual groups carry huge
-    alphabets), falls back to the ordinary ``Window.partitionBy(g)``
-    form — at that cardinality the window is parallel across groups
-    and collect-free, so the fallback is the scale-correct plan.
-    ``max_partials_rows`` is the independent override guard: a caller
-    who RAISES ``many_groups_threshold`` past it (to force the
-    two-level path) fails fast instead of attempting an unbounded
-    driver collect — with the defaults it never fires, by design.
-    Outputs are identical on both paths (pinned in
-    tests/test_cumsum.py).
 
     Sum columns must NOT be DecimalType: the grouped offsets table is
     Double-typed, which would silently break decimal exactness (the
@@ -297,42 +232,30 @@ def grouped_prefix_sums(df: DataFrame, group_cols: Sequence[str],
                 .sortWithinPartitions(*(gsort + list(order_by)))
                 .withColumn("_pspid", F.spark_partition_id())
                 .localCheckpoint(eager=False))
-    n_groups = int(ranged.agg(F.approx_count_distinct(
-        F.struct(*[F.col(c) for c in group_cols])).alias("g"))
-        .collect()[0]["g"])
-    if n_groups > many_groups_threshold:
+    paggs = [F.sum(c).alias(c) for c in sum_cols]
+    if with_index:
+        paggs.append(F.count("*").alias("_gcnt"))
+    partials = (ranged.groupBy("_pspid", *group_cols).agg(*paggs)
+                .limit(MAX_PARTIALS_ROWS + 1).collect())
+    if len(partials) > MAX_PARTIALS_ROWS:
         # MANY-GROUPS regime: plain per-group window over the pinned
         # checkpoint (df's lineage still computed once). Parallelism
-        # comes from the group count itself; no driver collect at all.
+        # comes from the group count itself.
         wcum = (Window.partitionBy(*group_cols).orderBy(*order_by)
                 .rowsBetween(Window.unboundedPreceding, 0))
         wtot = Window.partitionBy(*group_cols)
         out = ranged.drop("_pspid")
         for c in sum_cols:
             out = out.withColumn(
-                prefix + c, F.sum(F.col(c).cast("double")).over(wcum))
+                "cum_" + c, F.sum(F.col(c).cast("double")).over(wcum))
         if with_index:
             wrn = Window.partitionBy(*group_cols).orderBy(*order_by)
             out = out.withColumn(
                 "_idx", F.row_number().over(wrn).cast("long"))
         for c in sum_cols:
             out = out.withColumn(
-                totals_prefix + c,
-                F.sum(F.col(c).cast("double")).over(wtot))
+                "tot_" + c, F.sum(F.col(c).cast("double")).over(wtot))
         return out
-    if n + n_groups > max_partials_rows:
-        raise RuntimeError(
-            f"grouped_prefix_sums: partials table would hold about "
-            f"{n + n_groups} rows (partitions={n}, groups~{n_groups})"
-            f" > max_partials_rows={max_partials_rows}; refusing the "
-            "driver collect. Lower many_groups_threshold so the "
-            "window fallback engages, or raise max_partials_rows "
-            "deliberately.")
-    paggs = [F.sum(c).alias(c) for c in sum_cols]
-    if with_index:
-        paggs.append(F.count("*").alias("_gcnt"))
-    partials = (ranged.groupBy("_pspid", *group_cols)
-                .agg(*paggs).collect())
     # per-group running offsets in pid order + per-group grand totals
     acc: dict = {}
     iacc: dict = {}
@@ -359,7 +282,7 @@ def grouped_prefix_sums(df: DataFrame, group_cols: Sequence[str],
     tot_rows = [(*key, *[v[c] for c in sum_cols])
                 for key, v in acc.items()]
     tot_schema = T.StructType(
-        gfields + [T.StructField(totals_prefix + c, T.DoubleType())
+        gfields + [T.StructField("tot_" + c, T.DoubleType())
                    for c in sum_cols])
     tot_df = spark.createDataFrame(tot_rows, tot_schema)
 
@@ -381,7 +304,7 @@ def grouped_prefix_sums(df: DataFrame, group_cols: Sequence[str],
     w = (Window.partitionBy("_pspid", *group_cols).orderBy(*order_by)
          .rowsBetween(Window.unboundedPreceding, 0))
     for c in sum_cols:
-        out = out.withColumn(prefix + c,
+        out = out.withColumn("cum_" + c,
                              F.sum(c).over(w) + F.col("_off_" + c))
     if with_index:
         wrn = Window.partitionBy("_pspid", *group_cols).orderBy(
@@ -393,6 +316,6 @@ def grouped_prefix_sums(df: DataFrame, group_cols: Sequence[str],
     out = out.join(F.broadcast(tot_df),
                    _nullsafe(out, tot_df, group_cols), "inner").select(
         *[out[c] for c in out.columns if c in df.columns
-          or c.startswith(prefix) or c == "_idx"],
-        *[tot_df[totals_prefix + c] for c in sum_cols])
+          or c.startswith("cum_") or c == "_idx"],
+        *[tot_df["tot_" + c] for c in sum_cols])
     return out

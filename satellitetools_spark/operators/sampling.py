@@ -19,6 +19,8 @@ from typing import Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from satellitetools_spark.operators.cumsum import prefix_sums
+
 _B = 131
 _M = 1_000_000_007
 DEFAULT_SPLITS: Tuple[Tuple[str, int], ...] = (
@@ -199,9 +201,6 @@ WHERE sample_bucket * {int(ref_weight)} < CAST({weight_col} AS BIGINT) * {int(de
 """
 
 
-_MID_MASK = (1 << 33) - 1  # monotonically_increasing_id: pid<<33 | local row
-
-
 def global_row_number(df: DataFrame, order_by: Sequence[Column],
                       num_partitions: int = None,
                       idx_col: str = "global_idx") -> DataFrame:
@@ -209,50 +208,22 @@ def global_row_number(df: DataFrame, order_by: Sequence[Column],
     the scale-safe form of ``row_number() OVER (ORDER BY ...)``, which on a
     cluster would collapse into a single partition.
 
-    Shape (the classic two-pass zipWithIndex scheme, SQL-native):
-      1. ``repartitionByRange`` + ``sortWithinPartitions`` on the order
-         keys — ONE wide op (range shuffle with local sort); then
-         ``monotonically_increasing_id`` stamps ``pid<<33 | local_rank``
-         in sorted order, and the result is pinned with a lazy
-         ``localCheckpoint`` so both passes see identical partitions.
-      2. A constant-size metadata aggregation (one count per partition —
-         #partitions rows, NOT data rows) is collected to the driver and
-         turned into per-partition offsets; the final index is a map-only
-         projection ``offset[pid] + local_rank``. No second data shuffle,
-         no window exchange, no Python.
+    It is the index-only two-pass scan of :func:`cumsum.prefix_sums`: one
+    range shuffle with local sort, pinned by a checkpoint; one count per
+    partition collected to the driver; then a map-only projection
+    ``offset[pid] + local_rank``. No second data shuffle, no window, no
+    Python.
 
     ``order_by`` must be a total order (append a unique tiebreaker) —
     correctness then does not depend on where the range boundaries fall.
     At 100 TB the checkpoint pins one materialized copy in executor
-    storage; callers indexing a truly huge table should write stage 1 to a
-    table instead and run stage 2 over the re-read.
+    storage; callers indexing a truly huge table should write the range
+    partition to a table instead and index the re-read.
     """
-    spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (df.repartitionByRange(n, *order_by)
-                .sortWithinPartitions(*order_by)
-                .withColumn("_mid", F.monotonically_increasing_id())
-                .localCheckpoint(eager=False))
-    pid = F.shiftright(F.col("_mid"), 33)  # exact; a double divide would
-    # lose mantissa bits for ids past 2^53
-    counts = {r["_pid"]: r["count"]
-              for r in ranged.groupBy(pid.alias("_pid")).count().collect()}
-    if counts and max(counts.values()) >= (1 << 33):
-        # local rank would overflow into the pid bits of the stamped id,
-        # silently corrupting indices — demand more partitions instead
-        raise ValueError(
-            f"global_row_number: a partition holds "
-            f"{max(counts.values())} rows (>= 2^33); raise num_partitions "
-            f"(currently {n})")
-    offsets, acc = [], 0
-    for i in range(n):
-        offsets.append(acc)
-        acc += counts.get(i, 0)
-    off = F.element_at(
-        F.array(*[F.lit(int(o)).cast("long") for o in offsets]),
-        pid.cast("int") + 1)
-    local = F.col("_mid").bitwiseAND(F.lit(_MID_MASK))
-    return ranged.withColumn(idx_col, (off + local).cast("long")).drop("_mid")
+    out = prefix_sums(df, order_by, [], num_partitions=num_partitions,
+                      with_index=True)
+    return (out.withColumn("_idx", F.col("_idx") - 1)
+            .withColumnRenamed("_idx", idx_col))
 
 
 def global_row_number_sql(table: str, order_by_sql: str,

@@ -22,9 +22,12 @@ __all__ = [
     "cohort_revenue", "cohort_revenue_sql",
 ]
 
+# rfm_segments ranks at most this many customers with the classic
+# single-task NTILE windows; larger tables take the two-level scan.
+SMALL_TABLE_THRESHOLD = 2_000_000
 
-def rfm_segments(orders: DataFrame, n_tiles: int = 4,
-                 small_table_threshold: int = 2_000_000) -> DataFrame:
+
+def rfm_segments(orders: DataFrame, n_tiles: int = 4) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation.
 
     One hash agg at customer cardinality (recency vs the global max
@@ -35,9 +38,9 @@ def rfm_segments(orders: DataFrame, n_tiles: int = 4,
 
     Shape at scale: agg shuffles once on ``o_custkey``; the NTILE pass
     is ADAPTIVE on the aggregated customer count — ≤
-    ``small_table_threshold`` uses the classic windows (the table
+    ``SMALL_TABLE_THRESHOLD`` uses the classic windows (the table
     provably fits one task), above it each dimension is a TWO-LEVEL
-    scan (range partition + bounded per-partition rank + driver-literal
+    scan (range partition + per-partition row ids + driver-literal
     offsets, cumsum.prefix_sums) with SQL NTILE's exact bucket formula
     applied to the global rank — no single-partition sort at 10⁹
     customers, no extra jobs at 10³. Both paths produce identical
@@ -73,7 +76,7 @@ def rfm_segments(orders: DataFrame, n_tiles: int = 4,
     order_r = [F.col("recency_days").asc(), F.col("c_custkey").asc()]
     order_f = [F.col("frequency").desc(), F.col("c_custkey").asc()]
     order_m = [F.col("_mon").desc(), F.col("c_custkey").asc()]
-    if n_rows <= int(small_table_threshold):
+    if n_rows <= SMALL_TABLE_THRESHOLD:
         out = (per
                .withColumn("r_score",
                            F.ntile(n_tiles).over(Window.orderBy(*order_r)))

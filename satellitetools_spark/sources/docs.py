@@ -97,6 +97,16 @@ AOI_META_SCHEMA = T.StructType([
 ])
 
 
+def _text_spans(*span_types: str) -> list:
+    """The text of each document's first text span whose JSON ``$.type``
+    is each of ``span_types`` (NULL when there is none), located inside
+    the ``spans`` array with ``filter`` lambdas."""
+    texts = F.filter("spans", lambda s: s["kind"] == F.lit("text"))
+    return [F.element_at(
+        F.filter(texts, lambda s: F.get_json_object(s["text"], "$.type")
+                 == F.lit(t)), 1)["text"] for t in span_types]
+
+
 def _dim_columns() -> list:
     """Dimension column expressions computed from the ``spans`` array of the
     SAME row — a pure projection, no explode, no shuffle. The text spans are
@@ -104,13 +114,7 @@ def _dim_columns() -> list:
     parsed exactly once (``from_json``; the AOI geometry subtree is kept as
     raw JSON via one ``get_json_object``). The scan stays column-pruned to
     (doc_id, spans)."""
-    texts = F.filter("spans", lambda s: s["kind"] == F.lit("text"))
-    meta_txt = F.element_at(
-        F.filter(texts, lambda s: F.get_json_object(s["text"], "$.type")
-                 == F.lit("scene_meta")), 1)["text"]
-    aoi_txt = F.element_at(
-        F.filter(texts, lambda s: F.get_json_object(s["text"], "$.type")
-                 == F.lit("aoi")), 1)["text"]
+    meta_txt, aoi_txt = _text_spans("scene_meta", "aoi")
     m = F.from_json(meta_txt, SCENE_META_SCHEMA)
     a = F.from_json(aoi_txt, AOI_META_SCHEMA)
     return [
@@ -162,10 +166,7 @@ def parse_scene_identity(docs: DataFrame) -> DataFrame:
     One codegen projection over the document row — array ``filter`` +
     single ``from_json``, no explode, no shuffle, no Python. The scan
     stays pruned to (doc_id, spans)."""
-    texts = F.filter("spans", lambda s: s["kind"] == F.lit("text"))
-    meta_txt = F.element_at(
-        F.filter(texts, lambda s: F.get_json_object(s["text"], "$.type")
-                 == F.lit("scene_meta")), 1)["text"]
+    [meta_txt] = _text_spans("scene_meta")
     m = F.from_json(meta_txt, SCENE_META_SCHEMA)
     pid = m["productid"]
     parts = F.split(pid, "_")
@@ -205,10 +206,7 @@ def observation_angle_means(docs: DataFrame) -> DataFrame:
     pre-averaged scalars for comparison. NULL means on documents without
     detector arrays.
     """
-    texts = F.filter("spans", lambda s: s["kind"] == F.lit("text"))
-    meta_txt = F.element_at(
-        F.filter(texts, lambda s: F.get_json_object(s["text"], "$.type")
-                 == F.lit("scene_meta")), 1)["text"]
+    [meta_txt] = _text_spans("scene_meta")
     m = F.from_json(meta_txt, SCENE_META_SCHEMA)
 
     def arr_mean(arr):

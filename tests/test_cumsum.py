@@ -99,7 +99,8 @@ def test_prefix_sums_lead_crosses_partitions(spark):
     assert rows[-1]["lead_v"] is None
 
 
-def test_rfm_ntile_formula_matches_sql_ntile_with_remainder(spark):
+def test_rfm_ntile_formula_matches_sql_ntile_with_remainder(
+        spark, monkeypatch):
     # 7 customers into 3 tiles: SQL NTILE gives buckets of 3, 2, 2 —
     # the remainder path of the index-formula replacement
     import datetime as dt
@@ -107,6 +108,7 @@ def test_rfm_ntile_formula_matches_sql_ntile_with_remainder(spark):
             for c in range(1, 8)]
     orders = spark.createDataFrame(
         rows, "o_custkey long, o_orderdate date, o_totalprice double")
+    from satellitetools_spark.operators import segment
     from satellitetools_spark.operators.segment import rfm_segments
     got = {r["c_custkey"]: r["r_score"]
            for r in rfm_segments(orders, n_tiles=3).collect()}
@@ -123,11 +125,11 @@ def test_rfm_ntile_formula_matches_sql_ntile_with_remainder(spark):
     assert got == want
     # the two-level (big-table) path must produce IDENTICAL scores —
     # force it with threshold 0 and compare all three dimensions
-    big = {r["c_custkey"]: (r["r_score"], r["f_score"], r["m_score"])
-           for r in rfm_segments(orders, n_tiles=3,
-                                 small_table_threshold=0).collect()}
     small = {r["c_custkey"]: (r["r_score"], r["f_score"], r["m_score"])
              for r in rfm_segments(orders, n_tiles=3).collect()}
+    monkeypatch.setattr(segment, "SMALL_TABLE_THRESHOLD", 0)
+    big = {r["c_custkey"]: (r["r_score"], r["f_score"], r["m_score"])
+           for r in rfm_segments(orders, n_tiles=3).collect()}
     assert big == small
 
 
@@ -145,44 +147,13 @@ def test_kendall_guard_rejects_unbounded_alphabet(spark):
     assert r["n"] == 4 and r["concordant"] > r["discordant"]
 
 
-def test_prefix_sums_broadcast_offset_path_matches_literal(
+def test_grouped_prefix_sums_many_groups_fallback_matches(
         spark, monkeypatch):
-    # r4 advisor: above LITERAL_OFFSET_MAX partitions the per-row
-    # N-literal offset arrays are replaced by ONE broadcast
-    # (pid -> offsets) join. Force the join path and pin value
-    # equality against the literal path for sums, _idx, lead, totals
-    # AND Decimal exactness.
+    # with MANY groups the partials collect is the constraint —
+    # grouped_prefix_sums must stop at MAX_PARTIALS_ROWS partials and
+    # switch to the ordinary per-group window. Outputs must be
+    # identical on both paths.
     from satellitetools_spark.operators import cumsum
-
-    df = spark.range(300).select(
-        (F.col("id") * 7 % 113).cast("double").alias("v"),
-        F.lit(1.0).alias("t"),
-        (F.col("id") % 5).cast("decimal(10,2)").alias("d"))
-    h = (df.groupBy("v")
-         .agg(F.sum("t").alias("t"), F.sum("d").alias("d")))
-
-    def run():
-        out, tot = prefix_sums(
-            h, [F.col("v").asc()], ["t", "d"], num_partitions=9,
-            return_totals=True, lead_of="v", with_index=True)
-        rows = {r["v"]: (r["cum_t"], str(r["cum_d"]), r["_idx"],
-                         r["lead_v"]) for r in out.collect()}
-        return rows, tot
-
-    lit_rows, lit_tot = run()
-    monkeypatch.setattr(cumsum, "LITERAL_OFFSET_MAX", 0)
-    join_rows, join_tot = run()
-    assert join_rows == lit_rows
-    assert join_tot == lit_tot
-    import decimal
-    assert isinstance(join_tot["d"], decimal.Decimal)  # no float trip
-
-
-def test_grouped_prefix_sums_many_groups_fallback_matches(spark):
-    # r4 verdict #3: with MANY groups the partials collect is the
-    # constraint — grouped_prefix_sums must self-guard by probing the
-    # group count and switching to the ordinary per-group window.
-    # Outputs must be identical on both paths.
     from satellitetools_spark.operators.cumsum import \
         grouped_prefix_sums
     df = spark.range(2000).select(
@@ -191,11 +162,10 @@ def test_grouped_prefix_sums_many_groups_fallback_matches(spark):
         F.lit(1.0).alias("nv"),
         F.col("id"))
 
-    def run(threshold):
+    def run():
         out = grouped_prefix_sums(
             df, ["grp"], [F.col("v").asc(), F.col("id").asc()],
-            ["nv"], num_partitions=5, with_index=True,
-            many_groups_threshold=threshold)
+            ["nv"], num_partitions=5, with_index=True)
         assert [c for c in out.columns] == \
             ["grp", "v", "nv", "id", "cum_nv", "_idx", "tot_nv"] or \
             set(out.columns) == {"grp", "v", "nv", "id", "cum_nv",
@@ -204,8 +174,10 @@ def test_grouped_prefix_sums_many_groups_fallback_matches(spark):
                  (r["cum_nv"], r["_idx"], r["tot_nv"])
                  for r in out.collect()}, out)
 
-    two_level, _ = run(10**9)
-    fallback, fb_df = run(10)  # 400 groups > 10 -> window path
+    two_level, _ = run()
+    # >= 400 (partition, group) partials > 10 -> window path
+    monkeypatch.setattr(cumsum, "MAX_PARTIALS_ROWS", 10)
+    fallback, fb_df = run()
     assert fallback == two_level
     # the fallback plan's windows are partitioned by the GROUP column,
     # not the stamped _pspid (proof the window path actually engaged;
@@ -226,53 +198,10 @@ def test_grouped_prefix_sums_rejects_decimal(spark):
         grouped_prefix_sums(df, ["grp"], [F.col("v").asc()], ["m"])
 
 
-def test_grouped_prefix_sums_partials_bound_fail_fast(spark):
-    from satellitetools_spark.operators.cumsum import \
-        grouped_prefix_sums
-    df = spark.range(200).select(
-        (F.col("id") % 50).cast("string").alias("grp"),
-        F.col("id").cast("double").alias("v"),
-        F.lit(1.0).alias("nv"))
-    with pytest.raises(RuntimeError, match="partials"):
-        grouped_prefix_sums(
-            df, ["grp"], [F.col("v").asc()], ["nv"],
-            num_partitions=4, many_groups_threshold=10**9,
-            max_partials_rows=10)
-
-
-def test_prefix_sums_broadcast_path_plan_shape(spark, monkeypatch):
-    # the offsets join must be a map-side BroadcastHashJoin adding NO
-    # shuffle: exactly one non-broadcast Exchange (the _pspid window's)
-    # in the whole plan, exactly one BroadcastHashJoin
-    import re
-
-    from satellitetools_spark.operators import cumsum
-    monkeypatch.setattr(cumsum, "LITERAL_OFFSET_MAX", 0)
-    df = spark.range(5000).select(
-        (F.col("id") % 997).cast("double").alias("v"),
-        F.lit(1.0).alias("t"))
-    h = df.groupBy("v").agg(F.sum("t").alias("t"))
-    out = prefix_sums(h, [F.col("v").asc()], ["t"],
-                      num_partitions=96, with_index=True)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 1
-    shuffles = [ln for ln in plan.splitlines()
-                if re.search(r"\bExchange (hash|range)", ln)
-                and "Reused" not in ln]
-    # range partition feeds the checkpoint (outside this plan); the
-    # only live exchange is the _pspid hash for the window
-    assert len(shuffles) == 1, shuffles
-    assert "_pspid" in shuffles[0]
-
-
-def test_prefix_sums_broadcast_path_long_and_allnull_decimal(
-        spark, monkeypatch):
-    # review r5: the broadcast-offset table must accept LONG sum
-    # columns (offsets accumulate as floats -> DoubleType column, the
-    # literal path's semantics) and DECIMAL columns whose partials are
-    # ALL NULL (schema-driven decimal detection, not value sniffing)
-    from satellitetools_spark.operators import cumsum
-    monkeypatch.setattr(cumsum, "LITERAL_OFFSET_MAX", 0)
+def test_prefix_sums_long_and_allnull_decimal(spark):
+    # LONG sum columns accumulate float offsets, and DECIMAL columns
+    # whose partials are ALL NULL still accumulate as Decimal
+    # (schema-driven decimal detection, not value sniffing)
     df = spark.range(200).select(
         (F.col("id") % 61).cast("double").alias("v"),
         F.lit(1).cast("long").alias("t"),
@@ -291,3 +220,64 @@ def test_prefix_sums_broadcast_path_long_and_allnull_decimal(
     assert tot["t"] == 200.0
     import decimal
     assert tot["d"] == decimal.Decimal(0)
+
+
+def test_prefix_sums_literal_offsets_at_many_partitions(spark):
+    # at hundreds of partitions the offsets stay element_at over a
+    # literal array, which Catalyst folds into one constant: no join,
+    # no per-partition array(...) expression; values, _idx, lead and
+    # the Decimal total are exact
+    import decimal
+
+    df = spark.range(300).select(
+        (F.col("id") * 7 % 113).cast("double").alias("v"),
+        F.lit(1.0).alias("t"),
+        (F.col("id") % 5).cast("decimal(10,2)").alias("d"))
+    h = (df.groupBy("v")
+         .agg(F.sum("t").alias("t"), F.sum("d").alias("d")))
+    out, tot = prefix_sums(
+        h, [F.col("v").asc()], ["t", "d"], num_partitions=256,
+        return_totals=True, lead_of="v", with_index=True)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    assert "array(" not in plan
+    w = Window.orderBy("v")
+    wc = w.rowsBetween(Window.unboundedPreceding, 0)
+    want = {r["v"]: (r["et"], r["ed"], r["ei"], r["el"]) for r in
+            h.select("v", F.sum("t").over(wc).alias("et"),
+                     F.sum("d").over(wc).alias("ed"),
+                     F.row_number().over(w).alias("ei"),
+                     F.lead("v").over(w).alias("el")).collect()}
+    got = {r["v"]: (r["cum_t"], r["cum_d"], r["_idx"], r["lead_v"])
+           for r in out.collect()}
+    assert got == want
+    assert tot["t"] == 300.0 and tot["_count"] == len(want)
+    assert isinstance(tot["d"], decimal.Decimal)
+    assert tot["d"] == sum(decimal.Decimal(i % 5) for i in range(300))
+
+
+def test_prefix_sums_index_only_is_a_projection(spark):
+    # with no sum or lead column the global index needs neither a
+    # window nor an exchange over the pinned range partition
+    df = spark.range(1000).select(
+        (F.col("id") * 37 % 1009).alias("v"), F.col("id"))
+    out = prefix_sums(df, [F.col("v").asc(), F.col("id").asc()], [],
+                      num_partitions=6, with_index=True)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert "Exchange" not in plan, plan
+    got = sorted((r["_idx"], r["v"], r["id"]) for r in out.collect())
+    want = sorted((r["v"], r["id"]) for r in df.collect())
+    assert [(i, v, k) for i, (v, k) in enumerate(want, start=1)] == got
+
+
+def test_prefix_sums_index_rejects_overflowing_partition(spark,
+                                                         monkeypatch):
+    # a partition whose local row count reaches the id's low bits
+    # would corrupt the index: fail instead (bits shrunk to 3 here)
+    from satellitetools_spark.operators import cumsum
+    monkeypatch.setattr(cumsum, "_MID_LOCAL_BITS", 3)
+    df = spark.range(20).select(F.col("id").cast("double").alias("v"))
+    with pytest.raises(ValueError, match="raise num_partitions"):
+        prefix_sums(df, [F.col("v").asc()], [], num_partitions=1,
+                    with_index=True)

@@ -303,11 +303,12 @@ def test_change_detection_single_shuffle(spark):
     assert plan.count("Exchange") <= 1, plan
 
 
-def test_rfm_windows_after_customer_agg(spark):
+def test_rfm_windows_after_customer_agg(spark, monkeypatch):
     """The three NTILE windows must sort the AGGREGATED customer table,
     not the order fact rows: exactly one pre-window aggregate keyed on
     the customer."""
     import datetime as dt
+    from satellitetools_spark.operators import segment
     from satellitetools_spark.operators.segment import rfm_segments
     orders = spark.createDataFrame(
         [(i, i % 7, 100.0 + i, dt.datetime(2024, 1, 1 + i % 20))
@@ -321,14 +322,13 @@ def test_rfm_windows_after_customer_agg(spark):
     assert "SortMergeJoin" not in plan
     assert "Window" in plan
     # the big-table path (forced via threshold 0) runs every NTILE as
-    # the two-level scan: plan starts at the checkpoint-pinned range
-    # partition and every Window node is partitioned by the stamped
-    # range-partition id, never unpartitioned
-    plan_big = _plan(rfm_segments(orders, small_table_threshold=0))
-    assert "_pspid" in plan_big
-    for line in plan_big.splitlines():
-        if "windowspecdefinition" in line:
-            assert "_pspid" in line, f"unpartitioned window: {line}"
+    # the index-only two-level scan: the plan is a projection over the
+    # last checkpoint-pinned range partition, with no window and no
+    # exchange left at all
+    monkeypatch.setattr(segment, "SMALL_TABLE_THRESHOLD", 0)
+    plan_big = _plan(rfm_segments(orders))
+    assert "Window" not in plan_big, plan_big
+    assert "Exchange" not in plan_big, plan_big
 
 
 def test_kaplan_meier_no_row_cardinality_window(spark):
