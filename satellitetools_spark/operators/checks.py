@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def expect_not_null(col: str, tol: float = 0.0) -> Dict:
-    """Fraction of NULLs must be <= tol."""
+def expect_not_null(col: str) -> Dict:
+    """Fraction of NULLs must be 0."""
     return {
-        "name": "not_null", "column": col, "threshold": float(tol),
+        "name": "not_null", "column": col, "threshold": 0.0,
         "op": "le",
         "col": lambda: F.avg(F.when(F.col(col).isNull(), 1.0)
                              .otherwise(0.0)),
@@ -39,10 +39,10 @@ def expect_not_null(col: str, tol: float = 0.0) -> Dict:
     }
 
 
-def expect_unique(col: str, tol: float = 0.0) -> Dict:
-    """Duplicate fraction among non-null values must be <= tol."""
+def expect_unique(col: str) -> Dict:
+    """Duplicate fraction among non-null values must be 0."""
     return {
-        "name": "unique", "column": col, "threshold": float(tol),
+        "name": "unique", "column": col, "threshold": 0.0,
         "op": "le",
         "col": lambda: ((F.count(col) - F.countDistinct(col))
                         / F.greatest(F.count(col), F.lit(1))),
@@ -51,9 +51,8 @@ def expect_unique(col: str, tol: float = 0.0) -> Dict:
     }
 
 
-def expect_in_range(col: str, lo: float, hi: float,
-                    tol: float = 0.0) -> Dict:
-    """Fraction of non-null values outside [lo, hi] must be <= tol."""
+def expect_in_range(col: str, lo: float, hi: float) -> Dict:
+    """Fraction of non-null values outside [lo, hi] must be 0."""
     def _viol():
         c = F.col(col)
         return F.avg(F.when(c.isNotNull(),
@@ -61,7 +60,7 @@ def expect_in_range(col: str, lo: float, hi: float,
                              .otherwise(0.0)))
     return {
         "name": f"in_range[{lo!r},{hi!r}]", "column": col,
-        "threshold": float(tol), "op": "le",
+        "threshold": 0.0, "op": "le",
         "col": _viol,
         "sql": (f"AVG(CASE WHEN {col} IS NOT NULL THEN "
                 f"CASE WHEN {col} < {lo!r} OR {col} > {hi!r} "
@@ -97,14 +96,13 @@ def expect_min_rows(n: int) -> Dict:
     }
 
 
-def expectations(df: DataFrame, suite: List[Dict],
-                 digits: int = 9) -> DataFrame:
+def expectations(df: DataFrame, suite: List[Dict]) -> DataFrame:
     """Evaluate a constraint suite in one aggregation pass."""
     row = df.agg(*[e["col"]().alias(f"_m_{i}")
                    for i, e in enumerate(suite)])
     structs = []
     for i, e in enumerate(suite):
-        m = F.round(F.col(f"_m_{i}"), digits)
+        m = F.round(F.col(f"_m_{i}"), 9)
         passed = (m <= e["threshold"] if e["op"] == "le"
                   else m >= e["threshold"])
         structs.append(F.struct(
@@ -133,8 +131,7 @@ FROM {table}""")
     return "\nUNION ALL\n".join(parts)
 
 
-def drift_metrics(df: DataFrame, slice_col: str, cat_col: str,
-                  k_smooth: float = 0.5) -> DataFrame:
+def drift_metrics(df: DataFrame, slice_col: str, cat_col: str) -> DataFrame:
     """Distribution-drift monitor: per data slice (source, day,
     partition...), the categorical distribution of ``cat_col`` compared
     against the whole-corpus reference — Shannon entropy, KL(slice ‖ global)
@@ -160,7 +157,7 @@ def drift_metrics(df: DataFrame, slice_col: str, cat_col: str,
                   .join(sc, [slice_col, cat_col], "left")
                   .withColumn("n", F.coalesce("n", F.lit(0)))
                   .crossJoin(n_cats))
-    p = (F.col("n") + k_smooth) / (F.col("n_slice") + k_smooth * F.col("k"))
+    p = (F.col("n") + 0.5) / (F.col("n_slice") + 0.5 * F.col("k"))
     q = F.col("n_cat") / F.col("n_tot")
     ent_term = -p * F.log(p)
     kl_term = p * F.log(p / q)
@@ -682,26 +679,25 @@ FROM spa
 """
 
 
-def ab_ztest(events: DataFrame, unit_col: str = "user_id",
-             variant_expr: str = "pmod(user_id, 2)",
-             success_expr: str =
-             "CAST(event_type = 'purchase' AS INT)") -> DataFrame:
+def ab_ztest(events: DataFrame) -> DataFrame:
     """Two-proportion z-test between experiment variants — the A/B
     readout every event pipeline ends in (did variant B convert better,
     and is the lift outside noise?): per-unit conversion (a unit
     converts if ANY of its events succeeds), per-variant n/x/p̂, lift,
     and the pooled z ``(p̂₁−p̂₀)/√(p̂(1−p̂)(1/n₀+1/n₁))``.
-    ``variant_expr`` must be a pure function of the unit (default: a
-    deterministic id split), so assignment is reproducible.
+    Units are users; the variant is the deterministic id split
+    ``pmod(user_id, 2)``, so assignment is reproducible; a purchase event
+    is a success.
 
     Shape: ONE unit-cardinality hash agg (events collapse map-side),
     one variant-cardinality agg, a 1×1 conditional-agg readout — three
     shuffles of strictly shrinking data, nothing window-sorted.
     """
     units = (events
-             .select(F.col(unit_col).alias("u"),
-                     F.expr(variant_expr).cast("int").alias("variant"),
-                     F.expr(success_expr).cast("int").alias("s"))
+             .select(F.col("user_id").alias("u"),
+                     F.expr("pmod(user_id, 2)").cast("int").alias("variant"),
+                     F.expr("CAST(event_type = 'purchase' AS INT)")
+                     .cast("int").alias("s"))
              .groupBy("u", "variant")
              .agg(F.max("s").alias("converted")))
     va = units.groupBy("variant").agg(

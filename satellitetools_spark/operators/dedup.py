@@ -32,9 +32,9 @@ from pyspark.sql import types as T
 from .text import fingerprint
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Per-doc fingerprint + canonical keeper (min doc_id per fingerprint)."""
-    fp = fingerprint(docs, text_col)
+    fp = fingerprint(docs)
     w = Window.partitionBy("fingerprint")
     return fp.select(
         "doc_id", "fingerprint",
@@ -65,19 +65,18 @@ def _shingles_from_tokens(n: int):
         " ", *[F.element_at(tk, i + k + 1) for k in range(n)]))
 
 
-def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
+def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document (long table)."""
     return (
-        _tokenized(docs, text_col)
+        _tokenized(docs, "text")
         .select("doc_id", F.explode(_shingles_from_tokens(n)).alias("shingle"))
         .distinct()
     )
 
 
-def jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
-                  text_col: str = "text") -> DataFrame:
+def jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (doc_a < doc_b, jaccard ≥ t)."""
-    sh = word_shingles(docs, n, text_col)
+    sh = word_shingles(docs, n)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -126,8 +125,7 @@ WHERE i * 1.0 / (sa.sz + sb.sz - i) >= {threshold}
 """
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
-                       text_col: str = "text") -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3) -> DataFrame:
     """MinHash signature per doc: min of seeded xxHash64 per hash function.
 
     One explode + one hash-agg; all hashing JVM-side (xxhash64 with seed),
@@ -138,7 +136,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
     # full shingle-table dedup shuffle. The explode feeds partial (map-side)
     # min aggregation, so the only exchange carries doc-cardinality rows of
     # 64 longs.
-    sh = _tokenized(docs, text_col).select(
+    sh = _tokenized(docs, "text").select(
         "doc_id", F.explode(_shingles_from_tokens(n)).alias("shingle"))
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
@@ -149,8 +147,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
 
 
 def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
-                      n: int = 3, threshold: float = 0.5,
-                      text_col: str = "text") -> DataFrame:
+                      n: int = 3, threshold: float = 0.5) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
     Scale path: candidates come only from band-bucket collisions (shuffle on
@@ -158,7 +155,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
     count — output equals :func:`jaccard_pairs` up to LSH recall.
     """
     rows = num_hashes // bands
-    sig = minhash_signatures(docs, num_hashes, n, text_col)
+    sig = minhash_signatures(docs, num_hashes, n)
     band_cols = [
         F.struct(F.lit(b).alias("band"),
                  F.xxhash64(*[F.element_at("sig", b * rows + r + 1)
@@ -177,7 +174,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
         .distinct()
     )
     # exact verification of the (small) candidate set
-    sh = word_shingles(docs, n, text_col)
+    sh = word_shingles(docs, n)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     inter = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -198,8 +195,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
 
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
-                         b_col: str = "doc_b",
-                         max_iters: int = 20) -> DataFrame:
+                         b_col: str = "doc_b") -> DataFrame:
     """Duplicate-cluster assignment: connected components over a pair table.
 
     The step after pair mining in a dedup pipeline — near-dup PAIRS
@@ -227,7 +223,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
               .distinct()
               .select(F.col("src").alias("node"), F.col("src").alias("comp"))
               .localCheckpoint(eager=True))
-    for _ in range(max_iters):
+    for _ in range(20):
         nbr = (edges.join(labels, edges["src"] == labels["node"])
                .groupBy("dst").agg(F.min("comp").alias("nmin"))
                .withColumnRenamed("dst", "node"))
@@ -265,8 +261,7 @@ SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node
 """
 
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per document, vectorized per Arrow batch.
 
     Each UNIQUE token is md5-hashed exactly once per executor (memoized
@@ -278,7 +273,7 @@ def simhash(docs: DataFrame, text_col: str = "text",
     the interleaved tables, int64 in the driver's documents table).
     """
     out_schema = T.StructType([
-        T.StructField(id_col, docs.schema[id_col].dataType),
+        T.StructField("doc_id", docs.schema["doc_id"].dataType),
         T.StructField("simhash", T.LongType()),
     ])
 
@@ -298,9 +293,9 @@ def simhash(docs: DataFrame, text_col: str = "text",
             return h
 
         for pdf in batches:
-            out_ids = pdf[id_col].to_numpy()
+            out_ids = pdf["doc_id"].to_numpy()
             sigs = np.zeros(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf[text_col].astype(str)):
+            for i, text in enumerate(pdf["text"].astype(str)):
                 toks = text.lower().split()
                 hs = np.fromiter((tok_hash(t) for t in toks),
                                  dtype=np.uint64, count=len(toks))
@@ -310,17 +305,16 @@ def simhash(docs: DataFrame, text_col: str = "text",
                 packed = np.bitwise_or.reduce(
                     (acc >= 0).astype(np.uint64) << shifts)
                 sigs[i] = np.int64(packed.astype(np.int64))
-            yield pd.DataFrame({id_col: out_ids, "simhash": sigs})
+            yield pd.DataFrame({"doc_id": out_ids, "simhash": sigs})
 
-    return docs.select(F.col(id_col).alias(id_col), text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         compute, schema=out_schema)
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
-                       text_col: str = "text") -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ k, using 4×16-bit block
     banding (any pair within distance 3 shares at least one exact block)."""
-    sig = simhash(docs, text_col)
+    sig = simhash(docs)
     blocks = [
         F.struct(F.lit(b).alias("blk"),
                  F.shiftright("simhash", 16 * b).bitwiseAND(F.lit(0xFFFF)).alias("key"))
@@ -379,8 +373,7 @@ HAVING sum(CASE WHEN a.b <> b.b THEN 1 ELSE 0 END) <= {max_hamming}
 """
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
-                  text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any word
     n-gram with a held-out benchmark/eval set (the standard pretraining
     leakage check — n-gram overlap, as in GPT-3 appendix C / FineWeb).
@@ -394,8 +387,8 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
     """
     bench_ids = benchmark.select("doc_id").distinct()
     corpus = docs.join(bench_ids, "doc_id", "left_anti")
-    sh = word_shingles(corpus, n, text_col)
-    bench_sh = word_shingles(benchmark, n, text_col) \
+    sh = word_shingles(corpus, n)
+    bench_sh = word_shingles(benchmark, n) \
         .select("shingle").distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     hits = (sh.join(F.broadcast(bench_sh), "shingle")
@@ -435,8 +428,7 @@ FROM hits JOIN sizes USING (doc_id)
 """
 
 
-def dup_keeper(components: DataFrame, scores: DataFrame,
-               score_col: str = "quality") -> DataFrame:
+def dup_keeper(components: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware canonical-copy selection: inside each duplicate
     cluster, keep the member with the best quality score
     (deterministic (score DESC, doc_id ASC) tie order) — the finishing
@@ -451,11 +443,11 @@ def dup_keeper(components: DataFrame, scores: DataFrame,
     table.
     """
     from pyspark.sql import Window
-    j = components.join(scores.select("doc_id", score_col), "doc_id")
+    j = components.join(scores.select("doc_id", "quality"), "doc_id")
     w = Window.partitionBy("component").orderBy(
-        F.col(score_col).desc(), F.col("doc_id").asc())
+        F.col("quality").desc(), F.col("doc_id").asc())
     return (j.withColumn("rnk", F.row_number().over(w))
-            .select("doc_id", "component", score_col,
+            .select("doc_id", "component", "quality",
                     (F.col("rnk") == 1).alias("is_keeper")))
 
 
@@ -477,8 +469,7 @@ FROM kj
 """
 
 
-def dice_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
-               text_col: str = "text") -> DataFrame:
+def dice_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Sørensen–Dice + containment coefficients for near-duplicate
     pairs over the same word-shingle sets as :func:`jaccard_pairs`:
     dice = 2·|A∩B| / (|A|+|B|) (forgiving of size imbalance),
@@ -492,7 +483,7 @@ def dice_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
     banding path (minhash_lsh_pairs) is the 100 TB candidate
     generator for it too.
     """
-    sh = word_shingles(docs, n, text_col)
+    sh = word_shingles(docs, n)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -556,8 +547,7 @@ WHERE ROUND(2.0 * i / (sa.sz + sb.sz), 6) + 0.0 >= {float(threshold)!r}
 # ---------------------------------------------------------------------------
 
 def allpairs_jaccard_pairs(docs: DataFrame, n: int = 3,
-                           threshold: float = 0.5,
-                           text_col: str = "text") -> DataFrame:
+                           threshold: float = 0.5) -> DataFrame:
     """EXACT Jaccard ≥ t pairs via AllPairs prefix filtering (Bayardo
     et al., WWW'07) — same output as :func:`jaccard_pairs`, but the
     candidate join touches only each document's PREFIX under a global
@@ -579,7 +569,7 @@ def allpairs_jaccard_pairs(docs: DataFrame, n: int = 3,
     candidate docs. Ranking orders by (global df ASC, shingle ASC) —
     fully deterministic.
     """
-    sh = word_shingles(docs, n, text_col)
+    sh = word_shingles(docs, n)
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     wdoc = Window.partitionBy("doc_id").orderBy(
         F.col("df").asc(), F.col("shingle").asc())

@@ -20,13 +20,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(pairs: DataFrame, iters: int = 3, damping: float = 0.85,
-             src_col: str = "doc_a", dst_col: str = "doc_b") -> DataFrame:
+def pagerank(pairs: DataFrame, iters: int = 3) -> DataFrame:
     """PageRank over an UNDIRECTED pair table (each pair becomes two
-    directed edges), ``iters`` fixed power iterations from the uniform
-    start. Every node reachable from the pair table is ranked; since
-    every node has degree ≥ 1 by construction there is no dangling-mass
-    term.
+    directed edges) of (doc_a, doc_b), ``iters`` fixed power iterations
+    from the uniform start, damping 0.85. Every node reachable from the
+    pair table is ranked; since every node has degree ≥ 1 by
+    construction there is no dangling-mass term.
 
     Shape per iteration: one join of the rank vector to the edge table
     (rank-vector side is node-cardinality), one hash aggregation on the
@@ -36,10 +35,11 @@ def pagerank(pairs: DataFrame, iters: int = 3, damping: float = 0.85,
     co-partitions both sides on the node key; Catalyst picks broadcast
     automatically below the threshold (the dup-graph case).
     """
-    edges = (pairs.select(F.col(src_col).alias("src"),
-                          F.col(dst_col).alias("dst"))
-             .unionByName(pairs.select(F.col(dst_col).alias("src"),
-                                       F.col(src_col).alias("dst"))))
+    damping = 0.85
+    edges = (pairs.select(F.col("doc_a").alias("src"),
+                          F.col("doc_b").alias("dst"))
+             .unionByName(pairs.select(F.col("doc_b").alias("src"),
+                                       F.col("doc_a").alias("dst"))))
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     n_nodes = deg.agg(F.count("*").alias("n"))
     rank = (deg.crossJoin(F.broadcast(n_nodes))
@@ -92,8 +92,7 @@ SELECT node, ROUND(pr, 9) AS pr FROM {prev}
 """
 
 
-def triangle_count(pairs: DataFrame, src_col: str = "doc_a",
-                   dst_col: str = "doc_b") -> DataFrame:
+def triangle_count(pairs: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over an undirected pair
     table — the clustering-structure primitive behind dup-cluster
     density scoring and community detection seeds.
@@ -111,8 +110,8 @@ def triangle_count(pairs: DataFrame, src_col: str = "doc_a",
     node cardinality; the degree table is node-cardinality and
     broadcast-able.
     """
-    e = (pairs.select(F.least(src_col, dst_col).alias("u"),
-                      F.greatest(src_col, dst_col).alias("v"))
+    e = (pairs.select(F.least("doc_a", "doc_b").alias("u"),
+                      F.greatest("doc_a", "doc_b").alias("v"))
          .distinct())
     deg = (e.select(F.col("u").alias("node"))
            .unionByName(e.select(F.col("v").alias("node")))
@@ -174,8 +173,7 @@ FROM tdeg d LEFT JOIN per_node p ON p.node = d.node
 """
 
 
-def hits(edges: DataFrame, iters: int = 4, src_col: str = "src",
-         dst_col: str = "dst") -> DataFrame:
+def hits(edges: DataFrame, iters: int = 4) -> DataFrame:
     """HITS (Kleinberg) hubs-and-authorities over a DIRECTED edge
     table — on a bipartite interaction graph (customer→part,
     user→item, doc→term) the two sides get separately meaningful
@@ -194,8 +192,7 @@ def hits(edges: DataFrame, iters: int = 4, src_col: str = "src",
     # edge subtree re-analyzes once per half-step reference and the
     # optimizer cost grows superlinearly in iters (same fence as
     # region_label / mann_kendall)
-    e = (edges.select(F.col(src_col).alias("src"),
-                      F.col(dst_col).alias("dst")).distinct()
+    e = (edges.select("src", "dst").distinct()
          .localCheckpoint(eager=False))
     hubs0 = e.select("src").distinct()
     n_h = hubs0.agg(F.count("*").alias("n"))
@@ -513,8 +510,7 @@ SELECT node, label AS community FROM {prev}
 # ---------------------------------------------------------------------------
 
 def bfs_hops(pairs: DataFrame, sources: DataFrame, max_hops: int = 4,
-             src_col: str = "doc_a", dst_col: str = "doc_b",
-             source_col: str = "node") -> DataFrame:
+             src_col: str = "doc_a", dst_col: str = "doc_b") -> DataFrame:
     """Minimum hop count from a SET of source nodes to every node
     within ``max_hops`` over an undirected pair table — "how far is
     each document from a known-bad seed set" (contamination blast
@@ -535,8 +531,7 @@ def bfs_hops(pairs: DataFrame, sources: DataFrame, max_hops: int = 4,
                           F.col(dst_col).alias("dst"))
              .unionByName(pairs.select(F.col(dst_col).alias("src"),
                                        F.col(src_col).alias("dst"))))
-    dist = sources.select(F.col(source_col).alias("node"),
-                          F.lit(0).alias("hops"))
+    dist = sources.select("node", F.lit(0).alias("hops"))
     frontier = dist
     for h in range(1, int(max_hops) + 1):
         nxt = (edges.join(frontier.withColumnRenamed("node", "src")

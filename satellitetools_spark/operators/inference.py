@@ -204,14 +204,13 @@ FROM afp
 # sample — derived from the distinct-value histogram so the only sort
 # is over the value alphabet, never the fact rows.
 
-def _mwu_formula(n0: str = "n0", n1: str = "n1", nn: str = "nn",
-                 u1: str = "u1", ts: str = "tie_s") -> str:
+def _mwu_formula() -> str:
     """Shared expression text for the tie-corrected MW-U z — parsed by
     both engines so the algebra cannot drift."""
-    mu = f"({n0} * {n1} / 2.0)"
-    sig = (f"SQRT(({n0} * {n1} / 12.0) * (({nn} + 1.0) "
-           f"- {ts} / ({nn} * ({nn} - 1.0))))")
-    return f"(({u1}) - {mu}) / (CASE WHEN {sig} <> 0 THEN {sig} END)"
+    mu = "(n0 * n1 / 2.0)"
+    sig = ("SQRT((n0 * n1 / 12.0) * ((nn + 1.0) "
+           "- tie_s / (nn * (nn - 1.0))))")
+    return f"((u1) - {mu}) / (CASE WHEN {sig} <> 0 THEN {sig} END)"
 
 
 def mann_whitney_u(df: DataFrame, group_expr: str, value_col: str
@@ -474,13 +473,12 @@ FROM ksd, ksn
 # ---------------------------------------------------------------------------
 
 def psi(df: DataFrame, slice_expr: str, value_col: str,
-        lo: float, hi: float, n_bins: int = 10,
-        smooth: float = 0.5) -> DataFrame:
+        lo: float, hi: float, n_bins: int = 10) -> DataFrame:
     """Population Stability Index between the expected (``slice_expr``
     = 0, e.g. the training window) and actual (= 1, the serving window)
     distributions of a numeric feature — the model-monitoring
     convention: PSI = Σ_b (p_a − p_e)·ln(p_a/p_e) over fixed bins,
-    with add-``smooth`` Laplace smoothing so an empty bin cannot emit
+    with add-0.5 Laplace smoothing so an empty bin cannot emit
     ±∞. <0.1 stable, 0.1–0.25 drifting, >0.25 retrain — the same
     decision thresholds every scoring pipeline documents. Returns one
     row per bin (shares + contribution) plus the total repeated, so
@@ -518,10 +516,8 @@ def psi(df: DataFrame, slice_expr: str, value_col: str,
                     F.coalesce("ca", F.lit(0.0)).alias("ca")))
     wall = _W.partitionBy()
     nb = float(n_bins + 2)
-    pe = ((F.col("ce") + float(smooth))
-          / (F.sum("ce").over(wall) + float(smooth) * nb))
-    pa = ((F.col("ca") + float(smooth))
-          / (F.sum("ca").over(wall) + float(smooth) * nb))
+    pe = ((F.col("ce") + 0.5) / (F.sum("ce").over(wall) + 0.5 * nb))
+    pa = ((F.col("ca") + 0.5) / (F.sum("ca").over(wall) + 0.5 * nb))
     contrib = (pa - pe) * F.log(pa / pe)
     return (full
             .withColumn("p_expected", _r6(pe))
@@ -1444,10 +1440,9 @@ def _inv_norm_fmt(p: str) -> str:
 
 
 def rank_inverse_normal(df: DataFrame, value_expr: str,
-                        by_expr: str | None = None,
-                        offset: float = 0.5) -> DataFrame:
+                        by_expr: str | None = None) -> DataFrame:
     """Rank-based inverse normal transform (Blom-style): each value
-    maps to ``Φ⁻¹((midrank − offset) / n)`` within its group — the
+    maps to ``Φ⁻¹((midrank − 0.5) / n)`` within its group — the
     standard normalization for heavy-tailed metrics before parametric
     modeling (genomics INT, feature scaling robust to outliers).
     Ties share their MIDRANK, so equal inputs get equal outputs.
@@ -1476,7 +1471,7 @@ def rank_inverse_normal(df: DataFrame, value_expr: str,
            .withColumnRenamed("tot_nv", "n")
            .withColumn("midrank",
                        F.col("cum_end") - (F.col("nv") - 1) / 2.0))
-    p = f"((midrank - {float(offset)!r}) / n)"
+    p = "((midrank - 0.5) / n)"
     return (cum.select(
         "grp", "v", F.col("nv").cast("long").alias("n_v"),
         _r6(F.col("midrank")).alias("midrank"),
@@ -1517,7 +1512,7 @@ FROM mid
 # ---------------------------------------------------------------------------
 
 def msprt_monitor(df: DataFrame, treat_expr: str, value_expr: str,
-                  ts_col: str = "ts", tau: float = 1.0) -> DataFrame:
+                  tau: float = 1.0) -> DataFrame:
     """Mixture sequential probability ratio test (normal mixture,
     prior scale ``tau``) over DAILY increments of a two-arm
     experiment: per day, the cumulative mean difference, the mixture
@@ -1537,7 +1532,7 @@ def msprt_monitor(df: DataFrame, treat_expr: str, value_expr: str,
     """
     t = f"(CASE WHEN ({treat_expr}) THEN 1 ELSE 0 END)"
     y = f"(CAST(({value_expr}) AS DOUBLE))"
-    day = F.date_trunc("day", F.col(ts_col)).alias("day")
+    day = F.date_trunc("day", F.col("ts")).alias("day")
     daily = (df.groupBy(day)
              .agg(*[F.sum(F.expr(f"CASE WHEN {t} = {a} THEN 1"
                                  f" ELSE 0 END")).alias(f"n{a}")
@@ -1639,12 +1634,12 @@ FROM mx
 # Two-arm Poisson rate-ratio test
 # ---------------------------------------------------------------------------
 
-def poisson_rate_test(df: DataFrame, treat_expr: str, event_pred: str,
-                      exposure_key: str = "user_id") -> DataFrame:
+def poisson_rate_test(df: DataFrame, treat_expr: str,
+                      event_pred: str) -> DataFrame:
     """Two-arm Poisson rate-ratio test for COUNT metrics (errors per
     user, purchases per user) where the t-test's normality assumption
     is wrong: events matching ``event_pred`` are counted per arm,
-    exposure is the number of distinct ``exposure_key`` units per arm,
+    exposure is the number of distinct ``user_id`` units per arm,
     and the log rate ratio is tested with the standard
     ``SE = √(1/k₀ + 1/k₁)`` normal approximation. One row:
     (k0, k1, exp0, exp1, rate0, rate1, rate_ratio, log_rr, se, z,
@@ -1662,9 +1657,9 @@ def poisson_rate_test(df: DataFrame, treat_expr: str, event_pred: str,
                      " ELSE 0 END")).alias("k0"),
         F.sum(F.expr(f"CASE WHEN {t} = 1 AND ({event_pred}) THEN 1"
                      " ELSE 0 END")).alias("k1"),
-        F.expr(f"count(DISTINCT CASE WHEN {t} = 0 THEN {exposure_key}"
+        F.expr(f"count(DISTINCT CASE WHEN {t} = 0 THEN user_id"
                " END)").alias("e0"),
-        F.expr(f"count(DISTINCT CASE WHEN {t} = 1 THEN {exposure_key}"
+        F.expr(f"count(DISTINCT CASE WHEN {t} = 1 THEN user_id"
                " END)").alias("e1"))
     lrr = "CASE WHEN k0 > 0 AND k1 > 0 AND e0 > 0 AND e1 > 0 THEN " \
           "ln((CAST(k1 AS DOUBLE) / e1) / (CAST(k0 AS DOUBLE) / e0)) END"
@@ -1733,13 +1728,12 @@ FROM agg
 # ---------------------------------------------------------------------------
 
 def ipw_effect(df: DataFrame, treat_expr: str, y_expr: str,
-               propensity_expr: str,
-               clip: float = 0.01) -> DataFrame:
+               propensity_expr: str) -> DataFrame:
     """Hájek (self-normalized) inverse-propensity-weighted average
     treatment effect for observational comparisons where a propensity
     ``e(x)`` is available (e.g. from `modeleval.logistic_fit` scores):
     ``ATE = Σ(t·y/e)/Σ(t/e) − Σ((1−t)·y/(1−e))/Σ((1−t)/(1−e))``, with
-    propensities CLIPPED to [clip, 1−clip] (positivity guard — the
+    propensities CLIPPED to [0.01, 0.99] (positivity guard — the
     standard fix for extreme weights) and the effective sample size
     per arm (Kish) reported so weight degeneracy is visible. One row:
     (n_t, n_c, ess_t, ess_c, mean_t, mean_c, ate_ipw).
@@ -1749,7 +1743,7 @@ def ipw_effect(df: DataFrame, treat_expr: str, y_expr: str,
     """
     t = f"(CASE WHEN ({treat_expr}) THEN 1 ELSE 0 END)"
     y = f"(CAST(({y_expr}) AS DOUBLE))"
-    e = (f"LEAST(1.0 - {float(clip)!r}, GREATEST({float(clip)!r},"
+    e = ("LEAST(1.0 - 0.01, GREATEST(0.01,"
          f" CAST(({propensity_expr}) AS DOUBLE)))")
     wt = f"(CASE WHEN {t} = 1 THEN 1.0 / {e} ELSE 0.0 END)"
     wc = f"(CASE WHEN {t} = 0 THEN 1.0 / (1.0 - {e}) ELSE 0.0 END)"

@@ -266,8 +266,7 @@ _FEATURE_SCHEMA = T.StructType([
 
 def media_features(media_spans: DataFrame, dim: int = 8,
                    fake: bool = True,
-                   decoder: Optional[Decoder] = None,
-                   payload_col: str = "payload") -> DataFrame:
+                   decoder: Optional[Decoder] = None) -> DataFrame:
     """Decode + feature-extract media spans via ``mapInPandas``.
 
     Input: (doc_id, media_ref[, payload]). Arrow batches flow through
@@ -275,21 +274,21 @@ def media_features(media_spans: DataFrame, dim: int = 8,
     vectorized.
 
     The decode step is INJECTABLE: pass ``decoder`` (any
-    :data:`Decoder` — bytes → ndarray) and a binary ``payload_col``
+    :data:`Decoder` — bytes → ndarray) and a binary ``payload`` column
     and the non-fake path runs the real codec + :func:`_array_features`
     per payload. Without a decoder, ``fake=True`` uses the
     hash-deterministic stand-in (oracle-checkable); ``fake=False``
     raises, documenting that this environment ships no imaging libs.
     """
     use_payload = decoder is not None
-    cols = (["doc_id", "media_ref", payload_col] if use_payload
+    cols = (["doc_id", "media_ref", "payload"] if use_payload
             else ["doc_id", "media_ref"])
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if use_payload:
                 feats = [_array_features(decoder(bytes(p)), dim).tolist()
-                         for p in pdf[payload_col]]
+                         for p in pdf["payload"]]
             elif fake:
                 feats = [_fake_features(r, dim).tolist()
                          for r in pdf["media_ref"]]

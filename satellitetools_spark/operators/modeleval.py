@@ -788,12 +788,11 @@ def _boot_u_fmt(key_expr: str, rep_expr: str, seed: int) -> str:
 
 
 def poisson_bootstrap_mean(df: DataFrame, value_col: str,
-                           key_expr: str, n_boot: int = 64,
-                           seed: int = 1787, ci: float = 0.95
+                           key_expr: str, n_boot: int = 64
                            ) -> DataFrame:
     """Bootstrap confidence interval for the corpus mean in ONE pass:
     each row enters replicate r with weight ~ Poisson(1) drawn
-    deterministically from a portable modular hash of (key, r, seed) —
+    deterministically from a portable modular hash of (key, r, 1787) —
     the streaming bootstrap (Poisson approximation to multinomial
     resampling, exact as n → ∞), so the CI is bit-stable across runs,
     partitionings, and cluster sizes.
@@ -803,10 +802,10 @@ def poisson_bootstrap_mean(df: DataFrame, value_col: str,
     O(n_boot × tasks) rows, not O(n_boot × n). The replicate means
     (n_boot of them) then fold to one row: exact point mean, bootstrap
     mean, the bootstrap SE (stddev of replicate means), and the
-    percentile CI (linear interpolation, identical in both engines).
+    95% percentile CI (linear interpolation, identical in both engines).
     """
-    lo_q, hi_q = (1.0 - ci) / 2.0, 1.0 - (1.0 - ci) / 2.0
-    w = _pois_fmt(_boot_u_fmt("k", "r", seed))
+    lo_q, hi_q = (1.0 - 0.95) / 2.0, 1.0 - (1.0 - 0.95) / 2.0
+    w = _pois_fmt(_boot_u_fmt("k", "r", 1787))
     rep = (df.select(F.expr(key_expr).alias("k"),
                      F.col(value_col).alias("v"))
            .filter(F.col("v").isNotNull())
@@ -1203,11 +1202,10 @@ FROM ktcd, ktx, kty
 # Weight of Evidence / Information Value per category
 # ---------------------------------------------------------------------------
 
-def woe_iv(df: DataFrame, label_expr: str, cat_expr: str,
-           smooth: float = 0.5) -> DataFrame:
+def woe_iv(df: DataFrame, label_expr: str, cat_expr: str) -> DataFrame:
     """Weight of Evidence per category of ``cat_expr`` against the
     binary ``label_expr`` — ``WoE = ln(p_cat|pos / p_cat|neg)`` with
-    Laplace ``smooth`` on both numerators (a category seen only among
+    Laplace smoothing 0.5 on both numerators (a category seen only among
     positives must not emit ±∞) — plus each category's Information
     Value contribution; Σ iv over the output is the feature's total IV
     (the credit-scoring screening number: <0.02 useless, >0.3 strong).
@@ -1229,8 +1227,8 @@ def woe_iv(df: DataFrame, label_expr: str, cat_expr: str,
          .withColumn("tn", F.sum("neg").over(wall))
          .withColumn("kk", kk))
     # smoothed conditional shares (denominator balanced so they sum to 1)
-    pp = (F.col("pos") + smooth) / (F.col("tp") + smooth * F.col("kk"))
-    pn = (F.col("neg") + smooth) / (F.col("tn") + smooth * F.col("kk"))
+    pp = (F.col("pos") + 0.5) / (F.col("tp") + 0.5 * F.col("kk"))
+    pn = (F.col("neg") + 0.5) / (F.col("tn") + 0.5 * F.col("kk"))
     woe = F.log(pp / pn)
     return g.select(
         F.col("k").alias("category"),
@@ -1515,12 +1513,11 @@ SELECT *, ROUND({p}, 6) + 0.0 AS p_approx FROM mnc
 # Bland-Altman agreement between two paired measurements
 # ---------------------------------------------------------------------------
 
-def bland_altman(df: DataFrame, a_expr: str, b_expr: str,
-                 z: float = 1.96) -> DataFrame:
+def bland_altman(df: DataFrame, a_expr: str, b_expr: str) -> DataFrame:
     """Bland-Altman agreement readout for two paired continuous
     measurements (a model vs a gold pipeline, two sensors): mean
     difference (bias), SD of differences, the limits of agreement
-    ``bias ± z·sd``, and the fraction of pairs inside them — the
+    ``bias ± 1.96·sd``, and the fraction of pairs inside them — the
     method-comparison summary a correlation coefficient hides (two
     methods can correlate at 0.99 and still disagree by a constant
     offset). One moment agg + one conditional recount.
@@ -1531,8 +1528,8 @@ def bland_altman(df: DataFrame, a_expr: str, b_expr: str,
                  F.avg("d").alias("bias"),
                  F.stddev_samp("d").alias("sd"))
     j = base.crossJoin(F.broadcast(m))
-    lo = F.col("bias") - float(z) * F.col("sd")
-    hi = F.col("bias") + float(z) * F.col("sd")
+    lo = F.col("bias") - 1.96 * F.col("sd")
+    hi = F.col("bias") + 1.96 * F.col("sd")
     agg = j.agg(
         F.max("n").alias("n"), F.max("bias").alias("bias"),
         F.max("sd").alias("sd"),
@@ -1542,8 +1539,8 @@ def bland_altman(df: DataFrame, a_expr: str, b_expr: str,
         F.col("n").cast("long").alias("n"),
         _r6(F.col("bias")).alias("bias"),
         _r6(F.col("sd")).alias("sd"),
-        _r6(F.col("bias") - float(z) * F.col("sd")).alias("loa_lo"),
-        _r6(F.col("bias") + float(z) * F.col("sd")).alias("loa_hi"),
+        _r6(F.col("bias") - 1.96 * F.col("sd")).alias("loa_lo"),
+        _r6(F.col("bias") + 1.96 * F.col("sd")).alias("loa_hi"),
         _r6(F.col("within")).alias("within_frac"))
 
 
@@ -1851,8 +1848,7 @@ def isotonic_calibration(df: DataFrame, label_expr: str,
 # ---------------------------------------------------------------------------
 
 def logistic_fit(df: DataFrame, label_expr: str,
-                 x_exprs: Sequence[str], iters: int = 8,
-                 ridge: float = 1e-8) -> DataFrame:
+                 x_exprs: Sequence[str], iters: int = 8) -> DataFrame:
     """Binary logistic regression of ``label_expr`` on ``x_exprs``
     (plus an intercept) via iteratively reweighted least squares —
     the quality-classifier / propensity-model trainer a labeled-data
@@ -1867,7 +1863,7 @@ def logistic_fit(df: DataFrame, label_expr: str,
     no Python in the pass). The (d+1)² numbers per step are collected
     and solved driver-side in NumPy — driver traffic is
     O(iters · d²), independent of row count, the same pattern as
-    `similarity.covariance_matrix`. A tiny ridge keeps the Newton
+    `similarity.covariance_matrix`. A tiny ridge (1e-8) keeps the Newton
     system solvable under separation. Fixed ``iters`` bounds cost
     (iters full scans; Newton converges quadratically, 8 is plenty
     for |z|≲20 features). The driver-side solve is non-SQL — pytest
@@ -1906,7 +1902,7 @@ def logistic_fit(df: DataFrame, label_expr: str,
             for j in range(i, d):
                 H[i, j] = H[j, i] = row[f"h_{i}_{j}"]
             g[i] = row[f"g_{i}"]
-        H += np.eye(d) * float(ridge)
+        H += np.eye(d) * 1e-8
         beta = beta + np.linalg.solve(H, g)
         info = H
     cov = np.linalg.inv(info)
@@ -1931,8 +1927,7 @@ def logistic_fit(df: DataFrame, label_expr: str,
 # ---------------------------------------------------------------------------
 
 def qini_curve(df: DataFrame, treat_expr: str, label_expr: str,
-               score_expr: str, n_bins: int = 10,
-               lo: float = 0.0, hi: float = 1.0) -> DataFrame:
+               score_expr: str) -> DataFrame:
     """Qini uplift curve over fixed score bins (best bin first): per
     cumulative prefix of the uplift-score ranking, the incremental
     responders ``Qini(k) = R_t(k) − R_c(k)·N_t(k)/N_c(k)`` plus the
@@ -1943,22 +1938,20 @@ def qini_curve(df: DataFrame, treat_expr: str, label_expr: str,
     `calibration_bins`.
 
     Shape: ONE conditional hash agg to (bin × 4 counters), cumulative
-    windows over the n_bins-row table only. Raw rows touched once.
+    windows over the 10-row table only. Raw rows touched once. Bins
+    are ten equal slices of [0, 1]; out-of-range scores clamp to the
+    end bins.
     """
-    if not float(hi) > float(lo):
-        raise ValueError("qini_curve: hi must be > lo")
-    if n_bins < 1:
-        raise ValueError("qini_curve: n_bins must be >= 1")
     t = f"(CASE WHEN ({treat_expr}) THEN 1 ELSE 0 END)"
     y = f"(CASE WHEN ({label_expr}) THEN 1 ELSE 0 END)"
-    width = (float(hi) - float(lo)) / int(n_bins)
+    width = 1.0 / 10
     # CAST to DOUBLE before binning: Spark parses numeric literals in
     # the score expression as exact DECIMALs, whose floor at bin
     # boundaries differs from DuckDB's IEEE doubles (0.3/0.1 is 3 in
     # decimal, 2.999... in binary) — the cast pins both engines to the
     # same IEEE arithmetic
-    b = (f"LEAST({int(n_bins) - 1}, GREATEST(0, CAST(floor("
-         f"(CAST(({score_expr}) AS DOUBLE) - {float(lo)!r})"
+    b = ("LEAST(9, GREATEST(0, CAST(floor("
+         f"(CAST(({score_expr}) AS DOUBLE) - 0.0)"
          f" / {width!r}) AS INT)))")
     binned = (df.groupBy(F.expr(b).alias("bin"))
               .agg(F.sum(F.expr(t)).alias("n_t"),

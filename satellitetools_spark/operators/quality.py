@@ -35,12 +35,11 @@ from pyspark.sql import functions as F
 from ..constants import S2_FILTER1, SCL_CLASSES
 
 
-def filter_by_quality(qi: DataFrame, qi_threshold: float = 0.02,
-                      qi_filter: Optional[List[str]] = None) -> DataFrame:
-    """P6: NaN-drop + threshold on the filtered-class percentage sum."""
-    qi_filter = qi_filter or S2_FILTER1
+def filter_by_quality(qi: DataFrame, qi_threshold: float = 0.02) -> DataFrame:
+    """P6: NaN-drop + threshold on the sum of the reference's default
+    filtered classes (``S2_FILTER1``)."""
     non_null = reduce(lambda a, c: a & F.col(c).isNotNull(), SCL_CLASSES, F.lit(True))
-    qsum = reduce(add, [F.col(c) for c in qi_filter])
+    qsum = reduce(add, [F.col(c) for c in S2_FILTER1])
     return qi.filter(non_null).filter(qsum <= F.lit(qi_threshold))
 
 
@@ -56,10 +55,10 @@ def tile_mode(qi_or_dim: DataFrame) -> DataFrame:
     )
 
 
-def dedup_products(df: DataFrame, priority_col: str = "processing") -> DataFrame:
+def dedup_products(df: DataFrame) -> DataFrame:
     """W3/U2 intended semantics: one row per (aoi, productid), preferring the
     c1 processing pipeline, then assetid for determinism."""
-    pref = F.when(F.col(priority_col).contains("sentinel-2-c1-l2a-to-stac"), 0).otherwise(1)
+    pref = F.when(F.col("processing").contains("sentinel-2-c1-l2a-to-stac"), 0).otherwise(1)
     w = Window.partitionBy("aoi", "productid").orderBy(pref.asc(), F.col("assetid").asc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -68,8 +67,7 @@ def dedup_products(df: DataFrame, priority_col: str = "processing") -> DataFrame
     )
 
 
-def select_survivors(qi: DataFrame, qi_threshold: float = 0.02,
-                     qi_filter: Optional[List[str]] = None) -> DataFrame:
+def select_survivors(qi: DataFrame, qi_threshold: float = 0.02) -> DataFrame:
     """Composite P8 over a self-contained QI table (the fused
     ``qi_percentages`` output, which carries scene metadata): QI threshold →
     intended dedup → tile mode. All document-cardinality shuffles.
@@ -79,7 +77,7 @@ def select_survivors(qi: DataFrame, qi_threshold: float = 0.02,
     the tile-count window (aoi, tileid), and the mode window (aoi) — and the
     tile-mode filter is expressed as windows instead of an aggregate+join,
     so Catalyst plans the whole chain with a SINGLE exchange."""
-    passing = filter_by_quality(qi, qi_threshold, qi_filter)
+    passing = filter_by_quality(qi, qi_threshold)
     passing = passing.repartition("aoi")
     deduped = dedup_products(passing)
     # tile mode via windows: per-(aoi,tile) count, then the first tileid in

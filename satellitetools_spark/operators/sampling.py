@@ -91,18 +91,16 @@ SELECT *, {case} AS split FROM h
 
 
 def stratified_sample(df: DataFrame, stratum_col: str,
-                      fractions: dict, key_col: str = "doc_id",
-                      denom: int = 100_000,
-                      default_fraction: float = 0.0) -> DataFrame:
+                      fractions: dict, denom: int = 100_000) -> DataFrame:
     """Deterministic per-stratum Bernoulli sample (``sampleBy`` done right
     for re-ingestable corpora).
 
-    A row is kept iff ``portable_hash(key ':' stratum) % denom <
+    A row is kept iff ``portable_hash(doc_id ':' stratum) % denom <
     round(fraction[stratum] * denom)`` — a pure function of (key, stratum),
     so membership is stable across runs, partitionings, and cluster sizes,
     and the decision for one stratum is independent of every other stratum
-    (the stratum string salts the hash). Unknown strata fall back to
-    ``default_fraction``. Map-only codegen: no shuffle, no sampling pass,
+    (the stratum string salts the hash). Unknown strata are dropped
+    (fraction 0). Map-only codegen: no shuffle, no sampling pass,
     no driver state — unlike ``DataFrame.sampleBy`` whose Bernoulli draw
     depends on partition layout and seed plumbing.
 
@@ -114,10 +112,10 @@ def stratified_sample(df: DataFrame, stratum_col: str,
     # to the SQL oracle's `||`, which also yields NULL (concat_ws would
     # silently skip the NULL and sample NULL-stratum rows at the key-only
     # hash, diverging from the oracle)
-    salted = F.concat(F.col(key_col).cast("string"), F.lit(":"),
+    salted = F.concat(F.col("doc_id").cast("string"), F.lit(":"),
                       F.col(stratum_col))
     bucket = (portable_hash(salted) % denom).cast("int")
-    thresh = F.lit(int(round(default_fraction * denom)))
+    thresh = F.lit(0)
     for name, frac in sorted(fractions.items()):
         thresh = F.when(F.col(stratum_col) == name,
                         F.lit(int(round(frac * denom)))).otherwise(thresh)
@@ -147,16 +145,14 @@ SELECT * FROM sb WHERE sample_bucket < {case}
 """
 
 
-def pps_sample(df: DataFrame, weight_col: str, ref_weight: int,
-               key_col: str = "doc_id", denom: int = 100_000,
-               salt: str = "pps") -> DataFrame:
+def pps_sample(df: DataFrame, weight_col: str, ref_weight: int) -> DataFrame:
     """Deterministic Poisson PPS sample: each row is kept independently
     with probability ``min(1, weight / ref_weight)`` — probability-
     proportional-to-size selection (e.g. upweighting long or high-quality
     documents), the weighted counterpart of :func:`stratified_sample`.
 
-    The draw is ``portable_hash(key ':' salt) % denom``; the keep test
-    ``bucket * ref_weight < weight * denom`` is pure BIGINT arithmetic —
+    The draw is ``portable_hash(doc_id ':pps') % 100000``; the keep test
+    ``bucket * ref_weight < weight * 100000`` is pure BIGINT arithmetic —
     no float thresholds, so membership is bit-identical in any engine with
     64-bit integers (the DuckDB oracle), stable under re-partitioning and
     re-ingest, and independent of every other row. Map-only codegen that
@@ -165,15 +161,15 @@ def pps_sample(df: DataFrame, weight_col: str, ref_weight: int,
     (sum 1/include_prob over the sample estimates population totals).
 
     ``weight_col`` must be integral and non-negative; ``bucket * ref_weight``
-    maxes at ``denom * ref_weight`` — keep that under 2^63 (it is, by ~13
-    orders of magnitude, for any sane denom/ref_weight).
+    maxes at ``100000 * ref_weight`` — keep that under 2^63 (it is, by ~13
+    orders of magnitude, for any sane ref_weight).
     """
-    salted = F.concat(F.col(key_col).cast("string"), F.lit(":" + salt))
-    bucket = (portable_hash(salted) % denom).cast("long")
+    salted = F.concat(F.col("doc_id").cast("string"), F.lit(":pps"))
+    bucket = (portable_hash(salted) % 100_000).cast("long")
     w = F.col(weight_col).cast("long")
     return (df.withColumn("sample_bucket", bucket)
               .filter(F.col("sample_bucket") * F.lit(int(ref_weight))
-                      < w * F.lit(int(denom)))
+                      < w * F.lit(100_000))
               .withColumn(
                   "include_prob",
                   F.least(F.lit(1.0),
@@ -202,8 +198,7 @@ WHERE sample_bucket * {int(ref_weight)} < CAST({weight_col} AS BIGINT) * {int(de
 
 
 def global_row_number(df: DataFrame, order_by: Sequence[Column],
-                      num_partitions: int = None,
-                      idx_col: str = "global_idx") -> DataFrame:
+                      num_partitions: int = None) -> DataFrame:
     """Global 0-based row index in the total order given by ``order_by`` —
     the scale-safe form of ``row_number() OVER (ORDER BY ...)``, which on a
     cluster would collapse into a single partition.
@@ -223,7 +218,7 @@ def global_row_number(df: DataFrame, order_by: Sequence[Column],
     out = prefix_sums(df, order_by, [], num_partitions=num_partitions,
                       with_index=True)
     return (out.withColumn("_idx", F.col("_idx") - 1)
-            .withColumnRenamed("_idx", idx_col))
+            .withColumnRenamed("_idx", "global_idx"))
 
 
 def global_row_number_sql(table: str, order_by_sql: str,
@@ -238,9 +233,8 @@ FROM {table}
 """
 
 
-def pack_sequences(docs: DataFrame, seq_len: int = 2048, n_shards: int = 64,
-                   key_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int = 2048,
+                   n_shards: int = 64) -> DataFrame:
     """Concat-and-chunk sequence packing (GPT-style pretraining batches).
 
     Documents are laid into ``n_shards`` independent token streams — shard
@@ -261,20 +255,20 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048, n_shards: int = 64,
     """
     from pyspark.sql import Window
 
-    toks = F.size(F.regexp_extract_all(F.col(text_col), F.lit("\\S+"), 0))
+    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("\\S+"), 0))
     base = docs.select(
-        F.col(key_col),
-        (portable_hash(F.col(key_col)) % n_shards).cast("int").alias("shard"),
+        F.col("doc_id"),
+        (portable_hash(F.col("doc_id")) % n_shards).cast("int").alias("shard"),
         toks.alias("n_tokens"),
     )
-    w = (Window.partitionBy("shard").orderBy(key_col)
+    w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     # materialize the window sum ONCE, then derive pack_id/pack_pos from
     # the alias — inlining `start` three times makes the Window operator
     # evaluate three identical frames
     start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("long"))
     return base.withColumn("start_offset", start).select(
-        key_col, "shard", "n_tokens", "start_offset",
+        "doc_id", "shard", "n_tokens", "start_offset",
         F.concat_ws(":", F.col("shard"),
                     F.floor(F.col("start_offset") / seq_len)).alias("pack_id"),
         (F.col("start_offset") % seq_len).alias("pack_pos"),
@@ -332,15 +326,14 @@ FROM off
 """
 
 
-def wrs_sample(df: DataFrame, weight_col: str, n: int,
-               key_col: str = "doc_id", salt: str = "wrs") -> DataFrame:
+def wrs_sample(df: DataFrame, weight_col: str, n: int) -> DataFrame:
     """Weighted random sampling WITHOUT replacement (Efraimidis &
     Spirakis A-ES, IPL'06): draw exactly ``n`` rows where each row's
     inclusion odds are proportional to its weight — the exact-size
     counterpart of the Poisson :func:`pps_sample` (fixed budget, e.g.
     "exactly 1M documents, long ones more likely").
 
-    Per row, a deterministic uniform ``u = (portable_hash(key:salt)+1) /
+    Per row, a deterministic uniform ``u = (portable_hash(doc_id:wrs)+1) /
     (M+1)`` and the A-ES ranking key ``ln(u)/w`` (the monotone-stable
     form of ``u^(1/w)`` — ln+divide instead of pow keeps cross-engine
     float drift out of the ordering); the sample is the global top-n by
@@ -352,13 +345,13 @@ def wrs_sample(df: DataFrame, weight_col: str, n: int,
     computing the identical fold). Rows with non-positive weight are
     excluded (their ranking key is undefined).
     """
-    salted = F.concat(F.col(key_col).cast("string"), F.lit(":" + salt))
+    salted = F.concat(F.col("doc_id").cast("string"), F.lit(":wrs"))
     u = (portable_hash(salted) + 1).cast("double") / F.lit(float(_M + 1))
     w = F.col(weight_col).cast("double")
     score = F.round(F.log(u) / w, 12)
     return (df.filter(w > 0)
               .withColumn("wrs_key", score)
-              .orderBy(F.desc("wrs_key"), F.asc(key_col))
+              .orderBy(F.desc("wrs_key"), F.asc("doc_id"))
               .limit(n))
 
 

@@ -146,8 +146,7 @@ FROM sc
 
 
 def gini_concentration(li: DataFrame, key_col: str = "l_suppkey",
-                       value_col: str = "l_extendedprice",
-                       top_frac: float = 0.1) -> DataFrame:
+                       value_col: str = "l_extendedprice") -> DataFrame:
     """Gini coefficient + top-decile share of revenue concentration.
 
     Per-key exact DECIMAL totals (one shuffle), rank by an
@@ -159,7 +158,7 @@ def gini_concentration(li: DataFrame, key_col: str = "l_suppkey",
     Scale note: the window sorts ONLY the aggregated key table (10⁶
     suppliers from 10¹² fact rows) — the fact scan never sorts.
     """
-    frac = float(top_frac)
+    frac = 0.1
     from satellitetools_spark.operators.cumsum import prefix_sums
     per = (li.groupBy(key_col)
            .agg(F.sum(F.col(value_col).cast("decimal(18,2)"))
@@ -225,9 +224,7 @@ FROM rk
 """
 
 
-def basket_pairs(li: DataFrame, min_support: int = 3,
-                 order_col: str = "l_orderkey",
-                 item_col: str = "l_partkey") -> DataFrame:
+def basket_pairs(li: DataFrame, min_support: int = 3) -> DataFrame:
     """Market-basket co-occurrence with lift.
 
     distinct (order, item) → self-equi-join on the order key with
@@ -240,8 +237,8 @@ def basket_pairs(li: DataFrame, min_support: int = 3,
     the order key — never a cartesian. Skewed mega-baskets would be
     capped upstream (filter baskets by size) before the self-join.
     """
-    oi = li.select(F.col(order_col).alias("o"),
-                   F.col(item_col).alias("it")).distinct()
+    oi = li.select(F.col("l_orderkey").alias("o"),
+                   F.col("l_partkey").alias("it")).distinct()
     n_orders = oi.select(F.countDistinct("o").alias("n_orders"))
     marg = oi.groupBy("it").agg(F.count("*").cast("long").alias("n_it"))
     a = oi.alias("a")
@@ -357,11 +354,10 @@ GROUP BY 1, 2
 
 
 def abc_analysis(li: DataFrame, key_col: str = "l_partkey",
-                 value_col: str = "l_extendedprice",
-                 a_cut: float = 0.8, b_cut: float = 0.95) -> DataFrame:
+                 value_col: str = "l_extendedprice") -> DataFrame:
     """ABC (Pareto) classification of revenue keys: rank keys by
     DECIMAL-exact revenue descending, classify by the cumulative
-    revenue share — A up to ``a_cut``, B up to ``b_cut``, C the tail.
+    revenue share — A up to 80%, B up to 95%, C the tail.
     The inventory-prioritization standard.
 
     Shape: per-key agg (one shuffle), then the cumulative revenue and
@@ -382,8 +378,8 @@ def abc_analysis(li: DataFrame, key_col: str = "l_partkey",
               .withColumnRenamed("_idx", "rank")
               .withColumn("_t", F.lit(tot["_x"])))
     share = F.col("_cum").cast("double") / F.col("_t").cast("double")
-    cls = (F.when(share <= float(a_cut), "A")
-           .when(share <= float(b_cut), "B").otherwise("C"))
+    cls = (F.when(share <= 0.8, "A")
+           .when(share <= 0.95, "B").otherwise("C"))
     return ranked.select(
         F.col(key_col).alias("key"),
         F.col("rank").cast("long").alias("rank"),
@@ -431,9 +427,7 @@ FROM abr
 # Co-visitation item-item similarity
 # ---------------------------------------------------------------------------
 
-def covisitation(df: DataFrame, key_col: str = "user_id",
-                 item_col: str = "event_type",
-                 min_count: int = 1) -> DataFrame:
+def covisitation(df: DataFrame) -> DataFrame:
     """Item-item co-visitation similarity from a (user, item)
     interaction log: for every item pair (a < b), the number of
     distinct users touching BOTH and the cosine-normalized strength
@@ -450,16 +444,15 @@ def covisitation(df: DataFrame, key_col: str = "user_id",
     degree-capped upstream the same way `adamic_adar` caps wedge
     apexes. No driver state, no UDFs.
     """
-    ui = (df.select(F.col(key_col).alias("u"),
-                    F.col(item_col).alias("item")).distinct())
+    ui = (df.select(F.col("user_id").alias("u"),
+                    F.col("event_type").alias("item")).distinct())
     marg = ui.groupBy("item").agg(F.count("*").alias("n_item"))
     a = ui.select(F.col("u"), F.col("item").alias("item_a"))
     b = ui.select(F.col("u"), F.col("item").alias("item_b"))
     pairs = (a.join(b, "u")
              .filter(F.col("item_a") < F.col("item_b"))
              .groupBy("item_a", "item_b")
-             .agg(F.count("*").cast("long").alias("n_both"))
-             .filter(F.col("n_both") >= int(min_count)))
+             .agg(F.count("*").cast("long").alias("n_both")))
     ma = marg.select(F.col("item").alias("item_a"),
                      F.col("n_item").alias("n_a"))
     mb = marg.select(F.col("item").alias("item_b"),

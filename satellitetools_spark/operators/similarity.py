@@ -39,20 +39,19 @@ def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame
     return df.withColumn(out, _dot(a_c, b_c) / (_norm(a_c) * _norm(b_c)))
 
 
-def cosine_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(emb: DataFrame, query_ids: List[int], k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (excluding self)."""
-    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    queries = emb.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     pairs = emb.crossJoin(F.broadcast(queries)).filter(
-        F.col(id_col) != F.col("query_id"))
-    pairs = with_cosine(pairs, vec_col, "qvec")
+        F.col("vec_id") != F.col("query_id"))
+    pairs = with_cosine(pairs, "embedding", "qvec")
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc(id_col))
+        F.desc("cosine"), F.asc("vec_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank",
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank",
                 F.round("cosine", 6).alias("cosine"))
     )
 
@@ -278,31 +277,26 @@ def _hyperplanes(dim: int, num_bits: int, seed: int) -> np.ndarray:
     return H
 
 
-def rh_signature(emb: DataFrame, num_bits: int = 64, seed: int = 7,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def rh_signature(emb: DataFrame) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) signature: bit j =
-    sign(<v, h_j>) for ``num_bits`` seeded gaussian hyperplanes, packed
+    sign(<v, h_j>) for 64 seeded gaussian hyperplanes (seed 7), packed
     into one int64. One Arrow-batched matmul per batch; hyperplanes are
     generated deterministically inside each executor (no driver state)."""
-    assert num_bits <= 64
-
     @pandas_udf(T.LongType())
     def sig_udf(vecs: pd.Series) -> pd.Series:
         X = np.vstack([np.asarray(v, dtype=float) for v in vecs])
-        H = _hyperplanes(X.shape[1], num_bits, seed)
+        H = _hyperplanes(X.shape[1], 64, 7)
         bits = (X @ H.T) >= 0.0
-        shifts = np.arange(num_bits, dtype=np.uint64)
+        shifts = np.arange(64, dtype=np.uint64)
         packed = np.bitwise_or.reduce(
             bits.astype(np.uint64) << shifts[None, :], axis=1)
         return pd.Series(packed.astype(np.int64))
 
-    return emb.select(id_col, vec_col,
-                      sig_udf(F.col(vec_col)).alias("rh_sig"))
+    return emb.select("vec_id", "embedding",
+                      sig_udf(F.col("embedding")).alias("rh_sig"))
 
 
-def rh_lsh_pairs(emb: DataFrame, threshold: float, num_bits: int = 64,
-                 bands: int = 32, seed: int = 7,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def rh_lsh_pairs(emb: DataFrame, threshold: float, bands: int = 32) -> DataFrame:
     """Near-duplicate vector pairs at scale: random-hyperplane LSH banding
     → candidate pairs where a band collides → EXACT cosine verification —
     the vector analog of ``dedup.minhash_lsh_pairs``, same contract: output
@@ -324,28 +318,30 @@ def rh_lsh_pairs(emb: DataFrame, threshold: float, num_bits: int = 64,
 
     The exact verification join keeps precision at 1.0 in every regime.
     """
-    rows = num_bits // bands
-    sig = rh_signature(emb, num_bits, seed, id_col, vec_col)
+    rows = 64 // bands
+    sig = rh_signature(emb)
     blocks = [
         F.struct(F.lit(b).alias("band"),
                  F.shiftright("rh_sig", rows * b)
                  .bitwiseAND(F.lit((1 << rows) - 1)).alias("key"))
         for b in range(bands)
     ]
-    bt = sig.select(id_col, F.explode(F.array(*blocks)).alias("bb")) \
-        .select(id_col, "bb.band", "bb.key")
+    bt = sig.select("vec_id", F.explode(F.array(*blocks)).alias("bb")) \
+        .select("vec_id", "bb.band", "bb.key")
     cand = (
         bt.alias("a").join(
             bt.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("vec_id_a"),
-                F.col(f"b.{id_col}").alias("vec_id_b"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")))
+        .select(F.col("a.vec_id").alias("vec_id_a"),
+                F.col("b.vec_id").alias("vec_id_b"))
         .distinct()
     )
-    va = emb.select(F.col(id_col).alias("vec_id_a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("vec_id_b"), F.col(vec_col).alias("vb"))
+    va = emb.select(F.col("vec_id").alias("vec_id_a"),
+                    F.col("embedding").alias("va"))
+    vb = emb.select(F.col("vec_id").alias("vec_id_b"),
+                    F.col("embedding").alias("vb"))
     verified = with_cosine(cand.join(va, "vec_id_a").join(vb, "vec_id_b"),
                            "va", "vb")
     return (verified.filter(F.col("cosine") >= threshold)
@@ -353,8 +349,7 @@ def rh_lsh_pairs(emb: DataFrame, threshold: float, num_bits: int = 64,
                     F.round("cosine", 6).alias("cosine")))
 
 
-def embedding_moments(emb: DataFrame, vec_col: str = "embedding"
-                      ) -> Tuple[int, np.ndarray, np.ndarray]:
+def embedding_moments(emb: DataFrame) -> Tuple[int, np.ndarray, np.ndarray]:
     """Distributed first/second moments of an embedding column: returns
     ``(n, sum_vector, gram_matrix)`` with the Gram = Σ x xᵀ accumulated
     NumPy-side per partition (one d + d² array row per PARTITION, not per
@@ -375,7 +370,7 @@ def embedding_moments(emb: DataFrame, vec_col: str = "embedding"
         g = None
         for pdf in batches:
             X = np.vstack([np.asarray(v, dtype=np.float64)
-                           for v in pdf[vec_col]])
+                           for v in pdf["embedding"]])
             n += X.shape[0]
             s = X.sum(0) if s is None else s + X.sum(0)
             gg = X.T @ X
@@ -384,7 +379,7 @@ def embedding_moments(emb: DataFrame, vec_col: str = "embedding"
             yield pd.DataFrame({"n": [n], "s": [s.tolist()],
                                 "g": [g.ravel().tolist()]})
 
-    part = emb.select(vec_col).mapInPandas(partials, schema)
+    part = emb.select("embedding").mapInPandas(partials, schema)
     # ONE pass over the embeddings: pack [n] ++ s ++ g into a single
     # array so count, sum-vector, and Gram reduce in the same
     # posexplode-sum job (round 2 executed the mapInPandas subtree three
@@ -404,18 +399,16 @@ def embedding_moments(emb: DataFrame, vec_col: str = "embedding"
     return n_total, s, g.reshape(d, d)
 
 
-def covariance_matrix(emb: DataFrame, vec_col: str = "embedding"
-                      ) -> Tuple[int, np.ndarray, np.ndarray]:
+def covariance_matrix(emb: DataFrame) -> Tuple[int, np.ndarray, np.ndarray]:
     """(n, mean, covariance) from :func:`embedding_moments`;
     population covariance C = G/n − μμᵀ."""
-    n, s, g = embedding_moments(emb, vec_col)
+    n, s, g = embedding_moments(emb)
     mu = s / n
     cov = g / n - np.outer(mu, mu)
     return n, mu, cov
 
 
-def pca_components(emb: DataFrame, k: int = 8,
-                   vec_col: str = "embedding"
+def pca_components(emb: DataFrame, k: int = 8
                    ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Top-k principal components: one distributed moment pass, then a
     d×d symmetric eigensolve ON THE DRIVER (d=64 here: microseconds —
@@ -423,7 +416,7 @@ def pca_components(emb: DataFrame, k: int = 8,
     n doesn't). Returns ``(mean, eigenvalues_desc[k], components[k, d])``
     with a deterministic sign convention (largest-|w| coordinate of each
     component is positive) so runs and engines agree."""
-    _, mu, cov = covariance_matrix(emb, vec_col)
+    _, mu, cov = covariance_matrix(emb)
     vals, vecs = np.linalg.eigh(cov)           # ascending
     order = np.argsort(vals)[::-1][:k]
     w = vecs[:, order].T                        # (k, d)
@@ -434,21 +427,19 @@ def pca_components(emb: DataFrame, k: int = 8,
     return mu, vals[order], w
 
 
-def pca_project(emb: DataFrame, k: int = 8, vec_col: str = "embedding",
-                out_col: str = "pca",
+def pca_project(emb: DataFrame,
                 components: Optional[Tuple[np.ndarray, np.ndarray]] = None
                 ) -> DataFrame:
-    """Append a k-dim PCA projection column: ``(x − μ) @ Wᵀ`` as ONE
+    """Append a PCA projection column ``pca``: ``(x − μ) @ Wᵀ`` as ONE
     Arrow-batched matmul per batch (closure-captured μ/W ≈ broadcast —
     k·d doubles). Pass ``components=(mu, w)`` to reuse a trained basis
     (score new partitions without re-fitting); otherwise fits via
     :func:`pca_components` first (two Spark jobs total: fit + transform).
     """
     if components is None:
-        mu, _, w = pca_components(emb, k, vec_col)
+        mu, _, w = pca_components(emb)
     else:
         mu, w = components
-        k = w.shape[0]
     mu_b = np.asarray(mu, dtype=np.float64)
     w_b = np.asarray(w, dtype=np.float64)
 
@@ -458,16 +449,15 @@ def pca_project(emb: DataFrame, k: int = 8, vec_col: str = "embedding",
         P = (X - mu_b[None, :]) @ w_b.T
         return pd.Series(list(P))
 
-    return emb.withColumn(out_col, proj(F.col(vec_col)))
+    return emb.withColumn("pca", proj(F.col("embedding")))
 
 
-def covariance_entries(emb: DataFrame, vec_col: str = "embedding",
-                       digits: int = 6) -> DataFrame:
+def covariance_entries(emb: DataFrame, digits: int = 6) -> DataFrame:
     """The covariance matrix as (i, j, cov) rows — the oracle-checkable
     surface of the moment pass (the eigensolve itself is not relational
     algebra; its inputs are)."""
     spark = emb.sparkSession
-    _, _, cov = covariance_matrix(emb, vec_col)
+    _, _, cov = covariance_matrix(emb)
     d = cov.shape[0]
     rows = [(i, j, round(float(cov[i, j]), digits))
             for i in range(d) for j in range(d)]
@@ -504,14 +494,17 @@ def _sq_dist(a, b):
     return _dot(a, a) + _dot(b, b) - F.lit(2.0) * _dot(a, b)
 
 
-def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
-              seed_order: Optional[Column] = None,
-              id_col: str = "vec_id", vec_col: str = "embedding"
+# embedding width the product quantizer splits into subspaces
+PQ_DIM = 64
+
+
+def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16,
+              seed_order: Optional[Column] = None
               ) -> Tuple[DataFrame, DataFrame]:
     """Product quantization (Jégou et al., TPAMI'11): split each vector
     into ``m`` subspaces and store only the id of the nearest sub-codebook
     centroid per subspace — ``m·log2(ksub)`` bits per vector instead of
-    ``dim·32``, the compression that makes billion-scale ANN candidate
+    ``PQ_DIM·32``, the compression that makes billion-scale ANN candidate
     scoring RAM-resident.
 
     Codebooks are the hash-stratified seed sample's subvectors (same
@@ -524,20 +517,20 @@ def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
     array. Two keyed aggregations, both on vector-id cardinality; no
     Python.
 
-    Returns ``(codes, cent)``: codes (id_col, codes array<int>[m]) and
+    Returns ``(codes, cent)``: codes (vec_id, codes array<int>[m]) and
     the centroid table to score against.
     """
-    if dim % m:
-        raise ValueError("pq_encode: dim must divide into m subspaces")
-    dsub = dim // m
+    if PQ_DIM % m:
+        raise ValueError("pq_encode: PQ_DIM must divide into m subspaces")
+    dsub = PQ_DIM // m
     if seed_order is None:
-        seed_order = F.xxhash64(F.col(id_col))
-    cent = (emb.orderBy(seed_order.asc(), F.col(id_col).asc())
+        seed_order = F.xxhash64(F.col("vec_id"))
+    cent = (emb.orderBy(seed_order.asc(), F.col("vec_id").asc())
                .limit(ksub)
-               .select(F.col(id_col).alias("centroid_id"),
-                       F.col(vec_col).cast("array<double>").alias("cvec")))
-    pairs = (emb.select(id_col,
-                        F.col(vec_col).cast("array<double>").alias("v"))
+               .select(F.col("vec_id").alias("centroid_id"),
+                       F.col("embedding").cast("array<double>").alias("cvec")))
+    pairs = (emb.select("vec_id",
+                        F.col("embedding").cast("array<double>").alias("v"))
                 .crossJoin(F.broadcast(cent)))
     sub = F.explode(F.array(*[
         F.struct(
@@ -546,26 +539,24 @@ def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
                      F.slice(F.col("cvec"), s * dsub + 1, dsub))
             .alias("dsq"))
         for s in range(m)])).alias("_d")
-    d = pairs.select(id_col, "centroid_id", sub).select(
-        id_col, "centroid_id", F.col("_d.s").alias("s"),
+    d = pairs.select("vec_id", "centroid_id", sub).select(
+        "vec_id", "centroid_id", F.col("_d.s").alias("s"),
         F.col("_d.dsq").alias("dsq"))
-    best = (d.groupBy(id_col, "s")
+    best = (d.groupBy("vec_id", "s")
              .agg(F.min(F.struct("dsq", "centroid_id")).alias("b"))
-             .select(id_col, "s", F.col("b.centroid_id").alias("code")))
-    codes = (best.groupBy(id_col)
+             .select("vec_id", "s", F.col("b.centroid_id").alias("code")))
+    codes = (best.groupBy("vec_id")
                  .agg(F.array_sort(F.collect_list(F.struct("s", "code")))
                        .alias("sc"))
-                 .select(id_col,
+                 .select("vec_id",
                          F.transform("sc", lambda x: x["code"])
                           .alias("codes")))
     return codes, cent
 
 
 def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
-            m: int = 8, ksub: int = 16, dim: int = 64,
-            rerank: int = 0,
-            seed_order: Optional[Column] = None,
-            id_col: str = "vec_id", vec_col: str = "embedding"
+            m: int = 8, ksub: int = 16, rerank: int = 0,
+            seed_order: Optional[Column] = None
             ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
     exact; every database vector is scored as the sum of its ``m``
@@ -589,12 +580,11 @@ def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
     the whole table. With ``rerank=0`` the raw ADC ranking is returned
     (column ``adist``), which is the oracle-checked surface.
     """
-    dsub = dim // m
-    codes, cent = pq_encode(emb, m, ksub, dim, seed_order,
-                            id_col, vec_col)
-    queries = (emb.filter(F.col(id_col).isin(query_ids))
-                  .select(F.col(id_col).alias("query_id"),
-                          F.col(vec_col).cast("array<double>")
+    dsub = PQ_DIM // m
+    codes, cent = pq_encode(emb, m, ksub, seed_order)
+    queries = (emb.filter(F.col("vec_id").isin(query_ids))
+                  .select(F.col("vec_id").alias("query_id"),
+                          F.col("embedding").cast("array<double>")
                            .alias("qv")))
     qsub = F.explode(F.array(*[
         F.struct(
@@ -609,30 +599,30 @@ def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
                             F.col("_d.s").alias("s"),
                             F.col("_d.dsq").alias("dsq")))
     ccode = codes.select(
-        id_col, F.posexplode("codes").alias("s", "centroid_id"))
+        "vec_id", F.posexplode("codes").alias("s", "centroid_id"))
     scored = (ccode.join(F.broadcast(qdist), ["s", "centroid_id"])
-                   .filter(F.col(id_col) != F.col("query_id"))
-                   .groupBy("query_id", id_col)
+                   .filter(F.col("vec_id") != F.col("query_id"))
+                   .groupBy("query_id", "vec_id")
                    .agg(F.sum("dsq").alias("adist")))
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"),
-                                               F.asc(id_col))
+                                               F.asc("vec_id"))
     if not rerank:
         return (scored.withColumn("rank", F.row_number().over(w))
                       .filter(F.col("rank") <= k)
                       .select("query_id",
-                              F.col(id_col).alias("neighbor_id"),
+                              F.col("vec_id").alias("neighbor_id"),
                               "rank", F.round("adist", 6).alias("adist")))
     short = (scored.withColumn("rn", F.row_number().over(w))
                    .filter(F.col("rn") <= rerank)
-                   .select("query_id", id_col))
-    exact = (short.join(emb.select(id_col, vec_col), id_col)
+                   .select("query_id", "vec_id"))
+    exact = (short.join(emb.select("vec_id", "embedding"), "vec_id")
                   .join(F.broadcast(queries), "query_id"))
-    exact = with_cosine(exact, vec_col, "qv")
+    exact = with_cosine(exact, "embedding", "qv")
     w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                F.asc(id_col))
+                                                F.asc("vec_id"))
     return (exact.withColumn("rank", F.row_number().over(w2))
                  .filter(F.col("rank") <= k)
-                 .select("query_id", F.col(id_col).alias("neighbor_id"),
+                 .select("query_id", F.col("vec_id").alias("neighbor_id"),
                          "rank", F.round("cosine", 6).alias("cosine")))
 
 
@@ -696,20 +686,19 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-def rrf_fuse(rankings: List[DataFrame], k: int = 10, k_rrf: int = 60,
-             id_col: str = "doc_id", rank_col: str = "rank") -> DataFrame:
+def rrf_fuse(rankings: List[DataFrame], k: int = 10) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09): merge any
     number of rankings — BM25, dense ANN, recency — by summing
-    ``1/(k_rrf + rank)`` per candidate; rank-based, so incomparable
+    ``1/(60 + rank)`` per candidate; rank-based, so incomparable
     scores (lexical vs cosine) fuse without calibration. The standard
     hybrid-retrieval combiner.
 
-    Each input needs (id_col, rank_col). Missing candidates simply
+    Each input needs (doc_id, rank). Missing candidates simply
     contribute nothing. One union of top-R tables (tiny), one hash agg,
     one TakeOrderedAndProject — driver-free and independent of corpus
     size because inputs are already top-R."""
-    parts = [r.select(F.col(id_col).alias("fid"),
-                      (1.0 / (F.lit(float(k_rrf)) + F.col(rank_col)))
+    parts = [r.select(F.col("doc_id").alias("fid"),
+                      (1.0 / (F.lit(60.0) + F.col("rank")))
                       .alias("c"))
              for r in rankings]
     u = parts[0]
@@ -719,7 +708,7 @@ def rrf_fuse(rankings: List[DataFrame], k: int = 10, k_rrf: int = 60,
             .agg(F.round(F.sum("c"), 9).alias("rrf_score"),
                  F.count("*").alias("n_rankers")))
     return (out.orderBy(F.desc("rrf_score"), F.asc("fid")).limit(k)
-               .select(F.col("fid").alias(id_col), "rrf_score",
+               .select(F.col("fid").alias("doc_id"), "rrf_score",
                        "n_rankers"))
 
 
@@ -757,8 +746,7 @@ def _centroid_arrays(emb: DataFrame, vec_col: str,
                 lambda s: s["c"]).alias("cen")))
 
 
-def label_silhouette(emb: DataFrame, vec_col: str = "embedding",
-                     label_col: str = "label") -> DataFrame:
+def label_silhouette(emb: DataFrame) -> DataFrame:
     """Simplified (centroid-based) silhouette per vector:
     a = distance to the own-label centroid, b = distance to the nearest
     OTHER centroid, s = (b − a) / max(a, b) ∈ [−1, 1]. The medoid-free
@@ -769,9 +757,8 @@ def label_silhouette(emb: DataFrame, vec_col: str = "embedding",
     vector cardinality. The component fold inside ``aggregate`` runs
     left-to-right — deterministic float order.
     """
-    cen = _centroid_arrays(emb, vec_col, label_col)
-    j = (emb.select("vec_id", F.col(label_col).alias("label"),
-                    F.col(vec_col).alias("_v"))
+    cen = _centroid_arrays(emb, "embedding", "label")
+    j = (emb.select("vec_id", "label", F.col("embedding").alias("_v"))
          .crossJoin(F.broadcast(cen)))
     d2 = F.aggregate(
         F.zip_with("_v", "cen", lambda x, y: (x - y) * (x - y)),
@@ -827,8 +814,7 @@ FROM slp
 """
 
 
-def cluster_validity(emb: DataFrame, vec_col: str = "embedding",
-                     label_col: str = "label") -> DataFrame:
+def cluster_validity(emb: DataFrame) -> DataFrame:
     """Calinski–Harabasz cluster-validity index of a labeling:
     CH = (between-SS / (k−1)) / (within-SS / (n−k)) — the
     variance-ratio criterion for "are these clusters real".
@@ -838,9 +824,8 @@ def cluster_validity(emb: DataFrame, vec_col: str = "embedding",
     (k·d rows) — the only row-cardinality pass is the within-SS
     distance agg, computed map-side against broadcast centroids.
     """
-    cen = _centroid_arrays(emb, vec_col, label_col)
-    base = emb.select("vec_id", F.col(label_col).alias("label"),
-                      F.col(vec_col).alias("_v"))
+    cen = _centroid_arrays(emb, "embedding", "label")
+    base = emb.select("vec_id", "label", F.col("embedding").alias("_v"))
     j = base.join(F.broadcast(cen),
                   base.label == cen.label_c)
     d2 = F.aggregate(
@@ -850,7 +835,7 @@ def cluster_validity(emb: DataFrame, vec_col: str = "embedding",
                    F.count("*").cast("long").alias("n_vecs"))
     sizes = base.groupBy("label").agg(F.count("*").cast("long")
                                       .alias("_nl"))
-    gl = (emb.select(F.posexplode(vec_col).alias("pos", "val"))
+    gl = (emb.select(F.posexplode("embedding").alias("pos", "val"))
           .groupBy("pos").agg(F.avg("val").alias("g")))
     gcen = gl.groupBy().agg(F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "g"))),
@@ -911,9 +896,7 @@ FROM wss CROSS JOIN bss
 
 
 def mmr_select(emb: DataFrame, query_id: int, k: int = 5,
-               lam: float = 0.7, pool: int = 50,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+               lam: float = 0.7, pool: int = 50) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell–Goldstein): pick
     ``k`` results that balance relevance to the query against
     redundancy with what is already picked —
@@ -930,15 +913,14 @@ def mmr_select(emb: DataFrame, query_id: int, k: int = 5,
     identical argmaxes without relying on float-sum associativity.
     """
     lam = float(lam)
-    q = (emb.filter(F.col(id_col) == query_id)
-         .select(F.col(vec_col).alias("_qv")))
-    cand = (emb.filter(F.col(id_col) != query_id)
+    q = (emb.filter(F.col("vec_id") == query_id)
+         .select(F.col("embedding").alias("_qv")))
+    cand = (emb.filter(F.col("vec_id") != query_id)
             .crossJoin(F.broadcast(q))
-            .select(F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).alias("_v"),
-                    (F.round(_dot(F.col(vec_col).cast("array<double>"),
+            .select("vec_id", F.col("embedding").alias("_v"),
+                    (F.round(_dot(F.col("embedding").cast("array<double>"),
                                   F.col("_qv").cast("array<double>"))
-                             / (_norm(F.col(vec_col)
+                             / (_norm(F.col("embedding")
                                       .cast("array<double>"))
                                 * _norm(F.col("_qv")
                                         .cast("array<double>"))), 6)
@@ -1027,9 +1009,7 @@ mms{step} AS (
             f"FROM mms{int(k)}")
 
 
-def label_outliers(emb: DataFrame, vec_col: str = "embedding",
-                   label_col: str = "label",
-                   z_threshold: float = 2.0) -> DataFrame:
+def label_outliers(emb: DataFrame, z_threshold: float = 2.0) -> DataFrame:
     """Mislabel / contamination candidates: vectors whose distance to
     their OWN label centroid is a per-label z-score outlier
     (z = (d − μ_label)/σ_label > threshold). The embedding-space twin
@@ -1041,7 +1021,7 @@ def label_outliers(emb: DataFrame, vec_col: str = "embedding",
     Shape: silhouette's broadcast-centroid pass + ONE label-cardinality
     moment agg broadcast back; the fact rows never shuffle again.
     """
-    sil = label_silhouette(emb, vec_col=vec_col, label_col=label_col)
+    sil = label_silhouette(emb)
     mom = (sil.groupBy("label")
            .agg(F.avg("dist_own").alias("_mu"),
                 F.stddev_pop("dist_own").alias("_sd")))
@@ -1081,9 +1061,8 @@ WHERE ROUND((s.dist_own - m.mu)
 # Retrieval-quality metrics: precision@k / MRR / NDCG@k, and ANN recall
 # ---------------------------------------------------------------------------
 
-def retrieval_metrics(emb: DataFrame, query_ids: List[int], k: int = 10,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      label_col: str = "label") -> DataFrame:
+def retrieval_metrics(emb: DataFrame, query_ids: List[int],
+                      k: int = 10) -> DataFrame:
     """Label-relevance audit of exact cosine top-k retrieval: for each
     query, with rel(doc) = [label(doc) = label(query)], the standard
     ranking metrics — precision@k, reciprocal rank of the first
@@ -1101,12 +1080,12 @@ def retrieval_metrics(emb: DataFrame, query_ids: List[int], k: int = 10,
     a ≤k-element `sequence` per query row — JVM expression, identical
     `aggregate` fold in DuckDB.
     """
-    topk = cosine_topk(emb, query_ids, k, id_col, vec_col)
-    qlab = (emb.filter(F.col(id_col).isin(query_ids))
-            .select(F.col(id_col).alias("query_id"),
-                    F.col(label_col).alias("qlabel")))
-    nlab = emb.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(label_col).alias("nlabel"))
+    topk = cosine_topk(emb, query_ids, k)
+    qlab = (emb.filter(F.col("vec_id").isin(query_ids))
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col("label").alias("qlabel")))
+    nlab = emb.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("label").alias("nlabel"))
     j = (nlab.join(F.broadcast(topk), "neighbor_id")
          .join(F.broadcast(qlab), "query_id")
          .withColumn("rel", (F.col("nlabel") == F.col("qlabel"))
@@ -1117,7 +1096,7 @@ def retrieval_metrics(emb: DataFrame, query_ids: List[int], k: int = 10,
                         / F.log2(F.col("rank") + 1.0)).alias("dcg"),
                   F.min(F.when(F.col("rel") == 1.0, F.col("rank")))
                   .alias("first_rel")))
-    lab_counts = (emb.groupBy(F.col(label_col).alias("qlabel"))
+    lab_counts = (emb.groupBy(F.col("label").alias("qlabel"))
                   .agg(F.count("*").cast("double").alias("lc")))
     g = (per_q.join(F.broadcast(lab_counts), "qlabel")
          .withColumn("n_rel", F.col("lc") - 1.0))

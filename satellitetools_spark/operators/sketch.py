@@ -50,8 +50,7 @@ def _mix_sql(expr: str) -> str:
     return f"(({h} * {h}) % {_M} * {_B} + {h}) % {_M}"
 
 
-def kmv_distinct(docs: DataFrame, k: int = 256,
-                 text_col: str = "text") -> DataFrame:
+def kmv_distinct(docs: DataFrame, k: int = 256) -> DataFrame:
     """One-row KMV distinct-token estimate over a document corpus:
     ``(k, n_kept, kth_hash, est_distinct, exact_distinct)``.
 
@@ -61,7 +60,7 @@ def kmv_distinct(docs: DataFrame, k: int = 256,
     """
     if k < 2:
         raise ValueError("kmv_distinct: k must be >= 2")
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     # exact_distinct counts DISTINCT TOKENS, not distinct hash values:
     # at ~1e6-token vocabularies the 1e9+7 hash space already expects
@@ -107,7 +106,7 @@ FROM sk
 
 
 def kmv_distinct_by(docs: DataFrame, group_col: str = "lang",
-                    k: int = 64, text_col: str = "text") -> DataFrame:
+                    k: int = 64) -> DataFrame:
     """Per-group KMV sketches: one row per group with the k-minimum-value
     estimate and the exact distinct count — vocabulary size per
     language/source in a single pass. Demonstrates the property that
@@ -123,7 +122,7 @@ def kmv_distinct_by(docs: DataFrame, group_col: str = "lang",
     from pyspark.sql import Window
     if k < 2:
         raise ValueError("kmv_distinct_by: k must be >= 2")
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     # distinct (group, token) first: exact_distinct must count tokens,
     # not hash values (hash collisions undercount the true cardinality)

@@ -10,9 +10,8 @@ table via the planar cell index —
    as (aoi, tileid, cell, is_full, rings_utm) rows — no driver collect,
    no task-closure geometry dict, so 10^5+ AOIs stream through executors
    like any other table;
-2. the cover is hash-joined to the pixels on (tileid, cell) — broadcast by
-   default (a cover is KBs per AOI), or a shuffle hash join with
-   ``broadcast_cover=False`` for AOI dimensions too large to broadcast;
+2. the cover is broadcast-hash-joined to the pixels on (tileid, cell) —
+   a cover is KBs per AOI;
 3. pixels landing in 'full' cells are inside by construction; pixels in
    'partial' (boundary) cells carry the projected polygon along the join
    and go through one vectorized ray-casting pandas UDF for exact
@@ -43,7 +42,7 @@ _COVER_SCHEMA = ("aoi string, tileid string, cell bigint, is_full boolean, "
                  "rings_utm string")
 
 
-def aoi_cover_df(aois: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
+def aoi_cover_df(aois: DataFrame) -> DataFrame:
     """Distributed AOI cell-cover build.
 
     ``aois`` columns: aoi, tileid, geometry (GeoJSON string), utm_zone.
@@ -60,7 +59,7 @@ def aoi_cover_df(aois: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
                 rings4326 = G.rings_from_geojson(r.geometry)
                 rings_utm = G.project_rings_to_utm(rings4326, int(r.utm_zone))
                 gj = json.dumps([rr.tolist() for rr in rings_utm])
-                cover = G.polygon_cell_cover(rings_utm, cell_m)
+                cover = G.polygon_cell_cover(rings_utm, CELL_SIZE_M)
                 for c in cover["full"]:
                     aoi_l.append(r.aoi); tile_l.append(r.tileid)
                     cell_l.append(int(c)); full_l.append(True)
@@ -109,19 +108,15 @@ def with_cell(px: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     return px.withColumn("cell", cell)
 
 
-def cell_join_df(pixels: DataFrame, aois: DataFrame,
-                 cell_m: float = CELL_SIZE_M,
-                 broadcast_cover: bool = True) -> DataFrame:
+def cell_join_df(pixels: DataFrame, aois: DataFrame) -> DataFrame:
     """Join pixel rows (tileid, x, y, ...) to an AOI polygon DataFrame;
     returns the input columns + ``aoi``, keeping only inside-polygon
     pixels. Fully distributed — no driver collect at any AOI cardinality."""
-    cover = aoi_cover_df(aois, cell_m)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
+    cover = F.broadcast(aoi_cover_df(aois))
 
     px = pixels
     if "cell" not in px.columns:
-        px = with_cell(px, cell_m)
+        px = with_cell(px)
 
     joined = px.join(cover, ["tileid", "cell"])
     # full-cover cells skip refinement entirely (the common case); the
@@ -132,18 +127,13 @@ def cell_join_df(pixels: DataFrame, aois: DataFrame,
     return inside.drop("is_full", "rings_utm")
 
 
-def dem_lookup(pixels: DataFrame, dem: DataFrame,
-               cell_m: float = CELL_SIZE_M,
-               broadcast_dem: bool = True) -> DataFrame:
+def dem_lookup(pixels: DataFrame, dem: DataFrame) -> DataFrame:
     """S8: DEM point lookup (reference gee.py:748-773) as a cell-keyed
     lookup join against a second table ``dem(cell, elevation, ...)``: pixel
     (x, y) → planar cell id (codegen) → hash join. A DEM dimension is
-    ~KB/km², so it broadcasts up to continent scale; pass
-    ``broadcast_dem=False`` to shuffle-join against a planetary DEM, where
-    the cell key co-partitions both sides."""
-    px = pixels if "cell" in pixels.columns else with_cell(pixels, cell_m)
-    d = F.broadcast(dem) if broadcast_dem else dem
-    return px.join(d, "cell", "left")
+    ~KB/km², so it is broadcast."""
+    px = pixels if "cell" in pixels.columns else with_cell(pixels)
+    return px.join(F.broadcast(dem), "cell", "left")
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +154,7 @@ def _spread_bits(v):
     return v
 
 
-def zorder_key(x, y, cell_m: float = CELL_SIZE_M):
+def zorder_key(x, y):
     """Morton/Z-order key of a planar point: interleave the bits of the
     two cell coordinates so that sorting by the key gives a
     locality-preserving space-filling-curve order. Pure codegen (ten
@@ -176,8 +166,8 @@ def zorder_key(x, y, cell_m: float = CELL_SIZE_M):
     so the parquet min/max stats on one column stand in for a 2-D index.
     """
     m = F.lit(2 ** _ZORDER_BITS)
-    cx = F.pmod(F.floor(x / F.lit(float(cell_m))).cast("long"), m)
-    cy = F.pmod(F.floor(y / F.lit(float(cell_m))).cast("long"), m)
+    cx = F.pmod(F.floor(x / F.lit(float(CELL_SIZE_M))).cast("long"), m)
+    cy = F.pmod(F.floor(y / F.lit(float(CELL_SIZE_M))).cast("long"), m)
     return _spread_bits(cx).bitwiseOR(F.shiftleft(_spread_bits(cy), 1))
 
 
@@ -196,8 +186,7 @@ def zorder_key_sql(x: str, y: str, cell_m: float = CELL_SIZE_M) -> str:
 
 
 def focal_stats(px: DataFrame, value_col: str, radius: int = 1,
-                doc_col: str = "doc_id", x_col: str = "x",
-                y_col: str = "y", gsd_col: str = "gsd") -> DataFrame:
+                doc_col: str = "doc_id") -> DataFrame:
     """Raster focal statistics (moving-window mean) over the long pixel
     frame — per pixel, the mean of ``value_col`` over its
     ``(2r+1) x (2r+1)`` grid neighborhood within the same scene.
@@ -236,8 +225,8 @@ def focal_stats(px: DataFrame, value_col: str, radius: int = 1,
     """
     if radius < 1:
         raise ValueError("focal_stats: radius must be >= 1")
-    ix = F.floor(F.col(x_col) / F.col(gsd_col)).cast("long")
-    iy = F.floor(F.col(y_col) / F.col(gsd_col)).cast("long")
+    ix = F.floor(F.col("x") / F.col("gsd")).cast("long")
+    iy = F.floor(F.col("y") / F.col("gsd")).cast("long")
     base = px.withColumn("_ix", ix).withColumn("_iy", iy)
     carry = [c for c in px.columns]
     offs = [(dx, dy) for dx in range(-radius, radius + 1)
@@ -298,8 +287,7 @@ FROM fval p JOIN fagg a
 
 
 def cell_pyramid(px: DataFrame, value_col: str, levels: int = 4,
-                 base_m: float = 20.0, x_col: str = "x",
-                 y_col: str = "y") -> DataFrame:
+                 base_m: float = 20.0) -> DataFrame:
     """Multi-resolution cell rollup (tile-pyramid aggregation): the value
     column aggregated into planar grid cells at ``levels`` dyadic
     resolutions (``base_m``, ``2*base_m``, ``4*base_m``, ...) — the
@@ -334,8 +322,8 @@ def cell_pyramid(px: DataFrame, value_col: str, levels: int = 4,
                  F.lit(float(base_m) * (2 ** lvl)).alias("size"))
         for lvl in range(levels)])).alias("_t")
     v = F.col(value_col)
-    e = (px.select(v.alias("_v"), F.col(x_col).alias("_x"),
-                   F.col(y_col).alias("_y"), tiers)
+    e = (px.select(v.alias("_v"), F.col("x").alias("_x"),
+                   F.col("y").alias("_y"), tiers)
            .select("_v",
                    F.col("_t.level").alias("level"),
                    F.floor(F.col("_x") / F.col("_t.size"))
@@ -374,22 +362,17 @@ FROM pyr_px GROUP BY 2, 3""")
             + body)
 
 
-def cluster_by_zorder(df: DataFrame, num_partitions: int,
-                      cell_m: float = CELL_SIZE_M,
-                      x_col: str = "x", y_col: str = "y") -> DataFrame:
+def cluster_by_zorder(df: DataFrame, num_partitions: int) -> DataFrame:
     """Range-partition + locally sort by the Morton key — the shape of a
     spatially-clustered table write (`.write.parquet` on the result gives
     files whose per-file zkey min/max are tight, hence prunable). One
     range exchange; the sort is partition-local."""
-    keyed = df.withColumn("zkey", zorder_key(F.col(x_col), F.col(y_col),
-                                             cell_m))
+    keyed = df.withColumn("zkey", zorder_key(F.col("x"), F.col("y")))
     return (keyed.repartitionByRange(num_partitions, "zkey")
                  .sortWithinPartitions("zkey"))
 
 
-def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict],
-               doc_col: str = "doc_id", x_col: str = "x",
-               y_col: str = "y", gsd_col: str = "gsd") -> DataFrame:
+def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict]) -> DataFrame:
     """Generalized raster kernel correlation — Sobel gradients, Laplacian
     edge detection, Gaussian blur, slope/aspect stencils — over the long
     pixel frame, ALL kernels in one pass.
@@ -417,20 +400,20 @@ def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict],
     names = list(kernels)
     offs = sorted(set().union(*[set(k) for k in kernels.values()])
                   | {(0, 0)})
-    ix = F.floor(F.col(x_col) / F.col(gsd_col)).cast("long")
-    iy = F.floor(F.col(y_col) / F.col(gsd_col)).cast("long")
+    ix = F.floor(F.col("x") / F.col("gsd")).cast("long")
+    iy = F.floor(F.col("y") / F.col("gsd")).cast("long")
     base = px.withColumn("_ix", ix).withColumn("_iy", iy)
-    pay = [c for c in px.columns if c != doc_col]
+    pay = [c for c in px.columns if c != "doc_id"]
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
                  *[F.lit(float(kernels[n].get((dx, dy), 0.0)))
                    .alias(f"w_{n}") for n in names])
         for dx, dy in offs])).alias("_o")
     center = (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)
-    contrib = (base.select(doc_col, "_ix", "_iy",
+    contrib = (base.select("doc_id", "_ix", "_iy",
                            F.col(value_col).alias("_v"),
                            *[F.col(c) for c in pay], off)
-                   .select(doc_col,
+                   .select("doc_id",
                            (F.col("_ix") - F.col("_o.dx")).alias("_ix"),
                            (F.col("_iy") - F.col("_o.dy")).alias("_iy"),
                            "_v", center.alias("_isc"),
@@ -438,13 +421,13 @@ def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict],
                              .alias(f"_wv_{n}") for n in names],
                            *[F.when(center, F.col(c)).alias(c)
                              for c in pay]))
-    agg = (contrib.groupBy(doc_col, "_ix", "_iy")
+    agg = (contrib.groupBy("doc_id", "_ix", "_iy")
                   .agg(F.count("_v").alias("_n"),
                        F.max("_isc").alias("_has_ctr"),
                        *[F.sum(f"_wv_{n}").alias(n) for n in names],
                        *[F.max(c).alias(c) for c in pay]))
     return (agg.filter(F.col("_has_ctr"))
-               .select(F.col(doc_col), *pay,
+               .select(F.col("doc_id"), *pay,
                        F.col("_ix").alias("ix"), F.col("_iy").alias("iy"),
                        F.col("_n").cast("int").alias("n_neigh"),
                        *names))
@@ -489,8 +472,7 @@ SOBEL_GY = {(dx, dy): float(dy * (2 - abs(dx)))
             for dx in (-1, 0, 1) for dy in (-1, 0, 1)}
 
 
-def polygon_metrics(aois: DataFrame, geom_col: str = "aoi_geometry",
-                    name_col: str = "aoi") -> DataFrame:
+def polygon_metrics(aois: DataFrame) -> DataFrame:
     """Vector-geometry metrics of AOI polygons straight from their
     GeoJSON (raw coordinate space, no CRS transform — deterministic
     across engines): vertex/ring/polygon counts, shoelace area,
@@ -506,7 +488,7 @@ def polygon_metrics(aois: DataFrame, geom_col: str = "aoi_geometry",
     standard headline-number convention, stated rather than implied.
     """
     coords = F.from_json(
-        F.get_json_object(F.col(geom_col), "$.coordinates"),
+        F.get_json_object(F.col("aoi_geometry"), "$.coordinates"),
         "array<array<array<array<double>>>>")
     ring = F.element_at(F.element_at(coords, 1), 1)
     n = F.size(ring)
@@ -537,7 +519,7 @@ def polygon_metrics(aois: DataFrame, geom_col: str = "aoi_geometry",
 
     signed2 = fsum(cross)
     return aois.select(
-        F.col(name_col),
+        F.col("aoi"),
         F.size(coords).alias("n_polys"),
         F.size(F.element_at(coords, 1)).alias("n_rings"),
         (n - 1).alias("n_vertices"),
@@ -594,9 +576,7 @@ FROM pmt
 """
 
 
-def zonal_stats(px: DataFrame, zones: DataFrame, value_col: str,
-                zone_col: str = "zone", cell_m: float = CELL_SIZE_M,
-                broadcast_zones: bool = True) -> DataFrame:
+def zonal_stats(px: DataFrame, zones: DataFrame, value_col: str) -> DataFrame:
     """Zonal statistics — the classic raster×zone cross-analysis (mean
     NDVI per elevation band, per land-cover class, per watershed): the
     zone raster arrives as a second cell-keyed table ``zones(cell,
@@ -604,18 +584,16 @@ def zonal_stats(px: DataFrame, zones: DataFrame, value_col: str,
     compute in codegen, and a single map-side-combined hash agg at zone
     cardinality emits n/mean/min/max/std per zone.
 
-    The zone table is ~KB/km² and broadcasts to continent scale
-    (``broadcast_zones=False`` shuffle-joins a planetary zone raster on
-    the co-partitioned cell key). Pixels with no zone drop (inner join —
-    outside the zone raster means outside the analysis). Std is the
+    The zone table is ~KB/km² and is broadcast. Pixels with no zone
+    drop (inner join — outside the zone raster means outside the
+    analysis). Std is the
     population form derived from (Σv, Σv²) so the oracle can reproduce
     it bit-for-bit from the same sums.
     """
-    p = px if "cell" in px.columns else with_cell(px, cell_m)
-    z = F.broadcast(zones) if broadcast_zones else zones
+    p = px if "cell" in px.columns else with_cell(px)
     v = F.col(value_col)
-    agg = (p.join(z, "cell")
-           .groupBy(zone_col)
+    agg = (p.join(F.broadcast(zones), "cell")
+           .groupBy("zone")
            .agg(F.count(value_col).alias("n"),
                 F.sum(v).alias("_s"),
                 F.sum(v * v).alias("_s2"),
@@ -624,7 +602,7 @@ def zonal_stats(px: DataFrame, zones: DataFrame, value_col: str,
     mean = F.col("_s") / F.col("n")
     var = F.greatest(F.col("_s2") / F.col("n") - mean * mean, F.lit(0.0))
     return agg.select(
-        zone_col, "n",
+        "zone", "n",
         F.round(mean, 6).alias("mean_v"),
         F.round("_mn", 6).alias("min_v"),
         F.round("_mx", 6).alias("max_v"),
@@ -655,12 +633,10 @@ FROM za
 """
 
 
-def hillshade(dem: DataFrame, cell_m: float = CELL_SIZE_M,
-              azimuth_deg: float = 315.0, altitude_deg: float = 45.0,
-              z_factor: float = 1.0) -> DataFrame:
+def hillshade(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     """Horn-method hillshade of the DEM cell dimension: per cell,
     terrain slope, aspect, and the illumination value [0, 255] for a
-    light source at (azimuth, altitude) — the classic terrain-analysis
+    light source at azimuth 315°, altitude 45° — the classic terrain-analysis
     raster operator (ESRI/GDAL semantics: Sobel-weighted 3×3 gradients,
     ``shade = 255·(sinα·cosS + cosα·sinS·cos(az−A))`` clamped at 0).
 
@@ -683,13 +659,13 @@ def hillshade(dem: DataFrame, cell_m: float = CELL_SIZE_M,
     # single precomputed multiplier, written identically in the oracle —
     # gx*k and (gx*z)/8c differ in the last ulp and round 6 can't always
     # hide that at a rounding boundary
-    k = float(z_factor) / (8.0 * float(cell_m))
+    k = 1.0 / (8.0 * float(cell_m))
     dzdx = F.col("gx") * F.lit(k)
     dzdy = F.col("gy") * F.lit(k)
     slope = F.atan(F.sqrt(dzdx * dzdx + dzdy * dzdy))
     aspect = F.atan2(dzdy, -dzdx)
-    az = math.radians(360.0 - float(azimuth_deg) + 90.0)
-    alt = math.radians(float(altitude_deg))
+    az = math.radians(360.0 - 315.0 + 90.0)
+    alt = math.radians(45.0)
     shade = 255.0 * (math.sin(alt) * F.cos(slope)
                      + math.cos(alt) * F.sin(slope)
                      * F.cos(F.lit(az) - aspect))
@@ -741,9 +717,7 @@ FROM hg g JOIN hd d ON d.ix = g.ix AND d.iy = g.iy
 
 
 def distance_join(points: DataFrame, stations: DataFrame, radius: float,
-                  cell_m: float = CELL_SIZE_M,
-                  station_id_col: str = "station_id",
-                  broadcast_stations: bool = True) -> DataFrame:
+                  cell_m: float = CELL_SIZE_M) -> DataFrame:
     """Distance-threshold spatial pair join: every (point, station) pair
     with planar distance ≤ ``radius`` — the within-d band join (sensor
     attribution, ground-truth matching) that neither equi- nor range
@@ -755,10 +729,8 @@ def distance_join(points: DataFrame, stations: DataFrame, radius: float,
     broadcasts, so the big point side is touched by exactly one
     broadcast hash join on the cell id it computes in codegen, zero
     shuffles at point cardinality. The distance predicate then runs
-    exactly on the survivors (bbox-cell false positives only). With a
-    planetary station table, ``broadcast_stations=False`` shuffles both
-    sides on the cell key instead — same replicated-build shape, still
-    no cross product anywhere. Stations carry (``station_id``, sx, sy).
+    exactly on the survivors (bbox-cell false positives only). No cross
+    product anywhere. Stations carry (``station_id``, sx, sy).
     """
     # +1 ring of slack beyond ceil(radius/cell): a pair at distance
     # EXACTLY radius whose coordinates sit on cell boundaries can span
@@ -772,18 +744,17 @@ def distance_join(points: DataFrame, stations: DataFrame, radius: float,
     six = F.floor(F.col("sx") / cell_m).cast("long")
     siy = F.floor(F.col("sy") / cell_m).cast("long")
     cand = (stations
-            .select(station_id_col, "sx", "sy",
+            .select("station_id", "sx", "sy",
                     F.explode(F.sequence(six - r_cells, six + r_cells))
                     .alias("ix"), siy.alias("siy"))
-            .select(station_id_col, "sx", "sy", "ix",
+            .select("station_id", "sx", "sy", "ix",
                     F.explode(F.sequence(F.col("siy") - r_cells,
                                          F.col("siy") + r_cells))
                     .alias("iy"))
-            .select(station_id_col, "sx", "sy",
+            .select("station_id", "sx", "sy",
                     (F.col("iy") * F.lit(2 ** 32)
                      + F.pmod(F.col("ix"), F.lit(2 ** 32))).alias("cell")))
-    if broadcast_stations:
-        cand = F.broadcast(cand)
+    cand = F.broadcast(cand)
     px = points if "cell" in points.columns else with_cell(points, cell_m)
     d2 = ((F.col("x") - F.col("sx")) ** 2 + (F.col("y") - F.col("sy")) ** 2)
     return (px.join(cand, "cell")
@@ -793,11 +764,7 @@ def distance_join(points: DataFrame, stations: DataFrame, radius: float,
 
 
 def knn_join(points: DataFrame, stations: DataFrame, k: int = 3,
-             radius: float = 3 * CELL_SIZE_M,
-             cell_m: float = CELL_SIZE_M,
-             point_key=("doc_id", "x", "y"),
-             station_id_col: str = "station_id",
-             broadcast_stations: bool = True) -> DataFrame:
+             radius: float = 3 * CELL_SIZE_M) -> DataFrame:
     """k-nearest-neighbor join: for each point, its ``k`` nearest
     stations by planar distance (deterministic (dist, station_id) tie
     order) — the lookup join behind nearest-sensor attribution and
@@ -815,17 +782,15 @@ def knn_join(points: DataFrame, stations: DataFrame, k: int = 3,
     point key at candidate-pair cardinality. No cross product, no
     global sort.
     """
-    pairs = distance_join(points, stations, radius=radius, cell_m=cell_m,
-                          station_id_col=station_id_col,
-                          broadcast_stations=broadcast_stations)
+    pairs = distance_join(points, stations, radius=radius)
     # rank on the UNROUNDED squared distance (sx/sy are still present),
     # not the rounded display column `dist`: two stations < 5e-7 apart
     # in true distance round equal and would fall to the id tie-break,
     # ranking a farther station ahead of a closer one
     d2 = ((F.col("x") - F.col("sx")) ** 2 + (F.col("y") - F.col("sy")) ** 2)
-    w = Window.partitionBy(*point_key).orderBy(
-        d2.asc(), F.col(station_id_col).asc())
-    wk = Window.partitionBy(*point_key)
+    w = Window.partitionBy("doc_id", "x", "y").orderBy(
+        d2.asc(), F.col("station_id").asc())
+    wk = Window.partitionBy("doc_id", "x", "y")
     return (pairs.withColumn("knn_rank", F.row_number().over(w))
             .withColumn("n_cand", F.count("*").over(wk))
             .filter(F.col("knn_rank") <= k)
@@ -902,19 +867,18 @@ D8 = [  # (dx, dy, code, dist)
 ]
 
 
-def dem_pixels(dem: DataFrame, cell_m: float = CELL_SIZE_M,
-               value_col: str = "elevation") -> DataFrame:
+def dem_pixels(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     """Long pixel frame (doc_id, x, y, gsd, value) from the packed-cell
     DEM dimension — the same codegen decode :func:`hillshade` uses."""
     return dem.select(
         F.lit("dem").alias("doc_id"),
         ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * cell_m).alias("x"),
         ((F.floor(F.col("cell") / F.lit(2 ** 32)) + 0.5) * cell_m).alias("y"),
-        F.col(value_col),
+        F.col("elevation"),
         F.lit(float(cell_m)).alias("gsd"))
 
 
-def morans_i(px: DataFrame, value_col: str = "elevation") -> DataFrame:
+def morans_i(px: DataFrame) -> DataFrame:
     """Global Moran's I of a cell raster under queen contiguity
     (8-neighbor, binary weights) — THE spatial-autocorrelation summary
     (is elevation / NDVI / land-value clustered, dispersed, or random?):
@@ -928,9 +892,9 @@ def morans_i(px: DataFrame, value_col: str = "elevation") -> DataFrame:
     links (standard binary-weight accounting), so W counts actual
     neighbor pairs, not 8n.
     """
-    mean = px.agg(F.avg(F.col(value_col).cast("double")).alias("_mu"))
+    mean = px.agg(F.avg(F.col("elevation").cast("double")).alias("_mu"))
     z = (px.crossJoin(F.broadcast(mean))
-         .withColumn("_z", F.col(value_col).cast("double") - F.col("_mu"))
+         .withColumn("_z", F.col("elevation").cast("double") - F.col("_mu"))
          .drop("_mu"))
     g = focal_conv(z, "_z", {"nsum": QUEEN})
     # n_neigh counts the center too (the (0,0) offset is always in the
@@ -970,8 +934,7 @@ FROM mig g JOIN miz z ON g.ix = z.ix AND g.iy = z.iy
 # D8 flow direction (hydrology primitive)
 # ---------------------------------------------------------------------------
 
-def flow_direction(dem: DataFrame, cell_m: float = CELL_SIZE_M,
-                   value_col: str = "elevation") -> DataFrame:
+def flow_direction(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     """D8 steepest-descent flow direction per DEM cell — the hydrology
     primitive under watershed delineation and flow accumulation: each
     cell drains toward the 8-neighbor with the greatest positive
@@ -990,7 +953,7 @@ def flow_direction(dem: DataFrame, cell_m: float = CELL_SIZE_M,
     base = dem.select(
         F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
         F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col(value_col).cast("double").alias("v"))
+        F.col("elevation").cast("double").alias("v"))
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
                  F.lit(c).alias("code"), F.lit(d).alias("dist"))
@@ -1010,7 +973,7 @@ def flow_direction(dem: DataFrame, cell_m: float = CELL_SIZE_M,
                 F.sum((drop > 0).cast("long")).alias("n_lower"),
                 best.alias("_b")))
     return out.select(
-        "ix", "iy", F.col("v").alias(value_col), "n_neigh", "n_lower",
+        "ix", "iy", F.col("v").alias("elevation"), "n_neigh", "n_lower",
         F.coalesce(-F.col("_b.nc"), F.lit(0)).cast("int")
         .alias("flow_code"),
         F.round(F.col("_b.d"), 6).alias("best_drop"))
@@ -1059,8 +1022,7 @@ FROM fda
 def greenest_composite(px: DataFrame, value_col: str = "ndvi",
                        time_col: str = "date_str",
                        tiebreak_col: str = "doc_id",
-                       payload_cols: Sequence[str] = (),
-                       x_col: str = "x", y_col: str = "y") -> DataFrame:
+                       payload_cols: Sequence[str] = ()) -> DataFrame:
     """Best-pixel (max-value) temporal composite — the classic
     cloud-free mosaic builder (greenest-pixel Landsat/Sentinel
     composites): per location, keep the observation with the maximum
@@ -1083,9 +1045,9 @@ def greenest_composite(px: DataFrame, value_col: str = "ndvi",
               F.col(tiebreak_col).alias("tb")]
     fields += [F.col(c).alias(c) for c in payload_cols]
     best = F.max(F.when(v.isNotNull(), F.struct(*fields)))
-    out = (px.groupBy(x_col, y_col)
+    out = (px.groupBy("x", "y")
            .agg(F.count(v).cast("long").alias("n_obs"), best.alias("_b")))
-    sel = [x_col, y_col, "n_obs",
+    sel = ["x", "y", "n_obs",
            F.col("_b.v").alias(f"best_{value_col}"),
            F.col("_b.t").alias("best_" + time_col),
            F.col("_b.tb").alias("best_" + tiebreak_col)]
@@ -1134,8 +1096,7 @@ FROM gca
 GSTAR = {(dx, dy): 1.0 for dx in (-1, 0, 1) for dy in (-1, 0, 1)}
 
 
-def getis_ord_gstar(px: DataFrame, value_col: str = "elevation"
-                    ) -> DataFrame:
+def getis_ord_gstar(px: DataFrame) -> DataFrame:
     """Getis-Ord Gi* z-score per cell — THE local hotspot statistic
     (where are the statistically high/low clusters?), complementing the
     single global number :func:`morans_i` gives. Binary weights over the
@@ -1153,12 +1114,12 @@ def getis_ord_gstar(px: DataFrame, value_col: str = "elevation"
     z-score itself is a pure codegen projection. Two shuffles total,
     both at cell cardinality, independent of stencil size.
     """
-    g = focal_conv(px, value_col, {"gsum": GSTAR})
+    g = focal_conv(px, "elevation", {"gsum": GSTAR})
     stats = px.agg(
-        F.count(F.col(value_col).cast("double")).alias("_n"),
-        F.avg(F.col(value_col).cast("double")).alias("_mu"),
-        F.avg(F.col(value_col).cast("double")
-              * F.col(value_col).cast("double")).alias("_msq"))
+        F.count(F.col("elevation").cast("double")).alias("_n"),
+        F.avg(F.col("elevation").cast("double")).alias("_mu"),
+        F.avg(F.col("elevation").cast("double")
+              * F.col("elevation").cast("double")).alias("_msq"))
     j = g.crossJoin(F.broadcast(stats))
     wi = F.col("n_neigh").cast("double")
     s = F.sqrt(F.col("_msq") - F.col("_mu") * F.col("_mu"))
@@ -1169,7 +1130,7 @@ def getis_ord_gstar(px: DataFrame, value_col: str = "elevation"
     # ANSI divide-by-zero — mirrored via NULLIF in the oracle
     den = F.when(den != 0, den)
     return (j.select("ix", "iy",
-                     F.col(value_col).cast("double").alias(value_col),
+                     F.col("elevation").cast("double").alias("elevation"),
                      F.col("n_neigh").alias("w_i"),
                      F.round(num / den, 6).alias("gi_z"))
              .withColumn("spot",
@@ -1270,8 +1231,7 @@ def _variogram_offsets(max_d2: int):
             and 0 < dx * dx + dy * dy <= max_d2]
 
 
-def variogram(dem: DataFrame, max_d2: int = 8,
-              value_col: str = "elevation") -> DataFrame:
+def variogram(dem: DataFrame, max_d2: int = 8) -> DataFrame:
     """Empirical semivariogram of a cell raster — the geostatistics
     spatial-structure summary (nugget/sill/range read-off, kriging
     input): ``γ(h) = Σ(vᵢ−vⱼ)² / (2·N(h))`` over all unordered cell
@@ -1289,7 +1249,7 @@ def variogram(dem: DataFrame, max_d2: int = 8,
     base = dem.select(
         F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
         F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col(value_col).cast("double").alias("v"))
+        F.col("elevation").cast("double").alias("v"))
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
                  F.lit(dx * dx + dy * dy).alias("d2"))
@@ -1341,9 +1301,7 @@ FROM vgj GROUP BY d2
 """
 
 
-def flow_accumulation(dem: DataFrame, cell_m: float = CELL_SIZE_M,
-                      value_col: str = "elevation",
-                      max_iters: int = 64) -> DataFrame:
+def flow_accumulation(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     """D8 flow accumulation — upstream contributing-cell count per cell
     (the watershed/catchment-area primitive under stream extraction and
     the topographic wetness index): ``acc(v) = 1 + Σ acc(u)`` over all
@@ -1359,7 +1317,7 @@ def flow_accumulation(dem: DataFrame, cell_m: float = CELL_SIZE_M,
     round detects convergence; each round's frame is lazily
     checkpointed to keep lineage flat.
     """
-    fd = flow_direction(dem, cell_m=cell_m, value_col=value_col)
+    fd = flow_direction(dem, cell_m=cell_m)
     # decode the target cell from the power-of-two code via a literal map
     dx_expr = None
     dy_expr = None
@@ -1377,7 +1335,7 @@ def flow_accumulation(dem: DataFrame, cell_m: float = CELL_SIZE_M,
     cells = fd.select("ix", "iy").localCheckpoint(eager=False)
     acc = cells.withColumn("acc", F.lit(1).cast("long"))
     prev_total = acc.agg(F.sum("acc")).collect()[0][0]
-    for _ in range(max_iters):
+    for _ in range(64):
         inflow = (edges.join(acc, ["ix", "iy"])
                   .groupBy(F.col("tix").alias("ix"),
                            F.col("tiy").alias("iy"))
@@ -1428,9 +1386,7 @@ LEFT JOIN fcnt n ON c.ix = n.ix AND c.iy = n.iy
 """
 
 
-def wetness_index(dem: DataFrame, cell_m: float = CELL_SIZE_M,
-                  value_col: str = "elevation",
-                  z_factor: float = 1.0) -> DataFrame:
+def wetness_index(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     """Topographic wetness index — ``TWI = ln(a / tan β)`` with
     ``a = acc·cell`` the specific catchment area (upstream cells ×
     cell size per unit contour width) and β the Horn slope: THE
@@ -1451,19 +1407,19 @@ def wetness_index(dem: DataFrame, cell_m: float = CELL_SIZE_M,
         .alias("x"),
         ((F.floor(F.col("cell") / F.lit(2 ** 32)) + 0.5) * cell_m)
         .alias("y"),
-        F.col(value_col),
+        F.col("elevation"),
         F.lit(float(cell_m)).alias("gsd"))
-    g = (focal_conv(px, value_col, {"gx": SOBEL_GX, "gy": SOBEL_GY})
+    g = (focal_conv(px, "elevation", {"gx": SOBEL_GX, "gy": SOBEL_GY})
          .filter(F.col("n_neigh") == 9))
-    k = float(z_factor) / (8.0 * float(cell_m))
+    k = 1.0 / (8.0 * float(cell_m))
     dzdx = F.col("gx") * F.lit(k)
     dzdy = F.col("gy") * F.lit(k)
     tanb = F.sqrt(dzdx * dzdx + dzdy * dzdy)
-    acc = flow_accumulation(dem, cell_m=cell_m, value_col=value_col)
+    acc = flow_accumulation(dem, cell_m=cell_m)
     j = g.join(acc, ["ix", "iy"])
     a = F.col("n_upstream_plus_self").cast("double") * float(cell_m)
     twi = F.log(a / F.when(tanb != 0, tanb))
-    return j.select("ix", "iy", F.col(value_col),
+    return j.select("ix", "iy", F.col("elevation"),
                     "n_upstream_plus_self",
                     F.round(F.degrees(F.atan(tanb)), 6).alias("slope_deg"),
                     F.round(twi, 6).alias("twi"))
@@ -1502,8 +1458,7 @@ JOIN wpx p ON g.ix = p.ix AND g.iy = p.iy
 """
 
 
-def local_morans_i(px: DataFrame, value_col: str = "elevation"
-                   ) -> DataFrame:
+def local_morans_i(px: DataFrame) -> DataFrame:
     """Local Moran's I (LISA) per cell with cluster typing — where the
     global :func:`morans_i` number actually comes from, and the classic
     cluster/outlier map: ``Iᵢ = (zᵢ/m₂)·lagᵢ`` with m₂ = Σz²/n and the
@@ -1516,7 +1471,7 @@ def local_morans_i(px: DataFrame, value_col: str = "elevation"
     cell-cardinality shuffles total. Isolated cells (no realized
     neighbor) yield NULL lag/I.
     """
-    v = F.col(value_col).cast("double")
+    v = F.col("elevation").cast("double")
     # the 1-row moments frame feeds TWO broadcasts (z projection and the
     # m2 re-join) — checkpoint it so the raster scans once for moments
     stats = (px.agg(F.count(v).alias("_n"), F.avg(v).alias("_mu"),
@@ -1541,8 +1496,8 @@ def local_morans_i(px: DataFrame, value_col: str = "elevation"
              .when((zr > 0) & (lagr <= 0), F.lit("HL"))
              .when((zr < 0) & (lagr >= 0), F.lit("LH"))
              .otherwise(F.lit("zero")))
-    return g.select("ix", "iy", F.col(value_col).cast("double")
-                    .alias(value_col),
+    return g.select("ix", "iy", F.col("elevation").cast("double")
+                    .alias("elevation"),
                     links.cast("int").alias("n_links"),
                     zr.alias("z"), lagr.alias("lag_z"),
                     F.round(li, 6).alias("local_i"),
@@ -1636,8 +1591,7 @@ def _ms_exprs(threshold: float):
     return idx, s1a, s1b, s2a, s2b, coord
 
 
-def contour_segments(dem: DataFrame, threshold: float,
-                     value_col: str = "elevation") -> DataFrame:
+def contour_segments(dem: DataFrame, threshold: float) -> DataFrame:
     """Marching-squares contour extraction at one iso-level — the
     vectorization step that turns a raster into GIS line work (elevation
     contours, NDVI iso-lines, plume boundaries): per 2×2 node block,
@@ -1655,7 +1609,7 @@ def contour_segments(dem: DataFrame, threshold: float,
     base = dem.select(
         F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
         F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col(value_col).cast("double").alias("v"))
+        F.col("elevation").cast("double").alias("v"))
     corners = [("v00", 0, 0), ("v10", 1, 0), ("v01", 0, 1), ("v11", 1, 1)]
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
@@ -1735,8 +1689,7 @@ _NEIGH8 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
            if (dx, dy) != (0, 0)]
 
 
-def terrain_indices(dem: DataFrame, value_col: str = "elevation"
-                    ) -> DataFrame:
+def terrain_indices(dem: DataFrame) -> DataFrame:
     """Terrain position / ruggedness indices per DEM cell — the
     morphometry trio every terrain stack derives right after slope:
     TPI = v − mean(8 neighbors) (ridge + / valley −), TRI = mean
@@ -1753,7 +1706,7 @@ def terrain_indices(dem: DataFrame, value_col: str = "elevation"
     base = dem.select(
         F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
         F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col(value_col).cast("double").alias("v"))
+        F.col("elevation").cast("double").alias("v"))
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
         for dx, dy in _NEIGH8])).alias("_o")
@@ -1811,38 +1764,36 @@ FROM tij GROUP BY ix, iy
 """
 
 
-def ripley_k(points: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
-             x_col: str = "x", y_col: str = "y",
-             radii: Tuple[float, ...] = (30.0, 60.0, 90.0),
-             gsd: float = 20.0) -> DataFrame:
+def ripley_k(points: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """Ripley's K point-pattern statistic per key — the
     clustered-vs-dispersed test for spatial point sets (are the
     high-NDVI pixels / fire detections / settlements clumped beyond
     chance?): ``K̂(r) = A·2·pairs(≤r) / (n(n−1))`` with the variance-
     stabilized ``L(r) = √(K/π)`` (L ≈ r under complete spatial
     randomness, L > r clustered, L < r dispersed). No edge correction
-    (naive estimator); A is the bounding-box window padded by one
-    ``gsd`` so a single pixel has area gsd².
+    (naive estimator); A is the bounding-box window padded by one 20 m
+    pixel, so a single pixel has area 20².  Radii are 30, 60 and 90 m.
 
     Shape: NEVER an all-pairs join — each point probes a 3×3 block of
-    ``max(radii)``-sized buckets (constant 9× fan-out), candidates meet
+    90 m buckets (constant 9× fan-out), candidates meet
     in ONE (key, bucket) equi-join, the lexicographic (x, y) order
     counts every unordered pair once, and all radii reduce in a single
     hash agg at key cardinality. At 10¹² points candidate volume is
     bounded by local density × 9 buckets, not n².
     """
-    rmax = float(max(radii))
+    radii = (30.0, 60.0, 90.0)
+    rmax = radii[-1]
     base = points.select(
         *key_cols,
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
-        F.floor(F.col(x_col) / rmax).cast("long").alias("bx"),
-        F.floor(F.col(y_col) / rmax).cast("long").alias("by"))
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
+        F.floor(F.col("x") / rmax).cast("long").alias("bx"),
+        F.floor(F.col("y") / rmax).cast("long").alias("by"))
     base = base.localCheckpoint(eager=False)
     stats = base.groupBy(*key_cols).agg(
         F.count("*").cast("long").alias("n_points"),
-        ((F.max("x") - F.min("x") + gsd)
-         * (F.max("y") - F.min("y") + gsd)).alias("area"))
+        ((F.max("x") - F.min("x") + 20.0)
+         * (F.max("y") - F.min("y") + 20.0)).alias("area"))
     probe = (base.select(
         *key_cols, F.col("x").alias("ax"), F.col("y").alias("ay"),
         "bx", "by",
@@ -1932,8 +1883,7 @@ GROUP BY s.{key_cols[0]}{"".join(f", s.{k}" for k in key_cols[1:])}, s.n_points
 
 def clark_evans(points: DataFrame,
                 key_cols: Tuple[str, ...] = ("doc_id",),
-                x_col: str = "x", y_col: str = "y",
-                radius: float = 90.0, gsd: float = 20.0) -> DataFrame:
+                radius: float = 90.0) -> DataFrame:
     """Clark-Evans nearest-neighbor index per key — the one-number
     companion of :func:`ripley_k` (R = observed mean NN distance /
     expected under CSR; R < 1 clustered, R ≈ 1 random, R > 1 dispersed)
@@ -1949,15 +1899,15 @@ def clark_evans(points: DataFrame,
     """
     base = points.select(
         *key_cols,
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
-        F.floor(F.col(x_col) / radius).cast("long").alias("bx"),
-        F.floor(F.col(y_col) / radius).cast("long").alias("by"))
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
+        F.floor(F.col("x") / radius).cast("long").alias("bx"),
+        F.floor(F.col("y") / radius).cast("long").alias("by"))
     base = base.localCheckpoint(eager=False)
     stats = base.groupBy(*key_cols).agg(
         F.count("*").cast("long").alias("n_points"),
-        ((F.max("x") - F.min("x") + gsd)
-         * (F.max("y") - F.min("y") + gsd)).alias("area"))
+        ((F.max("x") - F.min("x") + 20.0)
+         * (F.max("y") - F.min("y") + 20.0)).alias("area"))
     probe = (base.select(
         *key_cols, F.col("x").alias("ax"), F.col("y").alias("ay"),
         "bx", "by",
@@ -2043,7 +1993,6 @@ FROM ces s LEFT JOIN cem m ON {" AND ".join(f"s.{k} = m.{k}" for k in key_cols)}
 
 def kde_grid(points: DataFrame,
              key_cols: Tuple[str, ...] = ("doc_id",),
-             x_col: str = "x", y_col: str = "y",
              bandwidth: float = 40.0, cell_m: float = CELL_SIZE_M
              ) -> DataFrame:
     """Gaussian kernel density estimate evaluated at the occupied grid
@@ -2064,8 +2013,8 @@ def kde_grid(points: DataFrame,
     cutoff = 3.0 * bandwidth
     base = points.select(
         *key_cols,
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"))
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"))
     base = base.localCheckpoint(eager=False)
     npts = base.groupBy(*key_cols).agg(
         F.count("*").cast("long").alias("n_points"))
@@ -2161,7 +2110,6 @@ FROM kda JOIN kdn USING ({keys})
 
 def knox_test(points: DataFrame,
               key_cols: Tuple[str, ...] = ("aoi",),
-              x_col: str = "x", y_col: str = "y", t_col: str = "td",
               ds: float = 60.0, dt: float = 10.0) -> DataFrame:
     """Knox space-time interaction test per key — the epidemiology /
     disturbance-monitoring classic (do events cluster in space AND time
@@ -2181,11 +2129,11 @@ def knox_test(points: DataFrame,
     """
     base = points.select(
         *key_cols,
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
-        F.col(t_col).cast("double").alias("td"),
-        F.floor(F.col(x_col) / ds).cast("long").alias("bx"),
-        F.floor(F.col(y_col) / ds).cast("long").alias("by"))
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
+        F.col("td").cast("double").alias("td"),
+        F.floor(F.col("x") / ds).cast("long").alias("bx"),
+        F.floor(F.col("y") / ds).cast("long").alias("by"))
     base = base.localCheckpoint(eager=False)
     # T = n(n-1)/2
     nn = base.groupBy(*key_cols).agg(
@@ -2306,7 +2254,7 @@ _NEIGH4 = [(1, 0), (-1, 0), (0, 1), (0, -1)]
 
 def region_label(cells: DataFrame,
                  key_cols: Tuple[str, ...] = ("doc_id",),
-                 max_iters: int = 64, connectivity: int = 4) -> DataFrame:
+                 connectivity: int = 4) -> DataFrame:
     """Connected-component labeling of a foreground cell raster per key
     (4-connectivity) — raster blob detection: which contiguous patches
     form one field / burn scar / bloom, as the precursor of object-based
@@ -2345,7 +2293,7 @@ def region_label(cells: DataFrame,
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
         for dx, dy in neigh])).alias("_o")
-    for _ in range(max_iters):
+    for _ in range(64):
         sent = (lab.select(*key_cols, "ix", "iy", "label", off)
                 .select(*key_cols,
                         (F.col("ix") + F.col("_o.dx")).alias("ix"),
@@ -2411,8 +2359,7 @@ FROM rlreach GROUP BY {keys}, ix, iy
 """
 
 
-def variogram_directional(dem: DataFrame, max_d2: int = 8,
-                          value_col: str = "elevation") -> DataFrame:
+def variogram_directional(dem: DataFrame) -> DataFrame:
     """Directional (anisotropic) semivariogram — the geostatistics
     anisotropy probe (does spatial continuity stretch along a ridge /
     wind / flow direction?): the :func:`variogram` reduction split by
@@ -2421,7 +2368,7 @@ def variogram_directional(dem: DataFrame, max_d2: int = 8,
     offset explode, ONE co-partitioned grid equi-join, hash agg at
     direction × lag cardinality.
     """
-    offs = _variogram_offsets(max_d2)
+    offs = _variogram_offsets(8)
 
     def _dir(dx, dy):
         if dy == 0:
@@ -2433,7 +2380,7 @@ def variogram_directional(dem: DataFrame, max_d2: int = 8,
     base = dem.select(
         F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
         F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col(value_col).cast("double").alias("v"))
+        F.col("elevation").cast("double").alias("v"))
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
                  F.lit(dx * dx + dy * dy).alias("d2"),
@@ -2552,13 +2499,12 @@ FROM pssrc JOIN pse USING ({keys})
 
 
 def idw_grid(points: DataFrame, stations: DataFrame, radius: float,
-             power: float = 2.0, cell_m: float = CELL_SIZE_M,
-             value_col: str = "v",
-             station_id_col: str = "station_id") -> DataFrame:
+             cell_m: float = CELL_SIZE_M,
+             value_col: str = "v") -> DataFrame:
     """Inverse-distance-weighted interpolation: predict a station-borne
     field (elevation, temperature, rain) at arbitrary points from the
     stations within ``radius`` — the gridding step behind every
-    "surface from sparse sensors" product. Weight ``1/d^power`` with a
+    "surface from sparse sensors" product. Weight ``1/d²`` with a
     1e-12 floor on d² so a point sitting exactly on a station takes
     (numerically) that station's value.
 
@@ -2571,13 +2517,13 @@ def idw_grid(points: DataFrame, stations: DataFrame, radius: float,
     quadratic, no global sort.
     """
     pairs = (distance_join(points, stations, radius=radius,
-                           cell_m=cell_m, station_id_col=station_id_col)
+                           cell_m=cell_m)
              .join(F.broadcast(stations.select(
-                 station_id_col, F.col(value_col).alias("_sv"))),
-                 station_id_col))
+                 "station_id", F.col(value_col).alias("_sv"))),
+                 "station_id"))
     d2 = ((F.col("x") - F.col("sx")) ** 2
           + (F.col("y") - F.col("sy")) ** 2)
-    w = F.lit(1.0) / F.greatest(d2, F.lit(1e-12)) ** (power / 2.0)
+    w = F.lit(1.0) / F.greatest(d2, F.lit(1e-12))
     keys = [c for c in points.columns if c not in ("x", "y")]
     return (pairs
             .groupBy(*keys, "x", "y")
@@ -2621,14 +2567,14 @@ def _gwr_offsets(max_d2: int):
 
 
 def local_regression(cells: DataFrame, x_col: str, y_col: str,
-                     max_d2: int = 8, bandwidth: float = 2.0) -> DataFrame:
+                     max_d2: int = 8) -> DataFrame:
     """Geographically weighted regression (GWR-lite): at every cell, a
     kernel-weighted ordinary-least-squares fit of ``y_col`` on
     ``x_col`` over the neighborhood within squared offset ``max_d2`` —
     the spatially-varying-coefficient map ("where does NDVI respond to
     elevation, and how strongly?") that a single global regression
     averages away. Gaussian kernel ``w = exp(-d²/(2·bw²))`` with
-    bandwidth in cell units; weights are per-offset-class constants, so
+    bandwidth bw = 2 cells; weights are per-offset-class constants, so
     they are embedded as literals and bit-identical across engines.
 
     Shape: the :func:`variogram` machinery pointed at regression — a
@@ -2648,7 +2594,7 @@ def local_regression(cells: DataFrame, x_col: str, y_col: str,
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
                  F.lit(math.exp(-(dx * dx + dy * dy)
-                                / (2.0 * bandwidth * bandwidth)))
+                                / (2.0 * 2.0 * 2.0)))  # 2·bw²
                  .alias("w"))
         for dx, dy in offs])).alias("_o")
     # sender (ix,iy) contributes its (xv,yv) to center (ix-dx, iy-dy)
@@ -2717,9 +2663,7 @@ FROM gwa
 """
 
 
-def geary_c(px: DataFrame, value_col: str = "elevation",
-            doc_col: str = "doc_id", x_col: str = "x", y_col: str = "y",
-            gsd_col: str = "gsd") -> DataFrame:
+def geary_c(px: DataFrame) -> DataFrame:
     """Global Geary's C under queen contiguity — Moran's I's
     pair-difference twin, more sensitive to LOCAL structure:
     ``C = ((n−1)·Σᵢⱼ wᵢⱼ(xᵢ−xⱼ)²) / (2W·Σᵢ(xᵢ−μ)²)`` over ordered
@@ -2732,14 +2676,14 @@ def geary_c(px: DataFrame, value_col: str = "elevation",
     nothing quadratic, no window. Squared differences are written as
     products (never ``pow``) so both engines round the identical double.
     """
-    mu = px.agg(F.avg(F.col(value_col).cast("double")).alias("_mu"))
+    mu = px.agg(F.avg(F.col("elevation").cast("double")).alias("_mu"))
     base = (px.crossJoin(F.broadcast(mu))
-            .select(F.col(doc_col).alias("d"),
-                    F.floor(F.col(x_col) / F.col(gsd_col)).cast("long")
+            .select(F.col("doc_id").alias("d"),
+                    F.floor(F.col("x") / F.col("gsd")).cast("long")
                     .alias("ix"),
-                    F.floor(F.col(y_col) / F.col(gsd_col)).cast("long")
+                    F.floor(F.col("y") / F.col("gsd")).cast("long")
                     .alias("iy"),
-                    (F.col(value_col).cast("double") - F.col("_mu"))
+                    (F.col("elevation").cast("double") - F.col("_mu"))
                     .alias("z")))
     off = F.explode(F.array(*[
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -2792,8 +2736,7 @@ FROM gcc, gcp
 """
 
 
-def join_counts(cells: DataFrame, bool_col: str,
-                key_cols: Tuple[str, ...] = ("doc_id",)) -> DataFrame:
+def join_counts(cells: DataFrame, bool_col: str) -> DataFrame:
     """Join-count statistics of a binary raster under queen contiguity —
     the categorical autocorrelation test (is the TRUE class spatially
     clumped?): observed ordered neighbor-pair counts BB / WW / BW per
@@ -2807,7 +2750,7 @@ def join_counts(cells: DataFrame, bool_col: str,
     agg, broadcast-joined for the readout. Nothing quadratic; at 10¹²
     cells the pair join is 8n rows through one shuffle.
     """
-    keys = list(key_cols)
+    keys = ["doc_id"]
     base = cells.select(
         *keys, F.col("ix").cast("long").alias("ix"),
         F.col("iy").cast("long").alias("iy"),
@@ -2893,7 +2836,7 @@ FROM jcf f LEFT JOIN jcp p USING ({keys})
 
 def grid_dbscan(cells: DataFrame,
                 key_cols: Tuple[str, ...] = ("doc_id",),
-                min_pts: int = 4, max_iters: int = 64) -> DataFrame:
+                min_pts: int = 4) -> DataFrame:
     """Deterministic grid DBSCAN per key — density-based clustering of a
     foreground cell mask (eps = one queen step): a cell whose closed
     queen neighborhood holds ≥ ``min_pts`` foreground cells is a CORE;
@@ -2930,8 +2873,7 @@ def grid_dbscan(cells: DataFrame,
             .localCheckpoint(eager=False))
     cores = dens.filter(F.col("n_in_neigh") >= min_pts)
     lab = region_label(cores.select(*keys, "ix", "iy"),
-                       key_cols=key_cols, max_iters=max_iters,
-                       connectivity=8)
+                       key_cols=key_cols, connectivity=8)
     core_out = (cores.join(lab, keys + ["ix", "iy"])
                 .select(*keys, "ix", "iy", "n_in_neigh", "label",
                         F.lit("core").alias("role")))
@@ -3009,9 +2951,7 @@ SELECT * FROM dbrest
 
 
 def shadow_project(px: DataFrame, meta: DataFrame,
-                   cloud_classes: Tuple[int, ...] = (8, 9),
                    height_m: float = 1000.0,
-                   scl_col: str = "SCL",
                    exclude_sources: bool = True) -> DataFrame:
     """Geometric cloud-shadow candidate mask — the Sen2Cor-style step
     after cloud classification: every cloud pixel casts a shadow
@@ -3043,7 +2983,7 @@ def shadow_project(px: DataFrame, meta: DataFrame,
                 * F.cos(F.radians(F.col("sun_azimuth") + 180.0)), 6)
         .alias("_dy")))
     j = px.join(m, "doc_id")
-    is_cloud = F.col(scl_col).isin(*[int(c) for c in cloud_classes])
+    is_cloud = F.col("SCL").isin(8, 9)
     shadows = (j.filter(is_cloud)
                .groupBy("doc_id",
                         F.floor((F.col("x") + F.col("_dx")) / F.col("_gsd"))
@@ -3057,7 +2997,7 @@ def shadow_project(px: DataFrame, meta: DataFrame,
                        .alias("ix"),
                        F.floor(F.col("y") / F.col("_gsd")).cast("long")
                        .alias("iy"),
-                       F.col(scl_col).cast("int").alias("scl"))
+                       F.col("SCL").cast("int").alias("scl"))
     return (cand.join(shadows, ["doc_id", "ix", "iy"])
             .select("doc_id", "x", "y", "scl", "n_sources"))
 
@@ -3107,9 +3047,7 @@ _HEX_QY = -1.0 / 3.0
 _HEX_RY = 2.0 / 3.0      # r = (RY·y) / size
 
 
-def hexbin(px: DataFrame, value_col: str, size_m: float = 40.0,
-           key_cols: Tuple[str, ...] = ("doc_id",),
-           x_col: str = "x", y_col: str = "y") -> DataFrame:
+def hexbin(px: DataFrame, value_col: str, size_m: float = 40.0) -> DataFrame:
     """Hexagonal binning (pointy-top axial grid, circumradius
     ``size_m``) — the density/aggregation grid that avoids the
     square-cell orientation bias: planar (x, y) → fractional axial
@@ -3124,11 +3062,11 @@ def hexbin(px: DataFrame, value_col: str, size_m: float = 40.0,
     single shuffle at 10¹² points. √3-derived constants are Python
     literals embedded identically in engine and oracle.
     """
-    keys = list(key_cols)
+    keys = ["doc_id"]
     s = float(size_m)
-    qf = (F.lit(_HEX_QX) * F.col(x_col)
-          + F.lit(_HEX_QY) * F.col(y_col)) / F.lit(s)
-    rf = (F.lit(_HEX_RY) * F.col(y_col)) / F.lit(s)
+    qf = (F.lit(_HEX_QX) * F.col("x")
+          + F.lit(_HEX_QY) * F.col("y")) / F.lit(s)
+    rf = (F.lit(_HEX_RY) * F.col("y")) / F.lit(s)
     xf, zf = qf, rf
     yf = -qf - rf
     rx, ry, rz = F.round(xf, 0), F.round(yf, 0), F.round(zf, 0)
@@ -3193,8 +3131,7 @@ FROM hxc GROUP BY {keys}, hqf, hrf
 
 
 def tpi_landform(px: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
-                 r_small: int = 1, r_large: int = 3,
-                 value_col: str = "v") -> DataFrame:
+                 r_small: int = 1, r_large: int = 3) -> DataFrame:
     """Weiss two-scale TPI landform classification of a scalar surface
     per scene: TPI_r = z − mean of the (2r+1)² window (center
     included; a pure offset of the center-excluded form), standardized
@@ -3211,7 +3148,7 @@ def tpi_landform(px: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
     """
     keys = list(key_cols)
     base = px.select(*keys, "x", "y", "gsd",
-                     F.col(value_col).alias("_z"))
+                     F.col("v").alias("_z"))
     ns, nl = (2 * r_small + 1) ** 2, (2 * r_large + 1) ** 2
     fs = (focal_stats(base, "_z", radius=r_small, doc_col=keys[0])
           .filter(F.col("n_neigh") == ns)
@@ -3395,10 +3332,7 @@ FROM pss s LEFT JOIN psa USING ({keys})
 
 def change_detection(px: DataFrame,
                      key_cols: Tuple[str, ...] = ("aoi",),
-                     time_col: str = "t", value_col: str = "v",
-                     threshold: float = 0.05,
-                     x_col: str = "x", y_col: str = "y",
-                     gsd_col: str = "gsd") -> DataFrame:
+                     threshold: float = 0.05) -> DataFrame:
     """Per-cell first→last change detection over a scene time stack —
     the bitemporal raster-change classifier (gain / loss / stable by
     ``threshold`` on Δ = last − first). ``px`` is the long pixel frame
@@ -3417,11 +3351,11 @@ def change_detection(px: DataFrame,
     """
     keys = list(key_cols)
     thr = float(threshold)
-    ix = F.floor(F.col(x_col) / F.col(gsd_col)).cast("long")
-    iy = F.floor(F.col(y_col) / F.col(gsd_col)).cast("long")
+    ix = F.floor(F.col("x") / F.col("gsd")).cast("long")
+    iy = F.floor(F.col("y") / F.col("gsd")).cast("long")
     base = px.select(*keys, ix.alias("ix"), iy.alias("iy"),
-                     F.col(time_col).alias("_t"),
-                     F.col(value_col).cast("double").alias("_v"))
+                     F.col("t").alias("_t"),
+                     F.col("v").cast("double").alias("_v"))
     agg = (base.groupBy(*keys, "ix", "iy")
            .agg(F.count("*").cast("long").alias("n_obs"),
                 F.min(F.struct("_t", "_v")).alias("_f"),
@@ -3585,8 +3519,7 @@ FROM xcr WHERE rk = 1
 
 def sieve_filter(cells: DataFrame,
                  key_cols: Tuple[str, ...] = ("doc_id",),
-                 min_size: int = 4, max_iters: int = 64,
-                 connectivity: int = 4) -> DataFrame:
+                 min_size: int = 4) -> DataFrame:
     """Sieve filter (GDAL ``SieveFilter`` semantics, drop variant):
     remove mask patches smaller than ``min_size`` cells — the
     classification-cleanup step between a thresholded mask and any
@@ -3599,8 +3532,7 @@ def sieve_filter(cells: DataFrame,
     semi-join back. Output keeps labels so downstream patch operators
     (patch_stats) run without relabeling.
     """
-    lab = region_label(cells, key_cols=key_cols, max_iters=max_iters,
-                       connectivity=connectivity)
+    lab = region_label(cells, key_cols=key_cols)
     keys = list(key_cols)
     big = (lab.groupBy(*keys, "label")
            .agg(F.count("*").cast("long").alias("_sz"))
@@ -3641,14 +3573,12 @@ _HAVERSINE_FMT = (
 
 
 def haversine_join(points: DataFrame, stations: DataFrame,
-                   radius_km: float,
-                   station_id_col: str = "station_id",
-                   broadcast_stations: bool = True) -> DataFrame:
+                   radius_km: float) -> DataFrame:
     """Great-circle within-radius pair join over geographic
     coordinates — the lon/lat twin of :func:`distance_join` for data
     that never got projected (ground stations vs scene centroids,
     gazetteer matching). Points carry (lon, lat); stations carry
-    (``station_id_col``, slon, slat); output adds ``dist_km``
+    (``station_id``, slon, slat); output adds ``dist_km``
     (haversine, round 6).
 
     Candidate generation bands BOTH sides on latitude (band height =
@@ -3676,11 +3606,10 @@ def haversine_join(points: DataFrame, stations: DataFrame,
     bs = ddeg * 1.001
     band = F.floor(F.col("slat") / F.lit(bs)).cast("long")
     cand = (stations
-            .select(station_id_col, "slon", "slat",
+            .select("station_id", "slon", "slat",
                     F.explode(F.sequence(band - 1, band + 1))
                     .alias("latband")))
-    if broadcast_stations:
-        cand = F.broadcast(cand)
+    cand = F.broadcast(cand)
     pts = points.withColumn(
         "latband", F.floor(F.col("lat") / F.lit(bs)).cast("long"))
     # Longitude window: a within-radius point may sit up to ddeg poleward
@@ -3754,9 +3683,7 @@ def _dp_simplify(xs: np.ndarray, ys: np.ndarray, tol: float):
     return keep
 
 
-def simplify_rings(rings: DataFrame, tolerance: float,
-                   key_col: str = "doc_id",
-                   ring_col: str = "ring") -> DataFrame:
+def simplify_rings(rings: DataFrame, tolerance: float) -> DataFrame:
     """Douglas-Peucker simplification of polygon rings (closed vertex
     arrays of (x, y) structs) within ``tolerance`` — AOI geometries
     arriving at survey resolution carry orders of magnitude more
@@ -3803,15 +3730,14 @@ def simplify_rings(rings: DataFrame, tolerance: float,
         import pandas as _pd
         return _pd.Series(res)
 
-    return (rings.select(key_col, F.col(ring_col),
-                         F.size(ring_col).alias("n_before"))
-            .withColumn("simplified", _simp(F.col(ring_col)))
-            .select(key_col, "n_before",
+    return (rings.select("doc_id", F.col("ring"),
+                         F.size("ring").alias("n_before"))
+            .withColumn("simplified", _simp(F.col("ring")))
+            .select("doc_id", "n_before",
                     F.size("simplified").alias("n_after"), "simplified"))
 
 
-def convex_hull(points: DataFrame, key_col: str = "doc_id",
-                x_col: str = "x", y_col: str = "y") -> DataFrame:
+def convex_hull(points: DataFrame) -> DataFrame:
     """Per-group convex hull (Andrew's monotone chain) with shoelace
     area and perimeter — the AOI footprint summary of a pixel cloud
     (coverage sanity vs the declared polygon, containment debugging).
@@ -3862,11 +3788,11 @@ def convex_hull(points: DataFrame, key_col: str = "doc_id",
               "hull_area": round(area, 6) + 0.0,
               "hull_perimeter": round(per, 6) + 0.0}])
 
-    return (points.select(F.col(key_col).cast("string").alias("_hk"),
-                          F.col(x_col).cast("double").alias("_hx"),
-                          F.col(y_col).cast("double").alias("_hy"))
+    return (points.select(F.col("doc_id").cast("string").alias("_hk"),
+                          F.col("x").cast("double").alias("_hx"),
+                          F.col("y").cast("double").alias("_hy"))
             .groupBy("_hk").applyInPandas(lambda pdf: _hull(pdf), schema)
-            .withColumnRenamed("key", key_col))
+            .withColumnRenamed("key", "doc_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -3874,12 +3800,11 @@ def convex_hull(points: DataFrame, key_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 def kriging_fill(points: DataFrame, stations: DataFrame,
-                 value_col: str = "elevation", k: int = 8,
+                 k: int = 8,
                  radius: float = 3 * CELL_SIZE_M,
                  cell_m: float = CELL_SIZE_M,
                  nugget: float = 0.0, sill: float = 1.0,
-                 vrange: float = 500.0,
-                 point_key=("doc_id", "x", "y")) -> DataFrame:
+                 vrange: float = 500.0) -> DataFrame:
     """Ordinary-kriging interpolation at each point from its k nearest
     observed stations — the BLUE geostatistical upgrade to the IDW
     `knn_fill`: weights come from the exponential variogram
@@ -3899,7 +3824,7 @@ def kriging_fill(points: DataFrame, stations: DataFrame,
     property (nugget 0 → observed locations reproduce their values);
     the gate records rows-only.
     """
-    key_cols = list(point_key)
+    key_cols = ["doc_id", "x", "y"]
     pairs = distance_join(points, stations.select("station_id", "sx",
                                                   "sy"),
                           radius=radius, cell_m=cell_m)
@@ -3908,7 +3833,7 @@ def kriging_fill(points: DataFrame, stations: DataFrame,
     w = Window.partitionBy(*key_cols).orderBy(
         d2.asc(), F.col("station_id").asc())
     vals = F.broadcast(stations.select(
-        "station_id", F.col(value_col).alias("_kv")))
+        "station_id", F.col("elevation").alias("_kv")))
     top = (pairs.withColumn("_rk", F.row_number().over(w))
            .filter(F.col("_rk") <= int(k))
            .join(vals, "station_id"))
@@ -3969,9 +3894,7 @@ def kriging_fill(points: DataFrame, stations: DataFrame,
 # Polygon overlay: Sutherland-Hodgman clip + intersection area
 # ---------------------------------------------------------------------------
 
-def clip_polygons(subjects: DataFrame, clip_ring,
-                  key_col: str = "doc_id",
-                  ring_col: str = "ring") -> DataFrame:
+def clip_polygons(subjects: DataFrame, clip_ring) -> DataFrame:
     """Vector overlay: clip every subject polygon by ONE CONVEX clip
     window (Sutherland-Hodgman) and report the clipped ring, vertex
     count, and shoelace areas — the vector complement to the raster
@@ -4079,7 +4002,7 @@ def clip_polygons(subjects: DataFrame, clip_ring,
                 "clipped": [{"x": x, "y": y} for x, y in cl]})
         return pd.DataFrame(res)
 
-    return (subjects.select(key_col, F.col(ring_col))
-            .withColumn("_c", _kernel(F.col(ring_col)))
-            .select(key_col, "_c.n_in", "_c.area_in", "_c.n_out",
+    return (subjects.select("doc_id", F.col("ring"))
+            .withColumn("_c", _kernel(F.col("ring")))
+            .select("doc_id", "_c.n_in", "_c.area_in", "_c.n_out",
                     "_c.area_out", "_c.clipped"))

@@ -48,14 +48,13 @@ def _epoch(col: Column) -> Column:
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
               left_ts: str = "ts", right_ts: str = "ts",
               right_cols: Optional[Sequence[str]] = None,
-              prefix: str = "ref_",
               tolerance_seconds: Optional[float] = None) -> DataFrame:
     """Backward as-of join: every left row + the latest right row at or
     before its timestamp within the same ``on`` key group (NULLs if none).
 
     ``right_cols`` are the right-side payload columns to carry (default:
-    all non-key, non-ts columns), emitted as ``{prefix}{col}`` plus
-    ``{prefix}{right_ts}``. ``tolerance_seconds`` drops matches older
+    all non-key, non-ts columns), emitted as ``ref_{col}`` plus
+    ``ref_{right_ts}``. ``tolerance_seconds`` drops matches older
     than the given age (the match becomes NULL, like pandas merge_asof).
 
     Determinism requires (on, right_ts) to be unique on the right side —
@@ -91,17 +90,16 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
             "_c", F.when(age <= tolerance_seconds, F.col("_c")))
     return out.select(
         *left.columns,
-        F.col("_c._rts").alias(f"{prefix}{right_ts}"),
-        *[F.col(f"_c.{c}").alias(f"{prefix}{c}") for c in right_cols])
+        F.col("_c._rts").alias(f"ref_{right_ts}"),
+        *[F.col(f"_c.{c}").alias(f"ref_{c}") for c in right_cols])
 
 
 def sessionize(df: DataFrame, key: Sequence[str] = ("user_id",),
-               ts_col: str = "ts", gap_seconds: float = 1800.0,
-               session_col: str = "session_seq") -> DataFrame:
+               ts_col: str = "ts", gap_seconds: float = 1800.0) -> DataFrame:
     """Gap-based sessionization: within each ``key`` group, a new session
     starts at the first event and whenever the gap to the previous event
-    exceeds ``gap_seconds`` (strictly). Appends ``session_col`` — the
-    1-based session ordinal per key; ``concat(key, session_col)`` is a
+    exceeds ``gap_seconds`` (strictly). Appends ``session_seq`` — the
+    1-based session ordinal per key; ``concat(key, session_seq)`` is a
     globally unique session id.
 
     Shape: ONE shuffle on the key columns; the boundary flag (lag) and the
@@ -128,7 +126,7 @@ def sessionize(df: DataFrame, key: Sequence[str] = ("user_id",),
     run = Window.partitionBy(*key).orderBy(us).rowsBetween(
         Window.unboundedPreceding, 0)
     return (df.withColumn("_b", boundary)
-              .withColumn(session_col, F.sum("_b").over(run).cast("long"))
+              .withColumn("session_seq", F.sum("_b").over(run).cast("long"))
               .drop("_b"))
 
 
@@ -161,8 +159,7 @@ FROM b
 
 def time_grid_fill(obs: DataFrame, key: Sequence[str] = ("user_id",),
                    ts_col: str = "ts", step_seconds: float = 3600.0,
-                   right_cols: Optional[Sequence[str]] = None,
-                   prefix: str = "ref_") -> DataFrame:
+                   right_cols: Optional[Sequence[str]] = None) -> DataFrame:
     """Resample an irregular observation stream onto a regular time grid
     with last-observation-carried-forward (gap fill) — the batch analog of
     downsampling a sensor feed to fixed ticks.
@@ -178,8 +175,8 @@ def time_grid_fill(obs: DataFrame, key: Sequence[str] = ("user_id",),
     key shuffle. Grid cardinality is span/step per key — bounded and
     predictable, never |obs|^2.
 
-    Output: key columns, ``tick_ts``, and the carried ``{prefix}*``
-    payload columns (plus ``{prefix}{ts_col}``).
+    Output: key columns, ``tick_ts``, and the carried ``ref_*``
+    payload columns (plus ``ref_{ts_col}``).
     """
     key = list(key)
     step_us = int(round(float(step_seconds) * 1e6))
@@ -198,7 +195,7 @@ def time_grid_fill(obs: DataFrame, key: Sequence[str] = ("user_id",),
                          F.timestamp_micros(F.col("_tick_us"))
                           .alias("tick_ts")))
     return asof_join(grid, obs, on=key, left_ts="tick_ts", right_ts=ts_col,
-                     right_cols=right_cols, prefix=prefix)
+                     right_cols=right_cols)
 
 
 def time_grid_fill_sql(table: str, key: Sequence[str] = ("user_id",),
@@ -232,8 +229,7 @@ FROM grid g ASOF JOIN {table} o
 
 def interpolate_to_grid(obs: DataFrame, key: Sequence[str] = ("user_id",),
                         ts_col: str = "ts", value_col: str = "value",
-                        step_seconds: float = 3600.0,
-                        out_col: str = "interp_value") -> DataFrame:
+                        step_seconds: float = 3600.0) -> DataFrame:
     """Linear interpolation of an irregular observation stream onto a
     regular time grid — the companion of :func:`time_grid_fill` (which
     carries forward) for continuous signals: each grid tick inside the
@@ -279,7 +275,7 @@ def interpolate_to_grid(obs: DataFrame, key: Sequence[str] = ("user_id",),
          .otherwise(F.col("_v0") + (F.col("_v1") - F.col("_v0")) * frac)
     return ticks.select(
         *key, F.timestamp_micros(F.col("_t")).alias("tick_ts"),
-        v.alias(out_col))
+        v.alias("interp_value"))
 
 
 def interpolate_to_grid_sql(table: str, key: Sequence[str] = ("user_id",),
@@ -314,12 +310,9 @@ FROM ticks
 
 
 def range_join(left: DataFrame, right: DataFrame,
-               tolerance_seconds: float,
-               left_ts: str = "ts", right_ts: str = "ts",
-               extra_key: Optional[Sequence[str]] = None) -> DataFrame:
-    """All (left, right) pairs with ``|left_ts - right_ts| <=
-    tolerance_seconds`` — WITHOUT requiring an equi key (pass
-    ``extra_key`` to add one, shrinking bins further).
+               tolerance_seconds: float) -> DataFrame:
+    """All (left, right) pairs with ``|left.ts - right.ts| <=
+    tolerance_seconds`` — WITHOUT requiring an equi key.
 
     Bin width = tolerance: right rows key on ``floor(ts/w)``; left rows
     probe bins {b-1, b, b+1} (a fixed 3-element explode — a constant x3
@@ -331,27 +324,22 @@ def range_join(left: DataFrame, right: DataFrame,
     Left columns keep their names; right columns are prefixed ``r_``.
     """
     w = float(tolerance_seconds)
-    keys = list(extra_key or [])
-    lbin = F.floor(_epoch(F.col(left_ts)) / F.lit(w)).cast("long")
-    rbin = F.floor(_epoch(F.col(right_ts)) / F.lit(w)).cast("long")
+    lbin = F.floor(_epoch(F.col("ts")) / F.lit(w)).cast("long")
+    rbin = F.floor(_epoch(F.col("ts")) / F.lit(w)).cast("long")
 
     l_probe = left.select(
         "*", F.explode(F.array(lbin - 1, lbin, lbin + 1)).alias("_bin"))
     r_tag = right.select(
         *[F.col(c).alias(f"r_{c}") for c in right.columns],
-        rbin.alias("_bin"),
-        *[F.col(k).alias(f"_rk_{k}") for k in keys])
+        rbin.alias("_bin"))
 
-    cond = [l_probe["_bin"] == r_tag["_bin"]]
-    cond += [F.col(k) == F.col(f"_rk_{k}") for k in keys]
-    dt = _epoch(F.col(left_ts)) - _epoch(F.col(f"r_{right_ts}"))
-    return (l_probe.join(r_tag, cond)
+    dt = _epoch(F.col("ts")) - _epoch(F.col("r_ts"))
+    return (l_probe.join(r_tag, l_probe["_bin"] == r_tag["_bin"])
             .filter(F.abs(dt) <= w)
-            .drop("_bin", *[f"_rk_{k}" for k in keys]))
+            .drop("_bin"))
 
 
 def rolling_zscore(df: DataFrame, key: Sequence[str] = ("user_id",),
-                   ts_col: str = "ts", value_col: str = "value",
                    window: int = 24, min_periods: int = 8,
                    z_thresh: float = 3.0) -> DataFrame:
     """Trailing-window anomaly score: each observation's z-score against
@@ -370,10 +358,10 @@ def rolling_zscore(df: DataFrame, key: Sequence[str] = ("user_id",),
     emit NULL z and false flag.
     """
     key = list(key)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = (Window.partitionBy(*key).orderBy(us)
          .rowsBetween(-window, -1))
-    v = F.col(value_col)
+    v = F.col("value")
     n = F.count(v).over(w)
     m = F.avg(v).over(w)
     m2 = F.avg(v * v).over(w)
@@ -417,9 +405,7 @@ FROM zw
 
 
 def ewma(df: DataFrame, key: Sequence[str] = ("user_id",),
-         ts_col: str = "ts", value_col: str = "value",
-         alpha: float = 0.3, window: int = 12,
-         out_col: str = "ewma") -> DataFrame:
+         alpha: float = 0.3, window: int = 12) -> DataFrame:
     """Windowed exponentially-weighted moving average: per key,
     ``Σ_j (1−α)^j · v_{t−j} / Σ_j (1−α)^j`` over the last ``window``
     observations (inclusive of the current one), normalized over the
@@ -439,19 +425,19 @@ def ewma(df: DataFrame, key: Sequence[str] = ("user_id",),
     point use :func:`time_grid_fill` + a mapInPandas recurrence.
     """
     key = list(key)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy(*key).orderBy(us)
     decay = 1.0 - alpha
     num = None
     den = None
     for j in range(window):
         wj = F.lit(decay ** j)
-        vj = F.lag(F.col(value_col), j).over(w) if j else F.col(value_col)
+        vj = F.lag(F.col("value"), j).over(w) if j else F.col("value")
         t = F.when(vj.isNotNull(), wj * vj).otherwise(F.lit(0.0))
         d = F.when(vj.isNotNull(), wj).otherwise(F.lit(0.0))
         num = t if num is None else num + t
         den = d if den is None else den + d
-    return df.withColumn(out_col,
+    return df.withColumn("ewma",
                          F.when(den > 0, num / den))
 
 
@@ -482,9 +468,7 @@ WINDOW w AS (PARTITION BY {key_sql} ORDER BY epoch_us({ts_col}))
 """
 
 
-def funnel(events: DataFrame, steps: Sequence[str], key: str = "user_id",
-           type_col: str = "event_type",
-           time_col: str = "ts") -> DataFrame:
+def funnel(events: DataFrame, steps: Sequence[str]) -> DataFrame:
     """Ordered-funnel analysis: for each key, step i counts only if an
     event of type ``steps[i]`` occurs STRICTLY AFTER the key's earliest
     completion of step i-1 (first-touch semantics — the per-key
@@ -507,9 +491,9 @@ def funnel(events: DataFrame, steps: Sequence[str], key: str = "user_id",
     if len(steps) < 2:
         raise ValueError("funnel: need at least 2 steps")
     from pyspark.sql import Window
-    ev = (events.select(F.col(key).alias("k"),
-                        F.col(type_col).alias("et"),
-                        F.col(time_col).alias("t"))
+    ev = (events.select(F.col("user_id").alias("k"),
+                        F.col("event_type").alias("et"),
+                        F.col("ts").alias("t"))
           .filter(F.col("et").isin(list(steps))))
     # collect_list drops the NULLs the unmatched when() produces, so
     # a{i} is exactly the key's sorted times of step-type i
@@ -586,7 +570,6 @@ FROM steprows
 
 
 def cusum_alarms(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
-                 ts_col: str = "ts", value_col: str = "value",
                  k: float = 0.5, h: float = 4.0) -> DataFrame:
     """Two-sided standardized CUSUM drift detection per key (Page's
     sequential test): residuals standardize against the key's own
@@ -604,9 +587,9 @@ def cusum_alarms(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
     driver state.
     """
     keys = list(key_cols)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     base = df.select(*keys, us.alias("_us"),
-                     F.col(value_col).cast("double").alias("_v"))
+                     F.col("value").cast("double").alias("_v"))
     stats = (base.groupBy(*keys)
              .agg(F.count("_v").alias("_n"),
                   F.sum("_v").alias("_s"),
@@ -785,9 +768,7 @@ WINDOW sgw AS (PARTITION BY {keys} ORDER BY {time_col})
 """
 
 
-def transition_counts(events: DataFrame, key: str = "user_id",
-                      type_col: str = "event_type",
-                      time_col: str = "ts") -> DataFrame:
+def transition_counts(events: DataFrame, key: str = "user_id") -> DataFrame:
     """First-order Markov transition matrix of user behavior: per
     consecutive event pair within each key (time order), count
     ``from_type → to_type`` and row-normalize to transition
@@ -800,9 +781,9 @@ def transition_counts(events: DataFrame, key: str = "user_id",
     (ts, type) duplicates are interchangeable so the pair multiset is
     stable under any residual tie order.
     """
-    us = F.unix_micros(F.col(time_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     pairs = (events.select(F.col(key).alias("k"),
-                           F.col(type_col).alias("to_type"),
+                           F.col("event_type").alias("to_type"),
                            us.alias("_us"))
              .withColumn("from_type", F.lag("to_type").over(
                  Window.partitionBy("k").orderBy("_us", "to_type")))
@@ -838,8 +819,7 @@ FROM tc
 """
 
 
-def retention(events: DataFrame, key: str = "user_id",
-              time_col: str = "ts") -> DataFrame:
+def retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention matrix: users cohorted by the week of
     their first event; cell (cohort, offset) counts distinct users from
     that cohort active ``offset`` weeks later, with the rate vs cohort
@@ -852,8 +832,8 @@ def retention(events: DataFrame, key: str = "user_id",
     ``date_trunc('week')`` (Monday start in both engines), so the
     offset is an exact integer day-diff / 7.
     """
-    acts = (events.select(F.col(key).alias("k"),
-                          F.date_trunc("week", F.col(time_col)).alias("w"))
+    acts = (events.select(F.col("user_id").alias("k"),
+                          F.date_trunc("week", F.col("ts")).alias("w"))
             .distinct())
     cohort = acts.groupBy("k").agg(F.min("w").alias("cw"))
     cells = (acts.join(cohort, "k")
@@ -891,9 +871,7 @@ FROM rcells JOIN rsizes USING (cw)
 """
 
 
-def rollup_counts(events: DataFrame, time_col: str = "ts",
-                  dim_col: str = "event_type",
-                  value_col: str = "value") -> DataFrame:
+def rollup_counts(events: DataFrame) -> DataFrame:
     """Native ROLLUP over (day, dimension): per-cell count + value sum
     at every aggregation level — (day, dim), (day), and grand total —
     in ONE pass. Spark's Expand emits all grouping sets from each input
@@ -902,10 +880,10 @@ def rollup_counts(events: DataFrame, time_col: str = "ts",
     never one job per level. NULL grouping markers are normalized to
     'ALL' so the output is join/oracle-friendly without GROUPING()
     bitmask semantics."""
-    d = F.date_format(F.date_trunc("day", F.col(time_col)),
+    d = F.date_format(F.date_trunc("day", F.col("ts")),
                       "yyyy-MM-dd")
-    out = (events.select(d.alias("day"), F.col(dim_col).alias("dim"),
-                         F.col(value_col).alias("v"))
+    out = (events.select(d.alias("day"), F.col("event_type").alias("dim"),
+                         F.col("value").alias("v"))
            .rollup("day", "dim")
            .agg(F.count("*").alias("n"),
                 F.round(F.sum("v"), 6).alias("value_sum")))
@@ -929,9 +907,7 @@ GROUP BY ROLLUP (strftime(date_trunc('day', {time_col}), '%Y-%m-%d'),
 """
 
 
-def concurrency_daily(events: DataFrame, key: Sequence[str] = ("user_id",),
-                      ts_col: str = "ts",
-                      gap_seconds: float = 1800.0) -> DataFrame:
+def concurrency_daily(events: DataFrame) -> DataFrame:
     """Peak-load analysis: per day, how many sessions were active at
     once (closed-interval semantics — a session [s, e] counts at both
     endpoints, so single-event sessions count too) plus the day's
@@ -948,11 +924,10 @@ def concurrency_daily(events: DataFrame, key: Sequence[str] = ("user_id",),
     intervals to day boundaries, which is exactly the semantics a
     per-day report wants.
     """
-    s = sessionize(events, key=key, ts_col=ts_col,
-                   gap_seconds=gap_seconds)
-    iv = (s.groupBy(*key, "session_seq")
-          .agg(F.min(F.col(ts_col).cast("timestamp")).alias("ivs"),
-               F.max(F.col(ts_col).cast("timestamp")).alias("ive")))
+    s = sessionize(events)
+    iv = (s.groupBy("user_id", "session_seq")
+          .agg(F.min(F.col("ts").cast("timestamp")).alias("ivs"),
+               F.max(F.col("ts").cast("timestamp")).alias("ive")))
     spanned = iv.select(
         "ivs", "ive",
         F.explode(F.sequence(F.to_date("ivs"), F.to_date("ive")))
@@ -1069,8 +1044,7 @@ def _harmonic_exprs(period_days: float):
 
 
 def harmonic_fit(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-                 time_col: str = "date_str", value_col: str = "mean_v",
-                 period_days: float = 365.25) -> DataFrame:
+                 time_col: str = "date_str", value_col: str = "mean_v") -> DataFrame:
     """Pooled seasonal harmonic regression per key — the standard EO
     seasonality model (cf. HANTS / Landsat CCDC's harmonic terms): fit
     ``v ≈ a0 + a1·cos(ωt) + b1·sin(ωt)`` with ω = 2π/period over
@@ -1087,7 +1061,7 @@ def harmonic_fit(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     window, no second pass, no driver math: at 10^12 rows this is a
     single shuffle of ten doubles per key.
     """
-    w, feats, sums, det, a0, a1, b1, sse, sst = _harmonic_exprs(period_days)
+    w, feats, sums, det, a0, a1, b1, sse, sst = _harmonic_exprs(365.25)
     base = df.select(
         *key_cols,
         F.expr(f"CAST(dayofyear(CAST({time_col} AS DATE)) AS DOUBLE)")
@@ -1150,12 +1124,11 @@ FROM hfsol
 # ---------------------------------------------------------------------------
 
 def phenology(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-              time_col: str = "date_str", value_col: str = "mean_v",
-              frac: float = 0.5) -> DataFrame:
+              time_col: str = "date_str", value_col: str = "mean_v") -> DataFrame:
     """Threshold-method phenology metrics per key — start / peak / end
     of season from a (typically smoothed) vegetation-index series: the
     season is where the series sits at or above
-    ``vmin + frac·(vmax − vmin)`` (the classic 50%-amplitude rule);
+    ``vmin + 0.5·(vmax − vmin)`` (the classic 50%-amplitude rule);
     SOS/EOS are the first/last such dates, the peak date is the latest
     date attaining the maximum (deterministic argmax tie-break).
 
@@ -1169,7 +1142,7 @@ def phenology(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     stats = (df.groupBy(*key_cols)
              .agg(F.min(v).alias("_vmin"), F.max(v).alias("_vmax"),
                   F.count(v).alias("_n")))
-    thr = F.col("_vmin") + F.lit(float(frac)) * (F.col("_vmax")
+    thr = F.col("_vmin") + F.lit(0.5) * (F.col("_vmax")
                                                  - F.col("_vmin"))
     j = df.join(stats, list(key_cols)).withColumn("_thr", thr)
     t = F.col(time_col)
@@ -1353,12 +1326,10 @@ FROM mkj
 
 
 def harmonic_anomaly(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-                     time_col: str = "date_str", value_col: str = "mean_v",
-                     period_days: float = 365.25,
-                     threshold: float = 2.0) -> DataFrame:
+                     time_col: str = "date_str", value_col: str = "mean_v") -> DataFrame:
     """Seasonal-anomaly detection — score every observation against the
     key's own :func:`harmonic_fit` curve: residual, per-key residual
-    RMSE, and an ``is_anomaly`` flag at ``|resid| > threshold·rmse``
+    RMSE, and an ``is_anomaly`` flag at ``|resid| > 2·rmse``
     (drought / disturbance / sensor-glitch detection against the
     expected phenology, the CCDC change-detection core loop).
 
@@ -1370,7 +1341,7 @@ def harmonic_anomaly(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     materialization. Same shared-expression-string discipline as the
     fit itself — both engines parse identical formula text.
     """
-    w, feats, sums, det, a0, a1, b1, _, _ = _harmonic_exprs(period_days)
+    w, feats, sums, det, a0, a1, b1, _, _ = _harmonic_exprs(365.25)
     base = df.select(
         *key_cols, F.col(time_col).alias("t_str"),
         F.expr(f"CAST(dayofyear(CAST({time_col} AS DATE)) AS DOUBLE)")
@@ -1398,7 +1369,7 @@ def harmonic_anomaly(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
         F.expr("ROUND(pred, 6)").alias("pred"),
         F.expr("ROUND(resid, 6)").alias("resid"),
         F.expr("ROUND(rmse, 6)").alias("rmse"),
-        F.expr(f"CASE WHEN ABS(resid) > {threshold!r} * rmse"
+        F.expr("CASE WHEN ABS(resid) > 2.0 * rmse"
                " THEN 1 ELSE 0 END").cast("int").alias("is_anomaly"))
 
 
@@ -1505,8 +1476,7 @@ FROM acl GROUP BY {keys}
 
 
 def interarrival_stats(df: DataFrame,
-                       key_cols: Sequence[str] = ("user_id",),
-                       time_col: str = "ts") -> DataFrame:
+                       key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
     """Inter-arrival timing statistics per key — the behavioral
     burstiness profile (bot vs human cadence, sensor regularity,
     retry storms): per-key gaps between consecutive events, their
@@ -1518,7 +1488,7 @@ def interarrival_stats(df: DataFrame,
     hash agg at key cardinality. Keys with <2 events drop (no gaps);
     zero-mean guards yield NULL, never a divide error.
     """
-    base = df.select(*key_cols, _epoch(F.col(time_col)).alias("t"))
+    base = df.select(*key_cols, _epoch(F.col("ts")).alias("t"))
     w = Window.partitionBy(*key_cols).orderBy("t")
     g = (base.withColumn("gap", F.col("t") - F.lag("t", 1).over(w))
          .filter(F.col("gap").isNotNull()))
@@ -1567,8 +1537,7 @@ FROM iaa
 """
 
 
-def event_entropy(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
-                  type_col: str = "event_type") -> DataFrame:
+def event_entropy(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
     """Behavioral diversity per key: Shannon entropy of the event-type
     distribution (nats), the distinct-type count, and the top type's
     share — the bot/monoculture detector that pairs with
@@ -1579,7 +1548,7 @@ def event_entropy(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
     over per-type counts. Single-type keys get H = 0 exactly (p·ln p
     with p = 1), never a guard artifact.
     """
-    kt = (df.groupBy(*key_cols, type_col)
+    kt = (df.groupBy(*key_cols, "event_type")
           .agg(F.count("*").cast("double").alias("c")))
     tot = F.sum("c")
     p = F.col("c") / tot
@@ -1617,9 +1586,7 @@ _PETTITT_P = ("LEAST(1.0, 2.0 * EXP(-6.0 * k_stat * k_stat"
               " / (n * n * n + n * n)))")
 
 
-def pettitt(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
-            time_col: str = "ts", value_col: str = "value"
-            ) -> DataFrame:
+def pettitt(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
     """Pettitt's nonparametric change-point test per key — the standard
     homogeneity break detector for environmental series (did this
     sensor/field/user shift regime, and when?): locates the single most
@@ -1635,10 +1602,10 @@ def pettitt(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
     combined to one W row per observation), then one key window for the
     prefix sum and two key-cardinality aggs (K, then earliest argmax —
     |U| is an integer so the equality join is exact). Requires unique
-    ``time_col`` per key (true for event streams and daily composites).
+    ``ts`` per key (true for event streams and daily composites).
     """
-    base = df.select(*key_cols, _epoch(F.col(time_col)).alias("t"),
-                     F.col(value_col).cast("double").alias("v"))
+    base = df.select(*key_cols, _epoch(F.col("ts")).alias("t"),
+                     F.col("value").cast("double").alias("v"))
     base = base.localCheckpoint(eager=False)
     a = base.select(*key_cols, F.col("t").alias("ta"),
                     F.col("v").alias("va"))
@@ -1816,8 +1783,7 @@ FROM sdt LEFT JOIN sdc USING ({keys}, phase)
 
 
 def ccf(df: DataFrame, key_cols: Sequence[str] = ("k",),
-        time_col: str = "t", a_col: str = "va", b_col: str = "vb",
-        max_lag: int = 3) -> DataFrame:
+        time_col: str = "t", max_lag: int = 3) -> DataFrame:
     """Sample cross-correlation function between two aligned series per
     key at lags −L..L — the lead/lag detector (do purchases follow
     clicks, does soil moisture lag rainfall, and by how much?):
@@ -1830,8 +1796,8 @@ def ccf(df: DataFrame, key_cols: Sequence[str] = ("k",),
     exist drop out of each numerator by NULL propagation.
     """
     base = df.select(*key_cols, F.col(time_col).alias("t"),
-                     F.col(a_col).cast("double").alias("a"),
-                     F.col(b_col).cast("double").alias("b"))
+                     F.col("va").cast("double").alias("a"),
+                     F.col("vb").cast("double").alias("b"))
     mu = base.groupBy(*key_cols).agg(F.avg("a").alias("ma"),
                                      F.avg("b").alias("mb"))
     j = base.join(F.broadcast(mu), on=list(key_cols))
@@ -1899,9 +1865,7 @@ FROM ccl GROUP BY {keys}
 """
 
 
-def event_trigrams(events: DataFrame, key: str = "user_id",
-                   type_col: str = "event_type", ts_col: str = "ts",
-                   top_k: int = 10) -> DataFrame:
+def event_trigrams(events: DataFrame, top_k: int = 10) -> DataFrame:
     """Top event-type trigrams across all journeys — third-order path
     mining (which 3-step behavior sequences dominate: view>click>buy vs
     error>error>error retry storms). Complements
@@ -1913,12 +1877,12 @@ def event_trigrams(events: DataFrame, key: str = "user_id",
     and a top-k rank over that aggregated table only. Deterministic
     tie-break: count DESC then trigram ASC.
     """
-    w = Window.partitionBy(key).orderBy(ts_col)
+    w = Window.partitionBy("user_id").orderBy("ts")
     tri = (events
-           .withColumn("_t1", F.lag(type_col, 2).over(w))
-           .withColumn("_t2", F.lag(type_col, 1).over(w))
+           .withColumn("_t1", F.lag("event_type", 2).over(w))
+           .withColumn("_t2", F.lag("event_type", 1).over(w))
            .filter(F.col("_t1").isNotNull())
-           .select(F.concat_ws(">", "_t1", "_t2", type_col)
+           .select(F.concat_ws(">", "_t1", "_t2", "event_type")
                    .alias("trigram")))
     agg = tri.groupBy("trigram").agg(F.count("*").cast("long").alias("n"))
     # cut FIRST (TakeOrderedAndProject heap top-k — the trigram
@@ -1958,7 +1922,6 @@ ORDER BY rank
 
 def seasonal_mann_kendall(df: DataFrame,
                           key_cols: Sequence[str] = ("user_id",),
-                          time_col: str = "ts", value_col: str = "value",
                           season_expr: str = "dayofweek(CAST(ts AS DATE))"
                           ) -> DataFrame:
     """Hirsch-Slack seasonal Mann-Kendall trend test per key — the
@@ -1977,8 +1940,8 @@ def seasonal_mann_kendall(df: DataFrame,
     """
     base = df.select(*key_cols,
                      F.expr(season_expr).cast("int").alias("season"),
-                     _epoch(F.col(time_col)).alias("t"),
-                     F.col(value_col).cast("double").alias("v"))
+                     _epoch(F.col("ts")).alias("t"),
+                     F.col("value").cast("double").alias("v"))
     base = base.localCheckpoint(eager=False)
     keys_s = [*key_cols, "season"]
     a = base.select(*keys_s, F.col("t").alias("ta"),
@@ -2074,7 +2037,6 @@ FROM smv JOIN smp USING ({keys})
 
 
 def holt_smooth(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
-                ts_col: str = "ts", value_col: str = "value",
                 alpha: float = 0.3, beta: float = 0.1,
                 horizon: int = 7) -> DataFrame:
     """Holt double exponential smoothing per key — level + trend state
@@ -2093,9 +2055,9 @@ def holt_smooth(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
     keys = list(key_cols)
     a, bfac = float(alpha), float(beta)
     base = df.select(*keys,
-                     F.unix_micros(F.col(ts_col).cast("timestamp"))
+                     F.unix_micros(F.col("ts").cast("timestamp"))
                      .alias("_us"),
-                     F.col(value_col).cast("double").alias("_v"))
+                     F.col("value").cast("double").alias("_v"))
     arr = (base.select(*keys, F.struct(F.col("_us").alias("us"),
                                        F.col("_v").alias("v")).alias("_e"))
            .groupBy(*keys)
@@ -2180,7 +2142,6 @@ FROM hrec r JOIN hn n ON {jn2} AND r.i = n.n_obs
 
 
 def kaplan_meier(events: DataFrame, key: str = "user_id",
-                 time_col: str = "ts",
                  censor_horizon_days: int = 7) -> DataFrame:
     """Kaplan–Meier survival estimate over per-entity lifetimes
     (first event → last event, in whole days). Entities whose last
@@ -2199,10 +2160,10 @@ def kaplan_meier(events: DataFrame, key: str = "user_id",
     unpartitioned windows over that tiny table only. The global max
     timestamp is a broadcast scalar, not a collect.
     """
-    gmax = events.agg(F.max(F.to_date(time_col)).alias("_gmax"))
+    gmax = events.agg(F.max(F.to_date("ts")).alias("_gmax"))
     per = (events.groupBy(key)
-           .agg(F.min(F.to_date(time_col)).alias("_first"),
-                F.max(F.to_date(time_col)).alias("_last"))
+           .agg(F.min(F.to_date("ts")).alias("_first"),
+                F.max(F.to_date("ts")).alias("_last"))
            .crossJoin(F.broadcast(gmax))
            .select(F.datediff("_last", "_first").cast("long")
                    .alias("dur_days"),
@@ -2287,8 +2248,7 @@ FROM kms
 
 
 def runs_test(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
-              order_cols: Sequence[str] = ("ts", "event_id"),
-              value_col: str = "value") -> DataFrame:
+              order_cols: Sequence[str] = ("ts", "event_id")) -> DataFrame:
     """Wald–Wolfowitz runs test for randomness per key: the
     time-ordered sequence of above/below-median signs (values EQUAL to
     the median drop, the standard convention), the observed run count,
@@ -2303,7 +2263,7 @@ def runs_test(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
     """
     keys = list(key_cols)
     base = df.select(*keys, *order_cols,
-                     F.col(value_col).cast("double").alias("_v"))
+                     F.col("value").cast("double").alias("_v"))
     med = base.groupBy(*keys).agg(F.median("_v").alias("_med"))
     s = (base.join(F.broadcast(med), on=keys)
          .withColumn("_s", F.when(F.col("_v") > F.col("_med"), 1)
@@ -2390,7 +2350,6 @@ FROM rta
 
 
 def mad_anomaly(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
-                id_col: str = "event_id", value_col: str = "value",
                 threshold: float = 3.5) -> DataFrame:
     """Robust outlier detection via the median absolute deviation:
     rz = 0.6745·(x − median) / MAD (the modified z-score;
@@ -2405,8 +2364,8 @@ def mad_anomaly(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
     """
     keys = list(key_cols)
     thr = float(threshold)
-    base = df.select(*keys, id_col,
-                     F.col(value_col).cast("double").alias("_v"))
+    base = df.select(*keys, "event_id",
+                     F.col("value").cast("double").alias("_v"))
     med = base.groupBy(*keys).agg(F.median("_v").alias("_med"))
     dev = (base.join(F.broadcast(med), on=keys)
            .withColumn("_ad", F.abs(F.col("_v") - F.col("_med"))))
@@ -2416,7 +2375,7 @@ def mad_anomaly(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
     return (dev.join(F.broadcast(mad), on=keys)
             .withColumn("rz", F.round(rz, 6) + 0.0)
             .filter(F.abs("rz") > thr)
-            .select(*keys, id_col,
+            .select(*keys, "event_id",
                     (F.round("_v", 6) + 0.0).alias("value"), "rz"))
 
 
@@ -2447,9 +2406,7 @@ FROM maz WHERE ABS(rz) > {threshold!r}
 """
 
 
-def markov_entropy(events: DataFrame, key: str = "user_id",
-                   type_col: str = "event_type",
-                   time_col: str = "ts") -> DataFrame:
+def markov_entropy(events: DataFrame, key: str = "user_id") -> DataFrame:
     """Per-state entropy of the first-order behavior Markov chain:
     for each ``from_type``, H = −Σⱼ p·ln(p) over its outgoing
     transition distribution, plus the state's empirical weight
@@ -2461,8 +2418,7 @@ def markov_entropy(events: DataFrame, key: str = "user_id",
     type² hash agg); the entropy reduction then runs at type²
     cardinality — negligible at any input scale.
     """
-    tc = transition_counts(events, key=key, type_col=type_col,
-                           time_col=time_col)
+    tc = transition_counts(events, key=key)
     tot = Window.partitionBy("from_type")
     p = F.col("n") / F.sum("n").over(tot)
     per = (tc.select("from_type", "n", p.alias("_p"))
@@ -2516,7 +2472,6 @@ FROM meh
 def hurst_exponent(df: DataFrame,
                    key_cols: Sequence[str] = ("event_type",),
                    order_cols: Sequence[str] = ("ts", "event_id"),
-                   value_col: str = "value",
                    levels: Sequence[int] = (1, 2, 4, 8)) -> DataFrame:
     """Hurst exponent per key by the aggregated-variance method: for a
     self-similar series, Var(k-block means) ∝ k^(2H−2), so H = 1 + s/2
@@ -2536,7 +2491,7 @@ def hurst_exponent(df: DataFrame,
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).asc() for c in order_cols])
     base = df.select(*keys, *order_cols,
-                     F.col(value_col).cast("double").alias("_v"))
+                     F.col("value").cast("double").alias("_v"))
     idx = base.withColumn("_i", F.row_number().over(w) - 1)
     lv = F.explode(F.array(*[F.lit(int(k)) for k in levels])).alias("_k")
     blocks = (idx.select(*keys, "_i", "_v", lv)
@@ -2623,7 +2578,6 @@ FROM huf
 def peak_detect(df: DataFrame,
                 key_cols: Sequence[str] = ("event_type",),
                 order_cols: Sequence[str] = ("ts", "event_id"),
-                value_col: str = "value",
                 min_delta: float = 0.0) -> DataFrame:
     """Local-maximum peak detection per key: a row is a peak when its
     value STRICTLY exceeds both time-neighbors by ≥ ``min_delta``
@@ -2640,7 +2594,7 @@ def peak_detect(df: DataFrame,
     d = float(min_delta)
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).asc() for c in order_cols])
-    v = F.col(value_col).cast("double")
+    v = F.col("value").cast("double")
     base = (df.select(*keys, *order_cols, v.alias("_v"))
             .withColumn("_pk", F.row_number().over(w))
             .withColumn("_lg", F.lag("_v").over(w))
@@ -2690,7 +2644,6 @@ WHERE lg IS NOT NULL AND ld IS NOT NULL
 def forecast_backtest(df: DataFrame,
                       key_cols: Sequence[str] = ("event_type",),
                       order_cols: Sequence[str] = ("ts", "event_id"),
-                      value_col: str = "value",
                       season: int = 7) -> DataFrame:
     """One-step-ahead backtest of the two standard baseline
     forecasters — naive (ŷₜ = yₜ₋₁) and seasonal-naive (ŷₜ = yₜ₋ₛ) —
@@ -2706,7 +2659,7 @@ def forecast_backtest(df: DataFrame,
     keys = list(key_cols)
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).asc() for c in order_cols])
-    v = F.col(value_col).cast("double")
+    v = F.col("value").cast("double")
     base = (df.select(*keys, *order_cols, v.alias("_v"))
             .withColumn("_l1", F.lag("_v", 1).over(w))
             .withColumn("_ls", F.lag("_v", int(season)).over(w))
@@ -2962,9 +2915,7 @@ WINDOW w2 AS (PARTITION BY {key_col} ORDER BY {order})
 # ---------------------------------------------------------------------------
 
 def attribution(events: DataFrame, conversion_pred: str,
-                touch_pred: str, lookback_seconds: float,
-                key: str = "user_id", ts_col: str = "ts",
-                type_col: str = "event_type") -> DataFrame:
+                touch_pred: str, lookback_seconds: float) -> DataFrame:
     """Marketing-style conversion attribution over an event stream:
     for every conversion event, the LAST qualifying touch strictly
     before it (within ``lookback_seconds``) and the FIRST touch of the
@@ -2980,8 +2931,8 @@ def attribution(events: DataFrame, conversion_pred: str,
     whole point vs the naive conversions×touches range join.
     """
     e = events.select(
-        F.col(key).alias("k"), F.col(ts_col).alias("t"),
-        F.col(type_col).alias("ty"),
+        F.col("user_id").alias("k"), F.col("ts").alias("t"),
+        F.col("event_type").alias("ty"),
         F.expr(conversion_pred).alias("is_conv"),
         F.expr(touch_pred).alias("is_touch"))
     w = (Window.partitionBy("k")
@@ -3000,7 +2951,7 @@ def attribution(events: DataFrame, conversion_pred: str,
                                F.struct("t", "ty"))).over(wj)
     out = (marked.withColumn("_ft", first_touch)
            .filter(F.col("is_conv"))
-           .select(F.col("k").alias(key),
+           .select(F.col("k").alias("user_id"),
                    F.col("t").alias("conv_ts"),
                    F.col("ty").alias("conv_type"),
                    F.col("_lt.ty").alias("last_touch_type"),
@@ -3071,9 +3022,7 @@ FROM mj WHERE is_conv
 # Two-group log-rank test (companion to kaplan_meier)
 # ---------------------------------------------------------------------------
 
-def log_rank_test(events: DataFrame, group_expr: str,
-                  key: str = "user_id", time_col: str = "ts",
-                  censor_horizon_days: int = 7) -> DataFrame:
+def log_rank_test(events: DataFrame, group_expr: str) -> DataFrame:
     """Two-group log-rank test over the SAME per-entity lifetime +
     censoring construction as :func:`kaplan_meier` — "do the two arms'
     survival curves differ", the inferential companion to the KM
@@ -3087,11 +3036,11 @@ def log_rank_test(events: DataFrame, group_expr: str,
     suffix at-risk windows over that tiny table → one global fold.
     Identical algebra renders into the oracle.
     """
-    per = (events.groupBy(key)
-           .agg(F.min(time_col).alias("_first"),
-                F.max(time_col).alias("_last"),
-                F.expr(f"min_by({group_expr}, {time_col})").alias("_g")))
-    gmax = events.agg(F.max(time_col).alias("_gmax"))
+    per = (events.groupBy("user_id")
+           .agg(F.min("ts").alias("_first"),
+                F.max("ts").alias("_last"),
+                F.expr(f"min_by({group_expr}, ts)").alias("_g")))
+    gmax = events.agg(F.max("ts").alias("_gmax"))
     per = (per.crossJoin(F.broadcast(gmax))
            .select(
                F.col("_g").cast("int").alias("g"),
@@ -3102,7 +3051,7 @@ def log_rank_test(events: DataFrame, group_expr: str,
                # ending exactly `horizon` days before the observation
                # end is CENSORED in both operators)
                (F.datediff(F.col("_gmax"), F.col("_last"))
-                > int(censor_horizon_days)).alias("died")))
+                > 7).alias("died")))
     hist = (per.groupBy("dur", "g")
             .agg(F.sum(F.when(F.col("died"), 1).otherwise(0)).alias("d"),
                  F.count("*").alias("m")))

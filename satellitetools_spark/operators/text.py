@@ -28,7 +28,7 @@ LANG_MARKERS = {
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "on"]
 
 
-def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Raise map-side parallelism for CPU-heavy per-document expression
     chains when the source yields fewer partitions than cores.
 
@@ -60,7 +60,7 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
         n_files = 0
     if n_files >= par:
         return df
-    return df.repartition(factor * par)
+    return df.repartition(par)
 
 
 def _word_count(text: Column, word: str) -> Column:
@@ -73,9 +73,9 @@ def _word_count_sql(text: str, word: str) -> str:
     return f"(len(str_split(' ' || {text} || ' ', ' {word} ')) - 1)"
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Whitespace token count, BPE-ish token count, char count, avg len."""
-    t = F.col(text_col)
+    t = F.col("text")
     # \S+ extraction, not trim+split: Spark trim() strips only 0x20 (a
     # tab/newline-only doc would count 2 tokens via split's empty edges)
     ws_tokens = F.size(F.regexp_extract_all(t, F.lit("\\S+"), 0))
@@ -127,10 +127,10 @@ def quality_exprs(t: Column) -> dict:
     }
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality: length, punctuation ratio, stopword ratio, and a
     composite score in [0, 1]."""
-    ex = quality_exprs(F.col(text_col))
+    ex = quality_exprs(F.col("text"))
     return docs.select("doc_id", *[c.alias(n) for n, c in ex.items()])
 
 
@@ -153,8 +153,6 @@ FROM {table}
 
 
 def quality_quantiles(docs: DataFrame, group_col: str = "lang",
-                      text_col: str = "text",
-                      probs=(0.25, 0.5, 0.75),
                       accuracy: int = None) -> DataFrame:
     """Per-stratum calibration statistics of the composite quality score:
     count, mean, and exact interpolated quantiles (the numbers that pick a
@@ -167,7 +165,7 @@ def quality_quantiles(docs: DataFrame, group_col: str = "lang",
     sketch (constant state per group), mirroring the timeseries operator's
     exact/approx split.
     """
-    ex = quality_exprs(F.col(text_col))
+    ex = quality_exprs(F.col("text"))
     scored = docs.select(F.col(group_col).alias("grp"),
                          ex["quality"].alias("quality"))
     if accuracy is None:
@@ -177,7 +175,8 @@ def quality_quantiles(docs: DataFrame, group_col: str = "lang",
             f"percentile_approx(quality, {p!r}, {accuracy})")
     aggs = [F.count("*").alias("n_docs"),
             F.round(F.avg("quality"), 6).alias("mean_quality")]
-    aggs += [F.round(qcol(p), 6).alias(f"q{int(p * 100)}") for p in probs]
+    aggs += [F.round(qcol(p), 6).alias(f"q{int(p * 100)}")
+             for p in (0.25, 0.5, 0.75)]
     return scored.groupBy("grp").agg(*aggs)
 
 
@@ -230,10 +229,10 @@ def lang_exprs(scores: Column) -> dict:
     return {"lang_pred": pred, "lang_score": best}
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word language heuristic; argmax with fixed tie order."""
     base = docs.select(
-        "doc_id", lang_scores(F.lower(F.col(text_col))).alias("_sc"))
+        "doc_id", lang_scores(F.lower(F.col("text"))).alias("_sc"))
     ex = lang_exprs(F.col("_sc"))
     return base.select("doc_id", *[c.alias(n) for n, c in ex.items()])
 
@@ -268,8 +267,7 @@ _WB = 131          # polynomial base
 _WM = 1_000_000_007  # modulus; (M*B + M) < 2^63 so the fold never overflows
 
 
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
-                        k: int = WINNOW_K, w: int = WINNOW_W) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Document fingerprints via winnowing over a token rolling hash.
 
     Pure built-in expressions (one codegen'd projection + explode): tokens
@@ -277,10 +275,11 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     polynomial combine per position, and each w-window keeps its minimum —
     the standard local-minima sampling that makes fingerprints robust to
     insertions/reordering, unlike the global `fingerprint` md5. Documents
-    shorter than k+w-1 tokens emit no rows. Output: (doc_id, fp) pairs,
-    distinct per document.
+    shorter than k+w-1 tokens emit no rows (k = ``WINNOW_K``,
+    w = ``WINNOW_W``). Output: (doc_id, fp) pairs, distinct per document.
     """
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    k, w = WINNOW_K, WINNOW_W
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     # per-token char fold: h = (h*B + ascii(c)) % M
     th = F.transform(
@@ -347,8 +346,7 @@ WHERE len(hs) >= {w}
 """
 
 
-def doc_frequency(docs: DataFrame, text_col: str = "text",
-                  min_df: int = 2) -> DataFrame:
+def doc_frequency(docs: DataFrame, min_df: int = 2) -> DataFrame:
     """Corpus document-frequency table: (token, df, idf).
 
     The corpus-statistics primitive behind stopword discovery, IDF
@@ -358,7 +356,7 @@ def doc_frequency(docs: DataFrame, text_col: str = "text",
     in via a broadcast one-row cross join, no driver action. Smooth IDF:
     ln((N+1)/(df+1)) + 1.
     """
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     per_doc = docs.select("doc_id", F.explode(F.array_distinct(toks))
                           .alias("token"))
@@ -388,8 +386,7 @@ FROM df WHERE df >= {min_df}
 """
 
 
-def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text",
-               min_df: int = 2) -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 5, min_df: int = 2) -> DataFrame:
     """Top-k characteristic terms per document by tf-idf.
 
     Term counts per doc (explode → hash-agg), broadcast-joined to the
@@ -406,7 +403,7 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text",
     in from a column-pruned count(*) (no token columns read).
     """
     from pyspark.sql import Window
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     tf = (docs.select("doc_id", F.explode(toks).alias("token"))
           .groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
@@ -460,11 +457,11 @@ SELECT doc_id, token, weight, rank FROM ranked WHERE rank <= {k}
 """
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Normalization + md5 content fingerprint (exact-dedup key)."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), "\\s+", " "))
+    norm = F.lower(F.regexp_replace(F.col("text"), "\\s+", " "))
     return docs.select("doc_id", F.md5(norm).alias("fingerprint"),
-                       F.length(F.col(text_col)).alias("n_chars"))
+                       F.length(F.col("text")).alias("n_chars"))
 
 
 def fingerprint_sql(table: str = "documents", text_col: str = "text") -> str:
@@ -533,8 +530,7 @@ def _ngrams(toks: Column, n: int) -> Column:
         " ", *[F.element_at(toks, i + k + 1) for k in range(n)]))
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     keep: tuple = ()) -> DataFrame:
+def repetition_stats(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     """Per-document repetition filters: duplicate-line fraction,
     duplicate-line character fraction, and the token fraction covered by
     the most frequent word 2-gram / 3-gram.
@@ -558,7 +554,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     the same scan instead of joining back).
     """
     keep = list(keep)
-    t = F.col(text_col)
+    t = F.col("text")
     # project the token array as its OWN column first — building grams over
     # the regexp_extract_all subexpression would re-tokenize the full text
     # for every array element (the O(len²) trap documented at
@@ -678,12 +674,12 @@ PII_PATTERNS = (
 )
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Scrub emails / IPv4 addresses / long digit runs, reporting per-kind
     match counts. Pure regexp_replace/regexp_extract_all codegen — no
     Python, no shuffle; at 100 TB this is a map-only pass that fuses into
     whatever scan precedes it."""
-    t = F.col(text_col)
+    t = F.col("text")
     counts = [F.size(F.regexp_extract_all(t, F.lit(pat), 0))
               .alias(f"n_{name}") for name, pat, _ in PII_PATTERNS]
     red = t
@@ -707,7 +703,7 @@ FROM {table}
 """
 
 
-def profile(df: DataFrame, columns=None, exact: bool = True) -> DataFrame:
+def profile(df: DataFrame, exact: bool = True) -> DataFrame:
     """One-pass table profiler: per column, row/non-null/distinct counts,
     min/max, and (numerics) the mean — the data-quality summary sheet an
     ingest pipeline emits per partition drop.
@@ -727,7 +723,7 @@ def profile(df: DataFrame, columns=None, exact: bool = True) -> DataFrame:
     strings bytewise by default).
     """
     from pyspark.sql.types import NumericType
-    cols = list(columns or df.columns)
+    cols = df.columns
     types = dict(df.dtypes)
     numeric = {f.name for f in df.schema.fields
                if isinstance(f.dataType, NumericType)}
@@ -776,8 +772,7 @@ FROM {table}""")
     return "\nUNION ALL\n".join(parts)
 
 
-def char_ngram_lm_scores(docs: DataFrame, text_col: str = "text",
-                         n: int = 3, k: float = 1.0,
+def char_ngram_lm_scores(docs: DataFrame, n: int = 3, k: float = 1.0,
                          vocab: float = 96.0) -> DataFrame:
     """Char-n-gram language-model quality score (the CCNet/KenLM-style
     filter, self-trained): fit add-k-smoothed conditional counts
@@ -803,7 +798,7 @@ def char_ngram_lm_scores(docs: DataFrame, text_col: str = "text",
     scorer would. Docs shorter than ``n`` chars emit NULL score and
     ``n_ngrams = 0``.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     grams_expr = F.when(
         F.length(t) >= n,
         F.transform(F.sequence(F.lit(1), F.length(t) - (n - 1)),
@@ -863,9 +858,7 @@ FROM {table} d LEFT JOIN per_doc USING (doc_id)
 """
 
 
-def bm25_topk(docs: DataFrame, query_terms: Sequence[str], k: int = 10,
-              k1: float = 1.2, b: float = 0.75,
-              text_col: str = "text") -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: Sequence[str], k: int = 10) -> DataFrame:
     """Okapi BM25 retrieval: the top-k documents for a bag-of-terms
     query — the standard lexical ranking function (and the usual sparse
     half of hybrid dense+sparse retrieval next to the embedding ANN
@@ -873,17 +866,17 @@ def bm25_topk(docs: DataFrame, query_terms: Sequence[str], k: int = 10,
 
     Per query term: Robertson idf ``ln(1 + (N − df + 0.5)/(df + 0.5))``
     from the corpus; per (doc, term): saturated tf
-    ``tf·(k1+1) / (tf + k1·(1 − b + b·|d|/avgdl))``. One tokenize pass
-    feeds BOTH the per-doc term counts (filtered to the query's terms —
-    a broadcast literal `isin`, so the shuffle carries only matching
-    pairs) and the per-doc lengths; df for the query terms comes from
+    ``tf·(k1+1) / (tf + k1·(1 − b + b·|d|/avgdl))``, k1 = 1.2, b = 0.75.
+    One tokenize pass feeds BOTH the per-doc term counts (filtered to the
+    query's terms — a broadcast literal `isin`, so the shuffle carries
+    only matching pairs) and the per-doc lengths; df for the query terms comes from
     the same filtered aggregate, N/avgdl ride in as a broadcast one-row
     table. Ranking is a global top-k over scored docs —
     TakeOrderedAndProject, no full sort. Documents matching no query
     term score 0 and are not returned.
     """
     terms = sorted(set(query_terms))
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     base = docs.select("doc_id", toks.alias("_toks"))
     dl = base.select("doc_id", F.size("_toks").alias("dl"))
@@ -898,6 +891,7 @@ def bm25_topk(docs: DataFrame, query_terms: Sequence[str], k: int = 10,
                 .crossJoin(F.broadcast(stats)))
     idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
+    k1, b = 1.2, 0.75
     sat = (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
     per_term = scored.withColumn("_s", idf * sat)
@@ -948,8 +942,7 @@ FROM scored ORDER BY bm25 DESC, doc_id ASC LIMIT {k}
 """
 
 
-def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50,
-                text_col: str = "text") -> DataFrame:
+def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     """Top-k adjacent-token bigrams by pointwise mutual information —
     the phrase-mining primitive (word2phrase-style collocation
     detection) for tokenizer/vocab construction over a training corpus.
@@ -965,7 +958,7 @@ def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50,
     at any corpus size. Final top-k ranks on ROUND(pmi, 6) with a
     (w1, w2) tie-break so the cut is engine-portable.
     """
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     n1 = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.zip_with(F.slice(toks, 1, n1), F.slice(toks, 2, n1),
@@ -1039,13 +1032,12 @@ ORDER BY rank LIMIT {k}
 """
 
 
-def chunk_lines(docs: DataFrame, words_per_line: int = 10,
-                text_col: str = "text") -> DataFrame:
+def chunk_lines(docs: DataFrame, words_per_line: int = 10) -> DataFrame:
     """Deterministic re-chunking of documents into fixed ``words_per_line``
     token lines ``(doc_id, pos, line)`` — the unit stream for
     :func:`line_dedup` on corpora without natural line structure. One
     projection + one explode; no shuffle."""
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     n_chunks = F.ceil(F.size(ws) / F.lit(float(words_per_line))).cast("int")
     return (docs
             .select("doc_id", ws.alias("ws"),
@@ -1124,8 +1116,7 @@ FROM lflag GROUP BY doc_id
 """
 
 
-def quality_percentiles(docs: DataFrame, group_col: str = "lang",
-                        text_col: str = "text") -> DataFrame:
+def quality_percentiles(docs: DataFrame) -> DataFrame:
     """Per-document quality percentile WITHIN its group (language/
     source): `percent_rank` over the composite quality score with a
     doc_id tie-break removed — ties share a rank, as calibration
@@ -1141,12 +1132,12 @@ def quality_percentiles(docs: DataFrame, group_col: str = "lang",
     calibration-grade output where rank ties must be exact.
     """
     from pyspark.sql import Window
-    ex = quality_exprs(F.col(text_col))
-    scored = docs.select("doc_id", F.col(group_col).alias("grp"),
+    ex = quality_exprs(F.col("text"))
+    scored = docs.select("doc_id", F.col("lang").alias("grp"),
                          ex["quality"].alias("quality"))
     w = Window.partitionBy("grp").orderBy(F.col("quality").asc())
     return (scored
-            .select("doc_id", F.col("grp").alias(group_col), "quality",
+            .select("doc_id", F.col("grp").alias("lang"), "quality",
                     F.round(F.percent_rank().over(w), 6)
                     .alias("quality_pctile")))
 
@@ -1172,8 +1163,7 @@ def _del_at(t, i):
                     t.substr(i + 1, F.length(t) - i))
 
 
-def fuzzy_token_pairs(docs: DataFrame, max_dist: int = 2,
-                      text_col: str = "text") -> DataFrame:
+def fuzzy_token_pairs(docs: DataFrame, max_dist: int = 2) -> DataFrame:
     """Typo/variant pair mining: all DISTINCT-token pairs within
     Levenshtein distance ``max_dist`` (≤ 2) — the blocking step of
     record linkage and spelling normalization, without a cross join.
@@ -1192,7 +1182,7 @@ def fuzzy_token_pairs(docs: DataFrame, max_dist: int = 2,
     if max_dist not in (1, 2):
         raise ValueError("fuzzy_token_pairs: max_dist must be 1 or 2")
     toks = (docs.select(F.explode(F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0))
+                F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
             .alias("t")).distinct())
     t = F.col("t")
     d1 = F.transform(F.sequence(F.lit(1), F.length(t)),
@@ -1234,7 +1224,7 @@ WHERE levenshtein(a.t, b.t) <= {max_dist}
 """
 
 
-def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-document character-distribution entropy (bits) — the CCNet-
     style gibberish/boilerplate signal: natural text sits in a
     band (~3.5-4.5 bits for English), base64 blobs and repeated
@@ -1246,7 +1236,7 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     the second agg is doc-cardinality. Empty docs yield entropy 0.
     """
     chars = (docs.select("doc_id",
-                         F.explode(F.split(F.col(text_col), "")).alias("c"))
+                         F.explode(F.split(F.col("text"), "")).alias("c"))
              .filter(F.col("c") != ""))
     counts = chars.groupBy("doc_id", "c").agg(F.count("*").alias("n"))
     tot = counts.groupBy("doc_id").agg(F.sum("n").alias("len"))
@@ -1288,8 +1278,7 @@ FROM {table} d LEFT JOIN eent ON eent.doc_id = d.doc_id
 """
 
 
-def bpe_merges(docs: DataFrame, n_merges: int = 5,
-               text_col: str = "text") -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = 5) -> DataFrame:
     """Byte-pair-encoding merge training — the real tokenizer-training
     loop (Sennrich et al.) as unrolled relational algebra: start from
     per-token character sequences weighted by token frequency; each
@@ -1311,7 +1300,7 @@ def bpe_merges(docs: DataFrame, n_merges: int = 5,
     equals p1's raw form unless genuinely re-mergeable.
     """
     toks = (docs.select(F.explode(F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0))
+                F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
                 .alias("token"))
             .groupBy("token").agg(F.count("*").alias("freq")))
     seq = toks.select("freq", F.split("token", "").alias("seq"))
@@ -1362,8 +1351,7 @@ def _bpe_unroll(seq: DataFrame, n_merges: int):
     return merges, seq
 
 
-def bpe_encode(docs: DataFrame, n_merges: int = 8,
-               text_col: str = "text") -> DataFrame:
+def bpe_encode(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Tokenizer APPLICATION: train ``n_merges`` BPE merges on the corpus
     (the :func:`bpe_merges` loop) and encode every document with them, in
     one lazy plan. Returns per document ``(doc_id, n_tokens, n_symbols,
@@ -1377,7 +1365,7 @@ def bpe_encode(docs: DataFrame, n_merges: int = 8,
     token counts, and one doc-cardinality agg folds the totals — the
     corpus is never re-tokenized per merge.
     """
-    toks_arr = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks_arr = F.regexp_extract_all(F.lower(F.col("text")),
                                     F.lit("[a-z0-9]+"), 0)
     per_doc = (docs.select("doc_id", F.explode(toks_arr).alias("token"))
                .groupBy("doc_id", "token")
@@ -1496,8 +1484,7 @@ LEFT JOIN qagg a USING (doc_id)""")
 # Document chunking (RAG / context-window preparation)
 # ---------------------------------------------------------------------------
 
-def chunk_documents(docs: DataFrame, text_col: str = "text",
-                    window: int = 64, overlap: int = 16) -> DataFrame:
+def chunk_documents(docs: DataFrame, window: int = 64, overlap: int = 16) -> DataFrame:
     """Split every document into overlapping token windows — the RAG /
     embedding-prep chunker (and the packing front-end for long-document
     training): whitespace tokens, ``window`` tokens per chunk, stride
@@ -1514,7 +1501,7 @@ def chunk_documents(docs: DataFrame, text_col: str = "text",
     if overlap >= window:
         raise ValueError("chunk_documents: overlap must be < window")
     stride = window - overlap
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)),
                         F.lit(stride))
@@ -1556,25 +1543,24 @@ FROM cs
 """
 
 
-def zipf_fit(docs: DataFrame, group_col: str = "lang",
-             text_col: str = "text", top_n: int = 200) -> DataFrame:
+def zipf_fit(docs: DataFrame) -> DataFrame:
     """Zipf rank-frequency fit per group — the corpus-health check that
     catches template spam, OCR noise, and synthetic text (natural
     language sits near slope −1 on log rank vs log freq; boilerplate
     flattens it, noise steepens it): OLS of ``ln freq`` on ``ln rank``
-    over the top ``top_n`` types, with slope, intercept, and R².
+    over the top 200 types, with slope, intercept, and R².
 
     Shape: one tokenize+count hash agg at (group × vocab) cardinality,
     ONE group window for the deterministic (freq DESC, token ASC) rank
-    truncated at ``top_n`` — the sort shuffles the aggregated VOCAB
+    truncated at rank 200 — the sort shuffles the aggregated VOCAB
     table, never the corpus — then a group-cardinality OLS agg in
     moment form (identical expression tree both engines).
     """
-    toks = (docs.select(group_col,
-                        F.explode(F.split(F.col(text_col), " "))
+    toks = (docs.select("lang",
+                        F.explode(F.split(F.col("text"), " "))
                         .alias("tok"))
             .filter(F.col("tok") != ""))
-    freq = toks.groupBy(group_col, "tok").agg(
+    freq = toks.groupBy("lang", "tok").agg(
         F.count("*").cast("double").alias("f"))
     # per-group (freq DESC, token ASC) rank via the grouped two-level
     # scan — a per-group row_number window would sort each group's
@@ -1583,14 +1569,14 @@ def zipf_fit(docs: DataFrame, group_col: str = "lang",
     from satellitetools_spark.operators.cumsum import \
         grouped_prefix_sums
     ranked = (grouped_prefix_sums(
-                  freq, [group_col],
+                  freq, ["lang"],
                   [F.col("f").desc(), F.col("tok").asc()], [],
                   with_index=True)
-              .filter(F.col("_idx") <= top_n)
-              .select(group_col,
+              .filter(F.col("_idx") <= 200)
+              .select("lang",
                       F.log(F.col("_idx").cast("double")).alias("x"),
                       F.log("f").alias("y")))
-    agg = ranked.groupBy(group_col).agg(
+    agg = ranked.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_types"),
         F.avg("x").alias("mx"), F.avg("y").alias("my"),
         F.avg(F.col("x") * F.col("y")).alias("mxy"),
@@ -1600,7 +1586,7 @@ def zipf_fit(docs: DataFrame, group_col: str = "lang",
     vx = F.col("mxx") - F.col("mx") ** 2
     vy = F.col("myy") - F.col("my") ** 2
     return agg.select(
-        group_col, "n_types",
+        "lang", "n_types",
         F.expr("ROUND(" + "(mxy - mx * my) / NULLIF(mxx - mx * mx, 0)"
                + ", 6) + 0.0").alias("zipf_slope"),
         F.expr("ROUND(my - (mxy - mx * my) / NULLIF(mxx - mx * mx, 0)"
@@ -1651,7 +1637,7 @@ FROM zfa
 """
 
 
-def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def readability(docs: DataFrame) -> DataFrame:
     """Flesch-reading-ease heuristic per document — the classic
     206.835 − 1.015·(words/sentences) − 84.6·(syllables/words) with
     fully relational proxies: words = whitespace tokens, sentences =
@@ -1664,7 +1650,7 @@ def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Shape: pure map-only codegen (three regexp counters + arithmetic),
     zero shuffles, zero Python — the per-row cost IS the regexp scans.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.size(F.split(F.trim(t), r"\s+")).cast("long")
     sents = F.greatest(
         F.lit(1).cast("long"),
@@ -1708,8 +1694,7 @@ FROM {table}
 """
 
 
-def lexical_diversity(docs: DataFrame, text_col: str = "text"
-                      ) -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Vocabulary-richness profile per document: token count, type
     (distinct-token) count, type–token ratio, and the hapax fraction
     (share of types occurring exactly once) — the cheap lexical
@@ -1722,7 +1707,7 @@ def lexical_diversity(docs: DataFrame, text_col: str = "text"
     """
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(text_col), r"\s+")).alias("_t"))
+        F.explode(F.split(F.trim("text"), r"\s+")).alias("_t"))
     per_tok = (tok.groupBy("doc_id", "_t")
                .agg(F.count("*").cast("long").alias("_c")))
     per_doc = (per_tok.groupBy("doc_id")
@@ -1765,8 +1750,7 @@ FROM ldd
 """
 
 
-def term_dispersion(docs: DataFrame, text_col: str = "text",
-                    min_df: int = 5, top_k: int = 50) -> DataFrame:
+def term_dispersion(docs: DataFrame, min_df: int = 5, top_k: int = 50) -> DataFrame:
     """Term burstiness: the variance-to-mean ratio (index of
     dispersion) of each term's per-document count, over documents that
     contain it ≥ 0 times (all docs in the corpus). VMR ≈ 1 = Poisson
@@ -1783,7 +1767,7 @@ def term_dispersion(docs: DataFrame, text_col: str = "text",
     n_docs = docs.agg(F.countDistinct("doc_id").alias("_nd"))
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(text_col), r"\s+")).alias("term"))
+        F.explode(F.split(F.trim("text"), r"\s+")).alias("term"))
     per = (tok.groupBy("term", "doc_id")
            .agg(F.count("*").cast("long").alias("_c")))
     mom = (per.groupBy("term")
@@ -1921,14 +1905,12 @@ FROM vra
 # Multinomial naive Bayes (train + score, one lazy plan)
 # ---------------------------------------------------------------------------
 
-def naive_bayes_predict(docs: DataFrame, label_col: str = "lang",
-                        text_col: str = "text",
-                        alpha: float = 1.0) -> DataFrame:
+def naive_bayes_predict(docs: DataFrame, label_col: str = "lang") -> DataFrame:
     """Multinomial naive-Bayes classification of every document, with
     the model TRAINED on the same corpus in the same lazy plan — the
     classic weak-labeler / label-noise audit (where does the stated
     `lang` disagree with the token evidence?). Laplace smoothing
-    ``alpha``; returns (doc_id, actual, pred, log_score).
+    (``alpha = 1``); returns (doc_id, actual, pred, log_score).
 
     Unseen (doc, label) token mass is handled exactly without a dense
     doc×label×token join: for each label the smoothing floor
@@ -1942,7 +1924,7 @@ def naive_bayes_predict(docs: DataFrame, label_col: str = "lang",
     on the ROUNDED score keeps the argmax deterministic across
     engines and partitionings (sub-1e-6 gaps are fp-sum noise).
     """
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
+    toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     base = docs.select("doc_id", F.col(label_col).alias("actual"),
                        toks.alias("_toks"))
@@ -1968,15 +1950,15 @@ def naive_bayes_predict(docs: DataFrame, label_col: str = "lang",
     model = (cls.join(nlab, "label")
              .crossJoin(F.broadcast(vocab))
              .select("label", "token",
-                     (F.log((F.col("ct") + F.lit(float(alpha)))
+                     (F.log((F.col("ct") + F.lit(1.0))
                             / (F.col("n_label")
-                               + F.lit(float(alpha)) * F.col("v")))
+                               + F.lit(1.0) * F.col("v")))
                       ).alias("llh")))
     floor = (nlab.crossJoin(F.broadcast(vocab))
              .select("label",
-                     F.log(F.lit(float(alpha))
+                     F.log(F.lit(1.0)
                            / (F.col("n_label")
-                              + F.lit(float(alpha)) * F.col("v")))
+                              + F.lit(1.0) * F.col("v")))
                      .alias("floor")))
     prior = (ndocs.crossJoin(F.broadcast(total))
              .select("label",
@@ -2090,9 +2072,7 @@ RAKE_STOPWORDS = (
     "such only own same s t just don now").split()
 
 
-def rake_keywords(docs: DataFrame, text_col: str = "text",
-                  top_k: int = 25,
-                  stopwords: Sequence[str] = tuple(RAKE_STOPWORDS),
+def rake_keywords(docs: DataFrame, top_k: int = 25,
                   min_len: int = 2) -> DataFrame:
     """RAKE (Rapid Automatic Keyword Extraction) over the corpus:
     candidate phrases are maximal stopword-free token runs; each word
@@ -2111,13 +2091,12 @@ def rake_keywords(docs: DataFrame, text_col: str = "text",
     table. Every step is identical relational algebra in the DuckDB
     oracle.
     """
-    sw = ", ".join(f"'{w}'" for w in stopwords)
     toks = (docs.select(
         "doc_id",
         F.posexplode(F.expr(
-            f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
+            "filter(split(lower(text), '[^a-z0-9]+'), "
             "x -> x != '')")).alias("pos", "token")))
-    nonstop = toks.filter(~F.col("token").isin(list(stopwords)))
+    nonstop = toks.filter(~F.col("token").isin(list(RAKE_STOPWORDS)))
     w = Window.partitionBy("doc_id").orderBy("pos")
     runs = nonstop.withColumn(
         "run", F.col("pos") - F.row_number().over(w))

@@ -41,40 +41,35 @@ PACK_SHARDS = 8
 
 
 def train_data_pipeline(docs: DataFrame,
-                        min_quality: float = MIN_QUALITY,
-                        max_dup_line_frac: float = MAX_DUP_LINE_FRAC,
-                        max_top2gram_frac: float = MAX_TOP2GRAM_FRAC,
-                        allowed_langs: Sequence[str] = ALLOWED_LANGS,
                         seq_len: int = PACK_SEQ_LEN,
-                        n_shards: int = PACK_SHARDS,
-                        text_col: str = "text") -> DataFrame:
+                        n_shards: int = PACK_SHARDS) -> DataFrame:
     """Filter → dedup → pack, one scan + two exchanges.
 
     Output: (doc_id, shard, n_tokens, start_offset, pack_id, pack_pos)
     for every surviving document — the layout a sequence writer needs.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     # stage 0: spread a single-row-group hot table across cores, so the
     # per-document scoring below runs above a round-robin exchange
     # instead of on the scan's (possibly single) task
     docs = TX.spread_scan(docs)
     # stage 1: repetition folds, carrying the text through
-    rep = TX.repetition_stats(docs, text_col=text_col, keep=(text_col,))
+    rep = TX.repetition_stats(docs, keep=("text",))
     # stage 2: fuse quality / language / fingerprint into one projection;
     # the language score array is projected first so each marker count is
     # evaluated once (see text.lang_scores); the threshold test is
     # projected as `_keep`, not filtered on (see the module docstring)
     scored = rep.select(
-        "doc_id", text_col, "dup_line_frac", "top2gram_frac",
+        "doc_id", "text", "dup_line_frac", "top2gram_frac",
         TX.quality_exprs(t)["quality"].alias("quality"),
         TX.lang_scores(F.lower(t)).alias("_sc"),
         F.md5(F.lower(F.regexp_replace(t, "\\s+", " "))).alias("_fp"),
     ).withColumn("lang_pred", TX.lang_exprs(F.col("_sc"))["lang_pred"])
     scored = scored.withColumn("_keep", (
-        (F.col("quality") >= min_quality)
-        & (F.col("dup_line_frac") <= max_dup_line_frac)
-        & (F.col("top2gram_frac") <= max_top2gram_frac)
-        & F.col("lang_pred").isin(*allowed_langs)))
+        (F.col("quality") >= MIN_QUALITY)
+        & (F.col("dup_line_frac") <= MAX_DUP_LINE_FRAC)
+        & (F.col("top2gram_frac") <= MAX_TOP2GRAM_FRAC)
+        & F.col("lang_pred").isin(*ALLOWED_LANGS)))
     # stage 3: exact-dedup keeper — min kept doc_id per fingerprint
     # (exchange 1); Catalyst does not push a predicate on non-partition
     # columns through a Window, so the keep test stays above it
@@ -82,10 +77,9 @@ def train_data_pipeline(docs: DataFrame,
     keeper = F.min(F.when(F.col("_keep"), F.col("doc_id"))).over(w)
     surv = (scored.withColumn("_keeper", keeper)
             .filter(F.col("_keep") & (F.col("doc_id") == F.col("_keeper")))
-            .select("doc_id", text_col))
+            .select("doc_id", "text"))
     # stage 4: pack survivors (exchange 2)
-    return SAMP.pack_sequences(surv, seq_len=seq_len, n_shards=n_shards,
-                               text_col=text_col)
+    return SAMP.pack_sequences(surv, seq_len=seq_len, n_shards=n_shards)
 
 
 def train_data_pipeline_sql(table: str = "documents",

@@ -61,16 +61,15 @@ def merge_stats(state: DataFrame, delta: DataFrame,
         F.max("mx").alias("mx"))
 
 
-def finalize_stats(state: DataFrame, keys: Sequence[str],
-                   prefix: str = "") -> DataFrame:
+def finalize_stats(state: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Read-time finalization: derive mean/std from the mergeable state
     (population variance, cancellation-clamped)."""
     mean = F.col("s") / F.col("n")
     var = F.greatest(F.col("ss") / F.col("n") - mean * mean, F.lit(0.0))
     return state.select(
         *keys,
-        F.col("n").alias(f"{prefix}n"),
-        mean.alias(f"{prefix}mean"),
-        F.sqrt(var).alias(f"{prefix}std"),
-        F.col("mn").alias(f"{prefix}min"),
-        F.col("mx").alias(f"{prefix}max"))
+        "n",
+        mean.alias("mean"),
+        F.sqrt(var).alias("std"),
+        F.col("mn").alias("min"),
+        F.col("mx").alias("max"))

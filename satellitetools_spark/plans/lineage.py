@@ -34,13 +34,12 @@ from pyspark.sql.utils import AnalysisException
 
 
 def write_with_lineage(pixels: DataFrame, out_dir: str, lineage_dir: str,
-                       run_id: str | None = None,
                        attempted: DataFrame | None = None) -> str:
     """Append ``pixels`` to parquet (partitioned by ``run_id``) and record
     per-document lineage.
 
     Lineage columns: run_id, doc_id, n_rows, file (physical attribution),
-    finished_at. Returns the run_id.
+    finished_at. Returns the run_id, a fresh 12-hex-digit id.
 
     ``attempted`` (a ``doc_id`` DataFrame) is the set of documents this run
     covered. Docs that legitimately emit zero rows (e.g. every scene failed
@@ -51,7 +50,7 @@ def write_with_lineage(pixels: DataFrame, out_dir: str, lineage_dir: str,
     because the parquet job committer publishes files atomically at job
     commit (no partial output is visible to readers).
     """
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     spark = pixels.sparkSession
 
     (pixels.withColumn("run_id", F.lit(run_id))

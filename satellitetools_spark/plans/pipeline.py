@@ -19,7 +19,7 @@ Plan shape (2 scans, 2 Python passes, document-cardinality shuffles only):
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Tuple
+from typing import Iterable, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,7 +40,6 @@ def get_s2_qi_and_data(
     docs: DataFrame,
     bands: Optional[Iterable[str]] = None,
     qi_threshold: float = 0.02,
-    qi_filter: Optional[List[str]] = None,
     vi_vars: Optional[Iterable[str]] = None,
     snap_vars: Optional[Iterable[str]] = None,
 ) -> Tuple[DataFrame, DataFrame]:
@@ -75,7 +74,7 @@ def get_s2_qi_and_data(
     # the phase-2 scan + decode stay one pipelined stage. (At 10^12-doc
     # scale drop the hint per job-partition sizing and AQE picks the
     # strategy — the plan is otherwise identical.)
-    survivors = select_survivors(qi, qi_threshold, qi_filter)
+    survivors = select_survivors(qi, qi_threshold)
     docs_f = docs.join(F.broadcast(survivors.select("doc_id")),
                        "doc_id", "left_semi")
     pixels = decode_documents(docs_f, bands, vi_vars=vi_vars,
@@ -86,7 +85,6 @@ def get_s2_qi_and_data(
 def flagship_timeseries(
     docs: DataFrame,
     variables: Iterable[str] = ("ndvi", "lai"),
-    qi_threshold: float = 0.02,
     median_accuracy: int | None = None,
 ) -> DataFrame:
     """The repo's core query: 'cloud-filtered per-date biophysical/VI
@@ -113,7 +111,7 @@ def flagship_timeseries(
         need.update(SNAP_BIO_BANDS)
     bands = [b for b in S2_BANDS_10_20 if b in need] or None
     _qi, pixels = get_s2_qi_and_data(
-        docs, bands=bands, qi_threshold=qi_threshold, vi_vars=vi_vars,
+        docs, bands=bands, vi_vars=vi_vars,
         snap_vars=snap_vars)
     ts = dataset_to_timeseries(
         pixels, variables, add_uncertainty=True,

@@ -16,10 +16,9 @@ Spark-first shape:
   costs tens of ms per document (each column expression re-locates and
   re-parses the span text), which at 10^12 documents would dwarf the decode
   itself. Shuffle volume scales with chunk-ref count, not pixel count.
-- Point-in-polygon is accelerated with the engine's planar cell index:
-  the AOI's cell cover (full/partial) is computed once per AOI and memoized
-  per executor; pixels in fully-covered cells skip ray casting, only
-  boundary-cell pixels are refined (vectorized NumPy).
+- Point-in-polygon is one vectorized even-odd ray cast of the AOI's whole
+  target grid (``geometry.points_in_rings``), memoized per (AOI, zone,
+  gsd) in each Python worker, so it never runs per document.
 """
 
 from __future__ import annotations
@@ -57,7 +56,7 @@ def _parse_doc_texts(row: dict) -> dict:
     flat dict — one stdlib-json parse per span, executed inside the Python
     pass. Returns the same keys the old JVM dimension projection produced.
     """
-    meta, aoi = None, None
+    meta, aoi, aoi_text = None, None, None
     for t in row["texts"].split(REF_SEP):
         if not t:
             continue
@@ -66,11 +65,12 @@ def _parse_doc_texts(row: dict) -> dict:
         if ty == "scene_meta":
             meta = d
         elif ty == "aoi":
-            aoi = d
+            aoi, aoi_text = d, t
     out = {
         "doc_id": row["doc_id"],
         "aoi": aoi["name"],
-        "aoi_geometry": json.dumps(aoi["geometry"]),
+        # the raw span text is the _aoi_grid memo key: one text per AOI
+        "aoi_text": aoi_text,
         "utm_zone": int(aoi["utm_zone"]),
         "target_gsd": float(aoi["target_gsd"]),
         "qi_scale": float(aoi.get("qi_evaluation_scale", 20.0)),
@@ -112,34 +112,16 @@ def pixel_schema(bands: List[str]) -> T.StructType:
     return T.StructType(fields)
 
 
-def _sorted_member(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
-    """Vectorized membership of ``values`` in a sorted int64 array."""
-    if len(sorted_arr) == 0:
-        return np.zeros(len(values), dtype=bool)
-    idx = np.searchsorted(sorted_arr, values)
-    idx = np.minimum(idx, len(sorted_arr) - 1)
-    return sorted_arr[idx] == values
-
-
-# executor-local LRU memo: (AOI geometry, zone, gsd) → target grid + mask
+# executor-local LRU memo: (AOI GeoJSON or AOI record text, zone, gsd) →
+# target grid + inside mask
 @functools.lru_cache(maxsize=256)
-def _aoi_grid(aoi_geometry: str, zone: int, gsd: float):
-    rings4326 = G.rings_from_geojson(aoi_geometry)
-    rings_utm = G.project_rings_to_utm(rings4326, zone)
-    bbox = G.rings_bounds(rings_utm)
-    txs, tys = R.target_grid(bbox, gsd)
-    cover = G.polygon_cell_cover(rings_utm, CELL_SIZE_M)
+def _aoi_grid(aoi_json: str, zone: int, gsd: float):
+    rings_utm = G.project_rings_to_utm(G.rings_from_geojson(aoi_json), zone)
+    txs, tys = R.target_grid(G.rings_bounds(rings_utm), gsd)
     x2, y2 = np.meshgrid(txs, tys)
     px, py = x2.ravel(), y2.ravel()
     cells = G.cell_id(px, py, CELL_SIZE_M)
-    # cell-index classification: full-cover cells are inside without
-    # refinement; partial (boundary) cells get vectorized ray casting
-    is_full = _sorted_member(cells, cover["full"])
-    is_part = _sorted_member(cells, cover["partial"])
-    inside = is_full.copy()
-    refine = is_part & ~is_full
-    if refine.any():
-        inside[refine] = G.points_in_rings(px[refine], py[refine], rings_utm)
+    inside = G.points_in_rings(px, py, rings_utm)
     return txs, tys, px, py, cells, inside, int(inside.sum())
 
 
@@ -178,7 +160,7 @@ def _decode_one(raw: dict, bands: List[str],
     row["media_refs"] = raw["media_refs"]
     gsd = float(row["target_gsd"])
     txs, tys, px, py, cells, inside, aoi_px = _aoi_grid(
-        row["aoi_geometry"], int(row["utm_zone"]), gsd)
+        row["aoi_text"], int(row["utm_zone"]), gsd)
 
     by_band: dict = {}
     for ref in row["media_refs"].split(REF_SEP):

@@ -1,7 +1,7 @@
 """End-to-end decode + spatial-join parity vs the NumPy brute-force oracle.
 
 The engine path (span explode → chunk decode → window assembly → resample →
-cell-cover-accelerated PIP) must reproduce the oracle table (analytic window
+ray-cast PIP) must reproduce the oracle table (analytic window
 → brute-force ray cast) exactly: same rows, same coordinates, same values.
 """
 
@@ -198,4 +198,30 @@ def test_aoi_grid_memo_evicts_lru_not_everything():
         _aoi_grid(*hot)
         assert _aoi_grid.cache_info().hits == hits + 1
         assert _aoi_grid.cache_info().currsize <= 256
+    _aoi_grid.cache_clear()
+
+
+def test_aoi_grid_mask_matches_winding_oracle():
+    """The decode's AOI inside-mask equals the independent winding-number
+    point-in-polygon on every AOI grid the data uses: each AOI of every
+    benchmark input variant (which includes the gate data's reference
+    AOIs), at its target GSD and at the QI scale. No Spark."""
+    from perfbench import inputs as PI
+    from satellitetools_spark import geometry as G
+    from satellitetools_spark.groundtruth import points_in_rings_winding
+    from satellitetools_spark.sources.decode import _aoi_grid
+
+    grids = set()
+    for v in range(PI.N_VARIANTS):
+        for rings, _tiles, zone, gsd in PI.geo_registry(v).values():
+            geojson = G.rings_to_geojson(rings)
+            grids |= {(geojson, zone, gsd), (geojson, zone, 20.0)}
+    assert len(grids) == 393
+    _aoi_grid.cache_clear()
+    for geojson, zone, gsd in sorted(grids):
+        _txs, _tys, px, py, _cells, inside, n_in = _aoi_grid(geojson, zone, gsd)
+        rings_utm = G.project_rings_to_utm(G.rings_from_geojson(geojson), zone)
+        np.testing.assert_array_equal(
+            inside, points_in_rings_winding(px, py, rings_utm))
+        assert n_in == int(inside.sum()) > 0
     _aoi_grid.cache_clear()
