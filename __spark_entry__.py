@@ -232,7 +232,7 @@ def q_geo_knn_fill(spark, sf_dir):
     rows only."""
     docs = _geo_docs(spark, sf_dir)
     px = decode_documents(docs, bands=["B4"])
-    filled = knn_fill(px, ["B4"], k=4)
+    filled = knn_fill(px, ["B4"])
     return (filled.filter(F.col("B4_filled") & ~F.isnan("B4")
                           & F.col("B4").isNotNull())
             .select("doc_id", "x", "y", F.round("B4", 9).alias("b4")))
@@ -242,7 +242,7 @@ def q_geo_hot_tile_counts(spark, sf_dir):
     """Axis-B skew path: two-stage salted partial+final count per tileid
     (the explicit map-side-combine form for hot keys)."""
     docs = _geo_docs(spark, sf_dir)
-    return SK.salted_group_count(doc_dimension(docs), key="tileid",
+    return SK.salted_group_count(doc_dimension(docs),
                                  n_salt=16).withColumnRenamed("count", "n")
 
 
@@ -258,7 +258,7 @@ def q_media_features(spark, sf_dir):
     explode are all value-verified, not just row-counted."""
     docs = _geo_docs(spark, sf_dir)
     media = explode_spans(docs).filter(F.col("kind") == "media")
-    feats = M.media_features(media, dim=MEDIA_DIM, fake=True)
+    feats = M.media_features(media, dim=MEDIA_DIM)
     return feats.select(
         "doc_id", "media_ref",
         F.posexplode("feature").alias("dim_idx", "v"),
@@ -387,14 +387,13 @@ def q_docs_exact_dedup(spark, sf_dir):
 
 
 def q_docs_jaccard_pairs(spark, sf_dir):
-    return D.jaccard_pairs(_documents(spark, sf_dir), n=JACCARD_N, threshold=JACCARD_T)
+    return D.jaccard_pairs(_documents(spark, sf_dir), threshold=JACCARD_T)
 
 
 def q_docs_minhash_pairs(spark, sf_dir):
     """MinHash+LSH with exact verification — scale path; same oracle as the
     brute-force pair join (recall ≥ 1-3e-8 at J≥0.9 with 16 bands x 4)."""
-    return D.minhash_lsh_pairs(_documents(spark, sf_dir), num_hashes=64,
-                               bands=16, n=JACCARD_N, threshold=JACCARD_T)
+    return D.minhash_lsh_pairs(_documents(spark, sf_dir))
 
 
 def q_docs_pagerank(spark, sf_dir):
@@ -403,8 +402,7 @@ def q_docs_pagerank(spark, sf_dir):
     most-connected canonical copy inside each dup cluster. Oracle: the
     identical iterations as CTE layers over the exact-Jaccard pair
     set."""
-    pairs = D.minhash_lsh_pairs(_documents(spark, sf_dir), num_hashes=64,
-                                bands=16, n=JACCARD_N, threshold=JACCARD_T)
+    pairs = D.minhash_lsh_pairs(_documents(spark, sf_dir))
     return GR.pagerank(pairs, iters=3)
 
 
@@ -413,8 +411,7 @@ def q_docs_dup_components(spark, sf_dir):
     components (iterative min-label propagation, one shuffle per round,
     rounds = cluster diameter). Oracle: recursive-CTE transitive closure
     over the same (exact-Jaccard) pair set."""
-    pairs = D.minhash_lsh_pairs(_documents(spark, sf_dir), num_hashes=64,
-                                bands=16, n=JACCARD_N, threshold=JACCARD_T)
+    pairs = D.minhash_lsh_pairs(_documents(spark, sf_dir))
     return D.connected_components(pairs)
 
 
@@ -424,8 +421,7 @@ def q_docs_dup_keeper(spark, sf_dir):
     MinHash components + the quality operator. Oracle: identical
     ranked window over the exact-Jaccard closure."""
     docs = _documents(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs, num_hashes=64, bands=16,
-                                n=JACCARD_N, threshold=JACCARD_T)
+    pairs = D.minhash_lsh_pairs(docs)
     comp = D.connected_components(pairs)
     return D.dup_keeper(comp, TX.quality_score(docs))
 
@@ -446,7 +442,7 @@ def q_geo_knn_join(spark, sf_dir):
         .alias("sx"),
         ((F.floor(F.col("cell") / F.lit(2 ** 32)) + 0.5) * CELL_SIZE_M)
         .alias("sy"))
-    out = SP.knn_join(px, stations, k=3, radius=3 * CELL_SIZE_M)
+    out = SP.knn_join(px, stations, radius=3 * CELL_SIZE_M)
     return out.select("doc_id", "x", "y", "station_id", "dist",
                       "knn_rank", "truncated")
 
@@ -459,8 +455,7 @@ def q_geo_scl_pivot(spark, sf_dir):
     d = ensure_geodata(tag)
     px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
           .filter("inside").select("doc_id", "SCL"))
-    return CHK.pivot_counts(px, "SCL", values=list(range(12)),
-                            keys=("doc_id",), prefix="scl_")
+    return CHK.pivot_counts(px, "SCL", values=list(range(12)), prefix="scl_")
 
 
 def q_docs_bpe_merges(spark, sf_dir):
@@ -487,7 +482,7 @@ def q_geo_scl_coarse_mode(spark, sf_dir):
     d = ensure_geodata(tag)
     px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
           .filter("inside").select("x", "y", "SCL"))
-    return SP.categorical_mode_grid(px, value_col="SCL", size_m=40.0)
+    return SP.categorical_mode_grid(px, size_m=40.0)
 
 
 def q_events_skew_report(spark, sf_dir):
@@ -517,7 +512,7 @@ def q_docs_simhash_pairs(spark, sf_dir):
     distance (pigeonhole), so the result is exact and fully oracle-checked
     (md5 bit-majority kernel reproduced in DuckDB); also verified in
     pytest against a local reimplementation."""
-    return D.simhash_near_pairs(_documents(spark, sf_dir), max_hamming=3)
+    return D.simhash_near_pairs(_documents(spark, sf_dir))
 
 
 def q_docs_lang_id(spark, sf_dir):
@@ -585,7 +580,7 @@ def q_docs_quality_quantiles(spark, sf_dir):
     """Per-language calibration stats of the composite quality score
     (count / mean / exact interpolated quartiles) — the numbers that set a
     per-stratum quality threshold; one hash agg with map-side partials."""
-    return TX.quality_quantiles(_documents(spark, sf_dir), group_col="lang")
+    return TX.quality_quantiles(_documents(spark, sf_dir))
 
 
 def q_docs_repetition(spark, sf_dir):
@@ -615,7 +610,7 @@ def q_docs_decontaminate(spark, sf_dir):
     ~10%% of the corpus) — broadcast gram semi-join + per-doc rollup."""
     docs = _documents(spark, sf_dir)
     is_bench = SAMP.portable_hash(F.col("doc_id")) % 10 == 0
-    return D.decontaminate(docs.filter(~is_bench), docs.filter(is_bench), n=5)
+    return D.decontaminate(docs.filter(~is_bench), docs.filter(is_bench))
 
 
 def q_docs_train_pipeline(spark, sf_dir):
@@ -670,8 +665,7 @@ def q_emb_pq_topk(spark, sf_dir):
     stays in pytest with production defaults)."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     return SIM.pq_topk(
-        emb, QUERY_VEC_IDS, k=10,
-        seed_order=SAMP.portable_hash(F.col("vec_id")))
+        emb, QUERY_VEC_IDS, seed_order=SAMP.portable_hash(F.col("vec_id")))
 
 
 BM25_QUERY = ["hash", "join", "shuffle", "vector"]
@@ -692,8 +686,7 @@ def q_docs_triangles(spark, sf_dir):
     (degree-oriented enumeration — wedges fan out from low-degree
     apexes only, so hub skew never quadratics). Oracle: identical
     enumeration over the exact-Jaccard pair set."""
-    pairs = D.minhash_lsh_pairs(_documents(spark, sf_dir), num_hashes=64,
-                                bands=16, n=JACCARD_N, threshold=JACCARD_T)
+    pairs = D.minhash_lsh_pairs(_documents(spark, sf_dir))
     return GR.triangle_count(pairs)
 
 
@@ -709,8 +702,7 @@ def q_docs_kmv_by_lang(spark, sf_dir):
     """Per-language KMV vocabulary sketches (k=64) with exact counts
     alongside — the mergeable per-group form (state = groups × k
     longs). Oracle: bit-identical ranked-window sketch."""
-    return SKETCH.kmv_distinct_by(_documents(spark, sf_dir),
-                                  group_col="lang", k=64)
+    return SKETCH.kmv_distinct_by(_documents(spark, sf_dir))
 
 
 def q_emb_dup_clusters(spark, sf_dir):
@@ -729,7 +721,7 @@ def q_docs_pmi_bigrams(spark, sf_dir):
     """Top-50 adjacent-token bigrams by PMI (word2phrase-style
     collocation mining); min_count=5, ranked on round(pmi,6) with a
     word tie-break so the cut is engine-portable."""
-    return TX.pmi_bigrams(_documents(spark, sf_dir), min_count=5, k=50)
+    return TX.pmi_bigrams(_documents(spark, sf_dir), k=50)
 
 
 def q_docs_line_dedup(spark, sf_dir):
@@ -739,8 +731,8 @@ def q_docs_line_dedup(spark, sf_dir):
     the shuffle carries digests, not text. Oracle: identical re-chunk,
     count, drop, and ordered reassembly."""
     docs = _documents(spark, sf_dir)
-    lines = TX.chunk_lines(TX.spread_scan(docs), words_per_line=10)
-    return TX.line_dedup(lines, max_occurrences=1)
+    lines = TX.chunk_lines(TX.spread_scan(docs))
+    return TX.line_dedup(lines)
 
 
 def q_docs_snapshot_diff(spark, sf_dir):
@@ -760,8 +752,7 @@ def q_docs_snapshot_diff(spark, sf_dir):
              .select((F.col("doc_id") + 1000000).alias("doc_id"),
                      "lang", "n_chars"))
     new = mutated.unionByName(added)
-    out = CHK.snapshot_diff(docs, new, key="doc_id",
-                            compare_cols=["lang", "n_chars"])
+    out = CHK.snapshot_diff(docs, new, compare_cols=["lang", "n_chars"])
     # the operator API keeps changed_cols as array<string>; the gate
     # flattens it to a csv string because the driver's canonicalizer
     # (pandas sort_values) cannot hash list cells
@@ -826,7 +817,7 @@ def q_docs_lm_score(spark, sf_dir):
     two broadcast model tables. Oracle: identical counts/smoothing in
     DuckDB."""
     docs = _documents(spark, sf_dir).select("doc_id", "text")
-    out = TX.char_ngram_lm_scores(TX.spread_scan(docs), n=3)
+    out = TX.char_ngram_lm_scores(TX.spread_scan(docs))
     return out.select("doc_id", "n_ngrams",
                       F.round("avg_logp", 6).alias("avg_logp"),
                       F.round("ppl", 6).alias("ppl"))
@@ -839,7 +830,7 @@ def q_emb_pca_cov(spark, sf_dir):
     not relational algebra — their input is, and is value-checked here;
     the projection itself is pytest-checked against local NumPy."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return SIM.covariance_entries(emb, digits=6)
+    return SIM.covariance_entries(emb)
 
 
 def q_events_asof_join(spark, sf_dir):
@@ -910,8 +901,7 @@ def q_events_sessionize(spark, sf_dir):
     rollup. Oracle: the identical window form in DuckDB."""
     from satellitetools_spark.operators.temporal import sessionize
     ev = _events(spark, sf_dir)
-    s = sessionize(ev, key=["user_id"], ts_col="ts",
-                   gap_seconds=SESSION_GAP_S)
+    s = sessionize(ev, key=["user_id"], gap_seconds=SESSION_GAP_S)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     return (s.groupBy("user_id", "session_seq")
              .agg(F.count("*").alias("n_events"),
@@ -932,7 +922,7 @@ def q_events_grid_fill(spark, sf_dir):
     ASOF join."""
     from satellitetools_spark.operators.temporal import time_grid_fill
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "value")
-    out = time_grid_fill(ev, key=["user_id"], ts_col="ts",
+    out = time_grid_fill(ev, key=["user_id"],
                          step_seconds=GRID_STEP_S,
                          right_cols=["event_id", "value"])
     return out.select(
@@ -950,9 +940,7 @@ def q_events_interp(spark, sf_dir):
     segment + weight formula in DuckDB."""
     from satellitetools_spark.operators.temporal import interpolate_to_grid
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    out = interpolate_to_grid(ev, key=["user_id"], ts_col="ts",
-                              value_col="value",
-                              step_seconds=GRID_STEP_S)
+    out = interpolate_to_grid(ev, key=["user_id"], step_seconds=GRID_STEP_S)
     return out.select(
         "user_id",
         F.date_format("tick_ts", "yyyy-MM-dd HH:mm:ss").alias("tick"),
@@ -976,8 +964,7 @@ def q_events_anomaly(spark, sf_dir):
     ONE exchange. Oracle: identical frame and formula in DuckDB."""
     from satellitetools_spark.operators.temporal import rolling_zscore
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    out = rolling_zscore(ev, key=["user_id"], window=24, min_periods=8,
-                         z_thresh=2.5)
+    out = rolling_zscore(ev, key=["user_id"], z_thresh=2.5)
     return out.select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
@@ -991,7 +978,7 @@ def q_events_ewma(spark, sf_dir):
     normalization). Oracle: identical left-associated chain in DuckDB."""
     from satellitetools_spark.operators.temporal import ewma
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    out = ewma(ev, key=["user_id"], alpha=0.3, window=12)
+    out = ewma(ev, key=["user_id"])
     return out.select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
@@ -1083,9 +1070,7 @@ def q_geo_harmonic(spark, sf_dir):
     sums at AOI cardinality, Cramer's-rule projection. Oracle: the
     same expression strings run by DuckDB."""
     series = _ndvi_series(spark, sf_dir)
-    return TEMPORAL.harmonic_fit(series, key_cols=("aoi",),
-                                 time_col="date_str",
-                                 value_col="mean_ndvi")
+    return TEMPORAL.harmonic_fit(series, value_col="mean_ndvi")
 
 
 def q_geo_phenology(spark, sf_dir):
@@ -1093,9 +1078,7 @@ def q_geo_phenology(spark, sf_dir):
     EOS dates and season length from the NDVI series — two hash aggs
     and one key-co-partitioned join. Oracle: identical CTE chain."""
     series = _ndvi_series(spark, sf_dir)
-    return TEMPORAL.phenology(series, key_cols=("aoi",),
-                              time_col="date_str",
-                              value_col="mean_ndvi")
+    return TEMPORAL.phenology(series, value_col="mean_ndvi")
 
 
 def q_geo_moran(spark, sf_dir):
@@ -1134,10 +1117,7 @@ def q_geo_composite(spark, sf_dir):
                   ((F.col("B8A") - F.col("B4"))
                    / (F.col("B8A") + F.col("B4"))).alias("ndvi"),
                   "B4", "B8A"))
-    return SP.greenest_composite(px, value_col="ndvi",
-                                 time_col="date_str",
-                                 tiebreak_col="doc_id",
-                                 payload_cols=("B4", "B8A"))
+    return SP.greenest_composite(px, payload_cols=("B4", "B8A"))
 
 
 def q_geo_gstar(spark, sf_dir):
@@ -1187,7 +1167,7 @@ def q_geo_emerging_hotspots(spark, sf_dir):
                        ((F.col("ix") + 0.5) * 10.0).alias("x"),
                        ((F.col("iy") + 0.5) * 10.0).alias("y"),
                        "v", F.lit(10.0).alias("gsd"))
-    gz = SP.gstar_by_doc(pxf, value_col="v")
+    gz = SP.gstar_by_doc(pxf)
     return TEMPORAL.mann_kendall(
         gz.select("doc_id", "ix", "iy", "gi_z"),
         key_cols=("ix", "iy"), time_col="doc_id", value_col="gi_z")
@@ -1210,9 +1190,7 @@ def q_geo_harmonic_anomaly(spark, sf_dir):
     broadcast join back, one RMSE agg, codegen residual/flag. Oracle:
     composed from the same expression strings."""
     series = _ndvi_series(spark, sf_dir)
-    return TEMPORAL.harmonic_anomaly(series, key_cols=("aoi",),
-                                     time_col="date_str",
-                                     value_col="mean_ndvi")
+    return TEMPORAL.harmonic_anomaly(series, value_col="mean_ndvi")
 
 
 def q_geo_flowacc(spark, sf_dir):
@@ -1267,7 +1245,7 @@ def q_events_interarrival(spark, sf_dir):
     one key window for the lag + one key-cardinality agg. Oracle:
     identical lag/moments/guards."""
     ev = _events(spark, sf_dir).select("user_id", "ts")
-    return TEMPORAL.interarrival_stats(ev, key_cols=("user_id",))
+    return TEMPORAL.interarrival_stats(ev)
 
 
 def q_events_entropy(spark, sf_dir):
@@ -1276,7 +1254,7 @@ def q_events_entropy(spark, sf_dir):
     top-type share — two map-side-combinable aggs. Oracle: identical
     algebra."""
     ev = _events(spark, sf_dir).select("user_id", "event_type")
-    return TEMPORAL.event_entropy(ev, key_cols=("user_id",))
+    return TEMPORAL.event_entropy(ev)
 
 
 def q_geo_resid_acf(spark, sf_dir):
@@ -1286,9 +1264,7 @@ def q_geo_resid_acf(spark, sf_dir):
     harmonic_anomaly and acf; ISO date strings order chronologically in
     both engines). Oracle: acf_sql over harmonic_anomaly_sql."""
     series = _ndvi_series(spark, sf_dir)
-    scored = TEMPORAL.harmonic_anomaly(series, key_cols=("aoi",),
-                                       time_col="date_str",
-                                       value_col="mean_ndvi")
+    scored = TEMPORAL.harmonic_anomaly(series, value_col="mean_ndvi")
     return TEMPORAL.acf(scored.select("aoi", "date_str", "resid"),
                         key_cols=("aoi",), time_col="date_str",
                         value_col="resid")
@@ -1299,9 +1275,7 @@ def q_docs_mixture_weights(spark, sf_dir):
     exponential smoothing, the multilingual upsampling rule): one
     group-cardinality agg + two broadcast 1-row joins, pure codegen.
     Oracle: identical smoothing and normalization."""
-    return SAMP.mixture_weights(_documents(spark, sf_dir),
-                                group_col="lang", alpha=0.7,
-                                size_col="n_chars")
+    return SAMP.mixture_weights(_documents(spark, sf_dir), alpha=0.7)
 
 
 def q_docs_chunks(spark, sf_dir):
@@ -1327,7 +1301,7 @@ def q_events_cusum(spark, sf_dir):
     per-key ordered residual array → pure aggregate-fold scan. Oracle:
     identical fold via seed-lifted list_reduce."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    return TEMPORAL.cusum_alarms(ev, key_cols=("user_id",))
+    return TEMPORAL.cusum_alarms(ev)
 
 
 def q_geo_ndvi_sg(spark, sf_dir):
@@ -1347,8 +1321,7 @@ def q_geo_ndvi_sg(spark, sf_dir):
     series = (px.groupBy("aoi", "date_str")
               .agg(F.round(F.sum("v") / F.count("v"), 6)
                    .alias("mean_ndvi")))
-    return TEMPORAL.sg_smooth(series, key_cols=("aoi",),
-                              time_col="date_str",
+    return TEMPORAL.sg_smooth(series,
                               value_col="mean_ndvi",
                               out_col="ndvi_sg")
 
@@ -1511,7 +1484,7 @@ def q_events_kmv_daily(spark, sf_dir):
           .select(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("day"), "user_id"))
     return SKETCH.kmv_distinct_keys(ev, group_col="day",
-                                    key_col="user_id", k=64)
+                                    key_col="user_id")
 
 
 def q_events_concurrency(spark, sf_dir):
@@ -1610,7 +1583,7 @@ def q_geo_cell_pyramid(spark, sf_dir):
     docs = _geo_docs(spark, sf_dir)
     px = decode_documents(docs, bands=["B4", "B8A"])
     px = compute_vegetation_index(px, "ndvi")
-    out = SP.cell_pyramid(px, "ndvi", levels=4, base_m=20.0)
+    out = SP.cell_pyramid(px, "ndvi", levels=4)
     return out.select(
         "level", "cx", "cy", "n",
         F.round("sum_v", 6).alias("sum_ndvi"),
@@ -1672,7 +1645,7 @@ def q_events_pettitt(spark, sf_dir):
     sum. Oracle: identical pair enumeration and the shared p-value
     expression string."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    return TEMPORAL.pettitt(ev, key_cols=("user_id",))
+    return TEMPORAL.pettitt(ev)
 
 
 def q_events_seasonal(spark, sf_dir):
@@ -1683,9 +1656,7 @@ def q_events_seasonal(spark, sf_dir):
     ev = _events(spark, sf_dir)
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.count("*").cast("double").alias("v")))
-    return TEMPORAL.seasonal_decompose(daily, key_cols=("event_type",),
-                                       time_col="day", value_col="v",
-                                       period=7)
+    return TEMPORAL.seasonal_decompose(daily, period=7)
 
 
 def q_events_ccf(spark, sf_dir):
@@ -1736,7 +1707,7 @@ def q_geo_ripley_k(spark, sf_dir):
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
           .filter("ndvi > 0.6").select("doc_id", "x", "y"))
-    return SP.ripley_k(px, key_cols=("doc_id",))
+    return SP.ripley_k(px)
 
 
 def q_orders_benford(spark, sf_dir):
@@ -1769,7 +1740,7 @@ def q_events_seasonal_mk(spark, sf_dir):
     with a dialect-equivalent season expression."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
     return TEMPORAL.seasonal_mann_kendall(
-        ev, key_cols=("user_id",),
+        ev,
         season_expr="pmod(datediff(CAST(ts AS DATE),"
                     " DATE '1970-01-01'), 7)")
 
@@ -1786,7 +1757,7 @@ def q_geo_clark_evans(spark, sf_dir):
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
           .filter("ndvi > 0.6").select("doc_id", "x", "y"))
-    return SP.clark_evans(px, key_cols=("doc_id",))
+    return SP.clark_evans(px)
 
 
 def q_geo_kde(spark, sf_dir):
@@ -1802,7 +1773,7 @@ def q_geo_kde(spark, sf_dir):
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
           .filter("ndvi > 0.6").select("doc_id", "x", "y"))
-    return SP.kde_grid(px, key_cols=("doc_id",))
+    return SP.kde_grid(px)
 
 
 def q_geo_knox(spark, sf_dir):
@@ -1822,7 +1793,7 @@ def q_geo_knox(spark, sf_dir):
                   F.expr("CAST(datediff(CAST(acquisition_time AS DATE),"
                          " DATE '1970-01-01') AS DOUBLE)").alias("td"))
           .distinct())
-    return SP.knox_test(px, key_cols=("aoi",))
+    return SP.knox_test(px)
 
 
 def q_docs_zipf(spark, sf_dir):
@@ -1858,7 +1829,7 @@ def q_geo_regions(spark, sf_dir):
           .select("doc_id",
                   F.floor(F.col("x") / 20.0).cast("long").alias("ix"),
                   F.floor(F.col("y") / 20.0).cast("long").alias("iy")))
-    return SP.region_label(px, key_cols=("doc_id",))
+    return SP.region_label(px)
 
 
 def q_geo_variogram_dir(spark, sf_dir):
@@ -1881,7 +1852,7 @@ def q_geo_stretch(spark, sf_dir):
     px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
           .filter("inside")
           .select("doc_id", "x", "y", F.col("B8").alias("v")))
-    return SP.percentile_stretch(px, key_cols=("doc_id",))
+    return SP.percentile_stretch(px)
 
 
 def q_geo_idw(spark, sf_dir):
@@ -1983,7 +1954,7 @@ def q_geo_dbscan(spark, sf_dir):
           .select("doc_id",
                   F.floor(F.col("x") / 20.0).cast("long").alias("ix"),
                   F.floor(F.col("y") / 20.0).cast("long").alias("iy")))
-    out = SP.grid_dbscan(px, key_cols=("doc_id",), min_pts=4)
+    out = SP.grid_dbscan(px, min_pts=4)
     return out.select("doc_id", "ix", "iy", "n_in_neigh",
                       F.coalesce("label", F.lit(-1)).alias("label"),
                       "role")
@@ -2011,7 +1982,7 @@ def q_events_holt(spark, sf_dir):
     as a codegen aggregate fold. Oracle: identical recurrence as a
     recursive CTE — an independent evaluation strategy."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
-    return TEMPORAL.holt_smooth(ev, key_cols=("user_id",))
+    return TEMPORAL.holt_smooth(ev)
 
 
 def q_geo_view_circular(spark, sf_dir):
@@ -2024,7 +1995,7 @@ def q_geo_view_circular(spark, sf_dir):
     scenes = spark.read.parquet(os.path.join(d, "scenes.parquet"))
     det = scenes.select(
         "doc_id", F.explode("view_azimuth_detectors").alias("az"))
-    return CHK.circular_stats(det, "az", key_cols=("doc_id",))
+    return CHK.circular_stats(det, "az")
 
 
 def q_geo_hexbin(spark, sf_dir):
@@ -2055,9 +2026,7 @@ def q_lineitem_gini(spark, sf_dir):
     aggregated key table, never the fact rows. Oracle: identical
     closed form over identical exact decimals."""
     from satellitetools_spark.operators import segment as SEG
-    return SEG.gini_concentration(_tbl(spark, sf_dir, "lineitem"),
-                                  key_col="l_suppkey",
-                                  value_col="l_extendedprice")
+    return SEG.gini_concentration(_tbl(spark, sf_dir, "lineitem"))
 
 
 def q_orders_basket(spark, sf_dir):
@@ -2076,9 +2045,7 @@ def q_events_km(spark, sf_dir):
     suffix/prefix windows over the tiny duration table; the product is
     exp-of-sum-of-logs with an explicit zero ledger. Oracle: identical
     chain."""
-    return TEMPORAL.kaplan_meier(_events(spark, sf_dir),
-                                 key="user_id",
-                                 censor_horizon_days=7)
+    return TEMPORAL.kaplan_meier(_events(spark, sf_dir))
 
 
 def q_events_runs(spark, sf_dir):
@@ -2086,8 +2053,7 @@ def q_events_runs(spark, sf_dir):
     median, equal-to-median drops): one median agg + one key window +
     one readout agg. Oracle: identical moments."""
     return TEMPORAL.runs_test(_events(spark, sf_dir),
-                              key_cols=("event_type",),
-                              order_cols=("ts", "event_id"))
+                              key_cols=("event_type",))
 
 
 def q_events_mad(spark, sf_dir):
@@ -2095,8 +2061,7 @@ def q_events_mad(spark, sf_dir):
     two exact-median aggs broadcast back — the fact rows never
     shuffle. Oracle: identical two-stage median chain."""
     return TEMPORAL.mad_anomaly(_events(spark, sf_dir),
-                                key_cols=("event_type",),
-                                threshold=3.5)
+                                key_cols=("event_type",))
 
 
 def q_emb_silhouette(spark, sf_dir):
@@ -2148,8 +2113,7 @@ def q_geo_landform(spark, sf_dir):
           .select("doc_id", "x", "y", "gsd",
                   ((F.col("B8") - F.col("B4"))
                    / (F.col("B8") + F.col("B4"))).alias("v")))
-    return SP.tpi_landform(px, key_cols=("doc_id",), r_small=1,
-                           r_large=3)
+    return SP.tpi_landform(px, r_large=3)
 
 
 def _high_ndvi_cells(spark, sf_dir):
@@ -2171,9 +2135,8 @@ def q_geo_patches(spark, sf_dir):
     region_label composed with ONE patch agg + ONE co-partitioned
     4-neighbor self-join. Oracle: recursive-closure labels feeding the
     identical adjacency algebra."""
-    lab = SP.region_label(_high_ndvi_cells(spark, sf_dir),
-                          key_cols=("doc_id",))
-    return SP.patch_stats(lab, key_cols=("doc_id",))
+    lab = SP.region_label(_high_ndvi_cells(spark, sf_dir))
+    return SP.patch_stats(lab)
 
 
 def q_geo_change(spark, sf_dir):
@@ -2192,7 +2155,7 @@ def q_geo_change(spark, sf_dir):
                   F.col("acquisition_time").alias("t"),
                   ((F.col("B8") - F.col("B4"))
                    / (F.col("B8") + F.col("B4"))).alias("v")))
-    return SP.change_detection(px, key_cols=("aoi",), threshold=0.05)
+    return SP.change_detection(px)
 
 
 def q_events_markov_entropy(spark, sf_dir):
@@ -2200,8 +2163,7 @@ def q_events_markov_entropy(spark, sf_dir):
     Markov chain (the entropy-rate terms): transition_counts composed
     with a type²-cardinality reduction. Oracle: identical lag pairs
     and entropy sum."""
-    return TEMPORAL.markov_entropy(_events(spark, sf_dir),
-                                   key="user_id")
+    return TEMPORAL.markov_entropy(_events(spark, sf_dir))
 
 
 def q_events_hurst(spark, sf_dir):
@@ -2209,9 +2171,7 @@ def q_events_hurst(spark, sf_dir):
     (dyadic block means 1/2/4/8, ln-ln OLS slope → H = 1 + s/2): one
     ranked window, constant explode, shrinking agg ladder. Oracle:
     identical closed-form OLS."""
-    return TEMPORAL.hurst_exponent(_events(spark, sf_dir),
-                                   key_cols=("event_type",),
-                                   order_cols=("ts", "event_id"))
+    return TEMPORAL.hurst_exponent(_events(spark, sf_dir))
 
 
 def q_docs_lexdiv(spark, sf_dir):
@@ -2242,8 +2202,6 @@ def q_events_peaks(spark, sf_dir):
     exceedance ≥ 0.5): one key window, map-only predicate, no
     arithmetic beyond a subtraction. Oracle: identical lag/lead."""
     return TEMPORAL.peak_detect(_events(spark, sf_dir),
-                                key_cols=("event_type",),
-                                order_cols=("ts", "event_id"),
                                 min_delta=0.5)
 
 
@@ -2277,8 +2235,7 @@ def q_geo_xcorr(spark, sf_dir):
     cardinality, round-6 argmax. Oracle: identical lattice."""
     a = _aoi_extreme_raster(spark, sf_dir, "first")
     b = _aoi_extreme_raster(spark, sf_dir, "last")
-    return SP.raster_xcorr(a, b, key_cols=("aoi",), max_offset=2,
-                           min_overlap=16)
+    return SP.raster_xcorr(a, b, max_offset=2, min_overlap=16)
 
 
 def q_sales_hits(spark, sf_dir):
@@ -2309,9 +2266,7 @@ def q_lineitem_abc(spark, sf_dir):
     """ABC/Pareto classification of parts by DECIMAL-exact revenue
     with cumulative-share cuts at 0.8/0.95: the window sorts only the
     aggregated key table. Oracle: identical window + boundaries."""
-    return SEG.abc_analysis(_tbl(spark, sf_dir, "lineitem"),
-                            key_col="l_partkey",
-                            value_col="l_extendedprice")
+    return SEG.abc_analysis(_tbl(spark, sf_dir, "lineitem"))
 
 
 def q_docs_term_dispersion(spark, sf_dir):
@@ -2327,8 +2282,6 @@ def q_events_backtest(spark, sf_dir):
     support) per event type: one shared key window, one agg. Oracle:
     identical lags."""
     return TEMPORAL.forecast_backtest(_events(spark, sf_dir),
-                                      key_cols=("event_type",),
-                                      order_cols=("ts", "event_id"),
                                       season=7)
 
 
@@ -2336,8 +2289,7 @@ def q_geo_sieve(spark, sf_dir):
     """Sieve filter over the high-NDVI mask (drop patches < 4 cells):
     region_label fixpoint + one size semi-join; output keeps labels.
     Oracle: closure labels + identical semi-join."""
-    return SP.sieve_filter(_high_ndvi_cells(spark, sf_dir),
-                           key_cols=("doc_id",), min_size=4)
+    return SP.sieve_filter(_high_ndvi_cells(spark, sf_dir))
 
 
 def q_events_strength(spark, sf_dir):
@@ -2349,8 +2301,6 @@ def q_events_strength(spark, sf_dir):
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.count("*").cast("double").alias("v")))
     return TEMPORAL.seasonality_strength(daily,
-                                         key_cols=("event_type",),
-                                         time_col="day", value_col="v",
                                          period=7)
 
 
@@ -2359,7 +2309,7 @@ def q_emb_outliers(spark, sf_dir):
     to the own-label centroid (z > 2), thresholded on round-6 inputs.
     Oracle: silhouette CTE + identical moments."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return SIM.label_outliers(emb, z_threshold=2.0)
+    return SIM.label_outliers(emb)
 
 
 def q_events_welch(spark, sf_dir):
@@ -2431,7 +2381,7 @@ def q_docs_calibration(spark, sf_dir):
     """Reliability-diagram bins (10 over [0,1]): per-bin confidence vs
     accuracy and the signed gap. Oracle: identical fixed binning."""
     return ME.calibration_bins(_documents(spark, sf_dir), _LABEL_EXPR,
-                               _SCORE_EXPR, 0.0, 1.0, 10)
+                               _SCORE_EXPR, 0.0)
 
 
 def q_docs_brier(spark, sf_dir):
@@ -2439,7 +2389,7 @@ def q_docs_brier(spark, sf_dir):
     (reliability/resolution/uncertainty) + ECE/MCE in one row.
     Oracle: identical two-stage aggregation."""
     return ME.brier_decomposition(_documents(spark, sf_dir), _LABEL_EXPR,
-                                  _SCORE_EXPR, 0.0, 1.0, 10)
+                                  _SCORE_EXPR, 0.0)
 
 
 def q_docs_gains(spark, sf_dir):
@@ -2447,7 +2397,7 @@ def q_docs_gains(spark, sf_dir):
     distinct-score histogram (tie groups never straddle a boundary).
     Oracle: identical histogram-decile construction."""
     return ME.cumulative_gains(_documents(spark, sf_dir), _LABEL_EXPR,
-                               _SCORE_EXPR, 10)
+                               _SCORE_EXPR)
 
 
 def q_docs_mi(spark, sf_dir):
@@ -2481,7 +2431,7 @@ def q_docs_fdr(spark, sf_dir):
     return ME.bh_adjust(
         ME.group_vs_rest_ttest(_documents(spark, sf_dir), "lang",
                                "n_chars"),
-        key_col="lang", p_col="p_approx", alpha=0.05)
+        key_col="lang", p_col="p_approx")
 
 
 def q_events_bootstrap(spark, sf_dir):
@@ -2514,7 +2464,7 @@ def q_docs_hosmer_lemeshow(spark, sf_dir):
     bins — O vs E with degenerate bins excluded and counted. Oracle:
     identical binning and fold."""
     return ME.hosmer_lemeshow(_documents(spark, sf_dir), _LABEL_EXPR,
-                              _SCORE_EXPR, 0.0, 1.0, 10)
+                              _SCORE_EXPR, 0.0, 1.0)
 
 
 def q_events_cuped(spark, sf_dir):
@@ -2577,7 +2527,7 @@ def q_geo_domain_check(spark, sf_dir):
     from satellitetools_spark.biophys.nn import domain_grid_check
     docs = _geo_docs(spark, sf_dir)
     px = decode_documents(docs)
-    out = domain_grid_check(px, "LAI")
+    out = domain_grid_check(px)
     return out.select("doc_id", "x", "y",
                       F.col("in_domain").cast("int").alias("in_domain"))
 
@@ -2611,7 +2561,7 @@ def q_docs_vocab_richness(spark, sf_dir):
     """Chao1 vocabulary-size lower bound + Good-Turing coverage from
     the token-count table's singleton/doubleton fold. Oracle: identical
     tokenize → counts → fold."""
-    return TX.vocab_richness(_documents(spark, sf_dir), "text")
+    return TX.vocab_richness(_documents(spark, sf_dir))
 
 
 def q_emb_retrieval_metrics(spark, sf_dir):
@@ -2642,8 +2592,7 @@ def q_docs_heavy_hitters(spark, sf_dir):
     deterministic candidate superset, then ONE exact verify scan with a
     broadcast semi-join — the full token alphabet is never shuffled.
     Oracle: the direct exact computation the operator avoids."""
-    return SKETCH.heavy_hitters(_documents(spark, sf_dir), "text",
-                                phi=0.03)
+    return SKETCH.heavy_hitters(_documents(spark, sf_dir), phi=0.03)
 
 
 def q_docs_avg_precision(spark, sf_dir):
@@ -2658,7 +2607,7 @@ def q_docs_confusion(spark, sf_dir):
     """Confusion matrix at score>=0.5 with accuracy/precision/recall/
     F1/MCC in one conditional agg. Oracle: identical CASE algebra."""
     return ME.confusion_at_threshold(_documents(spark, sf_dir),
-                                     _LABEL_EXPR, _SCORE_EXPR, 0.5)
+                                     _LABEL_EXPR, _SCORE_EXPR)
 
 
 def q_docs_kappa(spark, sf_dir):
@@ -2699,7 +2648,7 @@ def q_events_conformal(spark, sf_dir):
     coverage. Oracle: identical histogram order statistic."""
     return ME.conformal_interval(
         _events(spark, sf_dir), _PRED_EXPR, "value",
-        "event_id % 5 = 0", alpha=0.1)
+        "event_id % 5 = 0")
 
 
 _LINKPRED_TAU = 0.4  # looser than NEARDUP_TAU: the link-prediction
@@ -2748,7 +2697,7 @@ def q_emb_lpa(spark, sf_dir):
     communities, unlike connected components. Oracle: identical
     unrolled rounds as CTE layers."""
     return GR.label_propagation(_emb_sim_graph(spark, sf_dir),
-                                rounds=4, src_col="vec_id_a",
+                                src_col="vec_id_a",
                                 dst_col="vec_id_b")
 
 
@@ -2939,8 +2888,7 @@ def q_geo_kriging(spark, sf_dir):
                .select(F.col("cell").cast("string").alias("doc_id"),
                        F.col("cx").alias("x"), F.col("cy").alias("y")))
     return SP.kriging_fill(targets, stations, k=8, radius=800.0,
-                           cell_m=160.0, nugget=0.0, sill=1.0,
-                           vrange=1000.0)
+                           cell_m=160.0, vrange=1000.0)
 
 
 def q_events_covisitation(spark, sf_dir):
@@ -3030,7 +2978,7 @@ def q_events_dtw(spark, sf_dir):
     hourly = (ev.groupBy(F.col("event_type").alias("key"),
                          F.date_trunc("hour", "ts").alias("t"))
               .agg(F.avg("value").alias("v")))
-    return TEMPORAL.dtw_distance(hourly, "key", "t", "v", band=6)
+    return TEMPORAL.dtw_distance(hourly, band=6)
 
 
 def q_docs_allpairs_jaccard(spark, sf_dir):
@@ -3039,7 +2987,7 @@ def q_docs_allpairs_jaccard(spark, sf_dir):
     the candidate join never fans out on stopword n-grams). Oracle:
     the brute-force shingle equi-join (provable recall 1.0)."""
     return D.allpairs_jaccard_pairs(_documents(spark, sf_dir),
-                                    n=JACCARD_N, threshold=JACCARD_T)
+                                    threshold=JACCARD_T)
 
 
 def q_docs_naive_bayes(spark, sf_dir):
@@ -3047,7 +2995,7 @@ def q_docs_naive_bayes(spark, sf_dir):
     from its token evidence (trained in-plan on the same corpus,
     Laplace alpha=1) — the weak-labeler / label-noise audit. Oracle:
     identical smoothing algebra and rounded-score argmax."""
-    return TX.naive_bayes_predict(_documents(spark, sf_dir), "lang")
+    return TX.naive_bayes_predict(_documents(spark, sf_dir))
 
 
 def q_emb_adamic_adar(spark, sf_dir):

@@ -167,7 +167,7 @@ def snap_sql_expr(variable: str, round_digits: int | None = None) -> str:
 # Definition-domain GRID check — the reference's disabled convex-hull stand-in
 # ---------------------------------------------------------------------------
 
-def load_domain_grid(variable: str = "LAI") -> np.ndarray:
+def load_domain_grid() -> np.ndarray:
     """The SNAP definition-domain grid: the quantized (cell-level) hull
     of the NN training domain, one row per occupied 8-d grid cell
     (`biophys.py:170-172`; the file is byte-identical across all five
@@ -193,7 +193,7 @@ def grid_cell_exprs(variable: str):
     return out
 
 
-def domain_grid_check(px, variable: str = "LAI"):
+def domain_grid_check(px):
     """The reference's DISABLED convex-hull input check
     (`biophys.py:16-18, 211-218` — "computationally slow"), made fast:
     the original tests each pixel's quantized 8-band cell against the
@@ -210,12 +210,12 @@ def domain_grid_check(px, variable: str = "LAI"):
     """
     from pyspark.sql import functions as F
     spark = px.sparkSession
-    grid = load_domain_grid(variable)
+    grid = load_domain_grid()
     keys = [",".join(str(int(c)) for c in row) for row in grid]
     gdf = spark.createDataFrame([(k,) for k in keys], "gkey string") \
         .withColumn("_hit", F.lit(1))
-    p = load_nn_params(variable)
-    cells = grid_cell_exprs(variable)
+    p = load_nn_params("LAI")
+    cells = grid_cell_exprs("LAI")
     key = F.concat_ws(",", *[F.expr(c).cast("string") for c in cells])
     rng = None
     for i, b in enumerate(SNAP_BIO_BANDS):

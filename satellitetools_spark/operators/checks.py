@@ -267,7 +267,7 @@ FROM hbins LEFT JOIN hcounts USING (bin)
 
 
 def pivot_counts(df: DataFrame, pivot_col: str, values,
-                 keys=("doc_id",), prefix: str = None) -> DataFrame:
+                 prefix: str = None) -> DataFrame:
     """Wide crosstab: one row per key with a count column per pinned
     ``pivot_col`` value — the feature-row companion of the long-format
     aggregations (SCL class mixes per scene, event types per user).
@@ -280,11 +280,11 @@ def pivot_counts(df: DataFrame, pivot_col: str, values,
     schema is stable across inputs.
     """
     prefix = prefix if prefix is not None else f"{pivot_col.lower()}_"
-    out = (df.groupBy(*keys)
+    out = (df.groupBy("doc_id")
            .pivot(pivot_col, list(values))
            .agg(F.count(F.lit(1))))
     return out.select(
-        *keys, *[F.coalesce(F.col(str(v)), F.lit(0)).alias(f"{prefix}{v}")
+        "doc_id", *[F.coalesce(F.col(str(v)), F.lit(0)).alias(f"{prefix}{v}")
                  for v in values])
 
 
@@ -453,11 +453,11 @@ qtot AS (SELECT SUM(n) AS ntot FROM qh)
 """
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, key: str = "doc_id",
-                  compare_cols=None) -> DataFrame:
-    """Change-data detection between two snapshots of a keyed table:
-    per key, ``added`` / ``removed`` / ``changed`` / ``unchanged`` plus
-    the sorted list of columns that differ (NULL-safe comparison) — the
+def snapshot_diff(old: DataFrame, new: DataFrame, compare_cols) -> DataFrame:
+    """Change-data detection between two snapshots of a ``doc_id``-keyed
+    table over ``compare_cols``: per key, ``added`` / ``removed`` /
+    ``changed`` / ``unchanged`` plus the sorted list of columns that
+    differ (NULL-safe comparison) — the
     primitive behind incremental re-processing (re-run only `changed`
     docs) and ingest regression checks.
 
@@ -467,26 +467,26 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key: str = "doc_id",
     snapshot-pinned reads of the same table, so storage-partition
     pruning applies before the join.
     """
-    cols = compare_cols or [c for c in old.columns
-                            if c != key and c in new.columns]
     # presence flags come from the join sides (constant TRUE columns),
     # never from data nullability
-    o = old.select(key, *[F.col(c).alias(f"_o_{c}") for c in cols],
+    o = old.select("doc_id",
+                   *[F.col(c).alias(f"_o_{c}") for c in compare_cols],
                    F.lit(True).alias("_present_o"))
-    n = new.select(key, *[F.col(c).alias(f"_n_{c}") for c in cols],
+    n = new.select("doc_id",
+                   *[F.col(c).alias(f"_n_{c}") for c in compare_cols],
                    F.lit(True).alias("_present_n"))
-    j = o.join(n, key, "full_outer")
+    j = o.join(n, "doc_id", "full_outer")
     o_present = F.col("_present_o")
     n_present = F.col("_present_n")
     diff_mask = F.array_sort(F.filter(
         F.array(*[F.when(~F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}")),
-                         F.lit(c)) for c in cols]),
+                         F.lit(c)) for c in compare_cols]),
         lambda x: x.isNotNull()))
     status = (F.when(o_present.isNull(), F.lit("added"))
               .when(n_present.isNull(), F.lit("removed"))
               .when(F.size(diff_mask) > 0, F.lit("changed"))
               .otherwise(F.lit("unchanged")))
-    return j.select(key, status.alias("status"),
+    return j.select("doc_id", status.alias("status"),
                     F.when(status == "changed", diff_mask)
                     .otherwise(F.array().cast("array<string>"))
                     .alias("changed_cols"))
@@ -761,8 +761,7 @@ FROM abt
 """
 
 
-def circular_stats(df: DataFrame, angle_col: str,
-                   key_cols=("doc_id",)) -> DataFrame:
+def circular_stats(df: DataFrame, angle_col: str) -> DataFrame:
     """Circular (directional) statistics per key for angle-valued data
     in degrees — view/sun azimuths, aspect, wind direction — where the
     arithmetic mean is WRONG (mean of 359° and 1° is 0°, not 180°):
@@ -773,7 +772,7 @@ def circular_stats(df: DataFrame, angle_col: str,
     Shape: ONE map-side-combinable hash agg of (n, Σcos, Σsin) — fully
     mergeable state, key-cardinality output, pure codegen trig.
     """
-    keys = list(key_cols)
+    keys = ["doc_id"]
     rad = F.radians(F.col(angle_col).cast("double"))
     g = (df.groupBy(*keys)
          .agg(F.count("*").cast("long").alias("n_obs"),

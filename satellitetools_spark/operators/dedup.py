@@ -20,8 +20,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-from typing import List
-
 import numpy as np
 import pandas as pd
 
@@ -74,9 +72,9 @@ def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs (doc_a < doc_b, jaccard ≥ t)."""
-    sh = word_shingles(docs, n)
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact word-trigram Jaccard similar pairs (doc_a < doc_b, jaccard ≥ t)."""
+    sh = word_shingles(docs, 3)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -125,8 +123,9 @@ WHERE i * 1.0 / (sa.sz + sb.sz - i) >= {threshold}
 """
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3) -> DataFrame:
-    """MinHash signature per doc: min of seeded xxHash64 per hash function.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """MinHash signature per doc over word trigrams: min of seeded xxHash64
+    per hash function, 64 functions.
 
     One explode + one hash-agg; all hashing JVM-side (xxhash64 with seed),
     no Python. Signature is an array<long> column.
@@ -137,30 +136,30 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3) -> Dat
     # min aggregation, so the only exchange carries doc-cardinality rows of
     # 64 longs.
     sh = _tokenized(docs, "text").select(
-        "doc_id", F.explode(_shingles_from_tokens(n)).alias("shingle"))
+        "doc_id", F.explode(_shingles_from_tokens(3)).alias("shingle"))
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(64)
     ]
     sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(64)]).alias("sig"))
 
 
-def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
-                      n: int = 3, threshold: float = 0.5) -> DataFrame:
-    """LSH candidate generation + exact Jaccard verification.
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """LSH candidate generation (64 MinHashes in 16 bands) + exact
+    word-trigram Jaccard ≥ 0.5 verification.
 
     Scale path: candidates come only from band-bucket collisions (shuffle on
     band hash), then candidates are verified with an exact intersection
     count — output equals :func:`jaccard_pairs` up to LSH recall.
     """
-    rows = num_hashes // bands
-    sig = minhash_signatures(docs, num_hashes, n)
+    rows = 4  # 64 hashes in 16 bands
+    sig = minhash_signatures(docs)
     band_cols = [
         F.struct(F.lit(b).alias("band"),
                  F.xxhash64(*[F.element_at("sig", b * rows + r + 1)
                               for r in range(rows)]).alias("bucket"))
-        for b in range(bands)
+        for b in range(16)
     ]
     buckets = sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")) \
         .select("doc_id", "bb.band", "bb.bucket")
@@ -174,7 +173,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
         .distinct()
     )
     # exact verification of the (small) candidate set
-    sh = word_shingles(docs, n)
+    sh = word_shingles(docs, 3)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     inter = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -189,7 +188,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
         inter.join(sa, "doc_a").join(sb, "doc_b")
         .withColumn("jaccard", F.round(
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -311,8 +310,8 @@ def simhash(docs: DataFrame) -> DataFrame:
         compute, schema=out_schema)
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ k, using 4×16-bit block
+def simhash_near_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance ≤ 3, using 4×16-bit block
     banding (any pair within distance 3 shares at least one exact block)."""
     sig = simhash(docs)
     blocks = [
@@ -333,7 +332,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return cand.withColumn("hamming", ham).filter(
-        F.col("hamming") <= max_hamming).select("doc_a", "doc_b", "hamming")
+        F.col("hamming") <= 3).select("doc_a", "doc_b", "hamming")
 
 
 def simhash_near_pairs_sql(table: str = "documents", max_hamming: int = 3,
@@ -373,9 +372,9 @@ HAVING sum(CASE WHEN a.b <> b.b THEN 1 ELSE 0 END) <= {max_hamming}
 """
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any word
-    n-gram with a held-out benchmark/eval set (the standard pretraining
+    5-gram with a held-out benchmark/eval set (the standard pretraining
     leakage check — n-gram overlap, as in GPT-3 appendix C / FineWeb).
 
     Returns one row per contaminated NON-benchmark document:
@@ -387,8 +386,8 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFram
     """
     bench_ids = benchmark.select("doc_id").distinct()
     corpus = docs.join(bench_ids, "doc_id", "left_anti")
-    sh = word_shingles(corpus, n)
-    bench_sh = word_shingles(benchmark, n) \
+    sh = word_shingles(corpus, 5)
+    bench_sh = word_shingles(benchmark, 5) \
         .select("shingle").distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     hits = (sh.join(F.broadcast(bench_sh), "shingle")
@@ -546,10 +545,10 @@ WHERE ROUND(2.0 * i / (sa.sz + sb.sz), 6) + 0.0 >= {float(threshold)!r}
 # scale path; minhash_lsh_pairs is the approximate one)
 # ---------------------------------------------------------------------------
 
-def allpairs_jaccard_pairs(docs: DataFrame, n: int = 3,
+def allpairs_jaccard_pairs(docs: DataFrame,
                            threshold: float = 0.5) -> DataFrame:
-    """EXACT Jaccard ≥ t pairs via AllPairs prefix filtering (Bayardo
-    et al., WWW'07) — same output as :func:`jaccard_pairs`, but the
+    """EXACT word-trigram Jaccard ≥ t pairs via AllPairs prefix filtering
+    (Bayardo et al., WWW'07) — same output as :func:`jaccard_pairs`, but the
     candidate join touches only each document's PREFIX under a global
     rarest-first token order instead of every shingle. With prefix
     length ``|d| − ⌈t·|d|⌉ + 1``, any pair with J ≥ t must collide on
@@ -569,7 +568,7 @@ def allpairs_jaccard_pairs(docs: DataFrame, n: int = 3,
     candidate docs. Ranking orders by (global df ASC, shingle ASC) —
     fully deterministic.
     """
-    sh = word_shingles(docs, n)
+    sh = word_shingles(docs, 3)
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     wdoc = Window.partitionBy("doc_id").orderBy(
         F.col("df").asc(), F.col("shingle").asc())

@@ -427,7 +427,7 @@ FROM {prev} GROUP BY src HAVING COUNT(*) >= {int(k)}
 # Label-propagation communities (synchronous, fixed rounds)
 # ---------------------------------------------------------------------------
 
-def label_propagation(pairs: DataFrame, rounds: int = 4,
+def label_propagation(pairs: DataFrame,
                       src_col: str = "doc_a",
                       dst_col: str = "doc_b") -> DataFrame:
     """Community detection by synchronous label propagation over an
@@ -439,13 +439,13 @@ def label_propagation(pairs: DataFrame, rounds: int = 4,
 
     Determinism: the classic asynchronous LPA is order-dependent; this
     is the synchronous variant with a total tie order (count DESC,
-    label ASC), so the result is a pure function of the graph and
-    ``rounds`` — which is what makes the DuckDB twin oracle-checkable
+    label ASC), so the result is a pure function of the graph and the
+    fixed 4 rounds — which is what makes the DuckDB twin oracle-checkable
     (identical unrolled CTE layers). Fixed rounds also bound cost:
     each round is one edge⋈label join + one (node,label) count + one
     argmax window over the count table (node-cardinality, never the
     raw edge stream twice). Synchronous LPA can oscillate on bipartite
-    structures; ``rounds`` is the standard cutoff. Each round lazily
+    structures; a fixed round count is the standard cutoff. Each round lazily
     checkpoints the label vector so the plan stays linear.
     """
     from pyspark.sql import Window
@@ -458,7 +458,7 @@ def label_propagation(pairs: DataFrame, rounds: int = 4,
                       F.col("src").alias("label")))
     w = Window.partitionBy("dst").orderBy(
         F.col("cnt").desc(), F.col("label").asc())
-    for _ in range(int(rounds)):
+    for _ in range(4):
         counts = (edges
                   .join(labels.withColumnRenamed("node", "src"), "src")
                   .groupBy("dst", "label")

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 
-def knn_fill(pixels: DataFrame, bands: List[str], k: int = 4) -> DataFrame:
+def knn_fill(pixels: DataFrame, bands: List[str]) -> DataFrame:
     """Return ``pixels`` with NULL band values replaced by IDW-kNN fills
     (adds ``<band>_filled`` flags)."""
     from pyspark.sql import types as T
@@ -48,7 +48,7 @@ def knn_fill(pixels: DataFrame, bands: List[str], k: int = 4) -> DataFrame:
             mx, my = x[missing], y[missing]
             # vectorized distance matrix: (n_missing, n_good)
             d2 = (mx[:, None] - gx[None, :]) ** 2 + (my[:, None] - gy[None, :]) ** 2
-            kk = min(k, len(gv))
+            kk = min(4, len(gv))
             # stable argsort keeps the (x, y) pre-sort as the tiebreaker
             idx = np.argsort(d2, axis=1, kind="stable")[:, :kk]
             rows = np.arange(len(mx))[:, None]

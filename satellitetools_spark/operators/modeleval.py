@@ -130,23 +130,20 @@ FROM raa
 # ---------------------------------------------------------------------------
 
 def calibration_bins(df: DataFrame, label_expr: str, score_expr: str,
-                     lo: float = 0.0, hi: float = 1.0,
-                     n_bins: int = 10) -> DataFrame:
-    """Reliability-diagram table: scores bucketed into ``n_bins`` fixed
-    bins over [lo, hi) (out-of-range clamped to the edge bins — a
+                     lo: float = 0.0) -> DataFrame:
+    """Reliability-diagram table: scores bucketed into 10 fixed
+    bins over [lo, 1) (out-of-range clamped to the edge bins — a
     probability score has hard edges, unlike `checks.histogram`'s
     open-ended under/overflow), each bin reporting count, mean score
     (confidence), positive fraction (accuracy), and the signed gap.
-    One hash agg to n_bins rows; nothing else.
+    One hash agg to 10 rows; nothing else.
     """
-    if hi <= lo:
-        raise ValueError(f"calibration_bins: need lo < hi, got [{lo}, {hi})")
-    if n_bins < 1:
-        raise ValueError(f"calibration_bins: n_bins must be >= 1, got {n_bins}")
-    width = (hi - lo) / n_bins
+    if lo >= 1.0:
+        raise ValueError(f"calibration_bins: need lo < 1, got {lo}")
+    width = (1.0 - lo) / 10
     s = F.expr(score_expr)
     b = F.least(F.greatest(F.floor((s - F.lit(lo)) / F.lit(width)),
-                           F.lit(0)), F.lit(n_bins - 1)).cast("int")
+                           F.lit(0)), F.lit(9)).cast("int")
     out = (df.select(F.expr(label_expr).cast("double").alias("y"),
                      s.alias("s"), b.alias("bin"))
            .filter(F.col("s").isNotNull() & F.col("y").isNotNull())
@@ -186,8 +183,7 @@ FROM cbh GROUP BY bin
 # ---------------------------------------------------------------------------
 
 def brier_decomposition(df: DataFrame, label_expr: str, score_expr: str,
-                        lo: float = 0.0, hi: float = 1.0,
-                        n_bins: int = 10) -> DataFrame:
+                        lo: float = 0.0) -> DataFrame:
     """One-row probability-quality readout: the exact Brier score
     ``mean((s−y)²)`` plus its binned Murphy decomposition —
     reliability Σ (n_k/N)(s̄_k − ȳ_k)², resolution Σ (n_k/N)(ȳ_k − ȳ)²,
@@ -198,16 +194,16 @@ def brier_decomposition(df: DataFrame, label_expr: str, score_expr: str,
     to the within-bin score variance (the standard binned-estimator
     residual); the exact Brier column is the ground truth.
 
-    Shape: one fact agg to the n_bins calibration table (Brier's Σ(s−y)²
+    Shape: one fact agg to the 10-bin calibration table (Brier's Σ(s−y)²
     rides along as a bin-level partial), then a 1-row fold — two
     aggregations total, both map-side combined.
     """
-    if hi <= lo:
-        raise ValueError(f"brier_decomposition: need lo < hi, got [{lo}, {hi})")
-    width = (hi - lo) / n_bins
+    if lo >= 1.0:
+        raise ValueError(f"brier_decomposition: need lo < 1, got {lo}")
+    width = (1.0 - lo) / 10
     s = F.expr(score_expr)
     b = F.least(F.greatest(F.floor((s - F.lit(lo)) / F.lit(width)),
-                           F.lit(0)), F.lit(n_bins - 1)).cast("int")
+                           F.lit(0)), F.lit(9)).cast("int")
     binned = (df.select(F.expr(label_expr).cast("double").alias("y"),
                         s.alias("s"), b.alias("bin"))
               .filter(F.col("s").isNotNull() & F.col("y").isNotNull())
@@ -281,16 +277,15 @@ FROM bdg
 # Cumulative gains / lift
 # ---------------------------------------------------------------------------
 
-def cumulative_gains(df: DataFrame, label_expr: str, score_expr: str,
-                     n_buckets: int = 10) -> DataFrame:
+def cumulative_gains(df: DataFrame, label_expr: str, score_expr: str) -> DataFrame:
     """Gains table: reading the corpus in descending-score order, what
-    fraction of all positives has been captured after each 1/n_buckets
+    fraction of all positives has been captured after each 1/10
     slice — with ``lift`` = captured fraction ÷ read fraction.
 
     Bucket boundaries are drawn on the distinct-score histogram, never
     by `ntile` over raw rows: a score value whose cumulative count ends
     in slice d puts its WHOLE tie group in bucket d
-    (``CEIL(n_buckets · cum_n / N)``), so ties never straddle a
+    (``CEIL(10 · cum_n / N)``), so ties never straddle a
     boundary and the result is independent of physical row order.
     Buckets are therefore approximately, not exactly, equal-sized in
     the presence of heavy ties — documented behavior, determinism wins.
@@ -310,8 +305,8 @@ def cumulative_gains(df: DataFrame, label_expr: str, score_expr: str,
     cum = (cum.withColumnRenamed("cum_cn", "cum_n")
            .withColumn("n", F.lit(tot["cn"])))
     bucket = F.least(
-        F.ceil(F.lit(float(n_buckets)) * F.col("cum_n") / F.col("n")),
-        F.lit(n_buckets)).cast("int")
+        F.ceil(F.lit(10.0) * F.col("cum_n") / F.col("n")),
+        F.lit(10)).cast("int")
     byb = (cum.withColumn("bucket", bucket)
            .groupBy("bucket")
            .agg(F.sum("cn").alias("bn"), F.sum("cp").alias("bp")))
@@ -689,13 +684,12 @@ SELECT *, ROUND({p}, 6) + 0.0 AS p_approx FROM gvr3
 """
 
 
-def bh_adjust(df: DataFrame, key_col: str, p_col: str = "p_approx",
-              alpha: float = 0.05) -> DataFrame:
+def bh_adjust(df: DataFrame, key_col: str, p_col: str = "p_approx") -> DataFrame:
     """Benjamini-Hochberg step-up FDR adjustment over a table of
     per-test p-values (one row per test): rank ascending by p (key as
     the deterministic tie-break), raw_i = p_(i)·m/i, adjusted p = the
     running minimum of raw from the largest rank down, capped at 1,
-    ``rejected`` = adjusted ≤ alpha. The input is already
+    ``rejected`` = adjusted ≤ 0.05. The input is already
     test-cardinality (k rows), so the two windows here sort k rows —
     the fact stream was reduced by whatever screening test produced p.
     """
@@ -717,7 +711,7 @@ def bh_adjust(df: DataFrame, key_col: str, p_col: str = "p_approx",
         F.col(p_col),
         F.col("rank").cast("long").alias("rank"),
         _r6(F.col("p_adj")).alias("p_adj"),
-        F.when(_r6(F.col("p_adj")) <= alpha, 1).otherwise(0)
+        F.when(_r6(F.col("p_adj")) <= 0.05, 1).otherwise(0)
         .alias("rejected")))
 
 
@@ -952,9 +946,8 @@ FROM apc
 # ---------------------------------------------------------------------------
 
 def confusion_at_threshold(df: DataFrame, label_expr: str,
-                           score_expr: str, threshold: float = 0.5
-                           ) -> DataFrame:
-    """Confusion counts at ``score ≥ threshold`` plus the derived
+                           score_expr: str) -> DataFrame:
+    """Confusion counts at ``score ≥ 0.5`` plus the derived
     single-number summaries: accuracy, precision, recall, F1, and the
     Matthews correlation coefficient (the balanced summary that stays
     honest under class skew — a 99%-negative corpus scores MCC ≈ 0 for
@@ -965,7 +958,7 @@ def confusion_at_threshold(df: DataFrame, label_expr: str,
     at corpus scale.
     """
     y = F.expr(label_expr).cast("int")
-    p = (F.expr(score_expr) >= F.lit(threshold)).cast("int")
+    p = (F.expr(score_expr) >= F.lit(0.5)).cast("int")
     base = (df.select(y.alias("y"), p.alias("p"))
             .filter(F.col("y").isNotNull() & F.col("p").isNotNull()))
     agg = base.agg(
@@ -1363,12 +1356,11 @@ FROM frg
 # ---------------------------------------------------------------------------
 
 def conformal_interval(df: DataFrame, pred_expr: str, actual_expr: str,
-                       calib_expr: str, alpha: float = 0.1
-                       ) -> DataFrame:
+                       calib_expr: str) -> DataFrame:
     """Split-conformal calibration: on the calibration slice
     (``calib_expr`` true — typically a hash split, so membership is
     deterministic), take the ⌈(n+1)(1−α)⌉-th smallest absolute
-    residual as the half-width q̂; the guarantee is
+    residual as the half-width q̂ (α = 0.1); the guarantee is
     P(|y − ŷ| ≤ q̂) ≥ 1 − α on exchangeable test rows, distribution-
     free. Reports q̂, both split sizes, and the EMPIRICAL coverage of
     ±q̂ on the non-calibration slice — the check that the guarantee
@@ -1395,9 +1387,8 @@ def conformal_interval(df: DataFrame, pred_expr: str, actual_expr: str,
                            return_totals=True)
     cum = (cum.withColumnRenamed("cum_cc", "cum")
            .withColumn("nc", F.lit(tot["cc"])))
-    # rank of the conformal quantile: k = ceil((n+1)(1-alpha)), capped
-    k = F.least(F.ceil((F.col("nc") + 1.0) * F.lit(1.0 - alpha)),
-                F.col("nc"))
+    # rank of the conformal quantile: k = ceil((n+1)(1-α)), capped
+    k = F.least(F.ceil((F.col("nc") + 1.0) * F.lit(1.0 - 0.1)), F.col("nc"))
     qhat = cum.filter(F.col("cum") >= k).agg(F.min("r").alias("qhat"))
     cov = (base.crossJoin(F.broadcast(qhat))
            .agg(F.max("qhat").alias("qhat"),
@@ -1574,8 +1565,7 @@ FROM bam
 # ---------------------------------------------------------------------------
 
 def hosmer_lemeshow(df: DataFrame, label_expr: str, score_expr: str,
-                    lo: float = 0.0, hi: float = 1.0,
-                    n_bins: int = 10) -> DataFrame:
+                    lo: float = 0.0, hi: float = 1.0) -> DataFrame:
     """Hosmer-Lemeshow goodness-of-fit over the same fixed score bins
     as `calibration_bins`: ``Ĥ = Σ_k (O_k − E_k)² / (E_k(1 − E_k/n_k))``
     with E_k = Σ predicted probabilities in bin k — the χ²-style single
@@ -1589,10 +1579,10 @@ def hosmer_lemeshow(df: DataFrame, label_expr: str, score_expr: str,
     """
     if hi <= lo:
         raise ValueError(f"hosmer_lemeshow: need lo < hi, got [{lo}, {hi})")
-    width = (hi - lo) / n_bins
+    width = (hi - lo) / 10
     s = F.expr(score_expr)
     b = F.least(F.greatest(F.floor((s - F.lit(lo)) / F.lit(width)),
-                           F.lit(0)), F.lit(n_bins - 1)).cast("int")
+                           F.lit(0)), F.lit(9)).cast("int")
     binned = (df.select(F.expr(label_expr).cast("double").alias("y"),
                         s.alias("s"), b.alias("bin"))
               .filter(F.col("s").isNotNull() & F.col("y").isNotNull())
@@ -1848,7 +1838,7 @@ def isotonic_calibration(df: DataFrame, label_expr: str,
 # ---------------------------------------------------------------------------
 
 def logistic_fit(df: DataFrame, label_expr: str,
-                 x_exprs: Sequence[str], iters: int = 8) -> DataFrame:
+                 x_exprs: Sequence[str]) -> DataFrame:
     """Binary logistic regression of ``label_expr`` on ``x_exprs``
     (plus an intercept) via iteratively reweighted least squares —
     the quality-classifier / propensity-model trainer a labeled-data
@@ -1862,10 +1852,10 @@ def logistic_fit(df: DataFrame, label_expr: str,
     rendered as literals into the plan (p = σ(xβ) evaluated JVM-side,
     no Python in the pass). The (d+1)² numbers per step are collected
     and solved driver-side in NumPy — driver traffic is
-    O(iters · d²), independent of row count, the same pattern as
+    O(8 · d²), independent of row count, the same pattern as
     `similarity.covariance_matrix`. A tiny ridge (1e-8) keeps the Newton
-    system solvable under separation. Fixed ``iters`` bounds cost
-    (iters full scans; Newton converges quadratically, 8 is plenty
+    system solvable under separation. A fixed 8 iterations bound the cost
+    (8 full scans; Newton converges quadratically, 8 is plenty
     for |z|≲20 features). The driver-side solve is non-SQL — pytest
     pins golden parity with a pure-NumPy IRLS; the gate records
     rows-only.
@@ -1883,7 +1873,7 @@ def logistic_fit(df: DataFrame, label_expr: str,
 
     beta = np.zeros(d)
     info = None
-    for _ in range(int(iters)):
+    for _ in range(8):
         lin = " + ".join(f"({float(beta[i])!r}) * _f{i}"
                          for i in range(d))
         p = f"(1.0 / (1.0 + exp(-({lin}))))"

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from functools import reduce
 from operator import add
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -95,11 +95,9 @@ def select_survivors(qi: DataFrame, qi_threshold: float = 0.02) -> DataFrame:
 
 # --- P9: ragged-data consistency drop (reference gee.py:161-174) ----------
 
-def band_chunk_counts(docs: DataFrame, bands: Optional[List[str]] = None) -> DataFrame:
-    """Per-document chunk-span count for every band — one codegen pass over
-    the spans array, no explode, no shuffle."""
-    from ..constants import S2_BANDS_10_20
-    bands = list(bands) if bands is not None else S2_BANDS_10_20 + ["SCL"]
+def band_chunk_counts(docs: DataFrame, bands: List[str]) -> DataFrame:
+    """Per-document chunk-span count for each of ``bands`` — one codegen
+    pass over the spans array, no explode, no shuffle."""
     refs = F.col("spans.media_ref")
     counts = [
         F.size(F.filter(refs, lambda r: r.contains(f"/{b}/")))

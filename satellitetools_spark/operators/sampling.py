@@ -55,9 +55,9 @@ def _bounds(splits: Sequence[Tuple[str, int]]):
     return out, total
 
 
-def hash_split(df: DataFrame, key_col: str = "doc_id",
+def hash_split(df: DataFrame,
                splits: Sequence[Tuple[str, int]] = DEFAULT_SPLITS) -> DataFrame:
-    """Append (bucket, split) columns keyed on a portable hash of ``key_col``.
+    """Append (bucket, split) columns keyed on a portable hash of ``doc_id``.
 
     ``splits`` is an ordered (name, weight) sequence; buckets
     [0, sum(weights)) are assigned to splits in order, so ("train", 80),
@@ -65,7 +65,7 @@ def hash_split(df: DataFrame, key_col: str = "doc_id",
     90-99 in test.
     """
     bounds, total = _bounds(splits)
-    bucket = (portable_hash(F.col(key_col)) % total).cast("int")
+    bucket = (portable_hash(F.col("doc_id")) % total).cast("int")
     # build the WHEN chain over the PROJECTED bucket column, not the hash
     # expression — otherwise every branch embeds its own copy of the fold
     label = F.lit(None).cast("string")
@@ -371,9 +371,7 @@ LIMIT {n}
 """
 
 
-def mixture_weights(df: DataFrame, group_col: str = "lang",
-                    alpha: float = 0.7,
-                    size_col: str = "n_chars") -> DataFrame:
+def mixture_weights(df: DataFrame, alpha: float = 0.7) -> DataFrame:
     """Temperature-based source-mixing weights — the multilingual /
     multi-source α-sampling rule (cf. the mBERT/XLM-R exponential
     smoothing): group share ``pᵢ = nᵢ/Σn`` is flattened to
@@ -386,9 +384,9 @@ def mixture_weights(df: DataFrame, group_col: str = "lang",
     broadcast back, pure codegen arithmetic — the output is a tiny
     dimension meant to broadcast-join onto the corpus.
     """
-    g = df.groupBy(group_col).agg(
+    g = df.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col(size_col).cast("double")).alias("size_sum"))
+        F.sum(F.col("n_chars").cast("double")).alias("size_sum"))
     tot = g.agg(F.sum("n_docs").cast("double").alias("_t"))
     p = F.col("n_docs") / F.col("_t")
     # fence: both the normalizer agg and the output read j — one
@@ -400,12 +398,12 @@ def mixture_weights(df: DataFrame, group_col: str = "lang",
     z = j.agg(F.sum(q_unn).alias("_z"))
     out = j.crossJoin(F.broadcast(z))
     q = q_unn / F.col("_z")
-    return (out.select(group_col, "n_docs",
+    return (out.select("lang", "n_docs",
                        F.round(F.col("size_sum"), 6).alias("size_sum"),
                        F.round(F.col("_p"), 6).alias("p_natural"),
                        F.round(q, 6).alias("p_smoothed"),
                        F.round(q / F.col("_p"), 6).alias("boost"))
-            .orderBy(group_col))
+            .orderBy("lang"))
 
 
 def mixture_weights_sql(table: str = "documents", group_col: str = "lang",

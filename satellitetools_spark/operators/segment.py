@@ -145,8 +145,7 @@ FROM sc
 """
 
 
-def gini_concentration(li: DataFrame, key_col: str = "l_suppkey",
-                       value_col: str = "l_extendedprice") -> DataFrame:
+def gini_concentration(li: DataFrame) -> DataFrame:
     """Gini coefficient + top-decile share of revenue concentration.
 
     Per-key exact DECIMAL totals (one shuffle), rank by an
@@ -160,13 +159,13 @@ def gini_concentration(li: DataFrame, key_col: str = "l_suppkey",
     """
     frac = 0.1
     from satellitetools_spark.operators.cumsum import prefix_sums
-    per = (li.groupBy(key_col)
-           .agg(F.sum(F.col(value_col).cast("decimal(18,2)"))
+    per = (li.groupBy("l_suppkey")
+           .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
                 .alias("_x")))
     # global ascending rank + key count via the two-level scan — no
     # single-partition window over the key table
     idxed, tot = prefix_sums(
-        per, [F.col("_x").asc(), F.col(key_col).asc()], [],
+        per, [F.col("_x").asc(), F.col("l_suppkey").asc()], [],
         return_totals=True, with_index=True)
     ranked = idxed.select(
         "_x", F.col("_idx").cast("long").alias("_i"),
@@ -353,8 +352,7 @@ GROUP BY 1, 2
 """
 
 
-def abc_analysis(li: DataFrame, key_col: str = "l_partkey",
-                 value_col: str = "l_extendedprice") -> DataFrame:
+def abc_analysis(li: DataFrame) -> DataFrame:
     """ABC (Pareto) classification of revenue keys: rank keys by
     DECIMAL-exact revenue descending, classify by the cumulative
     revenue share — A up to 80%, B up to 95%, C the tail.
@@ -368,11 +366,11 @@ def abc_analysis(li: DataFrame, key_col: str = "l_partkey",
     doubles at the class boundaries.
     """
     from satellitetools_spark.operators.cumsum import prefix_sums
-    per = (li.groupBy(key_col)
-           .agg(F.sum(F.col(value_col).cast("decimal(18,2)"))
+    per = (li.groupBy("l_partkey")
+           .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
                 .alias("_x")))
     ranked, tot = prefix_sums(
-        per, [F.col("_x").desc(), F.col(key_col).asc()], ["_x"],
+        per, [F.col("_x").desc(), F.col("l_partkey").asc()], ["_x"],
         return_totals=True, with_index=True)
     ranked = (ranked.withColumnRenamed("cum__x", "_cum")
               .withColumnRenamed("_idx", "rank")
@@ -381,7 +379,7 @@ def abc_analysis(li: DataFrame, key_col: str = "l_partkey",
     cls = (F.when(share <= 0.8, "A")
            .when(share <= 0.95, "B").otherwise("C"))
     return ranked.select(
-        F.col(key_col).alias("key"),
+        F.col("l_partkey").alias("key"),
         F.col("rank").cast("long").alias("rank"),
         (F.round(F.col("_x").cast("double"), 4) + 0.0).alias("revenue"),
         (F.round(share, 6) + 0.0).alias("cum_share"),

@@ -408,58 +408,14 @@ def covariance_matrix(emb: DataFrame) -> Tuple[int, np.ndarray, np.ndarray]:
     return n, mu, cov
 
 
-def pca_components(emb: DataFrame, k: int = 8
-                   ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Top-k principal components: one distributed moment pass, then a
-    d×d symmetric eigensolve ON THE DRIVER (d=64 here: microseconds —
-    the textbook split for tall-skinny data where d² fits anywhere but
-    n doesn't). Returns ``(mean, eigenvalues_desc[k], components[k, d])``
-    with a deterministic sign convention (largest-|w| coordinate of each
-    component is positive) so runs and engines agree."""
-    _, mu, cov = covariance_matrix(emb)
-    vals, vecs = np.linalg.eigh(cov)           # ascending
-    order = np.argsort(vals)[::-1][:k]
-    w = vecs[:, order].T                        # (k, d)
-    for j in range(w.shape[0]):
-        i = int(np.argmax(np.abs(w[j])))
-        if w[j, i] < 0:
-            w[j] = -w[j]
-    return mu, vals[order], w
-
-
-def pca_project(emb: DataFrame,
-                components: Optional[Tuple[np.ndarray, np.ndarray]] = None
-                ) -> DataFrame:
-    """Append a PCA projection column ``pca``: ``(x − μ) @ Wᵀ`` as ONE
-    Arrow-batched matmul per batch (closure-captured μ/W ≈ broadcast —
-    k·d doubles). Pass ``components=(mu, w)`` to reuse a trained basis
-    (score new partitions without re-fitting); otherwise fits via
-    :func:`pca_components` first (two Spark jobs total: fit + transform).
-    """
-    if components is None:
-        mu, _, w = pca_components(emb)
-    else:
-        mu, w = components
-    mu_b = np.asarray(mu, dtype=np.float64)
-    w_b = np.asarray(w, dtype=np.float64)
-
-    @pandas_udf(T.ArrayType(T.DoubleType()))
-    def proj(vecs: pd.Series) -> pd.Series:
-        X = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        P = (X - mu_b[None, :]) @ w_b.T
-        return pd.Series(list(P))
-
-    return emb.withColumn("pca", proj(F.col("embedding")))
-
-
-def covariance_entries(emb: DataFrame, digits: int = 6) -> DataFrame:
+def covariance_entries(emb: DataFrame) -> DataFrame:
     """The covariance matrix as (i, j, cov) rows — the oracle-checkable
     surface of the moment pass (the eigensolve itself is not relational
     algebra; its inputs are)."""
     spark = emb.sparkSession
     _, _, cov = covariance_matrix(emb)
     d = cov.shape[0]
-    rows = [(i, j, round(float(cov[i, j]), digits))
+    rows = [(i, j, round(float(cov[i, j]), 6))
             for i in range(d) for j in range(d)]
     return spark.createDataFrame(rows, "i int, j int, cov double")
 
@@ -498,19 +454,19 @@ def _sq_dist(a, b):
 PQ_DIM = 64
 
 
-def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16,
+def pq_encode(emb: DataFrame, m: int = 8,
               seed_order: Optional[Column] = None
               ) -> Tuple[DataFrame, DataFrame]:
     """Product quantization (Jégou et al., TPAMI'11): split each vector
-    into ``m`` subspaces and store only the id of the nearest sub-codebook
-    centroid per subspace — ``m·log2(ksub)`` bits per vector instead of
+    into ``m`` subspaces and store only the id of the nearest of 16
+    sub-codebook centroids per subspace — ``m·4`` bits per vector instead of
     ``PQ_DIM·32``, the compression that makes billion-scale ANN candidate
     scoring RAM-resident.
 
     Codebooks are the hash-stratified seed sample's subvectors (same
     deterministic scheme as :func:`ivf_topk`; pass ``seed_order`` =
     portable hash for the oracle-exact variant). Encoding is one
-    broadcast cross join (|emb| × ksub rows) computing all ``m`` subspace
+    broadcast cross join (|emb| × 16 rows) computing all ``m`` subspace
     distances per pair JVM-side — squared L2 via :func:`_sq_dist` so the
     argmin is engine-portable — then a per-(vector, subspace) min-struct
     pick and one ``array_sort(collect_list)`` reassembly into the code
@@ -526,7 +482,7 @@ def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16,
     if seed_order is None:
         seed_order = F.xxhash64(F.col("vec_id"))
     cent = (emb.orderBy(seed_order.asc(), F.col("vec_id").asc())
-               .limit(ksub)
+               .limit(16)
                .select(F.col("vec_id").alias("centroid_id"),
                        F.col("embedding").cast("array<double>").alias("cvec")))
     pairs = (emb.select("vec_id",
@@ -554,18 +510,18 @@ def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16,
     return codes, cent
 
 
-def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
-            m: int = 8, ksub: int = 16, rerank: int = 0,
+def pq_topk(emb: DataFrame, query_ids: List[int],
+            m: int = 8, rerank: int = 0,
             seed_order: Optional[Column] = None
             ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
+    """Asymmetric-distance (ADC) top-10 over PQ codes: the query stays
     exact; every database vector is scored as the sum of its ``m``
     precomputed query↔centroid subspace distances — a table lookup per
     subspace, never a full d-dim dot product per candidate.
 
-    The distance table (queries × m × ksub rows — KBs) broadcasts to the
+    The distance table (queries × m × 16 rows — KBs) broadcasts to the
     codes join; the sum-over-subspaces is one hash aggregation keyed on
-    (query, vector) and the top-k a per-query window. Approximation error
+    (query, vector) and the top-10 a per-query window. Approximation error
     comes only from quantizing the database side (asymmetric), verified
     in pytest as recall vs brute force; with the portable seed the whole
     pipeline is exact relational math with a verbatim DuckDB oracle.
@@ -581,7 +537,7 @@ def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
     (column ``adist``), which is the oracle-checked surface.
     """
     dsub = PQ_DIM // m
-    codes, cent = pq_encode(emb, m, ksub, seed_order)
+    codes, cent = pq_encode(emb, m, seed_order)
     queries = (emb.filter(F.col("vec_id").isin(query_ids))
                   .select(F.col("vec_id").alias("query_id"),
                           F.col("embedding").cast("array<double>")
@@ -608,7 +564,7 @@ def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
                                                F.asc("vec_id"))
     if not rerank:
         return (scored.withColumn("rank", F.row_number().over(w))
-                      .filter(F.col("rank") <= k)
+                      .filter(F.col("rank") <= 10)
                       .select("query_id",
                               F.col("vec_id").alias("neighbor_id"),
                               "rank", F.round("adist", 6).alias("adist")))
@@ -621,7 +577,7 @@ def pq_topk(emb: DataFrame, query_ids: List[int], k: int = 10,
     w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                 F.asc("vec_id"))
     return (exact.withColumn("rank", F.row_number().over(w2))
-                 .filter(F.col("rank") <= k)
+                 .filter(F.col("rank") <= 10)
                  .select("query_id", F.col("vec_id").alias("neighbor_id"),
                          "rank", F.round("cosine", 6).alias("cosine")))
 
@@ -1009,10 +965,10 @@ mms{step} AS (
             f"FROM mms{int(k)}")
 
 
-def label_outliers(emb: DataFrame, z_threshold: float = 2.0) -> DataFrame:
+def label_outliers(emb: DataFrame) -> DataFrame:
     """Mislabel / contamination candidates: vectors whose distance to
     their OWN label centroid is a per-label z-score outlier
-    (z = (d − μ_label)/σ_label > threshold). The embedding-space twin
+    (z = (d − μ_label)/σ_label > 2). The embedding-space twin
     of MAD anomaly — cheap triage before manual relabeling or
     quarantine. Distances come from the round-6
     :func:`label_silhouette` surface, so both engines threshold
@@ -1029,7 +985,7 @@ def label_outliers(emb: DataFrame, z_threshold: float = 2.0) -> DataFrame:
                                                     F.col("_sd"))
     return (sil.join(F.broadcast(mom), "label")
             .withColumn("z", F.round(z, 6) + 0.0)
-            .filter(F.col("z") > float(z_threshold))
+            .filter(F.col("z") > 2.0)
             .select("label", "vec_id", "dist_own", "silhouette", "z"))
 
 

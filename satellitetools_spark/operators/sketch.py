@@ -105,11 +105,10 @@ FROM sk
 """
 
 
-def kmv_distinct_by(docs: DataFrame, group_col: str = "lang",
-                    k: int = 64) -> DataFrame:
-    """Per-group KMV sketches: one row per group with the k-minimum-value
-    estimate and the exact distinct count — vocabulary size per
-    language/source in a single pass. Demonstrates the property that
+def kmv_distinct_by(docs: DataFrame) -> DataFrame:
+    """Per-language KMV sketches (k = 64): one row per ``lang`` with the
+    k-minimum-value estimate and the exact distinct count — vocabulary
+    size per language in a single pass. Demonstrates the property that
     makes KMV the right scale sketch: per-group state is k values,
     mergeable by union+truncate, so a 10^12-token corpus reduces to
     groups × k longs.
@@ -120,29 +119,27 @@ def kmv_distinct_by(docs: DataFrame, group_col: str = "lang",
     at group cardinality.
     """
     from pyspark.sql import Window
-    if k < 2:
-        raise ValueError("kmv_distinct_by: k must be >= 2")
     toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
     # distinct (group, token) first: exact_distinct must count tokens,
     # not hash values (hash collisions undercount the true cardinality)
-    ts = (docs.select(F.col(group_col).alias("grp"),
+    ts = (docs.select(F.col("lang").alias("grp"),
                       F.explode(toks).alias("token"))
           .distinct())
     hs = (ts.select("grp", _mix(portable_hash(F.col("token"))).alias("h"))
           .distinct())
     w = Window.partitionBy("grp").orderBy("h")
     kmin = hs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k)
+        F.col("rn") <= 64)
     sk = kmin.groupBy("grp").agg(F.count("*").alias("n_kept"),
                                  F.max("h").alias("kth_hash"))
     exact = ts.groupBy("grp").agg(F.count("*").alias("exact_distinct"))
     return (sk.join(exact, "grp")
-            .select(F.col("grp").alias(group_col), F.lit(k).alias("k"),
+            .select(F.col("grp").alias("lang"), F.lit(64).alias("k"),
                     "n_kept", "kth_hash",
-                    F.round(F.when(F.col("n_kept") < k,
+                    F.round(F.when(F.col("n_kept") < 64,
                                    F.col("n_kept").cast("double"))
-                            .otherwise((F.lit(float(k - 1)) * F.lit(float(_M)))
+                            .otherwise((F.lit(63.0) * F.lit(float(_M)))
                                        / F.col("kth_hash")), 6)
                     .alias("est_distinct"),
                     "exact_distinct"))
@@ -176,21 +173,18 @@ FROM gsk JOIN gex USING (grp)
 """
 
 
-def kmv_distinct_keys(df: DataFrame, group_col: str, key_col: str,
-                      k: int = 64) -> DataFrame:
+def kmv_distinct_keys(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Per-group KMV over an arbitrary KEY column (distinct users per
     day, distinct sessions per tile, …) — :func:`kmv_distinct_by`
     without the tokenizer: the sketch input is ``key_col`` cast to
     string and hashed with the same mixed portable fold, so any keyed
-    stream gets mergeable groups × k distinct-count state.
+    stream gets mergeable groups × k distinct-count state (k = 64).
 
     Same shape: DISTINCT (group, hash) with map-side partial dedup,
     ranked window at group-key cardinality, one agg at group
     cardinality; exact count alongside for error accounting.
     """
     from pyspark.sql import Window
-    if k < 2:
-        raise ValueError("kmv_distinct_keys: k must be >= 2")
     ts = (df.select(F.col(group_col).alias("grp"),
                     F.col(key_col).cast("string").alias("key"))
           .distinct())
@@ -198,16 +192,16 @@ def kmv_distinct_keys(df: DataFrame, group_col: str, key_col: str,
           .distinct())
     w = Window.partitionBy("grp").orderBy("h")
     kmin = hs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k)
+        F.col("rn") <= 64)
     sk = kmin.groupBy("grp").agg(F.count("*").alias("n_kept"),
                                  F.max("h").alias("kth_hash"))
     exact = ts.groupBy("grp").agg(F.count("*").alias("exact_distinct"))
     return (sk.join(exact, "grp")
-            .select(F.col("grp").alias(group_col), F.lit(k).alias("k"),
+            .select(F.col("grp").alias(group_col), F.lit(64).alias("k"),
                     "n_kept", "kth_hash",
-                    F.round(F.when(F.col("n_kept") < k,
+                    F.round(F.when(F.col("n_kept") < 64,
                                    F.col("n_kept").cast("double"))
-                            .otherwise((F.lit(float(k - 1)) * F.lit(float(_M)))
+                            .otherwise((F.lit(63.0) * F.lit(float(_M)))
                                        / F.col("kth_hash")), 6)
                     .alias("est_distinct"),
                     "exact_distinct"))
@@ -243,8 +237,7 @@ FROM kksk JOIN kkex USING (grp)
 # Two-pass Misra-Gries heavy hitters over tokens
 # ---------------------------------------------------------------------------
 
-def heavy_hitters(docs: DataFrame, text_col: str = "text",
-                  phi: float = 0.01) -> DataFrame:
+def heavy_hitters(docs: DataFrame, phi: float = 0.01) -> DataFrame:
     """All tokens occupying ≥ ``phi`` of the corpus token stream, with
     their EXACT counts — the φ-heavy-hitters a tokenizer/vocab audit
     needs, computed without ever shuffling the full token alphabet.
@@ -282,7 +275,7 @@ def heavy_hitters(docs: DataFrame, text_col: str = "text",
         counters: dict = {}
         total = 0
         for pdf in batches:
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 if text is None:
                     continue
                 toks = re.split(r"\s+", text.strip())
@@ -305,7 +298,7 @@ def heavy_hitters(docs: DataFrame, text_col: str = "text",
             {"token": list(counters.keys()) + ["\x00__total__"],
              "lb": list(counters.values()) + [total]})
 
-    summary = docs.select(text_col).mapInPandas(
+    summary = docs.select("text").mapInPandas(
         _mg, schema="token string, lb long")
     merged = (summary.groupBy("token")
               .agg(F.sum("lb").alias("lb")))
@@ -316,7 +309,7 @@ def heavy_hitters(docs: DataFrame, text_col: str = "text",
             .filter(F.col("lb") >= F.lit(phi / 2.0) * F.col("n_tokens"))
             .select("token"))
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+"))
+        F.explode(F.split(F.trim(F.col("text")), r"\s+"))
         .alias("token"))
     # one verify scan produces BOTH the exact candidate counts and the
     # exact global token total: non-candidates collapse into a single

@@ -20,13 +20,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_group_count(df: DataFrame, key: str = "tileid",
-                       n_salt: int = 16) -> DataFrame:
-    """Two-stage (salted partial + final) count per key — the map-side
+def salted_group_count(df: DataFrame, n_salt: int = 16) -> DataFrame:
+    """Two-stage (salted partial + final) count per ``tileid`` — the map-side
     combine pattern made explicit for very hot keys."""
     salt = F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salt))
-    partial = df.groupBy(F.col(key), salt.alias("_salt")).count()
-    return partial.groupBy(key).agg(F.sum("count").alias("count"))
+    partial = df.groupBy(F.col("tileid"), salt.alias("_salt")).count()
+    return partial.groupBy("tileid").agg(F.sum("count").alias("count"))
 
 
 def salted_join(big: DataFrame, dim: DataFrame, key: str,

@@ -161,8 +161,8 @@ def zorder_key(x, y):
     shift/mask ops per coordinate, no UDF).
 
     This is the data-LAYOUT primitive for 100 TB spatial tables: writing
-    pixel/point files ordered by ``zorder_key`` (see ``cluster_by_zorder``)
-    makes any bbox predicate prune to a small set of contiguous key ranges,
+    pixel/point files ordered by ``zorder_key`` (range-partitioned and
+    sorted within partitions) makes any bbox predicate prune to a small set of contiguous key ranges,
     so the parquet min/max stats on one column stand in for a 2-D index.
     """
     m = F.lit(2 ** _ZORDER_BITS)
@@ -286,17 +286,16 @@ FROM fval p JOIN fagg a
 """
 
 
-def cell_pyramid(px: DataFrame, value_col: str, levels: int = 4,
-                 base_m: float = 20.0) -> DataFrame:
+def cell_pyramid(px: DataFrame, value_col: str, levels: int = 4) -> DataFrame:
     """Multi-resolution cell rollup (tile-pyramid aggregation): the value
     column aggregated into planar grid cells at ``levels`` dyadic
-    resolutions (``base_m``, ``2*base_m``, ``4*base_m``, ...) — the
+    resolutions (20 m, 40 m, 80 m, ...) — the
     overview/zoom-level statistics a map service or hypertable rollup
     maintains, composited across all scenes.
 
     Single-pass grouping-sets form: each pixel explodes to one row per
     level (a CONSTANT ``levels``× fanout, codegen — never data-dependent)
-    keyed by ``floor(x / (base_m * 2^level))``, then ONE hash aggregation
+    keyed by ``floor(x / (20 * 2^level))``, then ONE hash aggregation
     on (level, cx, cy). Map-side partial combine collapses the fanout to
     per-level cell cardinality before the shuffle, so shuffle volume is
     Σ_level |cells_level| (≈ 1.33 × the finest level), not ``levels`` ×
@@ -319,7 +318,7 @@ def cell_pyramid(px: DataFrame, value_col: str, levels: int = 4,
         raise ValueError("cell_pyramid: levels must be >= 1")
     tiers = F.explode(F.array(*[
         F.struct(F.lit(lvl).alias("level"),
-                 F.lit(float(base_m) * (2 ** lvl)).alias("size"))
+                 F.lit(20.0 * (2 ** lvl)).alias("size"))
         for lvl in range(levels)])).alias("_t")
     v = F.col(value_col)
     e = (px.select(v.alias("_v"), F.col("x").alias("_x"),
@@ -360,16 +359,6 @@ FROM pyr_px GROUP BY 2, 3""")
     return (f"WITH pyr_src AS ({pixels_sql}),\n"
             f"pyr_px AS (SELECT x, y, {value_sql} AS v FROM pyr_src)\n"
             + body)
-
-
-def cluster_by_zorder(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Range-partition + locally sort by the Morton key — the shape of a
-    spatially-clustered table write (`.write.parquet` on the result gives
-    files whose per-file zkey min/max are tight, hence prunable). One
-    range exchange; the sort is partition-local."""
-    keyed = df.withColumn("zkey", zorder_key(F.col("x"), F.col("y")))
-    return (keyed.repartitionByRange(num_partitions, "zkey")
-                 .sortWithinPartitions("zkey"))
 
 
 def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict]) -> DataFrame:
@@ -763,9 +752,9 @@ def distance_join(points: DataFrame, stations: DataFrame, radius: float,
             .withColumn("dist", F.round(F.sqrt(d2), 6)))
 
 
-def knn_join(points: DataFrame, stations: DataFrame, k: int = 3,
+def knn_join(points: DataFrame, stations: DataFrame,
              radius: float = 3 * CELL_SIZE_M) -> DataFrame:
-    """k-nearest-neighbor join: for each point, its ``k`` nearest
+    """k-nearest-neighbor join (k = 3): for each point, its k nearest
     stations by planar distance (deterministic (dist, station_id) tie
     order) — the lookup join behind nearest-sensor attribution and
     ground-truth matching.
@@ -793,15 +782,14 @@ def knn_join(points: DataFrame, stations: DataFrame, k: int = 3,
     wk = Window.partitionBy("doc_id", "x", "y")
     return (pairs.withColumn("knn_rank", F.row_number().over(w))
             .withColumn("n_cand", F.count("*").over(wk))
-            .filter(F.col("knn_rank") <= k)
-            .withColumn("truncated", F.col("n_cand") < k)
+            .filter(F.col("knn_rank") <= 3)
+            .withColumn("truncated", F.col("n_cand") < 3)
             .drop("n_cand", "sx", "sy"))
 
 
-def categorical_mode_grid(px: DataFrame, value_col: str = "SCL",
-                          size_m: float = 4 * 10.0) -> DataFrame:
+def categorical_mode_grid(px: DataFrame, size_m: float = 4 * 10.0) -> DataFrame:
     """Categorical (majority-vote) raster downsampling: each coarse
-    ``size_m`` cell takes the most frequent class of the pixels inside
+    ``size_m`` cell takes the most frequent ``SCL`` class of the pixels inside
     it — the correct resampling rule for class rasters (SCL, land
     cover), where bilinear averaging of class IDs is meaningless.
     Deterministic tie order: highest count, then SMALLEST class id.
@@ -814,7 +802,7 @@ def categorical_mode_grid(px: DataFrame, value_col: str = "SCL",
     cx = F.floor(F.col("x") / size_m).cast("long")
     cy = F.floor(F.col("y") / size_m).cast("long")
     counts = (px.select(cx.alias("cx"), cy.alias("cy"),
-                        F.col(value_col).alias("v"))
+                        F.col("SCL").alias("v"))
               .groupBy("cx", "cy", "v")
               .agg(F.count("*").alias("n")))
     w = Window.partitionBy("cx", "cy").orderBy(
@@ -1019,19 +1007,17 @@ FROM fda
 # Best-pixel temporal composite
 # ---------------------------------------------------------------------------
 
-def greenest_composite(px: DataFrame, value_col: str = "ndvi",
-                       time_col: str = "date_str",
-                       tiebreak_col: str = "doc_id",
+def greenest_composite(px: DataFrame,
                        payload_cols: Sequence[str] = ()) -> DataFrame:
     """Best-pixel (max-value) temporal composite — the classic
     cloud-free mosaic builder (greenest-pixel Landsat/Sentinel
     composites): per location, keep the observation with the maximum
-    index value across the whole stack, plus when it was taken and any
-    payload bands from the winning row.
+    ``ndvi`` across the whole stack, plus when it was taken
+    (``date_str``) and any payload bands from the winning row.
 
-    Deterministic argmax: the struct orders (value, time, tiebreak) so
-    equal values resolve to the latest date, then the largest tiebreak
-    id; payload fields sit AFTER the unique tiebreak and can never
+    Deterministic argmax: the struct orders (value, time, doc_id) so
+    equal values resolve to the latest date, then the largest doc_id;
+    payload fields sit AFTER the unique tiebreak and can never
     influence the comparison. Rows with NULL value drop first — the
     struct is only built for non-null values, keeping both engines'
     struct ordering away from NULL-field semantics.
@@ -1040,17 +1026,17 @@ def greenest_composite(px: DataFrame, value_col: str = "ndvi",
     No window, no join, no second scan — at 10^12 pixels this is the
     cheapest possible reduction of a raster time stack.
     """
-    v = F.col(value_col).cast("double")
-    fields = [F.round(v, 6).alias("v"), F.col(time_col).alias("t"),
-              F.col(tiebreak_col).alias("tb")]
+    v = F.col("ndvi").cast("double")
+    fields = [F.round(v, 6).alias("v"), F.col("date_str").alias("t"),
+              F.col("doc_id").alias("tb")]
     fields += [F.col(c).alias(c) for c in payload_cols]
     best = F.max(F.when(v.isNotNull(), F.struct(*fields)))
     out = (px.groupBy("x", "y")
            .agg(F.count(v).cast("long").alias("n_obs"), best.alias("_b")))
     sel = ["x", "y", "n_obs",
-           F.col("_b.v").alias(f"best_{value_col}"),
-           F.col("_b.t").alias("best_" + time_col),
-           F.col("_b.tb").alias("best_" + tiebreak_col)]
+           F.col("_b.v").alias("best_ndvi"),
+           F.col("_b.t").alias("best_date_str"),
+           F.col("_b.tb").alias("best_doc_id")]
     # payload passes through UNROUNDED: it is the winning row's raw
     # column (bit-identical in any engine reading the same input), and
     # re-rounding a raw double can land on a half-way representation
@@ -1170,15 +1156,15 @@ FROM ggz
 """
 
 
-def gstar_by_doc(px: DataFrame, value_col: str = "v") -> DataFrame:
+def gstar_by_doc(px: DataFrame) -> DataFrame:
     """Gi* z-score per (doc, cell) with PER-DOC global moments — the
     per-time-slice stage of emerging-hotspot analysis (doc_id = the time
     bin). Same two-shuffle shape as :func:`getis_ord_gstar`; the moments
     frame is per-doc (time-bin cardinality) and broadcast into the join.
     Input must be unique per (doc_id, cell) — pre-aggregate first.
     """
-    g = focal_conv(px, value_col, {"gsum": GSTAR})
-    v = F.col(value_col).cast("double")
+    g = focal_conv(px, "v", {"gsum": GSTAR})
+    v = F.col("v").cast("double")
     stats = px.groupBy("doc_id").agg(
         F.count(v).alias("_n"), F.avg(v).alias("_mu"),
         F.avg(v * v).alias("_msq"))
@@ -1189,7 +1175,7 @@ def gstar_by_doc(px: DataFrame, value_col: str = "v") -> DataFrame:
     den = s * F.sqrt((F.col("_n") * wi - wi * wi) / (F.col("_n") - 1))
     den = F.when(den != 0, den)
     return j.select("doc_id", "ix", "iy",
-                    F.col(value_col).cast("double").alias(value_col),
+                    F.col("v").cast("double").alias("v"),
                     F.col("n_neigh").alias("w_i"),
                     F.round(num / den, 6).alias("gi_z"))
 
@@ -1764,7 +1750,7 @@ FROM tij GROUP BY ix, iy
 """
 
 
-def ripley_k(points: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",)) -> DataFrame:
+def ripley_k(points: DataFrame) -> DataFrame:
     """Ripley's K point-pattern statistic per key — the
     clustered-vs-dispersed test for spatial point sets (are the
     high-NDVI pixels / fire detections / settlements clumped beyond
@@ -1784,27 +1770,27 @@ def ripley_k(points: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",)) -> Data
     radii = (30.0, 60.0, 90.0)
     rmax = radii[-1]
     base = points.select(
-        *key_cols,
+        "doc_id",
         F.col("x").cast("double").alias("x"),
         F.col("y").cast("double").alias("y"),
         F.floor(F.col("x") / rmax).cast("long").alias("bx"),
         F.floor(F.col("y") / rmax).cast("long").alias("by"))
     base = base.localCheckpoint(eager=False)
-    stats = base.groupBy(*key_cols).agg(
+    stats = base.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_points"),
         ((F.max("x") - F.min("x") + 20.0)
          * (F.max("y") - F.min("y") + 20.0)).alias("area"))
     probe = (base.select(
-        *key_cols, F.col("x").alias("ax"), F.col("y").alias("ay"),
+        "doc_id", F.col("x").alias("ax"), F.col("y").alias("ay"),
         "bx", "by",
         F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
                                      F.lit(dy).alias("dy"))
                             for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
         .alias("_o"))
-        .select(*key_cols, "ax", "ay",
+        .select("doc_id", "ax", "ay",
                 (F.col("bx") + F.col("_o.dx")).alias("bx"),
                 (F.col("by") + F.col("_o.dy")).alias("by")))
-    cand = (probe.join(base, [*key_cols, "bx", "by"])
+    cand = (probe.join(base, ["doc_id", "bx", "by"])
             .filter((F.col("ax") < F.col("x"))
                     | ((F.col("ax") == F.col("x"))
                        & (F.col("ay") < F.col("y"))))
@@ -1813,10 +1799,9 @@ def ripley_k(points: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",)) -> Data
             .filter(F.col("d2") <= rmax * rmax))
     paggs = [F.sum(F.when(F.col("d2") <= r * r, 1).otherwise(0))
              .cast("long").alias(f"_p{i}") for i, r in enumerate(radii)]
-    pairs = cand.groupBy(*key_cols).agg(*paggs)
-    out = stats.join(pairs, on=list(key_cols), how="left")
-    cols = [*key_cols, F.col("n_points"),
-            F.round("area", 6).alias("area")]
+    pairs = cand.groupBy("doc_id").agg(*paggs)
+    out = stats.join(pairs, on=["doc_id"], how="left")
+    cols = ["doc_id", F.col("n_points"), F.round("area", 6).alias("area")]
     for i, r in enumerate(radii):
         p = F.coalesce(F.col(f"_p{i}"), F.lit(0))
         nn = F.col("n_points") * (F.col("n_points") - 1)
@@ -1881,15 +1866,13 @@ GROUP BY s.{key_cols[0]}{"".join(f", s.{k}" for k in key_cols[1:])}, s.n_points
 """
 
 
-def clark_evans(points: DataFrame,
-                key_cols: Tuple[str, ...] = ("doc_id",),
-                radius: float = 90.0) -> DataFrame:
+def clark_evans(points: DataFrame) -> DataFrame:
     """Clark-Evans nearest-neighbor index per key — the one-number
     companion of :func:`ripley_k` (R = observed mean NN distance /
     expected under CSR; R < 1 clustered, R ≈ 1 random, R > 1 dispersed)
     with the normal z-score ``(d̄−E)/SE``, ``E = 0.5/√(n/A)``,
     ``SE = 0.26136/√(n²/A)``. Naive estimator (no edge correction);
-    the NN search is truncated at ``radius`` and ``n_matched`` reports
+    the NN search is truncated at 90 m and ``n_matched`` reports
     how many points found a neighbor there — interpret R only when
     n_matched = n_points.
 
@@ -1898,43 +1881,43 @@ def clark_evans(points: DataFrame,
     cardinality, and a key-cardinality agg. Never an all-pairs join.
     """
     base = points.select(
-        *key_cols,
+        "doc_id",
         F.col("x").cast("double").alias("x"),
         F.col("y").cast("double").alias("y"),
-        F.floor(F.col("x") / radius).cast("long").alias("bx"),
-        F.floor(F.col("y") / radius).cast("long").alias("by"))
+        F.floor(F.col("x") / 90.0).cast("long").alias("bx"),
+        F.floor(F.col("y") / 90.0).cast("long").alias("by"))
     base = base.localCheckpoint(eager=False)
-    stats = base.groupBy(*key_cols).agg(
+    stats = base.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_points"),
         ((F.max("x") - F.min("x") + 20.0)
          * (F.max("y") - F.min("y") + 20.0)).alias("area"))
     probe = (base.select(
-        *key_cols, F.col("x").alias("ax"), F.col("y").alias("ay"),
+        "doc_id", F.col("x").alias("ax"), F.col("y").alias("ay"),
         "bx", "by",
         F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
                                      F.lit(dy).alias("dy"))
                             for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
         .alias("_o"))
-        .select(*key_cols, "ax", "ay",
+        .select("doc_id", "ax", "ay",
                 (F.col("bx") + F.col("_o.dx")).alias("bx"),
                 (F.col("by") + F.col("_o.dy")).alias("by")))
-    nn = (probe.join(base, [*key_cols, "bx", "by"])
+    nn = (probe.join(base, ["doc_id", "bx", "by"])
           .filter((F.col("ax") != F.col("x"))
                   | (F.col("ay") != F.col("y")))
           .withColumn("d2", (F.col("x") - F.col("ax")) ** 2
                       + (F.col("y") - F.col("ay")) ** 2)
-          .filter(F.col("d2") <= radius * radius)
-          .groupBy(*key_cols, "ax", "ay")
+          .filter(F.col("d2") <= 90.0 * 90.0)
+          .groupBy("doc_id", "ax", "ay")
           .agg(F.min("d2").alias("nnd2")))
-    magg = nn.groupBy(*key_cols).agg(
+    magg = nn.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_matched"),
         F.avg(F.sqrt("nnd2")).alias("dbar"))
-    out = stats.join(magg, on=list(key_cols), how="left")
+    out = stats.join(magg, on=["doc_id"], how="left")
     e = 0.5 / F.sqrt(F.col("n_points") / F.col("area"))
     se = 0.26136 / F.sqrt(F.col("n_points") * F.col("n_points")
                           / F.col("area"))
     return out.select(
-        *key_cols, "n_points",
+        "doc_id", "n_points",
         F.coalesce(F.col("n_matched"), F.lit(0)).alias("n_matched"),
         F.round("area", 6).alias("area"),
         F.round("dbar", 6).alias("mean_nn_dist"),
@@ -1992,7 +1975,6 @@ FROM ces s LEFT JOIN cem m ON {" AND ".join(f"s.{k} = m.{k}" for k in key_cols)}
 
 
 def kde_grid(points: DataFrame,
-             key_cols: Tuple[str, ...] = ("doc_id",),
              bandwidth: float = 40.0, cell_m: float = CELL_SIZE_M
              ) -> DataFrame:
     """Gaussian kernel density estimate evaluated at the occupied grid
@@ -2012,45 +1994,45 @@ def kde_grid(points: DataFrame,
     """
     cutoff = 3.0 * bandwidth
     base = points.select(
-        *key_cols,
+        "doc_id",
         F.col("x").cast("double").alias("x"),
         F.col("y").cast("double").alias("y"))
     base = base.localCheckpoint(eager=False)
-    npts = base.groupBy(*key_cols).agg(
+    npts = base.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_points"))
     cells = (base.select(
-        *key_cols,
+        "doc_id",
         F.floor(F.col("x") / cell_m).cast("long").alias("cx"),
         F.floor(F.col("y") / cell_m).cast("long").alias("cy"))
         .distinct()
-        .select(*key_cols, "cx", "cy",
+        .select("doc_id", "cx", "cy",
                 ((F.col("cx") + 0.5) * cell_m).alias("ex"),
                 ((F.col("cy") + 0.5) * cell_m).alias("ey"))
         .withColumn("bx", F.floor(F.col("ex") / cutoff).cast("long"))
         .withColumn("by", F.floor(F.col("ey") / cutoff).cast("long")))
     sent = (base.select(
-        *key_cols, "x", "y",
+        "doc_id", "x", "y",
         F.floor(F.col("x") / cutoff).cast("long").alias("pbx"),
         F.floor(F.col("y") / cutoff).cast("long").alias("pby"),
         F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
                                      F.lit(dy).alias("dy"))
                             for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
         .alias("_o"))
-        .select(*key_cols, "x", "y",
+        .select("doc_id", "x", "y",
                 (F.col("pbx") + F.col("_o.dx")).alias("bx"),
                 (F.col("pby") + F.col("_o.dy")).alias("by")))
     h2 = bandwidth * bandwidth
-    j = (sent.join(cells, [*key_cols, "bx", "by"])
+    j = (sent.join(cells, ["doc_id", "bx", "by"])
          .withColumn("d2", (F.col("x") - F.col("ex")) ** 2
                      + (F.col("y") - F.col("ey")) ** 2)
          .filter(F.col("d2") <= cutoff * cutoff))
-    agg = (j.groupBy(*key_cols, "cx", "cy")
+    agg = (j.groupBy("doc_id", "cx", "cy")
            .agg(F.round(F.sum(F.exp(-F.col("d2") / (2.0 * h2))), 6)
                 .alias("kernel_sum"),
                 F.count("*").cast("long").alias("n_contrib")))
-    out = agg.join(F.broadcast(npts), on=list(key_cols))
+    out = agg.join(F.broadcast(npts), on=["doc_id"])
     return out.select(
-        *key_cols, "cx", "cy", "n_contrib", "kernel_sum",
+        "doc_id", "cx", "cy", "n_contrib", "kernel_sum",
         F.round(F.col("kernel_sum")
                 / (2.0 * math.pi * h2 * F.col("n_points")), 12)
         .alias("density"))
@@ -2108,14 +2090,13 @@ FROM kda JOIN kdn USING ({keys})
 """
 
 
-def knox_test(points: DataFrame,
-              key_cols: Tuple[str, ...] = ("aoi",),
-              ds: float = 60.0, dt: float = 10.0) -> DataFrame:
+def knox_test(points: DataFrame) -> DataFrame:
     """Knox space-time interaction test per key — the epidemiology /
     disturbance-monitoring classic (do events cluster in space AND time
     TOGETHER, beyond what their separate spatial and temporal
     clustering implies?): over all unordered point pairs, ``X`` = pairs
-    close in both (d ≤ ds, |Δt| ≤ dt), compared with the independence
+    close in both (d ≤ 60 m, |Δt| ≤ 10 days), compared with the
+    independence
     expectation ``E[X] = Ns·Nt/T`` (Ns spatial-close, Nt time-close,
     T total pairs); ratio > 1 = interaction. Input must be DISTINCT
     (key, x, y, t) rows; t is a day number (double).
@@ -2123,62 +2104,60 @@ def knox_test(points: DataFrame,
     Shape: three different cardinalities, none all-pairs — T is pure
     arithmetic on n; Nt folds the per-(key, date) histogram (dates²
     per key, tiny) through one key equi-join; Ns and X share ONE
-    bucketed spatial join (constant 9× fan-out at ``ds``) with the
+    bucketed spatial join (constant 9× fan-out at 60 m) with the
     lexicographic (x, y, t) dedup. The oracle computes all four from a
     brute-force pair join — a fully independent algorithm.
     """
     base = points.select(
-        *key_cols,
+        "aoi",
         F.col("x").cast("double").alias("x"),
         F.col("y").cast("double").alias("y"),
         F.col("td").cast("double").alias("td"),
-        F.floor(F.col("x") / ds).cast("long").alias("bx"),
-        F.floor(F.col("y") / ds).cast("long").alias("by"))
+        F.floor(F.col("x") / 60.0).cast("long").alias("bx"),
+        F.floor(F.col("y") / 60.0).cast("long").alias("by"))
     base = base.localCheckpoint(eager=False)
     # T = n(n-1)/2
-    nn = base.groupBy(*key_cols).agg(
+    nn = base.groupBy("aoi").agg(
         F.count("*").cast("long").alias("n_points"))
     # Nt from the per-date histogram
-    hist = base.groupBy(*key_cols, "td").agg(
+    hist = base.groupBy("aoi", "td").agg(
         F.count("*").cast("double").alias("c"))
-    h1 = hist.select(*key_cols, F.col("td").alias("t1"),
-                     F.col("c").alias("c1"))
-    h2 = hist.select(*key_cols, F.col("td").alias("t2"),
-                     F.col("c").alias("c2"))
-    cross = (h1.join(h2, on=list(key_cols))
+    h1 = hist.select("aoi", F.col("td").alias("t1"), F.col("c").alias("c1"))
+    h2 = hist.select("aoi", F.col("td").alias("t2"), F.col("c").alias("c2"))
+    cross = (h1.join(h2, on=["aoi"])
              .filter((F.col("t1") < F.col("t2"))
-                     & (F.col("t2") - F.col("t1") <= dt))
-             .groupBy(*key_cols)
+                     & (F.col("t2") - F.col("t1") <= 10.0))
+             .groupBy("aoi")
              .agg(F.sum(F.col("c1") * F.col("c2")).alias("nt_cross")))
-    within = hist.groupBy(*key_cols).agg(
+    within = hist.groupBy("aoi").agg(
         F.sum(F.col("c") * (F.col("c") - 1) / 2.0).alias("nt_within"))
     # Ns and X from one bucketed join
     probe = (base.select(
-        *key_cols, F.col("x").alias("ax"), F.col("y").alias("ay"),
+        "aoi", F.col("x").alias("ax"), F.col("y").alias("ay"),
         F.col("td").alias("atd"), "bx", "by",
         F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
                                      F.lit(dy).alias("dy"))
                             for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
         .alias("_o"))
-        .select(*key_cols, "ax", "ay", "atd",
+        .select("aoi", "ax", "ay", "atd",
                 (F.col("bx") + F.col("_o.dx")).alias("bx"),
                 (F.col("by") + F.col("_o.dy")).alias("by")))
     lex = ((F.col("ax") < F.col("x"))
            | ((F.col("ax") == F.col("x")) & (F.col("ay") < F.col("y")))
            | ((F.col("ax") == F.col("x")) & (F.col("ay") == F.col("y"))
               & (F.col("atd") < F.col("td"))))
-    cand = (probe.join(base, [*key_cols, "bx", "by"])
+    cand = (probe.join(base, ["aoi", "bx", "by"])
             .filter(lex)
             .withColumn("d2", (F.col("x") - F.col("ax")) ** 2
                         + (F.col("y") - F.col("ay")) ** 2)
-            .filter(F.col("d2") <= ds * ds))
-    sx = cand.groupBy(*key_cols).agg(
+            .filter(F.col("d2") <= 60.0 * 60.0))
+    sx = cand.groupBy("aoi").agg(
         F.count("*").cast("long").alias("ns"),
-        F.sum(F.when(F.abs(F.col("td") - F.col("atd")) <= dt, 1)
+        F.sum(F.when(F.abs(F.col("td") - F.col("atd")) <= 10.0, 1)
               .otherwise(0)).cast("long").alias("x_st"))
-    out = (nn.join(within, on=list(key_cols), how="left")
-           .join(cross, on=list(key_cols), how="left")
-           .join(sx, on=list(key_cols), how="left"))
+    out = (nn.join(within, on=["aoi"], how="left")
+           .join(cross, on=["aoi"], how="left")
+           .join(sx, on=["aoi"], how="left"))
     t_pairs = (F.col("n_points") * (F.col("n_points") - 1) / 2.0)
     nt = (F.coalesce(F.col("nt_within"), F.lit(0.0))
           + F.coalesce(F.col("nt_cross"), F.lit(0.0)))
@@ -2186,8 +2165,7 @@ def knox_test(points: DataFrame,
     x = F.coalesce(F.col("x_st"), F.lit(0))
     ex = ns * nt / F.when(t_pairs != 0, t_pairs)
     return out.select(
-        *key_cols, "n_points",
-        t_pairs.cast("long").alias("t_pairs"),
+        "aoi", "n_points", t_pairs.cast("long").alias("t_pairs"),
         ns.cast("long").alias("ns"),
         nt.cast("long").alias("nt"),
         x.alias("x_st"),
@@ -2253,7 +2231,6 @@ _NEIGH4 = [(1, 0), (-1, 0), (0, 1), (0, -1)]
 
 
 def region_label(cells: DataFrame,
-                 key_cols: Tuple[str, ...] = ("doc_id",),
                  connectivity: int = 4) -> DataFrame:
     """Connected-component labeling of a foreground cell raster per key
     (4-connectivity) — raster blob detection: which contiguous patches
@@ -2272,8 +2249,7 @@ def region_label(cells: DataFrame,
     checkpointed to keep lineage flat. At 10¹² cells each round is one
     co-partitioned shuffle of the foreground only.
     """
-    base = (cells.select(*key_cols,
-                         F.col("ix").cast("long").alias("ix"),
+    base = (cells.select("doc_id", F.col("ix").cast("long").alias("ix"),
                          F.col("iy").cast("long").alias("iy"))
             .dropDuplicates()  # many points can map to one cell
             .localCheckpoint(eager=False))
@@ -2294,15 +2270,14 @@ def region_label(cells: DataFrame,
         F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
         for dx, dy in neigh])).alias("_o")
     for _ in range(64):
-        sent = (lab.select(*key_cols, "ix", "iy", "label", off)
-                .select(*key_cols,
-                        (F.col("ix") + F.col("_o.dx")).alias("ix"),
+        sent = (lab.select("doc_id", "ix", "iy", "label", off)
+                .select("doc_id", (F.col("ix") + F.col("_o.dx")).alias("ix"),
                         (F.col("iy") + F.col("_o.dy")).alias("iy"),
                         "label"))
-        best = (sent.groupBy(*key_cols, "ix", "iy")
+        best = (sent.groupBy("doc_id", "ix", "iy")
                 .agg(F.min("label").alias("_nb")))
-        lab = (lab.join(best, [*key_cols, "ix", "iy"], "left")
-               .select(*key_cols, "ix", "iy",
+        lab = (lab.join(best, ["doc_id", "ix", "iy"], "left")
+               .select("doc_id", "ix", "iy",
                        F.least(F.col("label"),
                                F.coalesce(F.col("_nb"), F.col("label")))
                        .alias("label"))
@@ -2311,7 +2286,7 @@ def region_label(cells: DataFrame,
         if total == prev_total:
             break
         prev_total = total
-    return lab.select(*key_cols, "ix", "iy", "label")
+    return lab.select("doc_id", "ix", "iy", "label")
 
 
 def region_label_sql(cells_sql: str,
@@ -2444,9 +2419,7 @@ FROM vdj GROUP BY direction, d2
 """
 
 
-def percentile_stretch(px: DataFrame,
-                       key_cols: Tuple[str, ...] = ("doc_id",),
-                       value_col: str = "v") -> DataFrame:
+def percentile_stretch(px: DataFrame) -> DataFrame:
     """Percentile normalization (histogram equalization) of a band per
     scene — the contrast stretch that makes values comparable across
     scenes with different illumination/sensor gain before thresholding
@@ -2463,17 +2436,16 @@ def percentile_stretch(px: DataFrame,
     # NULLS LAST to match DuckDB's default window ordering (Spark's
     # ascending default is nulls-first; nodata pixels would shift every
     # non-null rank by the null count otherwise).
-    w = _W.partitionBy(*key_cols).orderBy(
-        F.col(value_col).asc_nulls_last())
-    ext = px.groupBy(*key_cols).agg(
-        F.min(value_col).alias("_lo"), F.max(value_col).alias("_hi"))
-    j = px.join(F.broadcast(ext), on=list(key_cols))
+    w = _W.partitionBy("doc_id").orderBy(
+        F.col("v").asc_nulls_last())
+    ext = px.groupBy("doc_id").agg(
+        F.min("v").alias("_lo"), F.max("v").alias("_hi"))
+    j = px.join(F.broadcast(ext), on=["doc_id"])
     rng = F.col("_hi") - F.col("_lo")
     return j.select(
-        *key_cols, "x", "y",
-        F.round(F.col(value_col), 6).alias("v"),
+        "doc_id", "x", "y", F.round(F.col("v"), 6).alias("v"),
         F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        (F.round((F.col(value_col) - F.col("_lo"))
+        (F.round((F.col("v") - F.col("_lo"))
                  / F.when(rng != 0, rng), 6) + 0.0).alias("stretched"))
 
 
@@ -2835,7 +2807,6 @@ FROM jcf f LEFT JOIN jcp p USING ({keys})
 
 
 def grid_dbscan(cells: DataFrame,
-                key_cols: Tuple[str, ...] = ("doc_id",),
                 min_pts: int = 4) -> DataFrame:
     """Deterministic grid DBSCAN per key — density-based clustering of a
     foreground cell mask (eps = one queen step): a cell whose closed
@@ -2855,7 +2826,7 @@ def grid_dbscan(cells: DataFrame,
     quadratic and every join is on the co-partitioned (key, ix, iy) grid
     key.
     """
-    keys = list(key_cols)
+    keys = ["doc_id"]
     base = (cells.select(*keys,
                          F.col("ix").cast("long").alias("ix"),
                          F.col("iy").cast("long").alias("iy"))
@@ -2872,8 +2843,7 @@ def grid_dbscan(cells: DataFrame,
             .agg(F.count("*").cast("int").alias("n_in_neigh"))
             .localCheckpoint(eager=False))
     cores = dens.filter(F.col("n_in_neigh") >= min_pts)
-    lab = region_label(cores.select(*keys, "ix", "iy"),
-                       key_cols=key_cols, connectivity=8)
+    lab = region_label(cores.select(*keys, "ix", "iy"), connectivity=8)
     core_out = (cores.join(lab, keys + ["ix", "iy"])
                 .select(*keys, "ix", "iy", "n_in_neigh", "label",
                         F.lit("core").alias("role")))
@@ -3130,8 +3100,7 @@ FROM hxc GROUP BY {keys}, hqf, hrf
 """
 
 
-def tpi_landform(px: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
-                 r_small: int = 1, r_large: int = 3) -> DataFrame:
+def tpi_landform(px: DataFrame, r_large: int = 3) -> DataFrame:
     """Weiss two-scale TPI landform classification of a scalar surface
     per scene: TPI_r = z − mean of the (2r+1)² window (center
     included; a pure offset of the center-excluded form), standardized
@@ -3146,11 +3115,11 @@ def tpi_landform(px: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
     back. Partial-stencil edge cells are dropped (n == (2r+1)²) so
     border bias never enters the moments.
     """
-    keys = list(key_cols)
+    keys = ["doc_id"]
     base = px.select(*keys, "x", "y", "gsd",
                      F.col("v").alias("_z"))
-    ns, nl = (2 * r_small + 1) ** 2, (2 * r_large + 1) ** 2
-    fs = (focal_stats(base, "_z", radius=r_small, doc_col=keys[0])
+    ns, nl = 9, (2 * r_large + 1) ** 2
+    fs = (focal_stats(base, "_z", radius=1, doc_col=keys[0])
           .filter(F.col("n_neigh") == ns)
           .select(*keys, "ix", "iy", "_z",
                   F.col("focal_mean").alias("_ms")))
@@ -3241,8 +3210,7 @@ FROM tlz
 """
 
 
-def patch_stats(labeled: DataFrame,
-                key_cols: Tuple[str, ...] = ("doc_id",)) -> DataFrame:
+def patch_stats(labeled: DataFrame) -> DataFrame:
     """Landscape-fragmentation metrics over a labeled foreground raster
     (the output of :func:`region_label`): per key — patch count,
     largest/mean patch size, largest-patch index (LPI), total
@@ -3257,7 +3225,7 @@ def patch_stats(labeled: DataFrame,
     cartesian, no window; everything integer-exact until the two
     final ratio readouts.
     """
-    keys = list(key_cols)
+    keys = ["doc_id"]
     base = labeled.select(*keys, "ix", "iy", "label")
     per_patch = (base.groupBy(*keys, "label")
                  .agg(F.count("*").cast("long").alias("_sz")))
@@ -3330,12 +3298,10 @@ FROM pss s LEFT JOIN psa USING ({keys})
 """
 
 
-def change_detection(px: DataFrame,
-                     key_cols: Tuple[str, ...] = ("aoi",),
-                     threshold: float = 0.05) -> DataFrame:
+def change_detection(px: DataFrame) -> DataFrame:
     """Per-cell first→last change detection over a scene time stack —
     the bitemporal raster-change classifier (gain / loss / stable by
-    ``threshold`` on Δ = last − first). ``px`` is the long pixel frame
+    0.05 on Δ = last − first). ``px`` is the long pixel frame
     (key, x, y, gsd, t, v) across MANY acquisition dates.
 
     First/last values ride ONE hash agg as lexicographic struct
@@ -3349,8 +3315,8 @@ def change_detection(px: DataFrame,
     map-side combine reduces each partition to one struct per cell
     before the exchange.
     """
-    keys = list(key_cols)
-    thr = float(threshold)
+    keys = ["aoi"]
+    thr = 0.05
     ix = F.floor(F.col("x") / F.col("gsd")).cast("long")
     iy = F.floor(F.col("y") / F.col("gsd")).cast("long")
     base = px.select(*keys, ix.alias("ix"), iy.alias("iy"),
@@ -3410,7 +3376,6 @@ FROM cdr GROUP BY {keys}, ix, iy
 
 
 def raster_xcorr(pxa: DataFrame, pxb: DataFrame,
-                 key_cols: Tuple[str, ...] = ("aoi",),
                  max_offset: int = 2, min_overlap: int = 16) -> DataFrame:
     """Integer-lattice cross-correlation co-registration: slide raster
     B over raster A by every offset in [−m, m]², compute the Pearson
@@ -3425,7 +3390,7 @@ def raster_xcorr(pxa: DataFrame, pxb: DataFrame,
     over that tiny table (round-6 r, then offset tie-break). No
     cartesian, no window at cell cardinality.
     """
-    keys = list(key_cols)
+    keys = ["aoi"]
     m = int(max_offset)
     offs = [(dx, dy) for dx in range(-m, m + 1)
             for dy in range(-m, m + 1)]
@@ -3517,11 +3482,9 @@ FROM xcr WHERE rk = 1
 """
 
 
-def sieve_filter(cells: DataFrame,
-                 key_cols: Tuple[str, ...] = ("doc_id",),
-                 min_size: int = 4) -> DataFrame:
+def sieve_filter(cells: DataFrame) -> DataFrame:
     """Sieve filter (GDAL ``SieveFilter`` semantics, drop variant):
-    remove mask patches smaller than ``min_size`` cells — the
+    remove mask patches smaller than 4 cells — the
     classification-cleanup step between a thresholded mask and any
     area statistic, killing salt-and-pepper speckle. Composes
     :func:`region_label` with a patch-size LEFT SEMI join; output is
@@ -3532,11 +3495,11 @@ def sieve_filter(cells: DataFrame,
     semi-join back. Output keeps labels so downstream patch operators
     (patch_stats) run without relabeling.
     """
-    lab = region_label(cells, key_cols=key_cols)
-    keys = list(key_cols)
+    lab = region_label(cells)
+    keys = ["doc_id"]
     big = (lab.groupBy(*keys, "label")
            .agg(F.count("*").cast("long").alias("_sz"))
-           .filter(F.col("_sz") >= int(min_size))
+           .filter(F.col("_sz") >= 4)
            .select(*keys, "label"))
     return lab.join(big, [*keys, "label"], "left_semi")
 
@@ -3803,13 +3766,13 @@ def kriging_fill(points: DataFrame, stations: DataFrame,
                  k: int = 8,
                  radius: float = 3 * CELL_SIZE_M,
                  cell_m: float = CELL_SIZE_M,
-                 nugget: float = 0.0, sill: float = 1.0,
                  vrange: float = 500.0) -> DataFrame:
     """Ordinary-kriging interpolation at each point from its k nearest
     observed stations — the BLUE geostatistical upgrade to the IDW
     `knn_fill`: weights come from the exponential variogram
-    ``γ(h) = nugget + (sill−nugget)·(1 − exp(−3h/range))`` (the
-    `variogram` operator estimates these parameters), so clustered
+    ``γ(h) = nugget + (sill−nugget)·(1 − exp(−3h/range))`` with nugget
+    0 and sill 1 (the `variogram` operator estimates these parameters),
+    so clustered
     neighbors are de-weighted (screening) and a kriging VARIANCE rides
     along for free. Output: point key + (krig_pred, krig_var, n_used).
 
@@ -3841,7 +3804,7 @@ def kriging_fill(points: DataFrame, stations: DataFrame,
                .agg(F.collect_list(F.struct("sx", "sy", "_kv"))
                     .alias("_nbrs")))
 
-    n0, s0, r0 = float(nugget), float(sill), float(vrange)
+    r0 = float(vrange)
     out_schema = T.StructType(
         [grouped.schema[c] for c in key_cols]
         + [T.StructField("krig_pred", T.DoubleType()),
@@ -3849,7 +3812,8 @@ def kriging_fill(points: DataFrame, stations: DataFrame,
            T.StructField("n_used", T.IntegerType())])
 
     def _gamma(h):
-        return n0 + (s0 - n0) * (1.0 - np.exp(-3.0 * h / r0))
+        # nugget 0, sill 1
+        return 1.0 - np.exp(-3.0 * h / r0)
 
     def _solve(iterator):
         for pdf in iterator:

@@ -46,7 +46,7 @@ def _epoch(col: Column) -> Column:
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
-              left_ts: str = "ts", right_ts: str = "ts",
+              left_ts: str = "ts",
               right_cols: Optional[Sequence[str]] = None,
               tolerance_seconds: Optional[float] = None) -> DataFrame:
     """Backward as-of join: every left row + the latest right row at or
@@ -54,10 +54,10 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
 
     ``right_cols`` are the right-side payload columns to carry (default:
     all non-key, non-ts columns), emitted as ``ref_{col}`` plus
-    ``ref_{right_ts}``. ``tolerance_seconds`` drops matches older
+    ``ref_ts``. ``tolerance_seconds`` drops matches older
     than the given age (the match becomes NULL, like pandas merge_asof).
 
-    Determinism requires (on, right_ts) to be unique on the right side —
+    Determinism requires (on, ts) to be unique on the right side —
     two right rows tying at the same instant make the pick order-dependent
     (DuckDB's ASOF has the same ambiguity). Left columns named
     ``_t``/``_src``/``_r``/``_c`` would collide with the internals.
@@ -65,15 +65,14 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
     on = list(on)
     if right_cols is None:
         right_cols = [c for c in right.columns
-                      if c not in on and c != right_ts]
+                      if c not in on and c != "ts"]
     payload = F.struct(
-        F.col(right_ts).alias("_rts"),
-        *[F.col(c) for c in right_cols])
+        F.col("ts").alias("_rts"), *[F.col(c) for c in right_cols])
 
     l_tag = left.withColumn("_t", F.col(left_ts)).withColumn(
         "_src", F.lit(1))
     r_tag = right.select(
-        *on, F.col(right_ts).alias("_t"), F.lit(0).alias("_src"),
+        *on, F.col("ts").alias("_t"), F.lit(0).alias("_src"),
         payload.alias("_r"))
     u = l_tag.unionByName(r_tag, allowMissingColumns=True)
 
@@ -90,12 +89,12 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
             "_c", F.when(age <= tolerance_seconds, F.col("_c")))
     return out.select(
         *left.columns,
-        F.col("_c._rts").alias(f"ref_{right_ts}"),
+        F.col("_c._rts").alias("ref_ts"),
         *[F.col(f"_c.{c}").alias(f"ref_{c}") for c in right_cols])
 
 
 def sessionize(df: DataFrame, key: Sequence[str] = ("user_id",),
-               ts_col: str = "ts", gap_seconds: float = 1800.0) -> DataFrame:
+               gap_seconds: float = 1800.0) -> DataFrame:
     """Gap-based sessionization: within each ``key`` group, a new session
     starts at the first event and whenever the gap to the previous event
     exceeds ``gap_seconds`` (strictly). Appends ``session_seq`` — the
@@ -119,7 +118,7 @@ def sessionize(df: DataFrame, key: Sequence[str] = ("user_id",),
     """
     key = list(key)
     gap_us = int(round(float(gap_seconds) * 1e6))
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy(*key).orderBy(us)
     prev = F.lag(us).over(w)
     boundary = F.when(prev.isNull() | (us - prev > gap_us), 1).otherwise(0)
@@ -158,7 +157,7 @@ FROM b
 
 
 def time_grid_fill(obs: DataFrame, key: Sequence[str] = ("user_id",),
-                   ts_col: str = "ts", step_seconds: float = 3600.0,
+                   step_seconds: float = 3600.0,
                    right_cols: Optional[Sequence[str]] = None) -> DataFrame:
     """Resample an irregular observation stream onto a regular time grid
     with last-observation-carried-forward (gap fill) — the batch analog of
@@ -176,11 +175,11 @@ def time_grid_fill(obs: DataFrame, key: Sequence[str] = ("user_id",),
     predictable, never |obs|^2.
 
     Output: key columns, ``tick_ts``, and the carried ``ref_*``
-    payload columns (plus ``ref_{ts_col}``).
+    payload columns (plus ``ref_ts``).
     """
     key = list(key)
     step_us = int(round(float(step_seconds) * 1e6))
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     spans = obs.groupBy(*key).agg(F.min(us).alias("_mn"),
                                   F.max(us).alias("_mx"))
     lo = F.expr(f"CAST((_mn + {step_us - 1}) DIV {step_us} AS BIGINT)"
@@ -194,7 +193,7 @@ def time_grid_fill(obs: DataFrame, key: Sequence[str] = ("user_id",),
                  .select(*key,
                          F.timestamp_micros(F.col("_tick_us"))
                           .alias("tick_ts")))
-    return asof_join(grid, obs, on=key, left_ts="tick_ts", right_ts=ts_col,
+    return asof_join(grid, obs, on=key, left_ts="tick_ts",
                      right_cols=right_cols)
 
 
@@ -228,7 +227,6 @@ FROM grid g ASOF JOIN {table} o
 
 
 def interpolate_to_grid(obs: DataFrame, key: Sequence[str] = ("user_id",),
-                        ts_col: str = "ts", value_col: str = "value",
                         step_seconds: float = 3600.0) -> DataFrame:
     """Linear interpolation of an irregular observation stream onto a
     regular time grid — the companion of :func:`time_grid_fill` (which
@@ -253,12 +251,12 @@ def interpolate_to_grid(obs: DataFrame, key: Sequence[str] = ("user_id",),
     """
     key = list(key)
     step_us = int(round(float(step_seconds) * 1e6))
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy(*key).orderBy(us)
     seg = obs.select(
-        *key, us.alias("_t0"), F.col(value_col).alias("_v0"),
+        *key, us.alias("_t0"), F.col("value").alias("_v0"),
         F.lead(us).over(w).alias("_t1"),
-        F.lead(value_col).over(w).alias("_v1"))
+        F.lead("value").over(w).alias("_v1"))
     lo = F.expr(f"CAST((_t0 + {step_us - 1}) DIV {step_us} AS BIGINT)"
                 f" * {step_us}")
     hi = F.when(F.col("_t1").isNull(), F.col("_t0")) \
@@ -340,10 +338,9 @@ def range_join(left: DataFrame, right: DataFrame,
 
 
 def rolling_zscore(df: DataFrame, key: Sequence[str] = ("user_id",),
-                   window: int = 24, min_periods: int = 8,
                    z_thresh: float = 3.0) -> DataFrame:
     """Trailing-window anomaly score: each observation's z-score against
-    the mean/std of its own PREVIOUS ``window`` observations (current row
+    the mean/std of its own PREVIOUS 24 observations (current row
     excluded — no self-leakage), flagged when ``|z| > z_thresh``. The
     point-anomaly detector a monitoring pipeline runs over per-key metric
     streams.
@@ -354,19 +351,19 @@ def rolling_zscore(df: DataFrame, key: Sequence[str] = ("user_id",),
     population moment form ``sqrt(E[v²] − E[v]²)`` (cancellation-clamped)
     — written identically in the DuckDB oracle so both engines agree to
     rounding, which `STDDEV`'s Welford accumulation would not. Rows with
-    fewer than ``min_periods`` predecessors or a degenerate (zero) std
+    fewer than 8 predecessors or a degenerate (zero) std
     emit NULL z and false flag.
     """
     key = list(key)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = (Window.partitionBy(*key).orderBy(us)
-         .rowsBetween(-window, -1))
+         .rowsBetween(-24, -1))
     v = F.col("value")
     n = F.count(v).over(w)
     m = F.avg(v).over(w)
     m2 = F.avg(v * v).over(w)
     sd = F.sqrt(F.greatest(m2 - m * m, F.lit(0.0)))
-    z = F.when((n >= min_periods) & (sd > 0), (v - m) / sd)
+    z = F.when((n >= 8) & (sd > 0), (v - m) / sd)
     return (df.withColumn("n_prev", n.cast("int"))
               .withColumn("z", z)
               .withColumn("is_anomaly",
@@ -404,33 +401,32 @@ FROM zw
 """
 
 
-def ewma(df: DataFrame, key: Sequence[str] = ("user_id",),
-         alpha: float = 0.3, window: int = 12) -> DataFrame:
+def ewma(df: DataFrame, key: Sequence[str] = ("user_id",)) -> DataFrame:
     """Windowed exponentially-weighted moving average: per key,
-    ``Σ_j (1−α)^j · v_{t−j} / Σ_j (1−α)^j`` over the last ``window``
-    observations (inclusive of the current one), normalized over the
+    ``Σ_j (1−α)^j · v_{t−j} / Σ_j (1−α)^j`` with α = 0.3 over the
+    last W = 12 observations (inclusive of the current one), normalized over the
     lags actually present — the trend-smoothing companion of
     :func:`rolling_zscore`.
 
     The infinite-history EWMA recurrence is not expressible as a window
     aggregate (no per-offset weights in SQL frames) and its prefix-sum
     rewrite ``(1−α)^t · Σ v_i (1−α)^{−i}`` overflows/cancels for long
-    keys; truncating at ``window`` lags — where the dropped tail weight
-    is ``(1−α)^W`` (≈1.4% at α=0.3, W=12) — admits an EXACT form: an
-    explicit chain of ``window`` ``lag()`` terms sharing ONE window
+    keys; truncating at W lags — where the dropped tail weight
+    is ``(1−α)^W`` (≈1.4%) — admits an EXACT form: an
+    explicit chain of W ``lag()`` terms sharing ONE window
     frame (one shuffle, one Window operator; the chain is left-
     associated identically in the DuckDB oracle, so results are
-    bit-comparable). Plan growth is linear in ``window``: right for the
+    bit-comparable). Plan growth is linear in W: right for the
     smoothing spans monitoring uses (O(10)), wrong for W ≫ 100 — at that
     point use :func:`time_grid_fill` + a mapInPandas recurrence.
     """
     key = list(key)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy(*key).orderBy(us)
-    decay = 1.0 - alpha
+    decay = 1.0 - 0.3
     num = None
     den = None
-    for j in range(window):
+    for j in range(12):
         wj = F.lit(decay ** j)
         vj = F.lag(F.col("value"), j).over(w) if j else F.col("value")
         t = F.when(vj.isNotNull(), wj * vj).otherwise(F.lit(0.0))
@@ -569,12 +565,11 @@ FROM steprows
 """
 
 
-def cusum_alarms(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
-                 k: float = 0.5, h: float = 4.0) -> DataFrame:
+def cusum_alarms(df: DataFrame) -> DataFrame:
     """Two-sided standardized CUSUM drift detection per key (Page's
     sequential test): residuals standardize against the key's own
     mean/std, the positive and negative cumulative sums
-    ``S± = max(0, S± ± z − k)`` reset on every alarm (``S± > h``), and
+    ``S± = max(0, S± ± z − 0.5)`` reset on every alarm (``S± > 4``), and
     the output is one row per key: ``(…, n_obs, n_alarms)``. Catches
     slow drifts a pointwise z-score (:func:`rolling_zscore`) never
     flags.
@@ -586,7 +581,7 @@ def cusum_alarms(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
     a pure ``aggregate`` fold expression. No window, no Python, no
     driver state.
     """
-    keys = list(key_cols)
+    keys = ["user_id"]
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     base = df.select(*keys, us.alias("_us"),
                      F.col("value").cast("double").alias("_v"))
@@ -608,9 +603,9 @@ def cusum_alarms(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
                     F.lit(0).cast("long").alias("na"))
 
     def step(acc, x):
-        sp1 = F.greatest(F.lit(0.0), acc["sp"] + x - F.lit(float(k)))
-        sn1 = F.greatest(F.lit(0.0), acc["sn"] - x - F.lit(float(k)))
-        alarm = (sp1 > float(h)) | (sn1 > float(h))
+        sp1 = F.greatest(F.lit(0.0), acc["sp"] + x - F.lit(0.5))
+        sn1 = F.greatest(F.lit(0.0), acc["sn"] - x - F.lit(0.5))
+        alarm = (sp1 > 4.0) | (sn1 > 4.0)
         return F.struct(
             F.when(alarm, F.lit(0.0)).otherwise(sp1).alias("sp"),
             F.when(alarm, F.lit(0.0)).otherwise(sn1).alias("sn"),
@@ -705,14 +700,12 @@ def savgol_coeffs(window: int = 5, order: int = 2):
     return [float(c) for c in np.linalg.pinv(a)[0]]
 
 
-def sg_smooth(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-              time_col: str = "date_str", value_col: str = "mean_v",
-              window: int = 5, order: int = 2,
+def sg_smooth(df: DataFrame, value_col: str = "mean_v",
               out_col: str = "v_smooth") -> DataFrame:
     """Savitzky–Golay smoothing of a keyed time series — the standard
     NDVI/phenology denoiser (local least-squares polynomial ≡ one fixed
-    FIR filter): per key, the smoothed value is a ``window``-tap dot
-    product of lag/lead neighbors ordered by ``time_col``. Edge rows
+    FIR filter, window 5, order 2): per ``aoi``, the smoothed value is a
+    5-tap dot product of lag/lead neighbors ordered by ``date_str``. Edge rows
     (incomplete support) yield NULL — consumers choose their own edge
     policy rather than inheriting a silent one.
 
@@ -722,9 +715,9 @@ def sg_smooth(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     cardinality per key is dates-per-AOI — window state is trivially
     bounded.
     """
-    coeffs = savgol_coeffs(window, order)
-    m = window // 2
-    w = Window.partitionBy(*key_cols).orderBy(time_col)
+    coeffs = savgol_coeffs(5, 2)
+    m = 2
+    w = Window.partitionBy("aoi").orderBy("date_str")
     v = F.col(value_col)
 
     def tap(j):
@@ -768,9 +761,9 @@ WINDOW sgw AS (PARTITION BY {keys} ORDER BY {time_col})
 """
 
 
-def transition_counts(events: DataFrame, key: str = "user_id") -> DataFrame:
+def transition_counts(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix of user behavior: per
-    consecutive event pair within each key (time order), count
+    consecutive event pair within each ``user_id`` (time order), count
     ``from_type → to_type`` and row-normalize to transition
     probabilities — the session-model / next-action-prediction
     primitive.
@@ -782,7 +775,7 @@ def transition_counts(events: DataFrame, key: str = "user_id") -> DataFrame:
     stable under any residual tie order.
     """
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    pairs = (events.select(F.col(key).alias("k"),
+    pairs = (events.select(F.col("user_id").alias("k"),
                            F.col("event_type").alias("to_type"),
                            us.alias("_us"))
              .withColumn("from_type", F.lag("to_type").over(
@@ -1043,8 +1036,7 @@ def _harmonic_exprs(period_days: float):
     return w, feats, sums, det, a0, a1, b1, sse, sst
 
 
-def harmonic_fit(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-                 time_col: str = "date_str", value_col: str = "mean_v") -> DataFrame:
+def harmonic_fit(df: DataFrame, value_col: str = "mean_v") -> DataFrame:
     """Pooled seasonal harmonic regression per key — the standard EO
     seasonality model (cf. HANTS / Landsat CCDC's harmonic terms): fit
     ``v ≈ a0 + a1·cos(ωt) + b1·sin(ωt)`` with ω = 2π/period over
@@ -1063,21 +1055,19 @@ def harmonic_fit(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     """
     w, feats, sums, det, a0, a1, b1, sse, sst = _harmonic_exprs(365.25)
     base = df.select(
-        *key_cols,
-        F.expr(f"CAST(dayofyear(CAST({time_col} AS DATE)) AS DOUBLE)")
+        "aoi", F.expr("CAST(dayofyear(CAST(date_str AS DATE)) AS DOUBLE)")
         .alias("doy"),
         F.col(value_col).cast("double").alias("v"))
     base = base.withColumn("c", F.expr(feats["c"])) \
                .withColumn("s", F.expr(feats["s"]))
-    agg = base.groupBy(*key_cols).agg(
+    agg = base.groupBy("aoi").agg(
         *[F.expr(e).alias(n) for n, e in sums.items()])
     solved = (agg.withColumn("det", F.expr(det))
                  .withColumn("a0", F.expr(a0))
                  .withColumn("a1", F.expr(a1))
                  .withColumn("b1", F.expr(b1)))
     return solved.select(
-        *key_cols, "n_obs",
-        F.expr("ROUND(a0, 6)").alias("a0"),
+        "aoi", "n_obs", F.expr("ROUND(a0, 6)").alias("a0"),
         F.expr("ROUND(a1, 6)").alias("a1"),
         F.expr("ROUND(b1, 6)").alias("b1"),
         F.expr("ROUND(sqrt(a1 * a1 + b1 * b1), 6)").alias("amplitude"),
@@ -1123,8 +1113,7 @@ FROM hfsol
 # Phenology metrics (threshold method)
 # ---------------------------------------------------------------------------
 
-def phenology(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-              time_col: str = "date_str", value_col: str = "mean_v") -> DataFrame:
+def phenology(df: DataFrame, value_col: str = "mean_v") -> DataFrame:
     """Threshold-method phenology metrics per key — start / peak / end
     of season from a (typically smoothed) vegetation-index series: the
     season is where the series sits at or above
@@ -1139,15 +1128,15 @@ def phenology(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     at 10^12 rows the cost is two aggs and one join on the series key.
     """
     v = F.col(value_col).cast("double")
-    stats = (df.groupBy(*key_cols)
+    stats = (df.groupBy("aoi")
              .agg(F.min(v).alias("_vmin"), F.max(v).alias("_vmax"),
                   F.count(v).alias("_n")))
     thr = F.col("_vmin") + F.lit(0.5) * (F.col("_vmax")
                                                  - F.col("_vmin"))
-    j = df.join(stats, list(key_cols)).withColumn("_thr", thr)
-    t = F.col(time_col)
+    j = df.join(stats, ["aoi"]).withColumn("_thr", thr)
+    t = F.col("date_str")
     above = v >= F.col("_thr")
-    out = (j.groupBy(*key_cols)
+    out = (j.groupBy("aoi")
            .agg(F.min("_n").alias("n_dates"),
                 F.min("_vmin").alias("_vmin"),
                 F.min("_vmax").alias("_vmax"),
@@ -1156,8 +1145,7 @@ def phenology(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
                 F.max(F.when(v == F.col("_vmax"), t)).alias("peak_date"),
                 F.sum(above.cast("long")).alias("n_above")))
     return out.select(
-        *key_cols, "n_dates", "n_above",
-        F.round("_vmin", 6).alias("vmin"),
+        "aoi", "n_dates", "n_above", F.round("_vmin", 6).alias("vmin"),
         F.round("_vmax", 6).alias("vmax"),
         "sos_date", "peak_date", "eos_date",
         F.datediff(F.col("eos_date").cast("date"),
@@ -1325,8 +1313,7 @@ FROM mkj
 """
 
 
-def harmonic_anomaly(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
-                     time_col: str = "date_str", value_col: str = "mean_v") -> DataFrame:
+def harmonic_anomaly(df: DataFrame, value_col: str = "mean_v") -> DataFrame:
     """Seasonal-anomaly detection — score every observation against the
     key's own :func:`harmonic_fit` curve: residual, per-key residual
     RMSE, and an ``is_anomaly`` flag at ``|resid| > 2·rmse``
@@ -1343,28 +1330,28 @@ def harmonic_anomaly(df: DataFrame, key_cols: Sequence[str] = ("aoi",),
     """
     w, feats, sums, det, a0, a1, b1, _, _ = _harmonic_exprs(365.25)
     base = df.select(
-        *key_cols, F.col(time_col).alias("t_str"),
-        F.expr(f"CAST(dayofyear(CAST({time_col} AS DATE)) AS DOUBLE)")
+        "aoi", F.col("date_str").alias("t_str"),
+        F.expr("CAST(dayofyear(CAST(date_str AS DATE)) AS DOUBLE)")
         .alias("doy"),
         F.col(value_col).cast("double").alias("v"))
     base = (base.withColumn("c", F.expr(feats["c"]))
                 .withColumn("s", F.expr(feats["s"]))
                 .localCheckpoint(eager=False))
-    fit = (base.groupBy(*key_cols)
+    fit = (base.groupBy("aoi")
            .agg(*[F.expr(e).alias(n) for n, e in sums.items()])
            .withColumn("det", F.expr(det))
            .withColumn("a0", F.expr(a0))
            .withColumn("a1", F.expr(a1))
            .withColumn("b1", F.expr(b1))
-           .select(*key_cols, "a0", "a1", "b1"))
-    scored = (base.join(F.broadcast(fit), on=list(key_cols))
+           .select("aoi", "a0", "a1", "b1"))
+    scored = (base.join(F.broadcast(fit), on=["aoi"])
               .withColumn("pred", F.expr("a0 + a1 * c + b1 * s"))
               .withColumn("resid", F.expr("v - pred")))
-    rmse = (scored.groupBy(*key_cols)
+    rmse = (scored.groupBy("aoi")
             .agg(F.expr("SQRT(AVG(resid * resid))").alias("rmse")))
-    out = scored.join(F.broadcast(rmse), on=list(key_cols))
+    out = scored.join(F.broadcast(rmse), on=["aoi"])
     return out.select(
-        *key_cols, F.col("t_str").alias(time_col),
+        "aoi", F.col("t_str").alias("date_str"),
         F.expr("ROUND(v, 6)").alias("v"),
         F.expr("ROUND(pred, 6)").alias("pred"),
         F.expr("ROUND(resid, 6)").alias("resid"),
@@ -1475,8 +1462,7 @@ FROM acl GROUP BY {keys}
 """
 
 
-def interarrival_stats(df: DataFrame,
-                       key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
+def interarrival_stats(df: DataFrame) -> DataFrame:
     """Inter-arrival timing statistics per key — the behavioral
     burstiness profile (bot vs human cadence, sensor regularity,
     retry storms): per-key gaps between consecutive events, their
@@ -1488,19 +1474,18 @@ def interarrival_stats(df: DataFrame,
     hash agg at key cardinality. Keys with <2 events drop (no gaps);
     zero-mean guards yield NULL, never a divide error.
     """
-    base = df.select(*key_cols, _epoch(F.col("ts")).alias("t"))
-    w = Window.partitionBy(*key_cols).orderBy("t")
+    base = df.select("user_id", _epoch(F.col("ts")).alias("t"))
+    w = Window.partitionBy("user_id").orderBy("t")
     g = (base.withColumn("gap", F.col("t") - F.lag("t", 1).over(w))
          .filter(F.col("gap").isNotNull()))
-    agg = g.groupBy(*key_cols).agg(
+    agg = g.groupBy("user_id").agg(
         F.count("gap").cast("long").alias("n_gaps"),
         F.avg("gap").alias("_m"),
         F.avg(F.col("gap") * F.col("gap")).alias("_m2"))
     std = F.sqrt(F.col("_m2") - F.col("_m") * F.col("_m"))
     mean = F.col("_m")
     return agg.select(
-        *key_cols, "n_gaps",
-        F.round(mean, 6).alias("mean_gap_s"),
+        "user_id", "n_gaps", F.round(mean, 6).alias("mean_gap_s"),
         F.round(std, 6).alias("std_gap_s"),
         F.round(std / F.when(mean != 0, mean), 6).alias("cv"),
         F.round((std - mean) / F.when((std + mean) != 0, std + mean), 6)
@@ -1537,7 +1522,7 @@ FROM iaa
 """
 
 
-def event_entropy(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
+def event_entropy(df: DataFrame) -> DataFrame:
     """Behavioral diversity per key: Shannon entropy of the event-type
     distribution (nats), the distinct-type count, and the top type's
     share — the bot/monoculture detector that pairs with
@@ -1548,11 +1533,11 @@ def event_entropy(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> Data
     over per-type counts. Single-type keys get H = 0 exactly (p·ln p
     with p = 1), never a guard artifact.
     """
-    kt = (df.groupBy(*key_cols, "event_type")
+    kt = (df.groupBy("user_id", "event_type")
           .agg(F.count("*").cast("double").alias("c")))
     tot = F.sum("c")
     p = F.col("c") / tot
-    return (kt.groupBy(*key_cols)
+    return (kt.groupBy("user_id")
             .agg(F.sum("c").cast("long").alias("n_events"),
                  F.count("*").cast("int").alias("n_types"),
                  F.round(-F.sum(F.col("c") * F.log(F.col("c")))
@@ -1586,7 +1571,7 @@ _PETTITT_P = ("LEAST(1.0, 2.0 * EXP(-6.0 * k_stat * k_stat"
               " / (n * n * n + n * n)))")
 
 
-def pettitt(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
+def pettitt(df: DataFrame) -> DataFrame:
     """Pettitt's nonparametric change-point test per key — the standard
     homogeneity break detector for environmental series (did this
     sensor/field/user shift regime, and when?): locates the single most
@@ -1604,18 +1589,16 @@ def pettitt(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
     |U| is an integer so the equality join is exact). Requires unique
     ``ts`` per key (true for event streams and daily composites).
     """
-    base = df.select(*key_cols, _epoch(F.col("ts")).alias("t"),
+    base = df.select("user_id", _epoch(F.col("ts")).alias("t"),
                      F.col("value").cast("double").alias("v"))
     base = base.localCheckpoint(eager=False)
-    a = base.select(*key_cols, F.col("t").alias("ta"),
-                    F.col("v").alias("va"))
-    b = base.select(*key_cols, F.col("t").alias("tb"),
-                    F.col("v").alias("vb"))
-    w_s = (a.join(b, on=list(key_cols))
+    a = base.select("user_id", F.col("t").alias("ta"), F.col("v").alias("va"))
+    b = base.select("user_id", F.col("t").alias("tb"), F.col("v").alias("vb"))
+    w_s = (a.join(b, on=["user_id"])
            .filter(F.col("ta") != F.col("tb"))
-           .groupBy(*key_cols, "ta")
+           .groupBy("user_id", "ta")
            .agg(F.expr("SUM(SIGN(vb - va))").alias("w")))
-    win = Window.partitionBy(*key_cols).orderBy("ta")
+    win = Window.partitionBy("user_id").orderBy("ta")
     u = w_s.withColumn("u", F.sum("w").over(win)) \
            .withColumn("abs_u", F.abs(F.col("u")))
     # u feeds both the K aggregation and the argmax join — fence the
@@ -1625,18 +1608,17 @@ def pettitt(df: DataFrame, key_cols: Sequence[str] = ("user_id",)) -> DataFrame:
     # W_s exists for every observation (any key with >=2 rows), so the
     # W row count IS n; the prefix sum U_n over the full key is 0 by
     # antisymmetry, so the argmax always lands strictly before the end.
-    kagg = u.groupBy(*key_cols).agg(
+    kagg = u.groupBy("user_id").agg(
         F.expr("CAST(COUNT(*) AS DOUBLE)").alias("n"),
         F.max("abs_u").alias("k_stat"))
-    out = (u.join(kagg, on=list(key_cols))
+    out = (u.join(kagg, on=["user_id"])
            .filter(F.col("abs_u") == F.col("k_stat"))
-           .groupBy(*key_cols)
+           .groupBy("user_id")
            .agg(F.first("n").alias("n"),
                 F.first("k_stat").alias("k_stat"),
                 F.min("ta").alias("t_break")))
     return out.select(
-        *key_cols,
-        F.expr("CAST(n AS BIGINT)").alias("n_obs"),
+        "user_id", F.expr("CAST(n AS BIGINT)").alias("n_obs"),
         F.expr("CAST(k_stat AS BIGINT)").alias("k_stat"),
         F.col("t_break"),
         F.expr(f"ROUND({_PETTITT_P}, 6)").alias("p_value"))
@@ -1683,8 +1665,6 @@ GROUP BY {keys}, n, k_stat
 
 
 def seasonal_decompose(df: DataFrame,
-                       key_cols: Sequence[str] = ("event_type",),
-                       time_col: str = "day", value_col: str = "v",
                        period: int = 7) -> DataFrame:
     """Classical additive seasonal decomposition per key
     (``v = trend + seasonal + resid``) — the moving-average STL
@@ -1708,29 +1688,29 @@ def seasonal_decompose(df: DataFrame,
         raise ValueError("period must be odd for a centered MA")
     h = (period - 1) // 2
     base = df.select(
-        *key_cols, F.col(time_col).cast("date").alias("t"),
-        F.col(value_col).cast("double").alias("v"),
-        F.expr(f"pmod(datediff(CAST({time_col} AS DATE),"
+        "event_type", F.col("day").cast("date").alias("t"),
+        F.col("v").cast("double").alias("v"),
+        F.expr(f"pmod(datediff(CAST(day AS DATE),"
                f" DATE '1970-01-01'), {period})").alias("phase"))
-    w = (Window.partitionBy(*key_cols).orderBy("t")
+    w = (Window.partitionBy("event_type").orderBy("t")
          .rowsBetween(-h, h))
     trended = base.withColumn(
         "trend",
         F.when(F.count("v").over(w) == period, F.avg("v").over(w)))
     trended = trended.localCheckpoint(eager=False)
-    ph = (trended.groupBy(*key_cols, "phase")
+    ph = (trended.groupBy("event_type", "phase")
           .agg(F.avg(F.col("v") - F.col("trend")).alias("sbar")))
     ph = ph.withColumn(
         "seasonal",
-        F.col("sbar") - F.avg("sbar").over(Window.partitionBy(*key_cols)))
-    out = trended.join(F.broadcast(ph.select(*key_cols, "phase",
+        F.col("sbar") - F.avg("sbar").over(Window.partitionBy("event_type")))
+    out = trended.join(F.broadcast(ph.select("event_type", "phase",
                                              "seasonal")),
-                       on=[*key_cols, "phase"], how="left")
+                       on=["event_type", "phase"], how="left")
     # the date goes out as an ISO string: pandas/Arrow render Spark DATE
     # as `date` objects but DuckDB DATE as datetime64, so a raw date
     # column would string-hash differently in the driver's canonicalizer
     return out.select(
-        *key_cols, F.date_format("t", "yyyy-MM-dd").alias("day"),
+        "event_type", F.date_format("t", "yyyy-MM-dd").alias("day"),
         F.round("v", 6).alias("v"),
         F.round("trend", 6).alias("trend"),
         F.round("seasonal", 6).alias("seasonal"),
@@ -1783,7 +1763,7 @@ FROM sdt LEFT JOIN sdc USING ({keys}, phase)
 
 
 def ccf(df: DataFrame, key_cols: Sequence[str] = ("k",),
-        time_col: str = "t", max_lag: int = 3) -> DataFrame:
+        max_lag: int = 3) -> DataFrame:
     """Sample cross-correlation function between two aligned series per
     key at lags −L..L — the lead/lag detector (do purchases follow
     clicks, does soil moisture lag rainfall, and by how much?):
@@ -1795,7 +1775,7 @@ def ccf(df: DataFrame, key_cols: Sequence[str] = ("k",),
     hash agg at key cardinality. Edge rows where the shifted b does not
     exist drop out of each numerator by NULL propagation.
     """
-    base = df.select(*key_cols, F.col(time_col).alias("t"),
+    base = df.select(*key_cols, F.col("t").alias("t"),
                      F.col("va").cast("double").alias("a"),
                      F.col("vb").cast("double").alias("b"))
     mu = base.groupBy(*key_cols).agg(F.avg("a").alias("ma"),
@@ -1865,8 +1845,8 @@ FROM ccl GROUP BY {keys}
 """
 
 
-def event_trigrams(events: DataFrame, top_k: int = 10) -> DataFrame:
-    """Top event-type trigrams across all journeys — third-order path
+def event_trigrams(events: DataFrame) -> DataFrame:
+    """Top-10 event-type trigrams across all journeys — third-order path
     mining (which 3-step behavior sequences dominate: view>click>buy vs
     error>error>error retry storms). Complements
     :func:`transition_counts` (first-order) with enough context to see
@@ -1888,7 +1868,7 @@ def event_trigrams(events: DataFrame, top_k: int = 10) -> DataFrame:
     # cut FIRST (TakeOrderedAndProject heap top-k — the trigram
     # alphabet is |types|³ and must not feed a global-sort window),
     # then number the k survivors
-    top = agg.orderBy(F.col("n").desc(), F.col("trigram")).limit(int(top_k))
+    top = agg.orderBy(F.col("n").desc(), F.col("trigram")).limit(10)
     rw = Window.orderBy(F.col("n").desc(), F.col("trigram"))
     return (top.withColumn("rank", F.row_number().over(rw))
             .select("trigram", "n", F.col("rank").cast("int").alias("rank")))
@@ -1921,7 +1901,6 @@ ORDER BY rank
 
 
 def seasonal_mann_kendall(df: DataFrame,
-                          key_cols: Sequence[str] = ("user_id",),
                           season_expr: str = "dayofweek(CAST(ts AS DATE))"
                           ) -> DataFrame:
     """Hirsch-Slack seasonal Mann-Kendall trend test per key — the
@@ -1938,12 +1917,12 @@ def seasonal_mann_kendall(df: DataFrame,
     key(+season)-cardinality hash agg. One lazy checkpoint fences the
     tiny series so the three branches read one materialization.
     """
-    base = df.select(*key_cols,
+    base = df.select("user_id",
                      F.expr(season_expr).cast("int").alias("season"),
                      _epoch(F.col("ts")).alias("t"),
                      F.col("value").cast("double").alias("v"))
     base = base.localCheckpoint(eager=False)
-    keys_s = [*key_cols, "season"]
+    keys_s = ["user_id", "season"]
     a = base.select(*keys_s, F.col("t").alias("ta"),
                     F.col("v").alias("va"))
     b = base.select(*keys_s, F.col("t").alias("tb"),
@@ -1952,7 +1931,7 @@ def seasonal_mann_kendall(df: DataFrame,
     # per-key: total S over all within-season pairs + the seasonal Sen
     # (slope in units/DAY — per-second slopes round to zero at the
     # 1e-6 output quantization)
-    pagg = pairs.groupBy(*key_cols).agg(
+    pagg = pairs.groupBy("user_id").agg(
         F.expr("SUM(SIGN(vb - va))").alias("s_raw"),
         F.expr("percentile((vb - va) / ((tb - ta) / 86400.0), 0.5)")
         .alias("sen"))
@@ -1966,13 +1945,13 @@ def seasonal_mann_kendall(df: DataFrame,
                  .alias("tie_sum")))
     vg = (ng.join(ties, on=keys_s)
           .withColumn("var_g", F.expr(_MK_VAR))
-          .groupBy(*key_cols)
+          .groupBy("user_id")
           .agg(F.expr("SUM(var_g)").alias("var_s"),
                F.expr("CAST(SUM(n) AS BIGINT)").alias("n_obs"),
                F.expr("CAST(COUNT(*) AS INT)").alias("n_seasons")))
-    j = vg.join(pagg, on=list(key_cols))
+    j = vg.join(pagg, on=["user_id"])
     return j.select(
-        *key_cols, "n_obs", "n_seasons",
+        "user_id", "n_obs", "n_seasons",
         F.expr("CAST(s_raw AS BIGINT)").alias("s_stat"),
         F.expr("ROUND(var_s, 6)").alias("var_s"),
         F.expr(f"ROUND({_MK_Z}, 6) + 0.0").alias("smk_z"),
@@ -2036,7 +2015,7 @@ FROM smv JOIN smp USING ({keys})
 """
 
 
-def holt_smooth(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
+def holt_smooth(df: DataFrame,
                 alpha: float = 0.3, beta: float = 0.1,
                 horizon: int = 7) -> DataFrame:
     """Holt double exponential smoothing per key — level + trend state
@@ -2052,7 +2031,7 @@ def holt_smooth(df: DataFrame, key_cols: Sequence[str] = ("user_id",),
     a pure ``aggregate`` fold expression. No window, no Python, no
     driver state; at 10⁹ keys this is one shuffle and a codegen fold.
     """
-    keys = list(key_cols)
+    keys = ["user_id"]
     a, bfac = float(alpha), float(beta)
     base = df.select(*keys,
                      F.unix_micros(F.col("ts").cast("timestamp"))
@@ -2141,11 +2120,10 @@ FROM hrec r JOIN hn n ON {jn2} AND r.i = n.n_obs
 """
 
 
-def kaplan_meier(events: DataFrame, key: str = "user_id",
-                 censor_horizon_days: int = 7) -> DataFrame:
+def kaplan_meier(events: DataFrame) -> DataFrame:
     """Kaplan–Meier survival estimate over per-entity lifetimes
     (first event → last event, in whole days). Entities whose last
-    event falls within ``censor_horizon_days`` of the global max
+    event falls within 7 days of the global max
     timestamp are right-CENSORED (they may still be alive) — the
     distinction that makes KM different from a plain ECDF.
 
@@ -2161,15 +2139,14 @@ def kaplan_meier(events: DataFrame, key: str = "user_id",
     timestamp is a broadcast scalar, not a collect.
     """
     gmax = events.agg(F.max(F.to_date("ts")).alias("_gmax"))
-    per = (events.groupBy(key)
+    per = (events.groupBy("user_id")
            .agg(F.min(F.to_date("ts")).alias("_first"),
                 F.max(F.to_date("ts")).alias("_last"))
            .crossJoin(F.broadcast(gmax))
            .select(F.datediff("_last", "_first").cast("long")
                    .alias("dur_days"),
                    F.when(F.col("_last")
-                          < F.date_sub(F.col("_gmax"),
-                                       int(censor_horizon_days)),
+                          < F.date_sub(F.col("_gmax"), 7),
                           F.lit(1)).otherwise(F.lit(0))
                    .alias("_event")))
     byd = (per.groupBy("dur_days")
@@ -2247,8 +2224,8 @@ FROM kms
 """
 
 
-def runs_test(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
-              order_cols: Sequence[str] = ("ts", "event_id")) -> DataFrame:
+def runs_test(df: DataFrame,
+              key_cols: Sequence[str] = ("event_type",)) -> DataFrame:
     """Wald–Wolfowitz runs test for randomness per key: the
     time-ordered sequence of above/below-median signs (values EQUAL to
     the median drop, the standard convention), the observed run count,
@@ -2262,7 +2239,7 @@ def runs_test(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
     pass.
     """
     keys = list(key_cols)
-    base = df.select(*keys, *order_cols,
+    base = df.select(*keys, "ts", "event_id",
                      F.col("value").cast("double").alias("_v"))
     med = base.groupBy(*keys).agg(F.median("_v").alias("_med"))
     s = (base.join(F.broadcast(med), on=keys)
@@ -2270,7 +2247,7 @@ def runs_test(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
                      .when(F.col("_v") < F.col("_med"), -1))
          .filter(F.col("_s").isNotNull()))
     w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order_cols])
+        *[F.col(c).asc() for c in ("ts", "event_id")])
     s = s.withColumn(
         "_chg", F.when(F.lag("_s").over(w).isNull(), 1)
                  .when(F.col("_s") != F.lag("_s").over(w), 1)
@@ -2349,12 +2326,12 @@ FROM rta
 """
 
 
-def mad_anomaly(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
-                threshold: float = 3.5) -> DataFrame:
+def mad_anomaly(df: DataFrame,
+                key_cols: Sequence[str] = ("event_type",)) -> DataFrame:
     """Robust outlier detection via the median absolute deviation:
     rz = 0.6745·(x − median) / MAD (the modified z-score;
     0.6745 = Φ⁻¹(0.75) makes MAD consistent with σ under normality).
-    Emits rows with |rz| > ``threshold`` — robust to the very outliers
+    Emits rows with |rz| > 3.5 — robust to the very outliers
     a mean/stddev z-score would absorb.
 
     Shape: two exact-median aggs at key cardinality (median, then
@@ -2363,7 +2340,7 @@ def mad_anomaly(df: DataFrame, key_cols: Sequence[str] = ("event_type",),
     cardinality. MAD = 0 keys emit nothing (rz undefined).
     """
     keys = list(key_cols)
-    thr = float(threshold)
+    thr = 3.5
     base = df.select(*keys, "event_id",
                      F.col("value").cast("double").alias("_v"))
     med = base.groupBy(*keys).agg(F.median("_v").alias("_med"))
@@ -2406,7 +2383,7 @@ FROM maz WHERE ABS(rz) > {threshold!r}
 """
 
 
-def markov_entropy(events: DataFrame, key: str = "user_id") -> DataFrame:
+def markov_entropy(events: DataFrame) -> DataFrame:
     """Per-state entropy of the first-order behavior Markov chain:
     for each ``from_type``, H = −Σⱼ p·ln(p) over its outgoing
     transition distribution, plus the state's empirical weight
@@ -2418,7 +2395,7 @@ def markov_entropy(events: DataFrame, key: str = "user_id") -> DataFrame:
     type² hash agg); the entropy reduction then runs at type²
     cardinality — negligible at any input scale.
     """
-    tc = transition_counts(events, key=key)
+    tc = transition_counts(events)
     tot = Window.partitionBy("from_type")
     p = F.col("n") / F.sum("n").over(tot)
     per = (tc.select("from_type", "n", p.alias("_p"))
@@ -2470,8 +2447,6 @@ FROM meh
 
 
 def hurst_exponent(df: DataFrame,
-                   key_cols: Sequence[str] = ("event_type",),
-                   order_cols: Sequence[str] = ("ts", "event_id"),
                    levels: Sequence[int] = (1, 2, 4, 8)) -> DataFrame:
     """Hurst exponent per key by the aggregated-variance method: for a
     self-similar series, Var(k-block means) ∝ k^(2H−2), so H = 1 + s/2
@@ -2487,10 +2462,10 @@ def hurst_exponent(df: DataFrame,
     block or zero variance) emit NULL hurst rather than a fabricated
     slope.
     """
-    keys = list(key_cols)
+    keys = ["event_type"]
     w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order_cols])
-    base = df.select(*keys, *order_cols,
+        *[F.col(c).asc() for c in ("ts", "event_id")])
+    base = df.select(*keys, "ts", "event_id",
                      F.col("value").cast("double").alias("_v"))
     idx = base.withColumn("_i", F.row_number().over(w) - 1)
     lv = F.explode(F.array(*[F.lit(int(k)) for k in levels])).alias("_k")
@@ -2576,8 +2551,6 @@ FROM huf
 
 
 def peak_detect(df: DataFrame,
-                key_cols: Sequence[str] = ("event_type",),
-                order_cols: Sequence[str] = ("ts", "event_id"),
                 min_delta: float = 0.0) -> DataFrame:
     """Local-maximum peak detection per key: a row is a peak when its
     value STRICTLY exceeds both time-neighbors by ≥ ``min_delta``
@@ -2590,12 +2563,12 @@ def peak_detect(df: DataFrame,
     (no arithmetic beyond one subtraction), so engine and oracle agree
     exactly.
     """
-    keys = list(key_cols)
+    keys = ["event_type"]
     d = float(min_delta)
     w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order_cols])
+        *[F.col(c).asc() for c in ("ts", "event_id")])
     v = F.col("value").cast("double")
-    base = (df.select(*keys, *order_cols, v.alias("_v"))
+    base = (df.select(*keys, "ts", "event_id", v.alias("_v"))
             .withColumn("_pk", F.row_number().over(w))
             .withColumn("_lg", F.lag("_v").over(w))
             .withColumn("_ld", F.lead("_v").over(w)))
@@ -2642,8 +2615,6 @@ WHERE lg IS NOT NULL AND ld IS NOT NULL
 
 
 def forecast_backtest(df: DataFrame,
-                      key_cols: Sequence[str] = ("event_type",),
-                      order_cols: Sequence[str] = ("ts", "event_id"),
                       season: int = 7) -> DataFrame:
     """One-step-ahead backtest of the two standard baseline
     forecasters — naive (ŷₜ = yₜ₋₁) and seasonal-naive (ŷₜ = yₜ₋ₛ) —
@@ -2656,11 +2627,11 @@ def forecast_backtest(df: DataFrame,
     agg at key cardinality. Errors are |y − ŷ| of raw doubles — no
     cross-engine arithmetic hazards beyond the final averages.
     """
-    keys = list(key_cols)
+    keys = ["event_type"]
     w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).asc() for c in order_cols])
+        *[F.col(c).asc() for c in ("ts", "event_id")])
     v = F.col("value").cast("double")
-    base = (df.select(*keys, *order_cols, v.alias("_v"))
+    base = (df.select(*keys, "ts", "event_id", v.alias("_v"))
             .withColumn("_l1", F.lag("_v", 1).over(w))
             .withColumn("_ls", F.lag("_v", int(season)).over(w))
             .filter(F.col("_l1").isNotNull()
@@ -2708,8 +2679,6 @@ GROUP BY {keys}
 
 
 def seasonality_strength(df: DataFrame,
-                         key_cols: Sequence[str] = ("event_type",),
-                         time_col: str = "day", value_col: str = "v",
                          period: int = 7) -> DataFrame:
     """Hyndman seasonality / trend strength per key over the classical
     decomposition: Fₛ = max(0, 1 − Var(R)/Var(S+R)) and
@@ -2723,9 +2692,8 @@ def seasonality_strength(df: DataFrame,
     ONE key-cardinality variance agg over interior rows (trend
     non-NULL).
     """
-    dec = seasonal_decompose(df, key_cols=key_cols, time_col=time_col,
-                             value_col=value_col, period=period)
-    keys = list(key_cols)
+    dec = seasonal_decompose(df, period=period)
+    keys = ["event_type"]
     interior = dec.filter(F.col("trend").isNotNull()
                           & F.col("seasonal").isNotNull())
     vr = F.var_pop("resid")
@@ -2774,8 +2742,7 @@ GROUP BY {keys}
 # Dynamic time warping distance between keyed series
 # ---------------------------------------------------------------------------
 
-def dtw_distance(series: DataFrame, key_col: str = "key",
-                 time_col: str = "t", value_col: str = "v",
+def dtw_distance(series: DataFrame,
                  band: Optional[int] = None) -> DataFrame:
     """Banded dynamic-time-warping distance between every pair of
     keyed series (key_a < key_b) — the shape-aware alternative to
@@ -2801,10 +2768,10 @@ def dtw_distance(series: DataFrame, key_col: str = "key",
     from pyspark.sql.types import DoubleType
 
     arr = (series
-           .groupBy(F.col(key_col).alias("k"))
+           .groupBy(F.col("key").alias("k"))
            .agg(F.array_sort(F.collect_list(
-               F.struct(F.col(time_col).alias("t"),
-                        F.col(value_col).cast("double").alias("v"))))
+               F.struct(F.col("t").alias("t"),
+                        F.col("v").cast("double").alias("v"))))
                .alias("pts"))
            .select("k", F.expr("transform(pts, p -> p.v)").alias("vs")))
     a = arr.select(F.col("k").alias("key_a"), F.col("vs").alias("va"))

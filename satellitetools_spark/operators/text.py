@@ -152,8 +152,7 @@ FROM {table}
 """
 
 
-def quality_quantiles(docs: DataFrame, group_col: str = "lang",
-                      accuracy: int = None) -> DataFrame:
+def quality_quantiles(docs: DataFrame, accuracy: int = None) -> DataFrame:
     """Per-stratum calibration statistics of the composite quality score:
     count, mean, and exact interpolated quantiles (the numbers that pick a
     corpus-wide quality threshold per language/source).
@@ -166,7 +165,7 @@ def quality_quantiles(docs: DataFrame, group_col: str = "lang",
     exact/approx split.
     """
     ex = quality_exprs(F.col("text"))
-    scored = docs.select(F.col(group_col).alias("grp"),
+    scored = docs.select(F.col("lang").alias("grp"),
                          ex["quality"].alias("quality"))
     if accuracy is None:
         qcol = lambda p: F.expr(f"percentile(quality, {p!r})")  # noqa: E731
@@ -772,12 +771,12 @@ FROM {table}""")
     return "\nUNION ALL\n".join(parts)
 
 
-def char_ngram_lm_scores(docs: DataFrame, n: int = 3, k: float = 1.0,
-                         vocab: float = 96.0) -> DataFrame:
-    """Char-n-gram language-model quality score (the CCNet/KenLM-style
-    filter, self-trained): fit add-k-smoothed conditional counts
-    ``P(c_n | c_1..c_{n-1})`` on the corpus itself, then score each
-    document by mean log-probability and perplexity. Low-perplexity ≈
+def char_ngram_lm_scores(docs: DataFrame) -> DataFrame:
+    """Char-trigram language-model quality score (the CCNet/KenLM-style
+    filter, self-trained): fit add-1-smoothed conditional counts
+    ``P(c_3 | c_1 c_2)`` over a 96-symbol vocabulary on the corpus
+    itself, then score each document by mean log-probability and
+    perplexity. Low-perplexity ≈
     fluent/common text; high ≈ garbage, boilerplate, or wrong-alphabet —
     the standard pretraining quality signal when no external LM is
     available.
@@ -794,29 +793,28 @@ def char_ngram_lm_scores(docs: DataFrame, n: int = 3, k: float = 1.0,
 
     Every scored n-gram exists in the model by construction (trained on
     the same corpus), so the joins are inner with no smoothing-only path;
-    ``k``/``vocab`` still smooth the denominators exactly as a held-out
-    scorer would. Docs shorter than ``n`` chars emit NULL score and
+    the add-1 smoothing still applies to the denominators exactly as a
+    held-out scorer would. Docs shorter than 3 chars emit NULL score and
     ``n_ngrams = 0``.
     """
     t = F.col("text")
     grams_expr = F.when(
-        F.length(t) >= n,
-        F.transform(F.sequence(F.lit(1), F.length(t) - (n - 1)),
-                    lambda i: F.substring(t, i, n))
+        F.length(t) >= 3,
+        F.transform(F.sequence(F.lit(1), F.length(t) - 2),
+                    lambda i: F.substring(t, i, 3))
     ).otherwise(F.array().cast("array<string>"))
 
     toks = docs.select("doc_id", F.explode(grams_expr).alias("g"))
     tri = toks.groupBy("g").agg(F.count("*").alias("c_g"))
-    ctx = (tri.groupBy(F.substring("g", 1, n - 1).alias("p"))
+    ctx = (tri.groupBy(F.substring("g", 1, 2).alias("p"))
               .agg(F.sum("c_g").alias("c_p")))
 
     scored = (toks
               .join(F.broadcast(tri), "g")
-              .withColumn("p", F.substring("g", 1, n - 1))
+              .withColumn("p", F.substring("g", 1, 2))
               .join(F.broadcast(ctx), "p")
-              .withColumn("_lp", F.log((F.col("c_g") + F.lit(float(k))) /
-                                       (F.col("c_p") +
-                                        F.lit(float(k * vocab))))))
+              .withColumn("_lp", F.log((F.col("c_g") + F.lit(1.0)) /
+                                       (F.col("c_p") + F.lit(96.0)))))
     per_doc = (scored.groupBy("doc_id")
                .agg(F.count("*").alias("n_ngrams"),
                     F.avg("_lp").alias("avg_logp")))
@@ -942,7 +940,7 @@ FROM scored ORDER BY bm25 DESC, doc_id ASC LIMIT {k}
 """
 
 
-def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
+def pmi_bigrams(docs: DataFrame, k: int = 50) -> DataFrame:
     """Top-k adjacent-token bigrams by pointwise mutual information —
     the phrase-mining primitive (word2phrase-style collocation
     detection) for tokenizer/vocab construction over a training corpus.
@@ -952,7 +950,7 @@ def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     ``zip_with`` over the token array against its shift — so there is no
     token-cardinality self-join; the only shuffles are the two hash aggs
     at bigram- and unigram-vocabulary cardinality (both map-side
-    combined, Zipf ≪ stream). The ``min_count`` filter lands BEFORE the
+    combined, Zipf ≪ stream). The ``c_ab ≥ 5`` filter lands BEFORE the
     unigram joins, so the join input is the surviving-bigram set, and
     the unigram count table is vocabulary-cardinality — broadcast-able
     at any corpus size. Final top-k ranks on ROUND(pmi, 6) with a
@@ -969,7 +967,7 @@ def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     n_bi = bi_rows.agg(F.count("*").alias("n_bi"))
     n_uni = uni_rows.agg(F.count("*").alias("n_uni"))
     c_bi = (bi_rows.groupBy("w1", "w2").agg(F.count("*").alias("c_ab"))
-            .filter(F.col("c_ab") >= min_count))
+            .filter(F.col("c_ab") >= 5))
     c_uni = uni_rows.groupBy("w").agg(F.count("*").alias("c_w"))
     scored = (c_bi
               .join(F.broadcast(c_uni.select(F.col("w").alias("w1"),
@@ -1032,13 +1030,13 @@ ORDER BY rank LIMIT {k}
 """
 
 
-def chunk_lines(docs: DataFrame, words_per_line: int = 10) -> DataFrame:
-    """Deterministic re-chunking of documents into fixed ``words_per_line``
-    token lines ``(doc_id, pos, line)`` — the unit stream for
-    :func:`line_dedup` on corpora without natural line structure. One
-    projection + one explode; no shuffle."""
+def chunk_lines(docs: DataFrame) -> DataFrame:
+    """Deterministic re-chunking of documents into fixed 10-token lines
+    ``(doc_id, pos, line)`` — the unit stream for :func:`line_dedup` on
+    corpora without natural line structure. One projection + one
+    explode; no shuffle."""
     ws = F.split(F.col("text"), " ")
-    n_chunks = F.ceil(F.size(ws) / F.lit(float(words_per_line))).cast("int")
+    n_chunks = F.ceil(F.size(ws) / F.lit(10.0)).cast("int")
     return (docs
             .select("doc_id", ws.alias("ws"),
                     F.explode(F.sequence(F.lit(1), F.greatest(
@@ -1046,14 +1044,13 @@ def chunk_lines(docs: DataFrame, words_per_line: int = 10) -> DataFrame:
             .select("doc_id", "pos",
                     F.array_join(F.slice(
                         F.col("ws"),
-                        (F.col("pos") - 1) * words_per_line + 1,
-                        words_per_line), " ").alias("line")))
+                        (F.col("pos") - 1) * 10 + 1, 10), " ").alias("line")))
 
 
-def line_dedup(lines: DataFrame, max_occurrences: int = 1) -> DataFrame:
+def line_dedup(lines: DataFrame) -> DataFrame:
     """CCNet-style cross-corpus boilerplate removal: drop every line
-    whose DISTINCT-document frequency exceeds ``max_occurrences``
-    (headers, navigation, license blocks — the dominant noise in web
+    that occurs in more than one DISTINCT document (headers,
+    navigation, license blocks — the dominant noise in web
     corpora), then reassemble each document in original line order.
 
     Shape: the frequency agg keys on ``md5(line)`` so the shuffle
@@ -1070,7 +1067,7 @@ def line_dedup(lines: DataFrame, max_occurrences: int = 1) -> DataFrame:
               .groupBy("lh")
               .agg(F.countDistinct("doc_id").alias("n_docs")))
     kept_flag = (F.col("line") == "") | \
-        (F.coalesce(F.col("n_docs"), F.lit(0)) <= max_occurrences)
+        (F.coalesce(F.col("n_docs"), F.lit(0)) <= 1)
     flagged = keyed.join(counts, "lh", "left").withColumn("keep", kept_flag)
     return (flagged.groupBy("doc_id")
             .agg(F.array_join(
@@ -1837,7 +1834,7 @@ LIMIT {int(top_k)}
 # Vocabulary richness: Chao1 + Good-Turing coverage
 # ---------------------------------------------------------------------------
 
-def vocab_richness(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def vocab_richness(docs: DataFrame) -> DataFrame:
     """How much vocabulary the corpus HASN'T shown yet: observed type
     count, singleton/doubleton counts, the Chao1 lower-bound estimate
     of true vocabulary size ``S + f₁²/(2f₂)`` (bias-corrected form
@@ -1853,7 +1850,7 @@ def vocab_richness(docs: DataFrame, text_col: str = "text") -> DataFrame:
     type-cardinality; nothing downstream is fact-sized.
     """
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("t"))
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t"))
     counts = toks.groupBy("t").agg(F.count("*").cast("double").alias("c"))
     agg = counts.agg(
         F.count("*").cast("double").alias("s_obs"),
@@ -1905,7 +1902,7 @@ FROM vra
 # Multinomial naive Bayes (train + score, one lazy plan)
 # ---------------------------------------------------------------------------
 
-def naive_bayes_predict(docs: DataFrame, label_col: str = "lang") -> DataFrame:
+def naive_bayes_predict(docs: DataFrame) -> DataFrame:
     """Multinomial naive-Bayes classification of every document, with
     the model TRAINED on the same corpus in the same lazy plan — the
     classic weak-labeler / label-noise audit (where does the stated
@@ -1926,7 +1923,7 @@ def naive_bayes_predict(docs: DataFrame, label_col: str = "lang") -> DataFrame:
     """
     toks = F.regexp_extract_all(F.lower(F.col("text")),
                                 F.lit("[a-z0-9]+"), 0)
-    base = docs.select("doc_id", F.col(label_col).alias("actual"),
+    base = docs.select("doc_id", F.col("lang").alias("actual"),
                        toks.alias("_toks"))
     facts = (base.select("doc_id", "actual",
                          F.explode("_toks").alias("token"))
@@ -2072,14 +2069,13 @@ RAKE_STOPWORDS = (
     "such only own same s t just don now").split()
 
 
-def rake_keywords(docs: DataFrame, top_k: int = 25,
-                  min_len: int = 2) -> DataFrame:
+def rake_keywords(docs: DataFrame, top_k: int = 25) -> DataFrame:
     """RAKE (Rapid Automatic Keyword Extraction) over the corpus:
     candidate phrases are maximal stopword-free token runs; each word
     scores deg(w)/freq(w) (deg = Σ phrase length over its
     occurrences — co-occurrence degree); a phrase scores the sum of
     its word scores. Returns the corpus top-k multi-word phrases
-    (n_tokens ≥ ``min_len``) by (score DESC, phrase ASC) with
+    (n_tokens ≥ 2) by (score DESC, phrase ASC) with
     occurrence counts — the corpus-level keyword/terminology miner
     that complements per-doc tf-idf.
 
@@ -2116,7 +2112,7 @@ def rake_keywords(docs: DataFrame, top_k: int = 25,
                 .agg(F.sum(F.col("deg") / F.col("freq"))
                      .alias("score")))
     scored = (phrases.join(ph_words, ["doc_id", "run"])
-              .filter(F.col("plen") >= int(min_len))
+              .filter(F.col("plen") >= 2)
               .groupBy("phrase")
               .agg(F.count("*").cast("long").alias("n_occurrences"),
                    (F.round(F.max("score"), 6) + 0.0).alias("score")))

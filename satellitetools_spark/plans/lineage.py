@@ -34,7 +34,7 @@ from pyspark.sql.utils import AnalysisException
 
 
 def write_with_lineage(pixels: DataFrame, out_dir: str, lineage_dir: str,
-                       attempted: DataFrame | None = None) -> str:
+                       attempted: DataFrame) -> str:
     """Append ``pixels`` to parquet (partitioned by ``run_id``) and record
     per-document lineage.
 
@@ -42,9 +42,10 @@ def write_with_lineage(pixels: DataFrame, out_dir: str, lineage_dir: str,
     finished_at. Returns the run_id, a fresh 12-hex-digit id.
 
     ``attempted`` (a ``doc_id`` DataFrame) is the set of documents this run
-    covered. Docs that legitimately emit zero rows (e.g. every scene failed
-    the QI filter — a deterministic outcome) still get a lineage row with
-    ``n_rows = 0``; otherwise resume would re-decode them on every run.
+    covered; each gets exactly one lineage row per output file, and docs
+    that legitimately emit zero rows (e.g. every scene failed the QI
+    filter — a deterministic outcome) get one row with ``file`` NULL and
+    ``n_rows = 0``, otherwise resume would re-decode them on every run.
     Lineage is appended only after the output write action commits, so a
     mid-run crash leaves no lineage and the whole run is redone — safe,
     because the parquet job committer publishes files atomically at job
@@ -62,13 +63,12 @@ def write_with_lineage(pixels: DataFrame, out_dir: str, lineage_dir: str,
         written.groupBy("doc_id", F.input_file_name().alias("file"))
         .agg(F.count("*").alias("n_rows"))
     )
-    if attempted is not None:
-        per_doc = (
-            attempted.select("doc_id").distinct()
-            .join(per_doc, "doc_id", "left_outer")
-            .select("doc_id", "file",
-                    F.coalesce("n_rows", F.lit(0)).alias("n_rows"))
-        )
+    per_doc = (
+        attempted.select("doc_id").distinct()
+        .join(per_doc, "doc_id", "left_outer")
+        .select("doc_id", "file",
+                F.coalesce("n_rows", F.lit(0)).alias("n_rows"))
+    )
     lin = per_doc.select(
         F.lit(run_id).alias("run_id"),
         "doc_id", "n_rows", "file",

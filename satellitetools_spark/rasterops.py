@@ -25,11 +25,11 @@ from __future__ import annotations
 import math
 import zlib
 from functools import lru_cache
-from typing import Dict, List, Sequence, Tuple
+from typing import List, Sequence, Tuple
 
 import numpy as np
 
-from .constants import S2_BAND_GSD, S2_REFL_TRANS, SCL_NODATA
+from .constants import S2_BAND_GSD, S2_REFL_TRANS
 
 CHUNK_PX = 16            # chunk side length in pixels
 BUFFER_M = 100.0         # buffered-read margin around the AOI bbox

@@ -36,14 +36,34 @@ from pyspark.sql import types as T
 
 from .. import geometry as G
 from .. import rasterops as R
-from ..constants import CELL_SIZE_M, S2_BANDS_10_20
+from ..constants import CELL_SIZE_M, S2_BANDS_10_20, SCL_CLASSES
 
-_META_COLS = [
-    "aoi", "tileid", "assetid", "productid", "acquisition_time",
-    "sun_azimuth", "sun_zenith", "view_azimuth", "view_zenith",
-]
+# scene metadata and view/sun angles copied onto every decoded pixel row
+_SCENE_COLS = ["aoi", "tileid", "assetid", "productid", "acquisition_time"]
+_ANGLES = ["sun_azimuth", "sun_zenith", "view_azimuth", "view_zenith"]
 
-_ANGLES = ("sun_azimuth", "sun_zenith", "view_azimuth", "view_zenith")
+# Spark type of every non-band output column of the pixel and QI passes;
+# both mapInPandas schemas are built from it
+_COL_TYPES = {
+    "doc_id": T.StringType(), "aoi": T.StringType(),
+    "tileid": T.StringType(), "assetid": T.StringType(),
+    "productid": T.StringType(), "acquisition_time": T.TimestampType(),
+    "projection": T.StringType(), "datasource": T.StringType(),
+    "processing": T.StringType(),
+    "x": T.DoubleType(), "y": T.DoubleType(), "cell": T.LongType(),
+    **{c: T.DoubleType() for c in _ANGLES},
+    "aoi_pixels": T.IntegerType(), "gsd": T.DoubleType(),
+    "target_gsd": T.DoubleType(),
+}
+
+_OUT_COLS_HEAD = ["doc_id", *_SCENE_COLS, "x", "y", "cell"]
+_OUT_COLS_TAIL = [*_ANGLES, "aoi_pixels", "gsd"]
+_QI_META = [*_SCENE_COLS, "projection", "datasource", "processing"]
+
+
+def _fields(cols: List[str]) -> List[T.StructField]:
+    return [T.StructField(c, _COL_TYPES[c]) for c in cols]
+
 
 # transport record separator for packed span payloads (ASCII RS). JSON
 # strings cannot contain a raw 0x1e (json escapes control chars), and the
@@ -85,31 +105,17 @@ def _parse_doc_texts(row: dict) -> dict:
 
 
 def pixel_schema(bands: List[str]) -> T.StructType:
-    fields = [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("aoi", T.StringType()),
-        T.StructField("tileid", T.StringType()),
-        T.StructField("assetid", T.StringType()),
-        T.StructField("productid", T.StringType()),
-        T.StructField("acquisition_time", T.TimestampType()),
-        T.StructField("x", T.DoubleType()),
-        T.StructField("y", T.DoubleType()),
-        T.StructField("cell", T.LongType()),
-    ]
-    for b in bands:
-        if b == "SCL":
-            fields.append(T.StructField("SCL", T.IntegerType()))
-        else:
-            fields.append(T.StructField(b, T.DoubleType()))
-    fields += [
-        T.StructField("sun_azimuth", T.DoubleType()),
-        T.StructField("sun_zenith", T.DoubleType()),
-        T.StructField("view_azimuth", T.DoubleType()),
-        T.StructField("view_zenith", T.DoubleType()),
-        T.StructField("aoi_pixels", T.IntegerType()),
-        T.StructField("gsd", T.DoubleType()),
-    ]
-    return T.StructType(fields)
+    return T.StructType(
+        _fields(_OUT_COLS_HEAD)
+        + [T.StructField(b, T.IntegerType() if b == "SCL" else T.DoubleType())
+           for b in bands]
+        + _fields(_OUT_COLS_TAIL))
+
+
+# the fused QI pass: scene metadata, QI scale and the SCL class fractions
+QI_SCHEMA = T.StructType(
+    _fields(["doc_id", *_QI_META, "target_gsd"])
+    + [T.StructField(c, T.DoubleType()) for c in SCL_CLASSES])
 
 
 # executor-local LRU memo: (AOI GeoJSON or AOI record text, zone, gsd) →
@@ -124,11 +130,6 @@ def _aoi_grid(aoi_json: str, zone: int, gsd: float):
     inside = G.points_in_rings(px, py, rings_utm)
     return txs, tys, px, py, cells, inside, int(inside.sum())
 
-
-_OUT_COLS_HEAD = ["doc_id", "aoi", "tileid", "assetid", "productid",
-                  "acquisition_time", "x", "y", "cell"]
-_OUT_COLS_TAIL = ["sun_azimuth", "sun_zenith", "view_azimuth",
-                  "view_zenith", "aoi_pixels", "gsd"]
 
 # vectorized NumPy twins of operators/indices.py (used when VI computation
 # is fused into the decode pass — same IEEE semantics as the column exprs)
@@ -172,7 +173,7 @@ def _decode_one(raw: dict, bands: List[str],
 
     n_in = int(inside.sum())
     out = {"doc_id": np.repeat(row["doc_id"], n_in)}
-    for c in _META_COLS:
+    for c in _SCENE_COLS + _ANGLES:
         out[c] = np.repeat(row[c], n_in)
     out["x"] = px[inside]
     out["y"] = py[inside]
@@ -198,8 +199,7 @@ def _decode_one(raw: dict, bands: List[str],
     if snap_vars:
         from ..biophys.nn import run_nn
         from ..constants import BIOPHYS_COLUMN, SNAP_BIO_BANDS
-        ang = {c: float(row[c]) for c in ("sun_azimuth", "sun_zenith",
-                                          "view_azimuth", "view_zenith")}
+        ang = {c: float(row[c]) for c in _ANGLES}
         feats = np.column_stack(
             [out[b] for b in SNAP_BIO_BANDS]
             + [np.full(n_in, np.cos(np.radians(ang["view_zenith"]))),
@@ -213,9 +213,8 @@ def _decode_one(raw: dict, bands: List[str],
     return out
 
 
-def _make_batch_decoder(bands: List[str],
-                        vi_vars: List[str] = (), snap_vars: List[str] = (),
-                        extra_cols: List[str] = ()):
+def _make_batch_decoder(bands: List[str], vi_vars: List[str],
+                        snap_vars: List[str], extra_cols: List[str]):
     cols = _OUT_COLS_HEAD + bands + list(extra_cols) + _OUT_COLS_TAIL
 
     def decode_batches(batches):
@@ -349,10 +348,6 @@ def _contains_any(col, pats: List[str]):
     return out
 
 
-_QI_META = ["aoi", "tileid", "assetid", "productid", "acquisition_time",
-            "projection", "datasource", "processing"]
-
-
 def qi_percentages(docs: DataFrame) -> DataFrame:
     """Fused QI pass: decode SCL at each document's QI scale (the AOI
     record's ``qi_evaluation_scale``) and emit ONE row per document — the
@@ -365,19 +360,6 @@ def qi_percentages(docs: DataFrame) -> DataFrame:
     Documents with zero inside-AOI pixels get NULL percentages (the
     reference's faulty-SCL NaN rows, aws.py:630-634): the NaN row leaves
     the Python pass and the Arrow serializer turns it into NULL."""
-    from ..constants import SCL_CLASSES
-    schema = T.StructType(
-        [T.StructField("doc_id", T.StringType()),
-         T.StructField("aoi", T.StringType()),
-         T.StructField("tileid", T.StringType()),
-         T.StructField("assetid", T.StringType()),
-         T.StructField("productid", T.StringType()),
-         T.StructField("acquisition_time", T.TimestampType()),
-         T.StructField("projection", T.StringType()),
-         T.StructField("datasource", T.StringType()),
-         T.StructField("processing", T.StringType()),
-         T.StructField("target_gsd", T.DoubleType())]
-        + [T.StructField(c, T.DoubleType()) for c in SCL_CLASSES])
     n_cls = len(SCL_CLASSES)
 
     def qi_batches(batches):
@@ -404,4 +386,4 @@ def qi_percentages(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(res)
 
     prep = _maybe_repartition(decode_input(docs, ["SCL"]))
-    return prep.mapInPandas(qi_batches, schema=schema)
+    return prep.mapInPandas(qi_batches, schema=QI_SCHEMA)

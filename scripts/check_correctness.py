@@ -7,7 +7,6 @@ unhashable array columns) is caught locally before the driver sees it."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 

@@ -225,3 +225,33 @@ def test_aoi_grid_mask_matches_winding_oracle():
             inside, points_in_rings_winding(px, py, rings_utm))
         assert n_in == int(inside.sum()) > 0
     _aoi_grid.cache_clear()
+
+
+def test_decode_schemas_equal_explicit_field_lists():
+    """Both mapInPandas schemas, built from the decode's one name→type
+    table, equal the explicit field lists: pixel schema for the flagship
+    (SNAP bands), QI (SCL only) and default band sets, and the QI schema.
+    No Spark."""
+    from satellitetools_spark.constants import SNAP_BIO_BANDS
+    from satellitetools_spark.sources.decode import QI_SCHEMA, pixel_schema
+
+    S, D, TS = T.StringType(), T.DoubleType(), T.TimestampType()
+    scene = [("aoi", S), ("tileid", S), ("assetid", S), ("productid", S),
+             ("acquisition_time", TS)]
+    head = [("doc_id", S), *scene, ("x", D), ("y", D), ("cell", T.LongType())]
+    tail = [("sun_azimuth", D), ("sun_zenith", D), ("view_azimuth", D),
+            ("view_zenith", D), ("aoi_pixels", T.IntegerType()), ("gsd", D)]
+
+    def struct(fields):
+        return T.StructType([T.StructField(n, t) for n, t in fields])
+
+    for bands in (SNAP_BIO_BANDS, ["SCL"], S2_BANDS_10_20 + ["SCL"]):
+        band_fields = [(b, T.IntegerType() if b == "SCL" else D)
+                       for b in bands]
+        want = struct(head + band_fields + tail)
+        assert pixel_schema(bands).json() == want.json(), bands
+    want_qi = struct([("doc_id", S), *scene, ("projection", S),
+                      ("datasource", S), ("processing", S),
+                      ("target_gsd", D)]
+                     + [(c, D) for c in SCL_CLASSES])
+    assert QI_SCHEMA.json() == want_qi.json()

@@ -25,7 +25,7 @@ def test_simhash_empty_doc_gets_all_ones_signature(spark):
     sigs = {r["doc_id"]: r["simhash"] for r in D.simhash(df).collect()}
     assert sigs["a"] == sigs["b"] == -1  # all 64 bits set, int64 view
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
-             for r in D.simhash_near_pairs(df, max_hamming=3).collect()}
+             for r in D.simhash_near_pairs(df).collect()}
     assert pairs == {("a", "b"): 0}
 
 
@@ -49,7 +49,7 @@ def test_winnow_and_shingles_shorter_than_window(spark):
 
 def test_hash_split_covers_every_doc_exactly_once(spark):
     df = _docs(spark, [(f"d{i}", "t") for i in range(200)])
-    out = SAMP.hash_split(df, key_col="doc_id",
+    out = SAMP.hash_split(df,
                           splits=[("train", 80), ("val", 10), ("test", 10)])
     rows = out.collect()
     assert len(rows) == 200

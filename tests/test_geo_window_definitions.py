@@ -29,7 +29,7 @@ def test_circular_stats_match_direct_trig_sums(spark):
     det = scenes.select(
         "doc_id", F.explode("view_azimuth_detectors").alias("az"))
     got = {r["doc_id"]: r for r in CHK.circular_stats(
-        det, "az", key_cols=("doc_id",)).collect()}
+        det, "az").collect()}
     rows = scenes.select("doc_id", "view_azimuth_detectors").collect()
     for r in rows:
         azs = r["view_azimuth_detectors"]
@@ -107,8 +107,7 @@ def test_change_detection_matches_direct_first_last(spark):
     got = {(r["aoi"], r["ix"], r["iy"]):
            (r["n_obs"], r["v_first"], r["v_last"], r["delta"],
             r["change"])
-           for r in SP.change_detection(px, key_cols=("aoi",),
-                                        threshold=0.05).collect()}
+           for r in SP.change_detection(px).collect()}
     rows = px.collect()
     per = {}
     for r in rows:
@@ -170,9 +169,9 @@ def test_patch_stats_match_union_find_metrics(spark):
     from satellitetools_spark.operators import spatial as SP
     cells_df = spark.createDataFrame(
         sorted(_high_cells(spark)), "doc_id string, ix long, iy long")
-    lab = SP.region_label(cells_df, key_cols=("doc_id",))
+    lab = SP.region_label(cells_df)
     got = {r["doc_id"]: r
-           for r in SP.patch_stats(lab, key_cols=("doc_id",)).collect()}
+           for r in SP.patch_stats(lab).collect()}
     cells = _high_cells(spark)
     labels = _components(cells)
     docs = {d for d, _, _ in cells}
@@ -206,8 +205,7 @@ def test_sieve_filter_matches_union_find_size_cut(spark):
     cells_df = spark.createDataFrame(
         sorted(_high_cells(spark)), "doc_id string, ix long, iy long")
     got = {(r["doc_id"], r["ix"], r["iy"], r["label"])
-           for r in SP.sieve_filter(cells_df, key_cols=("doc_id",),
-                                    min_size=4).collect()}
+           for r in SP.sieve_filter(cells_df).collect()}
     cells = _high_cells(spark)
     labels = _components(cells)
     sizes = {}
@@ -243,7 +241,7 @@ def test_raster_xcorr_matches_direct_offset_pearson(spark):
     b_df = _extreme_raster(spark, "last")
     got = {r["aoi"]: (r["best_dx"], r["best_dy"], r["n_overlap"],
                       r["corr"])
-           for r in SP.raster_xcorr(a_df, b_df, key_cols=("aoi",),
+           for r in SP.raster_xcorr(a_df, b_df,
                                     max_offset=2,
                                     min_overlap=16).collect()}
     a_rows = a_df.collect()
@@ -310,8 +308,7 @@ def test_tpi_landform_matches_numpy_windows(spark):
                   F.col("ndvi").alias("v")))
     got = {(r["doc_id"], r["ix"], r["iy"]):
            (r["tpi_small"], r["tpi_large"], r["landform"])
-           for r in SP.tpi_landform(px, key_cols=("doc_id",),
-                                    r_small=1, r_large=3).collect()}
+           for r in SP.tpi_landform(px, r_large=3).collect()}
     rows = px.collect()
     per = {}
     for r in rows:

@@ -136,7 +136,7 @@ def test_emerging_hotspot_migrating_spike(spark):
                              v, 10.0))
     px = spark.createDataFrame(
         rows, "doc_id string, x double, y double, v double, gsd double")
-    gz = SP.gstar_by_doc(px, value_col="v")
+    gz = SP.gstar_by_doc(px)
     out = {(r["ix"], r["iy"]): r for r in TP.mann_kendall(
         gz.select("doc_id", "ix", "iy", "gi_z"),
         key_cols=("ix", "iy"), time_col="doc_id",
@@ -160,7 +160,7 @@ def test_gstar_by_doc_moments_are_per_doc(spark):
     px = spark.createDataFrame(
         rows, "doc_id string, x double, y double, v double, gsd double")
     out = {(r["doc_id"], r["ix"], r["iy"]): r["gi_z"]
-           for r in SP.gstar_by_doc(px, value_col="v").collect()}
+           for r in SP.gstar_by_doc(px).collect()}
     for cell in [(0, 0), (1, 1), (2, 0)]:
         assert out[("d1", *cell)] == pytest.approx(
             out[("d2", *cell)], abs=2e-6)
@@ -204,8 +204,7 @@ def test_harmonic_anomaly_flags_planted_outlier(spark):
         if d == 101:
             v -= 0.5          # disturbance
         rows.append(("a", date, v))
-    out = TP.harmonic_anomaly(_series(spark, rows), key_cols=("aoi",),
-                              time_col="date_str", value_col="v").collect()
+    out = TP.harmonic_anomaly(_series(spark, rows), value_col="v").collect()
     flagged = [r for r in out if r["is_anomaly"] == 1]
     assert len(flagged) == 1
     assert flagged[0]["date_str"] == "2024-04-10"   # day 101
@@ -267,7 +266,7 @@ def test_mixture_weights_flattens_toward_tail(spark):
     rows = [("en", 100)] * 90 + [("fi", 100)] * 10
     df = spark.createDataFrame(rows, "lang string, n_chars int")
     out = {r["lang"]: r for r in SA.mixture_weights(
-        df, group_col="lang", alpha=0.5).collect()}
+        df, alpha=0.5).collect()}
     p_en, p_fi = 0.9, 0.1
     z = math.sqrt(p_en) + math.sqrt(p_fi)
     assert out["en"]["p_natural"] == pytest.approx(0.9)
@@ -285,7 +284,7 @@ def test_mixture_weights_alpha_one_is_identity(spark):
     rows = [("a", 10)] * 3 + [("b", 10)] * 7
     df = spark.createDataFrame(rows, "lang string, n_chars int")
     out = {r["lang"]: r for r in SA.mixture_weights(
-        df, group_col="lang", alpha=1.0).collect()}
+        df, alpha=1.0).collect()}
     for k in ("a", "b"):
         assert out[k]["p_smoothed"] == pytest.approx(
             out[k]["p_natural"], abs=1e-6)
@@ -428,7 +427,7 @@ def test_interarrival_periodic_vs_bursty(spark):
         ts += 1 if i != 4 else 991
     df = spark.createDataFrame(rows, "user_id string, ts timestamp")
     out = {r["user_id"]: r for r in TP.interarrival_stats(
-        df, key_cols=("user_id",)).collect()}
+        df).collect()}
     p = out["periodic"]
     assert p["n_gaps"] == 9
     assert p["mean_gap_s"] == pytest.approx(60.0)
@@ -454,7 +453,7 @@ def test_event_entropy_uniform_and_monoculture(spark):
             + [("skew", "a")] * 9 + [("skew", "b")])
     df = spark.createDataFrame(rows, "user_id string, event_type string")
     out = {r["user_id"]: r for r in TP.event_entropy(
-        df, key_cols=("user_id",)).collect()}
+        df).collect()}
     assert out["uni"]["entropy_nats"] == pytest.approx(math.log(4),
                                                        abs=1e-6)
     assert out["uni"]["top_share"] == pytest.approx(0.25)

@@ -79,7 +79,7 @@ def test_seasonality_strength_matches_direct_decomposition(spark):
              .agg(F.count("*").cast("double").alias("v")))
     period = 7
     got = {r["event_type"]: r for r in seasonality_strength(
-        daily, key_cols=("event_type",), period=period).collect()}
+        daily, period=period).collect()}
     import duckdb
     rows = duckdb.sql(
         f"SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) FROM "
@@ -196,7 +196,7 @@ def test_label_outliers_match_direct_zscores(spark):
     from satellitetools_spark.operators import similarity as SIM
     emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
     got = {r["vec_id"]: r["z"]
-           for r in SIM.label_outliers(emb, z_threshold=2.0).collect()}
+           for r in SIM.label_outliers(emb).collect()}
     rows = emb.select("vec_id", "label", "embedding").collect()
     X = {r["vec_id"]: np.array(r["embedding"], dtype=float)
          for r in rows}
@@ -229,7 +229,7 @@ def test_label_propagation_matches_python_sync_rounds(spark):
     edges = [(r["vec_id_a"], r["vec_id_b"]) for r in pairs.collect()]
     got = {r["node"]: r["community"]
            for r in GR.label_propagation(
-               pairs, rounds=4, src_col="vec_id_a",
+               pairs, src_col="vec_id_a",
                dst_col="vec_id_b").collect()}
     adj = {}
     for a, b in edges:

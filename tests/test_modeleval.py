@@ -64,7 +64,7 @@ def test_calibration_bins_planted(spark):
     # bin 0: scores .05/.05 labels 0,1 -> frac_pos .5, avg_score .05
     df = _scored(spark, [0, 1, 1, 1], [0.05, 0.05, 0.95, 0.95])
     rows = {r["bin"]: r for r in
-            ME.calibration_bins(df, "y", "s", 0.0, 1.0, 10).collect()}
+            ME.calibration_bins(df, "y", "s", 0.0).collect()}
     assert rows[0]["n"] == 2 and rows[0]["frac_pos"] == 0.5
     assert rows[0]["gap"] == pytest.approx(0.45)
     assert rows[9]["n"] == 2 and rows[9]["frac_pos"] == 1.0
@@ -74,12 +74,12 @@ def test_calibration_bins_planted(spark):
 def test_calibration_edge_clamp_and_validation(spark):
     df = _scored(spark, [1, 0], [1.0, -0.2])  # 1.0 and out-of-range
     rows = {r["bin"]: r for r in
-            ME.calibration_bins(df, "y", "s", 0.0, 1.0, 10).collect()}
+            ME.calibration_bins(df, "y", "s", 0.0).collect()}
     assert rows[9]["n"] == 1 and rows[0]["n"] == 1  # clamped to edges
     with pytest.raises(ValueError):
-        ME.calibration_bins(df, "y", "s", 1.0, 1.0, 10)
+        ME.calibration_bins(df, "y", "s", 1.0)
     with pytest.raises(ValueError):
-        ME.brier_decomposition(df, "y", "s", 2.0, 1.0, 10)
+        ME.brier_decomposition(df, "y", "s", 2.0)
 
 
 def test_brier_decomposition_identities(spark):
@@ -87,7 +87,7 @@ def test_brier_decomposition_identities(spark):
     s = np.round(rng.rand(500), 3)
     y = (rng.rand(500) < s).astype(float)  # well-calibrated scores
     out = ME.brier_decomposition(_scored(spark, y, s), "y", "s",
-                                 0.0, 1.0, 10).collect()[0]
+                                 0.0).collect()[0]
     brier = float(np.mean((s - y) ** 2))
     assert out["brier"] == pytest.approx(brier, abs=1e-6)
     ybar = float(np.mean(y))
@@ -107,7 +107,7 @@ def test_cumulative_gains_monotone_and_total(spark):
     rng = np.random.RandomState(3)
     y = (rng.rand(300) < 0.3).astype(int)
     s = np.round(rng.rand(300) + 0.5 * y, 2)
-    rows = sorted(ME.cumulative_gains(_scored(spark, y, s), "y", "s", 10)
+    rows = sorted(ME.cumulative_gains(_scored(spark, y, s), "y", "s")
                   .collect(), key=lambda r: r["bucket"])
     gains = [r["gain"] for r in rows]
     assert gains == sorted(gains)           # monotone nondecreasing
@@ -122,7 +122,7 @@ def test_cumulative_gains_monotone_and_total(spark):
 def test_cumulative_gains_tie_group_stays_together(spark):
     # 10 rows all same score -> single bucket 10, not ten slices
     df = _scored(spark, [1, 0] * 5, [0.5] * 10)
-    rows = ME.cumulative_gains(df, "y", "s", 10).collect()
+    rows = ME.cumulative_gains(df, "y", "s").collect()
     assert len(rows) == 1 and rows[0]["bucket"] == 10
     assert rows[0]["n"] == 10
 
@@ -175,7 +175,7 @@ def test_bh_adjust_matches_manual_stepup(spark):
     df = spark.createDataFrame(
         [(f"t{i}", p) for i, p in enumerate(ps)], "key string, p double")
     out = {r["key"]: r for r in
-           ME.bh_adjust(df, "key", "p", alpha=0.05).collect()}
+           ME.bh_adjust(df, "key", "p").collect()}
     m = len(ps)
     raw = [p * m / (i + 1) for i, p in enumerate(ps)]
     adj = raw[:]
@@ -283,7 +283,7 @@ def test_confusion_and_mcc(spark):
     # planted: tp=2 fp=1 fn=1 tn=2 at thr .5
     df = _scored(spark, [1, 1, 1, 0, 0, 0],
                  [0.9, 0.8, 0.1, 0.7, 0.2, 0.3])
-    out = ME.confusion_at_threshold(df, "y", "s", 0.5).collect()[0]
+    out = ME.confusion_at_threshold(df, "y", "s").collect()[0]
     assert (out["tp"], out["fp"], out["fn"], out["tn"]) == (2, 1, 1, 2)
     assert out["precision"] == pytest.approx(2 / 3, abs=1e-6)
     assert out["recall"] == pytest.approx(2 / 3, abs=1e-6)
@@ -350,8 +350,7 @@ def test_conformal_interval_guarantee(spark):
     rows = [(int(i), float(x), float(x + rng.randn()))
             for i, x in enumerate(rng.rand(1000) * 10)]
     df = spark.createDataFrame(rows, "id long, pred double, act double")
-    out = ME.conformal_interval(df, "pred", "act", "id % 5 = 0",
-                                alpha=0.1).collect()[0]
+    out = ME.conformal_interval(df, "pred", "act", "id % 5 = 0").collect()[0]
     assert out["n_calib"] == 200 and out["n_test"] == 800
     assert out["test_coverage"] >= 0.85
     # qhat is the exact ceil((n+1)*.9)-th smallest calibration residual
@@ -373,7 +372,7 @@ def test_heavy_hitters_guarantee_on_skewed_stream(spark):
         rows.append((i, f"hot {rare} warm" if i % 2 else f"hot {rare}"))
     df = spark.createDataFrame(rows, "id long, text string").repartition(5)
     out = {r["token"]: r for r in
-           SK.heavy_hitters(df, "text", phi=0.05).collect()}
+           SK.heavy_hitters(df, phi=0.05).collect()}
     n_tokens = 100 * 7 + 50  # 6 rare + hot per doc, warm on half
     assert set(out) == {"hot", "warm"}
     assert out["hot"]["cnt"] == 100
@@ -386,9 +385,9 @@ def test_heavy_hitters_empty_below_threshold(spark):
     # uniform alphabet where nothing reaches phi
     rows = [(i, " ".join(f"w{j}" for j in range(50))) for i in range(4)]
     df = spark.createDataFrame(rows, "id long, text string")
-    assert SK.heavy_hitters(df, "text", phi=0.05).count() == 0
+    assert SK.heavy_hitters(df, phi=0.05).count() == 0
     with pytest.raises(ValueError):
-        SK.heavy_hitters(df, "text", phi=0.0)
+        SK.heavy_hitters(df, phi=0.0)
 
 
 # --------------------------------------------------- retrieval metrics
@@ -528,9 +527,9 @@ def test_hosmer_lemeshow_calibrated_vs_shifted(spark):
     y_cal = (rng.rand(2000) < s).astype(float)      # calibrated
     y_bad = (rng.rand(2000) < np.clip(s + 0.25, 0, 1)).astype(float)
     cal = ME.hosmer_lemeshow(_scored(spark, y_cal, s), "y", "s",
-                             0.0, 1.0, 10).collect()[0]
+                             0.0, 1.0).collect()[0]
     bad = ME.hosmer_lemeshow(_scored(spark, y_bad, s), "y", "s",
-                             0.0, 1.0, 10).collect()[0]
+                             0.0, 1.0).collect()[0]
     assert cal["g"] == 10 and cal["dof"] == 8
     # calibrated scores: H near its dof; shifted: H explodes
     assert cal["h"] < 30
@@ -543,7 +542,7 @@ def test_hosmer_lemeshow_numpy_parity_and_guard(spark):
     s = np.round(rng.rand(300) * 0.8 + 0.1, 2)
     y = (rng.rand(300) < 0.5).astype(float)
     out = ME.hosmer_lemeshow(_scored(spark, y, s), "y", "s",
-                             0.0, 1.0, 10).collect()[0]
+                             0.0, 1.0).collect()[0]
     # floor of the quotient, matching the engine's floor((s-lo)/width) —
     # NOT s // 0.1, whose divmod semantics differ at representation
     # boundaries (0.5 // 0.1 == 4.0 while floor(0.5/0.1) == 5)
@@ -556,7 +555,7 @@ def test_hosmer_lemeshow_numpy_parity_and_guard(spark):
             h += (ok - ek) ** 2 / (ek * (1 - ek / nk))
     assert out["h"] == pytest.approx(h, abs=1e-4)
     with pytest.raises(ValueError):
-        ME.hosmer_lemeshow(_scored(spark, y, s), "y", "s", 1.0, 0.0, 10)
+        ME.hosmer_lemeshow(_scored(spark, y, s), "y", "s", 1.0, 0.0)
 
 
 def test_ols_fit_exact_line_and_noisy_numpy_parity(spark):
@@ -646,7 +645,7 @@ def test_logistic_fit_numpy_irls_parity(spark):
         [(float(a), float(b), float(c)) for a, b, c in zip(y, x1, x2)],
         "y double, a double, b double")
     got = {r["feature"]: r for r in
-           ME.logistic_fit(df, "y", ["a", "b"], iters=8).collect()}
+           ME.logistic_fit(df, "y", ["a", "b"]).collect()}
 
     # independent pure-NumPy IRLS
     X = np.column_stack([np.ones(400), x1, x2])

@@ -86,7 +86,7 @@ def test_domain_grid_check_matches_reference_disabled_code(spark):
                                                  load_domain_grid,
                                                  load_nn_params)
 
-    grid = load_domain_grid("LAI")
+    grid = load_domain_grid()
     p = load_nn_params("LAI")
     lo, hi = p["defdom_min"], p["defdom_max"]
     rows, want = [], []
@@ -111,6 +111,6 @@ def test_domain_grid_check_matches_reference_disabled_code(spark):
     df = spark.createDataFrame(
         rows, ["pid"] + SNAP_BIO_BANDS)
     got = {r["pid"]: int(r["in_domain"])
-           for r in domain_grid_check(df, "LAI").collect()}
+           for r in domain_grid_check(df).collect()}
     for (row, w) in zip(rows, want):
         assert got[row[0]] == w, (row[0], got[row[0]], w)

@@ -428,7 +428,7 @@ def test_heavy_hitters_verify_pass_broadcasts_candidates(spark):
     docs = spark.createDataFrame(
         [(i, "hot cold " + f"w{i}") for i in range(40)],
         ["doc_id", "text"])
-    out = heavy_hitters(docs, "text", phi=0.2)
+    out = heavy_hitters(docs, phi=0.2)
     plan = _plan(out)
     # r4: the verify scan (broadcast-joined candidates, F.broadcast
     # hint by construction) is pinned behind a localCheckpoint so the
@@ -448,7 +448,7 @@ def test_domain_grid_check_is_single_broadcast_probe(spark):
                                                  domain_grid_check)
     rows = [[i] + [0.1] * 8 for i in range(50)]
     df = spark.createDataFrame(rows, ["pid"] + SNAP_BIO_BANDS)
-    plan = _plan(domain_grid_check(df, "LAI"))
+    plan = _plan(domain_grid_check(df))
     # the 11k-cell grid is the broadcast side; the pixel frame is never
     # exchanged for the join
     assert "BroadcastHashJoin" in plan
@@ -463,7 +463,7 @@ def test_allpairs_jaccard_equi_joins_only(spark):
     docs = spark.createDataFrame(
         [(f"d{i}", f"alpha beta gamma delta w{i} x{i} y{i} z{i}")
          for i in range(12)], ["doc_id", "text"])
-    plan = _plan(allpairs_jaccard_pairs(docs, n=3, threshold=0.5))
+    plan = _plan(allpairs_jaccard_pairs(docs, threshold=0.5))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -476,7 +476,7 @@ def test_naive_bayes_no_cartesian_and_single_argmax_window(spark):
         [(f"d{i}", "en" if i % 2 else "fi",
           f"alpha beta w{i} x{i}") for i in range(12)],
         ["doc_id", "lang", "text"])
-    plan = _plan(naive_bayes_predict(docs, "lang"))
+    plan = _plan(naive_bayes_predict(docs))
     assert "CartesianProduct" not in plan
     # exactly one Window node ("Window [" excludes the WindowGroupLimit
     # rank-pushdown nodes, which are the optimization we WANT)

@@ -304,23 +304,3 @@ def test_haversine_lon_window_never_drops_within_radius_pairs(
     dl = abs(math.degrees(dlon))
     dl = min(dl, 360.0 - dl)
     assert dl <= lon_w + 1e-9
-
-
-# ------------------------------------------------- PNG gray8 codec
-
-@settings(max_examples=120, deadline=None)
-@given(st.integers(1, 24), st.integers(1, 24), st.integers(0, 2**32 - 1),
-       st.lists(st.integers(0, 4), min_size=1, max_size=5))
-def test_png_gray8_roundtrip_random_images_and_filter_cycles(
-        h, w, seed, filters):
-    # stdlib PNG codec: ANY uint8 image through ANY per-row filter
-    # cycle must round-trip bit-exactly (random shapes catch the 1-col
-    # / 1-row Paeth and Average edge cases seeds can miss)
-    from satellitetools_spark.operators.media import (decode_png_gray8,
-                                                      encode_png_gray8)
-    rng = np.random.RandomState(seed % (2**31 - 1))
-    img = rng.randint(0, 256, (h, w), dtype=np.uint8)
-    png = encode_png_gray8(img, filters=tuple(filters))
-    out = decode_png_gray8(png)
-    assert out.dtype == np.uint8 and out.shape == (h, w)
-    assert np.array_equal(out, img)

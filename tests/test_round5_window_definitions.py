@@ -66,7 +66,7 @@ def test_event_entropy_matches_direct_shannon(spark):
     from satellitetools_spark.operators.temporal import event_entropy
     ev = _events(spark).select("user_id", "event_type")
     got = {r["user_id"]: r for r in event_entropy(
-        ev, key_cols=("user_id",)).collect()}
+        ev).collect()}
     import duckdb
     rows = duckdb.sql(
         f"SELECT user_id, event_type FROM "
@@ -114,7 +114,7 @@ def test_seasonal_mann_kendall_matches_direct_pair_fold(spark):
         seasonal_mann_kendall
     ev = _events(spark).select("user_id", "ts", "value")
     got = {r["user_id"]: r for r in seasonal_mann_kendall(
-        ev, key_cols=("user_id",),
+        ev,
         season_expr="pmod(datediff(CAST(ts AS DATE),"
                     " DATE '1970-01-01'), 7)").collect()}
     import duckdb
@@ -203,7 +203,7 @@ def test_percentile_stretch_matches_direct_rank_formula(spark):
     got = {(r["doc_id"], r["x"], r["y"]):
            (r["v"], r["pct_rank"], r["stretched"])
            for r in SP.percentile_stretch(
-               px, key_cols=("doc_id",)).collect()}
+               px).collect()}
     rows = px.collect()
     per = {}
     for r in rows:
@@ -262,9 +262,8 @@ def test_sg_smooth_matches_local_polyfit_definition(spark):
     series = (px.groupBy("aoi", "date_str")
               .agg(F.round(F.sum("v") / F.count("v"), 6)
                    .alias("mean_ndvi")))
-    out = sg_smooth(series, key_cols=("aoi",), time_col="date_str",
-                    value_col="mean_ndvi", window=5, order=2,
-                    out_col="sm")
+    out = sg_smooth(series,
+                    value_col="mean_ndvi", out_col="sm")
     got = {(r["aoi"], r["date_str"]): r["sm"] for r in out.collect()}
     rows = series.collect()
     per = {}

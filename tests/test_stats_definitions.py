@@ -587,7 +587,7 @@ def test_confusion_at_threshold_matches_direct_counts(spark, seed):
     s = np.round(rng.rand(250), 3)
     df = spark.createDataFrame(
         [(int(a), float(b)) for a, b in zip(y, s)], "y int, s double")
-    r = ME.confusion_at_threshold(df, "y", "s", 0.5).collect()[0]
+    r = ME.confusion_at_threshold(df, "y", "s").collect()[0]
     pred = (s >= 0.5).astype(int)
     tp = int(((pred == 1) & (y == 1)).sum())
     fp = int(((pred == 1) & (y == 0)).sum())
@@ -695,7 +695,7 @@ def test_heavy_hitters_matches_direct_exact_counts(spark, seed):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     phi = 0.05
     got = {r["token"]: (r["cnt"], r["share"]) for r in
-           heavy_hitters(docs, "text", phi=phi).collect()}
+           heavy_hitters(docs, phi=phi).collect()}
     n = len(all_tokens)
     from collections import Counter
     want = {t: c for t, c in Counter(all_tokens).items()
@@ -1387,7 +1387,7 @@ def test_pettitt_matches_direct_u_statistic(spark, seed):
         [(1, dt.datetime(2024, 1, 1) + dt.timedelta(days=i),
           float(v[i])) for i in range(len(v))],
         "user_id int, ts timestamp, value double")
-    r = pettitt(df, ("user_id",)).collect()[0]
+    r = pettitt(df).collect()[0]
     n = len(v)
     # U_t = sum_{i<=t} sum_{j>t} sign(v_j - v_i); K = max |U_t|
     best_k, best_t = -1, None
@@ -1643,7 +1643,7 @@ def test_ccf_matches_direct_lagged_correlation(spark, seed):
         [("k", dt.datetime(2024, 1, 1) + dt.timedelta(hours=i),
           float(a[i]), float(b[i])) for i in range(n)],
         "key string, t timestamp, va double, vb double")
-    r = ccf(df, ("key",), "t", max_lag=2).collect()[0]
+    r = ccf(df, ("key",), max_lag=2).collect()[0]
     am, bm = a.mean(), b.mean()
     den = np.sqrt(((a - am) ** 2).sum() * ((b - bm) ** 2).sum())
     for k in (-2, -1, 0, 1, 2):

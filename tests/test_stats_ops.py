@@ -75,7 +75,7 @@ def test_seasonal_decompose_recovers_planted_components(spark):
         rows.append(("a", day.isoformat(), 10.0 + 0.5 * i + s[i % 7]))
     df = spark.createDataFrame(rows, "event_type string, day string, v double")
     out = {r["day"]: r for r in
-           TP.seasonal_decompose(df, key_cols=("event_type",)).collect()}
+           TP.seasonal_decompose(df).collect()}
     assert len(out) == 21
     # edges: first/last 3 rows have no full window -> NULL trend
     for d in ["2024-01-01", "2024-01-02", "2024-01-03",
@@ -137,7 +137,7 @@ def test_event_trigrams_counts_and_ties(spark):
     ]
     df = (spark.createDataFrame(rows, "user_id long, ts string, event_type string")
           .withColumn("ts", F.col("ts").cast("timestamp")))
-    out = TP.event_trigrams(df, top_k=10).collect()
+    out = TP.event_trigrams(df).collect()
     got = {r["trigram"]: (r["n"], r["rank"]) for r in out}
     assert got == {"A>B>C": (2, 1), "B>C>D": (1, 2)}
 
@@ -276,7 +276,7 @@ def test_seasonal_mk_pure_weekly_plus_trend(spark):
         ts = (dt.datetime(2024, 1, 1) + dt.timedelta(days=i)).isoformat(" ")
         rows.append((1, ts, prof[i % 7] + float(i // 7)))
     out = TP.seasonal_mann_kendall(
-        _events(spark, rows), key_cols=("user_id",),
+        _events(spark, rows),
         season_expr="pmod(datediff(CAST(ts AS DATE),"
                     " DATE '1970-01-01'), 7)").collect()[0]
     assert out["n_obs"] == 28 and out["n_seasons"] == 7
@@ -297,7 +297,7 @@ def test_seasonal_mk_seasonality_alone_is_no_trend(spark):
         ts = (dt.datetime(2024, 1, 1) + dt.timedelta(days=i)).isoformat(" ")
         rows.append((1, ts, prof[i % 7]))
     out = TP.seasonal_mann_kendall(
-        _events(spark, rows), key_cols=("user_id",),
+        _events(spark, rows),
         season_expr="pmod(datediff(CAST(ts AS DATE),"
                     " DATE '1970-01-01'), 7)").collect()[0]
     assert out["s_stat"] == 0
@@ -330,7 +330,7 @@ def test_clark_evans_truncation_reported(spark):
     # two points farther apart than the radius: no NN found -> matched 0
     pts = [("t", 0.0, 0.0), ("t", 500.0, 0.0)]
     df = spark.createDataFrame(pts, "doc_id string, x double, y double")
-    out = SP.clark_evans(df, radius=90.0).collect()[0]
+    out = SP.clark_evans(df).collect()[0]
     assert out["n_points"] == 2 and out["n_matched"] == 0
     assert out["mean_nn_dist"] is None
 
@@ -380,7 +380,7 @@ def test_knox_planted_interaction(spark):
            ("k", 1000.0, 10.0, 101.0)]
     df = spark.createDataFrame(
         pts, "aoi string, x double, y double, td double")
-    out = SP.knox_test(df, ds=60.0, dt=10.0).collect()[0]
+    out = SP.knox_test(df).collect()[0]
     assert out["n_points"] == 6 and out["t_pairs"] == 15
     assert out["ns"] == 6 and out["nt"] == 6 and out["x_st"] == 6
     assert out["expected_x"] == pytest.approx(2.4)
@@ -396,7 +396,7 @@ def test_knox_no_interaction_when_time_shuffled(spark):
            ("k", 1000.0, 10.0, 100.0)]
     df = spark.createDataFrame(
         pts, "aoi string, x double, y double, td double")
-    out = SP.knox_test(df, ds=60.0, dt=10.0).collect()[0]
+    out = SP.knox_test(df).collect()[0]
     # Ns = 6 (same geometry); Nt = C(3,2)*2 = 6; X = within-cluster
     # pairs that also share time = 1 per cluster = 2
     assert out["ns"] == 6 and out["nt"] == 6 and out["x_st"] == 2
@@ -517,7 +517,7 @@ def test_percentile_stretch_ties_and_extremes(spark):
           ("d", 40.0, 0.0, 20.0), ("d", 60.0, 0.0, 40.0)]
     df = spark.createDataFrame(px, "doc_id string, x double, y double, v double")
     out = {r["x"]: r for r in
-           SP.percentile_stretch(df, value_col="v").collect()}
+           SP.percentile_stretch(df).collect()}
     assert out[0.0]["pct_rank"] == 0.0
     assert out[20.0]["pct_rank"] == pytest.approx(1 / 3, abs=1e-6)
     assert out[40.0]["pct_rank"] == pytest.approx(1 / 3, abs=1e-6)
@@ -530,7 +530,7 @@ def test_percentile_stretch_ties_and_extremes(spark):
 def test_percentile_stretch_constant_band_guard(spark):
     px = [("d", 0.0, 0.0, 5.0), ("d", 20.0, 0.0, 5.0)]
     df = spark.createDataFrame(px, "doc_id string, x double, y double, v double")
-    out = SP.percentile_stretch(df, value_col="v").collect()
+    out = SP.percentile_stretch(df).collect()
     for r in out:
         assert r["pct_rank"] == 0.0      # all tie at the bottom
         assert r["stretched"] is None    # zero range -> guarded NULL
@@ -901,13 +901,11 @@ def test_gini_extremes(spark):
     mk = lambda rows: spark.createDataFrame(
         rows, "l_suppkey long, l_extendedprice double")
     eq = SEG.gini_concentration(
-        mk([(i, 10.0) for i in range(5)]),
-        key_col="l_suppkey", value_col="l_extendedprice").collect()[0]
+        mk([(i, 10.0) for i in range(5)])).collect()[0]
     assert eq["gini"] == 0.0 and eq["n_keys"] == 5
     assert eq["top_share"] == pytest.approx(0.2)
     one = SEG.gini_concentration(
-        mk([(0, 100.0)] + [(i, 0.0) for i in range(1, 5)]),
-        key_col="l_suppkey", value_col="l_extendedprice").collect()[0]
+        mk([(0, 100.0)] + [(i, 0.0) for i in range(1, 5)])).collect()[0]
     assert one["gini"] == pytest.approx(0.8)      # (n-1)/n
     assert one["top_share"] == 1.0
 
@@ -941,7 +939,7 @@ def test_kaplan_meier_textbook(spark):
     rows += [("edge", t0 + 20 * day)]
     ev = spark.createDataFrame(rows, "user_id string, ts timestamp")
     km = {r["dur_days"]: r for r in kaplan_meier(
-        ev, censor_horizon_days=7).collect()}
+        ev).collect()}
     # 'edge' censors at t=0, so at t=2: n=4 at risk, d=2 -> S = 0.5
     assert km[0]["c_censored"] == 1 and km[0]["n_risk"] == 5
     assert km[0]["survival"] == pytest.approx(1.0)
@@ -989,8 +987,7 @@ def test_mad_anomaly_flags_only_outlier(spark):
     df = spark.createDataFrame(
         [("t", f"e{i}", v) for i, v in enumerate(vals)],
         "event_type string, event_id string, value double")
-    out = mad_anomaly(df, key_cols=("event_type",),
-                      threshold=3.5).collect()
+    out = mad_anomaly(df, key_cols=("event_type",)).collect()
     assert [r["event_id"] for r in out] == ["e6"]
     # rz = 0.6745 * 90 / 0.5
     assert out[0]["rz"] == pytest.approx(0.6745 * 90 / 0.5, rel=1e-6)
@@ -1099,7 +1096,7 @@ def test_tpi_landform_peak_and_pit(spark):
     vals[(6, 6)] = -50.0
     out = {(r["ix"], r["iy"]): r
            for r in SP.tpi_landform(_surface(spark, vals),
-                                    r_small=1, r_large=2).collect()}
+                                    r_large=2).collect()}
     assert out[(2, 2)]["landform"] == "mountain_top"
     assert out[(6, 6)]["landform"] == "canyon"
     # far corner of the interior is plain (TPI ~ 0 at both scales)
@@ -1139,7 +1136,7 @@ def test_change_detection_gain_loss_stable(spark):
         rows, "aoi string, x double, y double, gsd double,"
               " t timestamp, v double")
     out = {(r["ix"], r["iy"]): r
-           for r in SP.change_detection(px, threshold=0.05).collect()}
+           for r in SP.change_detection(px).collect()}
     assert out[(0, 0)]["change"] == "gain"
     assert out[(0, 0)]["delta"] == pytest.approx(0.3)
     assert out[(1, 0)]["change"] == "loss"
@@ -1413,7 +1410,7 @@ def test_sieve_filter_drops_small_patches(spark):
     cells = ([("d", x, y) for x in range(2) for y in range(3)]
              + [("d", 10, 10), ("d", 20, 20)])
     df = spark.createDataFrame(cells, "doc_id string, ix long, iy long")
-    out = sieve_filter(df, min_size=4).collect()
+    out = sieve_filter(df).collect()
     assert len(out) == 6
     assert all(r["ix"] < 10 for r in out)
     assert len({r["label"] for r in out}) == 1
@@ -1435,7 +1432,7 @@ def test_seasonality_strength_pure_seasonal_vs_noise(spark):
     df = spark.createDataFrame(rows,
                                "event_type string, day string, v double")
     out = {r["event_type"]: r for r in seasonality_strength(
-        df, key_cols=("event_type",)).collect()}
+        df).collect()}
     # pure periodic + zero-mean over the period: resid ~ 0 -> Fs ~ 1
     assert out["seasonal"]["seasonal_strength"] == pytest.approx(
         1.0, abs=1e-6)
@@ -1458,7 +1455,7 @@ def test_label_outliers_flags_planted_vector(spark):
     emb = spark.createDataFrame(rows,
                                 "vec_id long, embedding array<double>,"
                                 " label string")
-    out = label_outliers(emb, z_threshold=2.0).collect()
+    out = label_outliers(emb).collect()
     assert [r["vec_id"] for r in out] == [99]
     assert out[0]["z"] > 3
 
@@ -2060,7 +2057,7 @@ def test_kriging_fill_numpy_parity_and_exactness(spark):
     points = spark.createDataFrame(pts, "doc_id string, x double, y double")
     out = {r["doc_id"]: r for r in SP.kriging_fill(
         points, stations, k=5, radius=400.0, cell_m=40.0,
-        nugget=0.0, sill=1.0, vrange=500.0).collect()}
+        vrange=500.0).collect()}
 
     # exact interpolation at an observed location (nugget 0)
     assert out["t2"]["krig_pred"] == pytest.approx(10.0, abs=1e-6)

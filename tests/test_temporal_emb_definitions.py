@@ -70,7 +70,7 @@ def test_holt_smooth_matches_python_recursion(spark):
         .select("user_id", "ts", "value")
     a, b_f, h = 0.3, 0.1, 7
     got = {r["user_id"]: r for r in holt_smooth(
-        ev, key_cols=("user_id",), alpha=a, beta=b_f,
+        ev, alpha=a, beta=b_f,
         horizon=h).collect()}
     import duckdb
     rows = duckdb.sql(
@@ -106,7 +106,7 @@ def test_hurst_exponent_matches_direct_block_variances(spark):
     ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
     levels = (1, 2, 4, 8)
     got = {r["event_type"]: r for r in hurst_exponent(
-        ev, key_cols=("event_type",), order_cols=("ts", "event_id"),
+        ev,
         levels=levels).collect()}
     import duckdb
     rows = duckdb.sql(

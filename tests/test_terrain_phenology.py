@@ -29,8 +29,7 @@ def test_harmonic_fit_recovers_planted_sinusoid(spark):
         doy = d
         v = 0.4 + 0.25 * math.cos(w * doy) - 0.1 * math.sin(w * doy)
         rows.append(("a", date, v))
-    out = TP.harmonic_fit(_series(spark, rows), key_cols=("aoi",),
-                          time_col="date_str", value_col="v").collect()[0]
+    out = TP.harmonic_fit(_series(spark, rows), value_col="v").collect()[0]
     assert out["n_obs"] == 73
     assert out["a0"] == pytest.approx(0.4, abs=1e-5)
     assert out["a1"] == pytest.approx(0.25, abs=1e-5)
@@ -51,8 +50,7 @@ def test_phenology_triangle_season(spark):
     dates = [f"2024-01-{d:02d}" for d in range(1, 18)]
     vals = [0.1 * min(d, 18 - d) for d in range(1, 18)]
     rows = [("a", dt, v) for dt, v in zip(dates, vals)]
-    out = TP.phenology(_series(spark, rows), key_cols=("aoi",),
-                       time_col="date_str", value_col="v").collect()[0]
+    out = TP.phenology(_series(spark, rows), value_col="v").collect()[0]
     assert out["vmin"] == pytest.approx(0.1)
     assert out["vmax"] == pytest.approx(0.9)
     assert out["sos_date"] == "2024-01-05"   # first v >= 0.5

@@ -145,7 +145,7 @@ def test_sessionize_matches_plain_python_event_fold(spark):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
     gap = E.SESSION_GAP_S
-    out = sessionize(ev, key=["user_id"], ts_col="ts",
+    out = sessionize(ev, key=["user_id"],
                      gap_seconds=gap).select(
         "user_id", F.unix_micros(F.col("ts").cast("timestamp"))
         .alias("us"), "session_seq")
@@ -377,7 +377,7 @@ def test_cusum_alarms_matches_plain_python_fold(spark):
                                      "value double")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     got = {r["user_id"]: (r["n_obs"], r["n_alarms"])
-           for r in cusum_alarms(df, k=0.5, h=4.0).collect()}
+           for r in cusum_alarms(df).collect()}
     per = {}
     for u, ts, v in rows:
         per.setdefault(u, []).append((ts, v))

@@ -35,8 +35,7 @@ def test_peak_detect_matches_direct_neighbor_scan(spark):
     ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
     d = 0.5
     got = {(r["event_type"], r["pos"]): (r["value"], r["prominence"])
-           for r in peak_detect(ev, key_cols=("event_type",),
-                                order_cols=("ts", "event_id"),
+           for r in peak_detect(ev,
                                 min_delta=d).collect()}
     per = {}
     for g, us, eid, v in _ev_series():
@@ -62,7 +61,7 @@ def test_forecast_backtest_matches_direct_lag_errors(spark):
     ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
     s = 7
     got = {r["event_type"]: r for r in forecast_backtest(
-        ev, key_cols=("event_type",), order_cols=("ts", "event_id"),
+        ev,
         season=s).collect()}
     per = {}
     for g, us, eid, v in _ev_series():
