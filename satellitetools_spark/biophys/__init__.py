@@ -1,7 +1,6 @@
 from .nn import (  # noqa: F401
     FEATURE_EXPRS,
     load_nn_params,
-    load_test_cases,
     run_nn,
     snap_sql_expr,
 )

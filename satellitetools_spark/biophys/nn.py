@@ -66,15 +66,6 @@ def load_nn_params(variable: str) -> Dict[str, np.ndarray]:
     }
 
 
-def load_test_cases(variable: str) -> np.ndarray | None:
-    """Golden vectors: 100 rows x (11 inputs + expected output), when present."""
-    handle = _aux(variable, f"{variable}_TestCases")
-    if not handle.is_file():
-        return None
-    with handle.open("r") as f:
-        return np.loadtxt(f, delimiter=",")
-
-
 def run_nn(features: np.ndarray, variable: str) -> np.ndarray:
     """Run the SNAP MLP on an (N, 11) feature matrix; returns (N,) float64.
 

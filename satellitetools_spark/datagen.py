@@ -22,6 +22,7 @@ oracle and the engine's chunk-decode path must agree bit-for-bit.
 from __future__ import annotations
 
 import json
+import math
 import os
 from datetime import datetime, timedelta
 from typing import Dict, List, Tuple
@@ -32,7 +33,7 @@ import pyarrow.parquet as pq
 
 from . import geometry as G
 from . import rasterops as R
-from .constants import CELL_SIZE_M, S2_BANDS_10_20
+from .constants import CELL_SIZE_M, S2_BAND_GSD, S2_BANDS_10_20
 
 # ---------------------------------------------------------------------------
 # Reference test AOIs (EPSG:4326 lon/lat), verbatim
@@ -307,9 +308,33 @@ def _oracle_pixels_for_doc(d, gsd: float):
         "aoi_pixels": int(inside.sum()),
     }
     for band in BANDS:
-        vals = R.render_band_on_grid(band, d["productid"], txs, tys)
+        win, gsd_n, cx0, cy0 = _analytic_window(band, d["productid"], txs, tys)
+        if band == "SCL":
+            vals = R.sample_grid(win, gsd_n, cx0, cy0, txs, tys, "nearest")
+        else:
+            vals = R.sample_grid(R.dn_to_reflectance(win), gsd_n, cx0, cy0,
+                                 txs, tys, "bilinear")
         out[band] = vals.ravel()
     return out
+
+
+def _analytic_window(band: str, productid: str, txs, tys):
+    """The oracle's native window: every chunk of ``band`` covering the
+    target grid plus BUFFER_M, synthesized from the analytic field instead
+    of decoded from chunk payloads. Returns (window, gsd, cx0, cy0) as
+    ``rasterops.assemble_window`` does."""
+    gsd = float(S2_BAND_GSD[band])
+    step = R.CHUNK_PX * gsd
+    cx0 = math.floor((txs.min() - R.BUFFER_M) / step)
+    cy0 = math.floor((tys.min() - R.BUFFER_M) / step)
+    cx1 = math.floor((txs.max() + R.BUFFER_M) / step)
+    cy1 = math.floor((tys.max() + R.BUFFER_M) / step)
+    xs = (cx0 * R.CHUNK_PX + np.arange((cx1 - cx0 + 1) * R.CHUNK_PX) + 0.5) * gsd
+    ys = (cy0 * R.CHUNK_PX + np.arange((cy1 - cy0 + 1) * R.CHUNK_PX) + 0.5) * gsd
+    x2, y2 = np.meshgrid(xs, ys)
+    if band == "SCL":
+        return R.native_scl(productid, x2, y2).astype(np.float64), gsd, cx0, cy0
+    return R.native_band_dn(band, productid, x2, y2), gsd, cx0, cy0
 
 
 def _write_oracle_pixels(docs, path: str, scl20_path: str):

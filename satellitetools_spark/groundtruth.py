@@ -103,7 +103,7 @@ def sample_band_independent(band: str, productid: str,
       reflectance = DN/10000, bilinear with (1−wx)(1−wy) weights —
       NaN in any support propagates;
     - SCL: nearest support center (np.rint half-to-even, same tie rule
-      as the engine's fast path).
+      as the engine's ``sample_grid``).
     """
     from satellitetools_spark.rasterops import (DN_NODATA, S2_BAND_GSD,
                                                 S2_REFL_TRANS,

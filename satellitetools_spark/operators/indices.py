@@ -2,7 +2,11 @@
 
 Reference formulas (biophys.py:365-446): NDVI = (B8A-B4)/(B8A+B4),
 CI_RED_EDGE = B7/B5 - 1, GCC = B3/(B2+B3+B4). NULL propagates like the
-reference's NaN.
+reference's NaN. Each divides with ``try_divide``: a zero denominator
+gives NULL, as the DuckDB oracle does, instead of raising
+``DIVIDE_BY_ZERO`` under ANSI mode. These are the engine's one VI
+implementation: the decode (``sources.decode.decode_documents``) adds
+them over its Python pass's output, and the gated queries use them.
 """
 
 from __future__ import annotations
@@ -12,15 +16,15 @@ from pyspark.sql import functions as F
 
 
 def ndvi_col() -> Column:
-    return (F.col("B8A") - F.col("B4")) / (F.col("B8A") + F.col("B4"))
+    return F.try_divide(F.col("B8A") - F.col("B4"), F.col("B8A") + F.col("B4"))
 
 
 def ci_red_edge_col() -> Column:
-    return F.col("B7") / F.col("B5") - 1
+    return F.try_divide(F.col("B7"), F.col("B5")) - 1
 
 
 def gcc_col() -> Column:
-    return F.col("B3") / (F.col("B2") + F.col("B3") + F.col("B4"))
+    return F.try_divide(F.col("B3"), F.col("B2") + F.col("B3") + F.col("B4"))
 
 
 _DISPATCH = {

@@ -23,6 +23,7 @@ tiles ~1e9:1) plus AQE skew-join splitting.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 from typing import Dict, Tuple
@@ -76,18 +77,10 @@ def aoi_cover_df(aois: DataFrame) -> DataFrame:
         cover_batches, schema=_COVER_SCHEMA)
 
 
-# executor-local memo: rings JSON -> parsed ring arrays
-_RINGS_CACHE: Dict[str, list] = {}
-
-
+# executor-local LRU memo: rings JSON -> parsed ring arrays
+@functools.lru_cache(maxsize=4096)
 def _parsed_rings(gj: str) -> list:
-    rings = _RINGS_CACHE.get(gj)
-    if rings is None:
-        if len(_RINGS_CACHE) > 4096:
-            _RINGS_CACHE.clear()
-        rings = [np.asarray(r, dtype=float) for r in json.loads(gj)]
-        _RINGS_CACHE[gj] = rings
-    return rings
+    return [np.asarray(r, dtype=float) for r in json.loads(gj)]
 
 
 @pandas_udf(T.BooleanType())

@@ -36,6 +36,9 @@ BUFFER_M = 100.0         # buffered-read margin around the AOI bbox
 DN_NODATA = -99999       # transport no-data sentinel (gee.py:38)
 MEDIA_SCHEME = "s2cog"
 
+# a parsed media_ref: (tileid, productid, band, gsd, cy, cx)
+ChunkRef = Tuple[str, str, str, int, int, int]
+
 # pixel-center offset template within a chunk (i + 0.5 for i in 0..CHUNK_PX)
 _CHUNK_OFFS = np.arange(CHUNK_PX) + 0.5
 
@@ -138,19 +141,20 @@ def make_media_ref(tileid: str, productid: str, band: str, gsd: int, cy: int, cx
     return f"{MEDIA_SCHEME}://{tileid}/{productid}/{band}/{gsd}/{cy}/{cx}"
 
 
-def parse_media_ref(ref: str) -> Tuple[str, str, str, int, int, int]:
+def parse_media_ref(ref: str) -> ChunkRef:
     body = ref.split("://", 1)[1]
     tileid, productid, band, gsd, cy, cx = body.split("/")
     return tileid, productid, band, int(gsd), int(cy), int(cx)
 
 
-def decode_chunk(ref: str) -> np.ndarray:
-    """Decode one chunk payload → (CHUNK_PX, CHUNK_PX) DN array.
+def decode_chunk(chunk: ChunkRef) -> np.ndarray:
+    """Decode one chunk payload (addressed by its parsed media ref) →
+    (CHUNK_PX, CHUNK_PX) DN array.
 
     Row 0 is the chunk's smallest-y row; element [j, i] is the pixel whose
     center is ((cx*CHUNK_PX + i + 0.5)·gsd, (cy*CHUNK_PX + j + 0.5)·gsd).
     """
-    _tile, productid, band, gsd, cy, cx = parse_media_ref(ref)
+    _tile, productid, band, gsd, cy, cx = chunk
     # open (broadcasting) grids — no dense meshgrid copies in the hot path.
     # (k*CHUNK_PX + _CHUNK_OFFS) is exact float arithmetic (integers and
     # half-integers ≪ 2^53), so reusing the precomputed offset template is
@@ -201,7 +205,7 @@ def target_grid(bbox: Tuple[float, float, float, float], gsd: float) -> Tuple[np
     return xs, ys
 
 
-def assemble_window(refs_with_payload: Sequence[Tuple[str, np.ndarray]],
+def assemble_window(chunks: Sequence[Tuple[ChunkRef, np.ndarray]],
                     ) -> Tuple[np.ndarray, float, int, int]:
     """Scatter decoded chunks of ONE (product, band) into a dense window.
 
@@ -209,15 +213,14 @@ def assemble_window(refs_with_payload: Sequence[Tuple[str, np.ndarray]],
     center ((cx0*CHUNK_PX+i+0.5)*gsd, (cy0*CHUNK_PX+j+0.5)*gsd).
     Missing chunks stay NaN.
     """
-    parsed = [parse_media_ref(r) for r, _ in refs_with_payload]
-    gsd = parsed[0][3]
-    cys = [p[4] for p in parsed]
-    cxs = [p[5] for p in parsed]
+    gsd = chunks[0][0][3]
+    cys = [c[4] for c, _ in chunks]
+    cxs = [c[5] for c, _ in chunks]
     cy0, cx0 = min(cys), min(cxs)
     ny = (max(cys) - cy0 + 1) * CHUNK_PX
     nx = (max(cxs) - cx0 + 1) * CHUNK_PX
     win = np.full((ny, nx), np.nan)
-    for (_, _, _, _, cy, cx), (_, payload) in zip(parsed, refs_with_payload):
+    for (_, _, _, _, cy, cx), payload in chunks:
         j0 = (cy - cy0) * CHUNK_PX
         i0 = (cx - cx0) * CHUNK_PX
         win[j0:j0 + CHUNK_PX, i0:i0 + CHUNK_PX] = payload
@@ -237,98 +240,48 @@ def sample_grid(win: np.ndarray, gsd: float, cx0: int, cy0: int,
     """Sample a native window at target pixel centers (bilinear or nearest).
 
     ``win`` is in final value space (reflectance for spectral bands, class
-    codes for SCL). Targets whose support reaches past the window edge (a
-    document missing an edge chunk) read a 1-source-pixel NaN halo: a chunk
-    that was not fetched is no data, the same rule ``assemble_window``
-    applies inside the window. NaN in any bilinear support pixel propagates
-    NaN, matching resampling over nodata.
+    codes for SCL). The window is read through a 1-source-pixel NaN halo,
+    so a target whose support reaches past the window edge (a document
+    missing an edge chunk) is no data: a chunk that was not fetched is no
+    data, the same rule ``assemble_window`` applies inside the window. NaN
+    in any bilinear support pixel propagates NaN, matching resampling over
+    nodata. The engine's decode and the oracle's analytic window
+    (``datagen``) both sample through this one body.
     """
-    x_org = cx0 * CHUNK_PX * gsd   # window's left edge
-    y_org = cy0 * CHUNK_PX * gsd
     ny, nx = win.shape
-
-    # fast path: when every support pixel of every target lies inside the
-    # window (the normal case — the chunk cover includes a native-pixel
-    # margin around the target grid), the halo is never read, so skip
-    # padding. Numerically identical to the general path.
-    fx0 = (tgt_xs[None, :] - x_org) / gsd - 0.5
-    fy0 = (tgt_ys[:, None] - y_org) / gsd - 0.5
-    if method == "nearest":
-        interior = (fx0.min() > -0.5 and fx0.max() < nx - 0.5
-                    and fy0.min() > -0.5 and fy0.max() < ny - 0.5)
-    else:
-        interior = (fx0.min() >= 0.0 and fx0.max() <= nx - 1.0
-                    and fy0.min() >= 0.0 and fy0.max() <= ny - 1.0)
-    if interior:
-        if method == "nearest":
-            return win[np.rint(fy0).astype(np.int64),
-                       np.rint(fx0).astype(np.int64)]
-        ix0 = np.minimum(np.floor(fx0).astype(np.int64), nx - 2)
-        iy0 = np.minimum(np.floor(fy0).astype(np.int64), ny - 2)
-        wx = fx0 - ix0
-        wy = fy0 - iy0
-        return (win[iy0, ix0] * (1 - wx) * (1 - wy)
-                + win[iy0, ix0 + 1] * wx * (1 - wy)
-                + win[iy0 + 1, ix0] * (1 - wx) * wy
-                + win[iy0 + 1, ix0 + 1] * wx * wy)
-
-    # pad with a 1-pixel no-data halo
     halo = np.full((ny + 2, nx + 2), np.nan)
     halo[1:-1, 1:-1] = win
-    win = halo
-    x_org -= gsd
-    y_org -= gsd
+    # the halo's left/bottom edge, one source pixel outside the window
+    x_org = cx0 * CHUNK_PX * gsd - gsd
+    y_org = cy0 * CHUNK_PX * gsd - gsd
 
     # open target grids: fancy indexing + arithmetic broadcast to (ny, nx)
     fx = (tgt_xs[None, :] - x_org) / gsd - 0.5   # fractional source index
     fy = (tgt_ys[:, None] - y_org) / gsd - 0.5
     if method == "nearest":
-        ix = np.clip(np.rint(fx).astype(np.int64), 0, win.shape[1] - 1)
-        iy = np.clip(np.rint(fy).astype(np.int64), 0, win.shape[0] - 1)
-        return win[iy, ix]
-    ix0 = np.clip(np.floor(fx).astype(np.int64), 0, win.shape[1] - 2)
-    iy0 = np.clip(np.floor(fy).astype(np.int64), 0, win.shape[0] - 2)
+        ix = np.clip(np.rint(fx).astype(np.int64), 0, nx + 1)
+        iy = np.clip(np.rint(fy).astype(np.int64), 0, ny + 1)
+        return halo[iy, ix]
+    ix0 = np.clip(np.floor(fx).astype(np.int64), 0, nx)
+    iy0 = np.clip(np.floor(fy).astype(np.int64), 0, ny)
     wx = fx - ix0
     wy = fy - iy0
-    v00 = win[iy0, ix0]
-    v01 = win[iy0, ix0 + 1]
-    v10 = win[iy0 + 1, ix0]
-    v11 = win[iy0 + 1, ix0 + 1]
-    return (v00 * (1 - wx) * (1 - wy) + v01 * wx * (1 - wy)
-            + v10 * (1 - wx) * wy + v11 * wx * wy)
+    return (halo[iy0, ix0] * (1 - wx) * (1 - wy)
+            + halo[iy0, ix0 + 1] * wx * (1 - wy)
+            + halo[iy0 + 1, ix0] * (1 - wx) * wy
+            + halo[iy0 + 1, ix0 + 1] * wx * wy)
 
 
-def render_band_on_grid(band: str, productid: str,
-                        tgt_xs: np.ndarray, tgt_ys: np.ndarray,
-                        refs_with_payload: Sequence[Tuple[str, np.ndarray]] | None = None,
+def render_band_on_grid(band: str, tgt_xs: np.ndarray, tgt_ys: np.ndarray,
+                        chunks: Sequence[Tuple[ChunkRef, np.ndarray]],
                         ) -> np.ndarray:
-    """Full per-band path: window (from chunks, or analytic when None) →
-    scale → resample to the target grid. Returns float values (reflectance,
-    or SCL codes as float), NaN where no fetched chunk supports a target.
+    """Full per-band path: window from the decoded chunks (at least one;
+    the caller decodes a band with no fetched chunk as no data) → scale →
+    resample to the target grid. Returns float values (reflectance, or SCL
+    codes as float), NaN where no fetched chunk supports a target.
     """
-    native_gsd = float(S2_BAND_GSD[band])
-    if refs_with_payload:
-        win, gsd, cx0, cy0 = assemble_window(refs_with_payload)
-    else:
-        # oracle path: synthesize the native window covering the target grid
-        gsd = native_gsd
-        step = CHUNK_PX * gsd
-        cx0 = math.floor((tgt_xs.min() - BUFFER_M) / step)
-        cy0 = math.floor((tgt_ys.min() - BUFFER_M) / step)
-        cx1 = math.floor((tgt_xs.max() + BUFFER_M) / step)
-        cy1 = math.floor((tgt_ys.max() + BUFFER_M) / step)
-        nx = (cx1 - cx0 + 1) * CHUNK_PX
-        ny = (cy1 - cy0 + 1) * CHUNK_PX
-        xs = (cx0 * CHUNK_PX + np.arange(nx) + 0.5) * gsd
-        ys = (cy0 * CHUNK_PX + np.arange(ny) + 0.5) * gsd
-        x2, y2 = np.meshgrid(xs, ys)
-        if band == "SCL":
-            win = native_scl(productid, x2, y2).astype(np.float64)
-        else:
-            win = native_band_dn(band, productid, x2, y2)
-
+    win, gsd, cx0, cy0 = assemble_window(chunks)
     if band == "SCL":
         return sample_grid(win, gsd, cx0, cy0, tgt_xs, tgt_ys, "nearest")
     return sample_grid(dn_to_reflectance(win), gsd, cx0, cy0,
                        tgt_xs, tgt_ys, "bilinear")
-

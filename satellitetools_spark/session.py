@@ -13,8 +13,7 @@ def get_spark(app: str = "satellitetools-spark", master: str | None = None,
     # default: the cores this process may run on (taskset/cgroup affinity)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get(
-        "SPARK_SHUFFLE_PARTITIONS", str(min(64, 2 * int(cpus) if cpus.isdigit() else 64))))
+    shuffle = shuffle_partitions or (min(64, 2 * int(cpus)) if cpus.isdigit() else 64)
     builder = SparkSession.builder
     # caller-supplied pairs (e.g. sources.iceberg.catalog_conf) must land
     # before getOrCreate — catalog/extension configs are session-fixed

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from .. import geometry as G
 from .. import rasterops as R
 from ..constants import CELL_SIZE_M, S2_BANDS_10_20, SCL_CLASSES
+from ..operators.indices import compute_vegetation_index
 
 # scene metadata and view/sun angles copied onto every decoded pixel row
 _SCENE_COLS = ["aoi", "tileid", "assetid", "productid", "acquisition_time"]
@@ -95,9 +96,8 @@ def _parse_doc_texts(row: dict) -> dict:
         "target_gsd": float(aoi["target_gsd"]),
         "qi_scale": float(aoi.get("qi_evaluation_scale", 20.0)),
     }
-    for k in ("productid", "assetid", "tileid", "projection",
-              "datasource", "processing"):
-        out[k] = meta[k]
+    # the scene keys (the AOI name, set above, is the AOI record's)
+    out.update((k, meta[k]) for k in _QI_META if k not in out)
     out["acquisition_time"] = np.datetime64(meta["acquisition_time"], "us")
     for k in _ANGLES:
         out[k] = float(meta[k])
@@ -131,14 +131,6 @@ def _aoi_grid(aoi_json: str, zone: int, gsd: float):
     return txs, tys, px, py, cells, inside, int(inside.sum())
 
 
-# vectorized NumPy twins of operators/indices.py (used when VI computation
-# is fused into the decode pass — same IEEE semantics as the column exprs)
-_VI_NUMPY = {
-    "ndvi": lambda o: (o["B8A"] - o["B4"]) / (o["B8A"] + o["B4"]),
-    "ci_red_edge": lambda o: o["B7"] / o["B5"] - 1.0,
-    "gcc": lambda o: o["B3"] / (o["B2"] + o["B3"] + o["B4"]),
-}
-
 # docs per emitted output frame: bounds per-yield memory while amortizing
 # the pandas→Arrow conversion over many documents
 _DOCS_PER_FRAME = 128
@@ -152,26 +144,46 @@ _DOCS_PER_FRAME = 128
 _PREFILTER_MAX = 2
 
 
-def _decode_one(raw: dict, bands: List[str],
-                vi_vars: List[str] = (), snap_vars: List[str] = (),
-                parsed: Optional[dict] = None) -> dict:
-    """Decode one document row → dict of column arrays (pixel rows) on the
-    grid of ``target_gsd`` (of ``parsed`` when given)."""
-    row = parsed if parsed is not None else _parse_doc_texts(raw)
-    row["media_refs"] = raw["media_refs"]
-    gsd = float(row["target_gsd"])
-    txs, tys, px, py, cells, inside, aoi_px = _aoi_grid(
-        row["aoi_text"], int(row["utm_zone"]), gsd)
-
+def _chunks_by_band(media_refs: str, bands: List[str]) -> dict:
+    """band → parsed refs of its chunks: each ref is parsed once, here,
+    and the parsed tuple addresses both the decode and the window."""
     by_band: dict = {}
-    for ref in row["media_refs"].split(REF_SEP):
-        if not ref:
-            continue
-        band = ref.split("/", 5)[4]
-        if band in bands:
-            by_band.setdefault(band, []).append(ref)
+    for ref in media_refs.split(REF_SEP):
+        if ref:
+            chunk = R.parse_media_ref(ref)
+            if chunk[2] in bands:
+                by_band.setdefault(chunk[2], []).append(chunk)
+    return by_band
 
-    n_in = int(inside.sum())
+
+def _band_values(band: str, chunks: list, txs: np.ndarray, tys: np.ndarray,
+                 inside: np.ndarray, n_in: int) -> np.ndarray:
+    """One band of one document at its inside-AOI pixels. A band with no
+    fetched chunk is no data, like a chunk missing from a torn window:
+    NaN, and class 0 (NO_DATA) for SCL."""
+    if chunks:
+        vals = R.render_band_on_grid(
+            band, txs, tys, [(c, R.decode_chunk(c)) for c in chunks],
+        ).ravel()[inside]
+    else:
+        vals = np.full(n_in, np.nan)
+    if band == "SCL":
+        # partial chunk cover leaves NaN in the nearest-sampled class
+        # raster; cast would fold it to a large negative int and
+        # bincount would reject the whole task — map it to NO_DATA (0)
+        return np.where(np.isfinite(vals), vals, 0.0).astype(np.int32)
+    return vals
+
+
+def _decode_one(raw: dict, bands: List[str], snap_vars: List[str]) -> dict:
+    """Decode one document row → dict of column arrays (pixel rows) on the
+    grid of its ``target_gsd``."""
+    row = _parse_doc_texts(raw)
+    gsd = row["target_gsd"]
+    txs, tys, px, py, cells, inside, n_in = _aoi_grid(
+        row["aoi_text"], row["utm_zone"], gsd)
+    by_band = _chunks_by_band(raw["media_refs"], bands)
+
     out = {"doc_id": np.repeat(row["doc_id"], n_in)}
     for c in _SCENE_COLS + _ANGLES:
         out[c] = np.repeat(row[c], n_in)
@@ -179,23 +191,8 @@ def _decode_one(raw: dict, bands: List[str],
     out["y"] = py[inside]
     out["cell"] = cells[inside]
     for band in bands:
-        band_refs = by_band.get(band, [])
-        payloads = [(r, R.decode_chunk(r)) for r in band_refs]
-        vals = R.render_band_on_grid(
-            band, row["productid"], txs, tys,
-            refs_with_payload=payloads or None,
-        ).ravel()[inside]
-        if band == "SCL":
-            # partial chunk cover leaves NaN in the nearest-sampled class
-            # raster; cast would fold it to a large negative int and
-            # bincount would reject the whole task — map it to NO_DATA (0)
-            vals = np.where(np.isfinite(vals), vals, 0.0)
-            out[band] = vals.astype(np.int32)
-        else:
-            out[band] = vals
-    with np.errstate(invalid="ignore", divide="ignore"):
-        for vi in vi_vars:
-            out[vi] = _VI_NUMPY[vi](out)
+        out[band] = _band_values(band, by_band.get(band, []), txs, tys,
+                                 inside, n_in)
     if snap_vars:
         from ..biophys.nn import run_nn
         from ..constants import BIOPHYS_COLUMN, SNAP_BIO_BANDS
@@ -208,20 +205,18 @@ def _decode_one(raw: dict, bands: List[str],
                    ang["sun_azimuth"] - ang["view_azimuth"])))])
         for var in snap_vars:
             out[BIOPHYS_COLUMN[var]] = run_nn(feats, var)
-    out["aoi_pixels"] = np.repeat(np.int32(aoi_px), n_in)
+    out["aoi_pixels"] = np.repeat(np.int32(n_in), n_in)
     out["gsd"] = np.repeat(gsd, n_in)
     return out
 
 
-def _make_batch_decoder(bands: List[str], vi_vars: List[str],
-                        snap_vars: List[str], extra_cols: List[str]):
-    cols = _OUT_COLS_HEAD + bands + list(extra_cols) + _OUT_COLS_TAIL
-
+def _make_batch_decoder(bands: List[str], snap_vars: List[str],
+                        cols: List[str]):
     def decode_batches(batches):
         for pdf in batches:
             rows = pdf.to_dict("records")
             for i in range(0, len(rows), _DOCS_PER_FRAME):
-                outs = [_decode_one(r, bands, vi_vars, snap_vars)
+                outs = [_decode_one(r, bands, snap_vars)
                         for r in rows[i:i + _DOCS_PER_FRAME]]
                 yield pd.DataFrame(
                     {c: np.concatenate([o[c] for o in outs]) for c in cols})
@@ -243,16 +238,20 @@ def decode_documents(
     dimension columns are re-projected from the document row itself, which
     costs nothing (codegen) and keeps this a single-input operator.
 
-    ``vi_vars`` / ``snap_vars`` add vegetation-index and SNAP neural-net
-    columns computed in the same Python pass as the decode (the NumPy
-    semantics of operators/indices.py and biophys/nn.run_nn): one Arrow
-    round-trip instead of one per derived column. This is the only place
-    the SNAP nets run over pixels.
+    ``snap_vars`` adds SNAP neural-net columns computed in the same Python
+    pass as the decode (biophys/nn.run_nn): one Arrow round-trip instead
+    of one per derived column. This is the only place the SNAP nets run
+    over pixels. ``vi_vars`` adds vegetation-index columns as
+    ``operators.indices`` expressions over the Python pass's output, in
+    the same stage: the one VI implementation, which the gated queries
+    use too. One final ``select`` puts the columns in the output order:
+    the pixel schema's, then the indices, then the SNAP columns.
 
-    No-data (a DN_NODATA pixel, a missing chunk, a 0/0 index) leaves the
-    Python pass as NaN and arrives in Spark as NULL: the Arrow serializer
-    masks every null pandas value, so Spark never sees a NaN here (Spark
-    treats NaN as a groupable value and would poison ``avg``).
+    No-data (a DN_NODATA pixel, a missing chunk, a band with no chunk)
+    leaves the Python pass as NaN and arrives in Spark as NULL: the Arrow
+    serializer masks every null pandas value, so Spark never sees a NaN
+    here (Spark treats NaN as a groupable value and would poison ``avg``).
+    An index over a zero denominator is NULL too.
 
     Decode parallelism comes from :func:`_maybe_repartition`: the document
     rows are media_ref *strings* — kilobytes per document — while the
@@ -273,15 +272,20 @@ def decode_documents(
     vi_vars = [v.lower() for v in vi_vars] if vi_vars else []
     snap_vars = list(snap_vars) if snap_vars else []
     from ..constants import BIOPHYS_COLUMN
-    extra = vi_vars + [BIOPHYS_COLUMN[v] for v in snap_vars]
+    snap_cols = [BIOPHYS_COLUMN[v] for v in snap_vars]
 
     schema = pixel_schema(bands)
-    for c in extra:
+    base = schema.fieldNames()
+    for c in snap_cols:
         schema = schema.add(T.StructField(c, T.DoubleType()))
 
     prep = _maybe_repartition(decode_input(docs, bands))
-    return prep.mapInPandas(
-        _make_batch_decoder(bands, vi_vars, snap_vars, extra), schema=schema)
+    px = prep.mapInPandas(
+        _make_batch_decoder(bands, snap_vars, schema.fieldNames()),
+        schema=schema)
+    for vi in vi_vars:
+        px = compute_vegetation_index(px, vi)
+    return px.select(*base, *vi_vars, *snap_cols)
 
 
 def _maybe_repartition(prep: DataFrame) -> DataFrame:
@@ -368,12 +372,15 @@ def qi_percentages(docs: DataFrame) -> DataFrame:
             metas, pcts = [], []
             for raw in recs:
                 meta = _parse_doc_texts(raw)
-                scl = _decode_one(raw, ["SCL"], parsed=dict(
-                    meta, target_gsd=meta["qi_scale"]))["SCL"]
+                txs, tys, _px, _py, _cells, inside, n_in = _aoi_grid(
+                    meta["aoi_text"], meta["utm_zone"], meta["qi_scale"])
+                chunks = _chunks_by_band(raw["media_refs"], ["SCL"])
+                scl = _band_values("SCL", chunks.get("SCL", []), txs, tys,
+                                   inside, n_in)
                 metas.append(meta)
-                if len(scl):
+                if n_in:
                     pcts.append(np.bincount(scl, minlength=n_cls)[:n_cls]
-                                / float(len(scl)))
+                                / float(n_in))
                 else:
                     pcts.append(np.full(n_cls, np.nan))
             res = {"doc_id": [m["doc_id"] for m in metas]}

@@ -13,8 +13,17 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from satellitetools_spark.constants import S2_BANDS_10_20, SCL_CLASSES
+from satellitetools_spark import rasterops as R
+from satellitetools_spark.constants import (
+    S2_BANDS_10_20,
+    SCL_CLASSES,
+    SNAP_BIO_BANDS,
+)
 from satellitetools_spark.datagen import ensure_geodata
+from satellitetools_spark.operators.indices import (
+    compute_vegetation_index,
+    with_all_indices,
+)
 from satellitetools_spark.rasterops import parse_media_ref
 from satellitetools_spark.sources import (
     decode_documents,
@@ -22,7 +31,12 @@ from satellitetools_spark.sources import (
     read_documents,
     reassemble_documents,
 )
-from satellitetools_spark.sources.decode import qi_percentages
+from satellitetools_spark.sources.decode import (
+    REF_SEP,
+    _decode_one,
+    decode_input,
+    qi_percentages,
+)
 
 
 @pytest.fixture(scope="module")
@@ -179,6 +193,81 @@ def test_torn_documents_decode_missing_chunks_as_no_data(spark, geodata_mid):
     for doc_id, band in edge:
         c, t = clean.loc[doc_id, band], torn.loc[doc_id, band]
         assert (t.isna() & c.notna()).any(), (doc_id, band)
+
+
+def test_decode_vi_equals_the_index_column_on_the_same_decode(spark, docs):
+    """``vi_vars`` adds the one ``operators.indices`` expression: the
+    decode's ``ndvi`` equals ``compute_vegetation_index`` over the same
+    decode, exactly, and is the last column."""
+    fused = decode_documents(docs, vi_vars=["ndvi"])
+    plain = decode_documents(docs)
+    assert fused.columns == plain.columns + ["ndvi"]
+    key = ["doc_id", "x", "y"]
+    got = fused.toPandas().sort_values(key).reset_index(drop=True)
+    want = (compute_vegetation_index(plain, "ndvi").toPandas()
+            .sort_values(key).reset_index(drop=True))
+    assert got["ndvi"].notna().any()
+    np.testing.assert_array_equal(got["ndvi"].to_numpy(),
+                                  want["ndvi"].to_numpy())
+
+
+def test_indices_on_a_zero_denominator_are_null(spark):
+    """A zero denominator gives a NULL index, as the DuckDB oracle does,
+    not ``DIVIDE_BY_ZERO`` under ANSI mode; the other rows keep their
+    values."""
+    cols = ["B2", "B3", "B4", "B5", "B7", "B8A"]
+    df = spark.createDataFrame(
+        [(0.1, 0.2, 0.0, 0.0, 0.3, 0.0), (0.1, 0.2, 0.1, 0.2, 0.3, 0.3)],
+        cols)
+    rows = with_all_indices(df).orderBy("B8A").collect()
+    assert rows[0]["ndvi"] is None and rows[0]["ci_red_edge"] is None
+    assert rows[0]["gcc"] == 0.2 / (0.1 + 0.2 + 0.0)
+    assert rows[1]["ndvi"] == (0.3 - 0.1) / (0.3 + 0.1)
+    assert rows[1]["ci_red_edge"] == 0.3 / 0.2 - 1
+
+
+def test_band_with_no_chunk_decodes_as_no_data(spark, docs_mid):
+    """A document whose spans carry no chunk of a band decodes that band
+    as NULL (and so the SNAP net over it), never as values made up from
+    the analytic field; every other document is unchanged."""
+    victim = sorted(r.doc_id for r in docs_mid.select("doc_id").collect())[0]
+    stripped = docs_mid.withColumn("spans", F.filter("spans", lambda s: ~(
+        (F.col("doc_id") == victim)
+        & F.coalesce(s["media_ref"].contains("/B5/"), F.lit(False)))))
+
+    def decode(d):
+        return (decode_documents(d, bands=SNAP_BIO_BANDS, snap_vars=["LAI"])
+                .toPandas().set_index(["doc_id", "x", "y"]).sort_index())
+
+    clean, torn = decode(docs_mid), decode(stripped)
+    assert clean.index.equals(torn.index)
+    hit = torn.index.get_level_values("doc_id") == victim
+    assert hit.any() and clean.loc[hit, "B5"].notna().all()
+    assert torn.loc[hit, "B5"].isna().all() and torn.loc[hit, "lai"].isna().all()
+    assert torn.loc[hit, "B4"].equals(clean.loc[hit, "B4"])
+    pd.testing.assert_frame_equal(torn[~hit], clean[~hit], check_exact=True)
+
+
+def test_decode_parses_each_media_ref_once(spark, docs, monkeypatch):
+    """Each chunk ref is parsed once per document decode: the parsed tuple
+    addresses both the chunk decode and the window assembly."""
+    bands = S2_BANDS_10_20 + ["SCL"]
+    rows = [r.asDict() for r in decode_input(docs, bands).collect()]
+    calls = []
+    real = R.parse_media_ref
+
+    def counting(ref):
+        calls.append(ref)
+        return real(ref)
+
+    monkeypatch.setattr(R, "parse_media_ref", counting)
+    n_refs = 0
+    for raw in rows:
+        refs = [r for r in raw["media_refs"].split(REF_SEP) if r]
+        assert {real(r)[2] for r in refs} <= set(bands)
+        n_refs += len(refs)
+        _decode_one(raw, bands, [])
+    assert n_refs > 0 and len(calls) == n_refs
 
 
 def test_aoi_grid_memo_evicts_lru_not_everything():

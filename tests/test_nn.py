@@ -8,8 +8,18 @@ variable) are the reference's own unused golden fixtures
 import numpy as np
 import pytest
 
-from satellitetools_spark.biophys import load_nn_params, load_test_cases, run_nn
+from satellitetools_spark.biophys import load_nn_params, run_nn
+from satellitetools_spark.biophys.nn import _aux
 from satellitetools_spark.constants import BIOPHYS_VARIABLES
+
+
+def load_test_cases(variable: str) -> np.ndarray | None:
+    """Golden vectors: 100 rows x (11 inputs + expected output), when present."""
+    handle = _aux(variable, f"{variable}_TestCases")
+    if not handle.is_file():
+        return None
+    with handle.open("r") as f:
+        return np.loadtxt(f, delimiter=",")
 
 
 def _oracle_nn(x: np.ndarray, variable: str) -> np.ndarray:

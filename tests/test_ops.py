@@ -141,6 +141,23 @@ def test_knn_fill_matches_local_idw(spark):
         assert abs(r["B4"] - want) < 1e-12
 
 
+def test_parsed_rings_memo_evicts_lru_not_everything():
+    """Past 4096 ring texts the point-in-polygon memo evicts the least
+    recently used entry; a text that keeps being requested stays cached."""
+    from satellitetools_spark.operators.spatial import _parsed_rings
+
+    _parsed_rings.cache_clear()
+    hot = "[[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]]]"
+    _parsed_rings(hot)
+    for i in range(4200):
+        _parsed_rings(f"[[[{i}.5, 0.0], [1.0, 0.0], [1.0, 1.0]]]")
+        hits = _parsed_rings.cache_info().hits
+        _parsed_rings(hot)
+        assert _parsed_rings.cache_info().hits == hits + 1
+        assert _parsed_rings.cache_info().currsize <= 4096
+    _parsed_rings.cache_clear()
+
+
 def test_cell_join_matches_bruteforce_pip(spark):
     # geographic polygon; expected membership = driver-side brute-force PIP
     # against the same UTM projection the operator applies in executors

@@ -139,9 +139,10 @@ def unreached_functions(library: dict | None = None,
     ``library`` maps a module name to its parsed source and ``roots``
     lists the parsed program roots; both default to this repository.
     Reach is by name: a root's names, and the names in library
-    module-level statements other than ``def``/``class``, reach every
-    definition of that name, whose source then reaches more names in
-    turn."""
+    module-level statements other than ``def``/``class`` and imports,
+    reach every definition of that name, whose source then reaches more
+    names in turn. A library import alone reaches nothing, so a package
+    ``__init__`` re-export does not keep a test-only function alive."""
     if library is None:
         library = {}
         for path in sorted((REPO / PKG).rglob("*.py")):
@@ -155,7 +156,7 @@ def unreached_functions(library: dict | None = None,
         for node in tree.body:
             if isinstance(node, _DEFS):
                 defs.setdefault(node.name, []).append((f"{mod}:{node.name}", node))
-            else:
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                 todo |= _names_used(node)
     seen = set()
     while todo:
@@ -294,7 +295,8 @@ def test_guard_rules_on_snippets():
     """The rules above on small sources: passing the default, positionally,
     by keyword or through a module constant, does not set a parameter;
     another value, a variable or ``*args`` does. A function that only a
-    test module names is unreached."""
+    test module names, or only a library import re-exports, is
+    unreached."""
     params = {"m:f.k": ("f", "k", 1, "3")}
     for src in ("f(x, k=3)", "f(x, 3)", "JACCARD_N = 3\nf(x, k=JACCARD_N)"):
         calls = _calls_by_name([ast.parse(src)])
@@ -312,6 +314,8 @@ def test_guard_rules_on_snippets():
     root = ast.parse("from lib import used\nused()\n")
     assert unreached_functions(library, [root]) == {"lib:only_tested"}
     assert unreached_functions(library, [root, test_module]) == set()
+    reexport = dict(library, pkg=ast.parse("from lib import only_tested\n"))
+    assert unreached_functions(reexport, [root]) == {"lib:only_tested"}
 
 
 def _import_guard_files() -> list:

@@ -30,7 +30,6 @@ class _RecordingBuilder:
 
 def test_default_cpus_follow_affinity_when_env_unset(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    monkeypatch.delenv("SPARK_SHUFFLE_PARTITIONS", raising=False)
     monkeypatch.setattr(session, "SparkSession",
                         types.SimpleNamespace(builder=_RecordingBuilder()))
     conf = session.get_spark()
