@@ -47,7 +47,7 @@ from satellitetools_spark.operators import temporal as TEMPORAL
 from satellitetools_spark.operators import spatial as SP
 from satellitetools_spark.operators import text as TX
 from satellitetools_spark.operators.knn_fill import knn_fill
-from satellitetools_spark.operators.indices import compute_vegetation_index
+from satellitetools_spark.operators.indices import compute_vegetation_index, ndvi_col
 from satellitetools_spark.operators.quality import (
     dedup_products,
     select_survivors,
@@ -215,14 +215,12 @@ def q_geo_cell_join(spark, sf_dir):
     cell-cover equi-join + vectorized ray-casting refinement). The AOI
     dimension stays a DataFrame end-to-end — cover build is a distributed
     mapInPandas, zero driver collect at any AOI cardinality."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
     docs = _geo_docs(spark, sf_dir)
     aoi_df = (doc_dimension(docs)
               .select("aoi", "tileid",
                       F.col("aoi_geometry").alias("geometry"), "utm_zone")
               .distinct())
-    pts = spark.read.parquet(os.path.join(d, "oracle_pixels.parquet")) \
+    pts = _geo(spark, sf_dir, "oracle_pixels") \
         .select("doc_id", "tileid", "x", "y")
     return SP.cell_join_df(pts, aoi_df).select("doc_id", "x", "y", "aoi")
 
@@ -327,11 +325,9 @@ def q_geo_dem_lookup(spark, sf_dir):
     """S8: DEM point lookup as a broadcast cell-keyed join against a second
     (elevation) table - every inside-AOI pixel gains the elevation of its
     planar cell."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y"))
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     out = SP.dem_lookup(px, dem)
     return out.select("doc_id", "x", "y", "elevation")
 
@@ -375,9 +371,7 @@ def q_geo_zorder_key(spark, sf_dir):
     primitive: sorting by zkey makes per-file min/max stats prune 2-D bbox
     predicates. Ten shift/mask codegen ops per coordinate, no UDF; oracle
     computes the bit-identical interleave in SQL."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y"))
     return px.withColumn("zkey", SP.zorder_key(F.col("x"), F.col("y")))
 
@@ -431,11 +425,9 @@ def q_geo_knn_join(spark, sf_dir):
     radius — every pixel has ≥3 DEM-cell stations there): distance-join
     candidates + one ranked window per pixel. Oracle: brute-force
     cross-join window."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y"))
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     stations = dem.select(
         F.col("cell").alias("station_id"),
         ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * CELL_SIZE_M)
@@ -451,9 +443,7 @@ def q_geo_scl_pivot(spark, sf_dir):
     """Wide SCL crosstab per scene document: pinned-value pivot — ONE
     map-side-combined hash agg, stable 12-column schema, absent classes
     0. Oracle: conditional-aggregation columns."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "SCL"))
     return CHK.pivot_counts(px, "SCL", values=list(range(12)), prefix="scl_")
 
@@ -478,9 +468,7 @@ def q_geo_scl_coarse_mode(spark, sf_dir):
     40 m cells (highest count, then smallest class — the correct rule
     for class rasters where averaging IDs is meaningless). Oracle:
     identical counts and tie order."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("x", "y", "SCL"))
     return SP.categorical_mode_grid(px, size_m=40.0)
 
@@ -1007,9 +995,7 @@ def q_geo_hillshade(spark, sf_dir):
     """Horn-method hillshade of the DEM dimension: packed-cell decode in
     codegen, both Sobel gradients in ONE focal_conv pass, pure-projection
     shading. Oracle: identical stencil correlation + formula."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.hillshade(dem, cell_m=CELL_SIZE_M)
 
 
@@ -1017,14 +1003,11 @@ def q_geo_zonal_stats(spark, sf_dir):
     """Zonal statistics: mean/min/max/std NDVI per 50 m DEM elevation
     band — pixels pick their zone via ONE broadcast cell join, one hash
     agg at zone cardinality. Oracle: identical join + moment folds."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .select("x", "y",
-                  ((F.col("B8A") - F.col("B4"))
-                   / (F.col("B8A") + F.col("B4"))).alias("ndvi")))
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+                  ndvi_col().alias("ndvi")))
+    dem = _geo(spark, sf_dir, "dem")
     zones = dem.select("cell",
                        F.floor(F.col("elevation") / 50.0).cast("long")
                        .alias("zone"))
@@ -1049,15 +1032,12 @@ def _ndvi_series(spark, sf_dir):
     """Per-(aoi, date) mean-NDVI series — shared input of the SG /
     harmonic / phenology time-series operators (rounded 6 so threshold
     comparisons downstream are engine-exact)."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .select("aoi",
                   F.date_format("acquisition_time", "yyyy-MM-dd")
                   .alias("date_str"),
-                  ((F.col("B8A") - F.col("B4"))
-                   / (F.col("B8A") + F.col("B4"))).alias("v")))
+                  ndvi_col().alias("v")))
     return (px.groupBy("aoi", "date_str")
             .agg(F.round(F.sum("v") / F.count("v"), 6)
                  .alias("mean_ndvi")))
@@ -1085,9 +1065,7 @@ def q_geo_moran(spark, sf_dir):
     """Global Moran's I of DEM elevation under queen contiguity: mean
     broadcast, neighbor sums via ONE focal_conv stencil pass, 1-row
     reduction. Oracle: identical stencil + reduction."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.morans_i(SP.dem_pixels(dem, cell_m=CELL_SIZE_M))
 
 
@@ -1096,9 +1074,7 @@ def q_geo_flowdir(spark, sf_dir):
     smallest-code tie-break): 8× offset explode, one co-partitioned
     grid equi-join, struct-max argmax at cell cardinality. Oracle:
     identical offsets, join, and argmax."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.flow_direction(dem, cell_m=CELL_SIZE_M)
 
 
@@ -1107,15 +1083,12 @@ def q_geo_composite(spark, sf_dir):
     observation across the stack with its date, winning scene, and the
     red/NIR payload — ONE map-side-combinable struct-max hash agg at
     location cardinality. Oracle: identical struct field order."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .select("x", "y", "doc_id",
                   F.date_format("acquisition_time", "yyyy-MM-dd")
                   .alias("date_str"),
-                  ((F.col("B8A") - F.col("B4"))
-                   / (F.col("B8A") + F.col("B4"))).alias("ndvi"),
+                  ndvi_col().alias("ndvi"),
                   "B4", "B8A"))
     return SP.greenest_composite(px, payload_cols=("B4", "B8A"))
 
@@ -1125,9 +1098,7 @@ def q_geo_gstar(spark, sf_dir):
     self-inclusive queen weights): ONE focal_conv stencil pass + a
     broadcast 1-row global-moments agg + a codegen z projection.
     Oracle: identical stencil, moments, and projection."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.getis_ord_gstar(SP.dem_pixels(dem, cell_m=CELL_SIZE_M))
 
 
@@ -1151,10 +1122,8 @@ def q_geo_emerging_hotspots(spark, sf_dir):
     mann_kendall; the z series entering MK is rounded 6 in BOTH engines
     so sign/tie comparisons quantize identically. Oracle: the composed
     SQL generators."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    ndvi = ((F.col("B8A") - F.col("B4")) / (F.col("B8A") + F.col("B4")))
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    ndvi = ndvi_col()
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .select(F.date_format("acquisition_time", "yyyy-MM-dd")
                   .alias("date_str"),
@@ -1178,9 +1147,7 @@ def q_geo_variogram(spark, sf_dir):
     squared offset 8): constant offset explode + ONE co-partitioned
     grid equi-join + a lag-class-cardinality agg — never an all-pairs
     distance join. Oracle: identical offsets/join/reduction."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.variogram(dem)
 
 
@@ -1200,9 +1167,7 @@ def q_geo_flowacc(spark, sf_dir):
     path, 1-row agg early-stop. Oracle: recursive-CTE closure counted
     per destination. (No SQL-expressible single pass exists: the
     operator is inherently iterative, like PageRank/components.)"""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.flow_accumulation(dem, cell_m=CELL_SIZE_M)
 
 
@@ -1211,9 +1176,7 @@ def q_geo_twi(spark, sf_dir):
     gradients (one focal_conv pass) joined co-partitioned to the
     flow-accumulation fixpoint; flat cells NULL. Oracle: recursive
     closure + identical gradient/guard."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.wetness_index(dem, cell_m=CELL_SIZE_M)
 
 
@@ -1222,9 +1185,7 @@ def q_geo_lisa(spark, sf_dir):
     broadcast moments + ONE focal_conv stencil pass + codegen quadrant
     typing on rounded z/lag. Oracle: identical stencil and
     classification."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.local_morans_i(SP.dem_pixels(dem, cell_m=CELL_SIZE_M))
 
 
@@ -1234,9 +1195,7 @@ def q_geo_contours(spark, sf_dir):
     case-table/interpolation expression strings, center-mean saddle
     rule, 2-slot union off one lazily-checkpointed frame. Oracle: the
     same generated expressions."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.contour_segments(dem, threshold=295.0)
 
 
@@ -1309,18 +1268,7 @@ def q_geo_ndvi_sg(spark, sf_dir):
     (window 5, order 2 — the standard phenology denoiser): one key
     window, all taps share a single exchange, pure-codegen dot product.
     Oracle: identical taps and literal coefficients."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
-          .filter("inside")
-          .select("aoi",
-                  F.date_format("acquisition_time", "yyyy-MM-dd")
-                  .alias("date_str"),
-                  ((F.col("B8A") - F.col("B4"))
-                   / (F.col("B8A") + F.col("B4"))).alias("v")))
-    series = (px.groupBy("aoi", "date_str")
-              .agg(F.round(F.sum("v") / F.count("v"), 6)
-                   .alias("mean_ndvi")))
+    series = _ndvi_series(spark, sf_dir)
     return TEMPORAL.sg_smooth(series,
                               value_col="mean_ndvi",
                               out_col="ndvi_sg")
@@ -1342,11 +1290,9 @@ def q_geo_distance_join(spark, sf_dir):
     one codegen cell computation + broadcast hash join — no cross
     product at any cardinality. Oracle: brute-force cross join with the
     identical exact predicate."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y"))
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     stations = dem.select(
         F.col("cell").alias("station_id"),
         ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * CELL_SIZE_M)
@@ -1375,6 +1321,12 @@ def q_events_rollup(spark, sf_dir):
 
 def _tbl(spark, sf_dir, name):
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _geo(spark, sf_dir, name):
+    """A table of the synthetic geo dataset keyed to ``sf_dir``'s scale."""
+    d = ensure_geodata(tag_for_sf_dir(sf_dir))
+    return spark.read.parquet(os.path.join(d, f"{name}.parquet"))
 
 
 def q_sales_topk(spark, sf_dir):
@@ -1688,9 +1640,7 @@ def q_geo_terrain_idx(spark, sf_dir):
     8× sender explode + ONE co-partitioned grid equi-join + per-cell
     hash agg — no raster self-join, no window. Oracle: identical
     decode/send/reductions."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.terrain_indices(dem)
 
 
@@ -1700,9 +1650,7 @@ def q_geo_ripley_k(spark, sf_dir):
     9× fan-out), one (doc, bucket) equi-join, lexicographic unordered
     dedup, ALL radii in one agg. Oracle: brute-force per-doc self-join
     — an independent algorithm that also pins bucketing completeness."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
@@ -1750,9 +1698,7 @@ def q_geo_clark_evans(spark, sf_dir):
     pattern per doc (R < 1 clustered): same 9× bucket probe as
     Ripley's K, min-d² agg per point, key-cardinality readout. Oracle:
     brute-force per-doc NN — an independent algorithm."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
@@ -1766,9 +1712,7 @@ def q_geo_kde(spark, sf_dir):
     cutoff-bucket replication + ONE equi-join + cell-cardinality agg;
     density normalizes the ROUNDED kernel sum so both engines divide
     the identical double. Oracle: brute-force cells × points."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
@@ -1782,9 +1726,7 @@ def q_geo_knox(spark, sf_dir):
     Ns·Nt/T): T from arithmetic, Nt from the per-date histogram join,
     Ns/X from ONE bucketed spatial join. Oracle: brute-force all-pairs
     — a fully independent algorithm."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
@@ -1819,9 +1761,7 @@ def q_geo_regions(spark, sf_dir):
     propagation — one 4-neighbor equi-join + min agg per round,
     diameter-bounded, Σlabel early-stop. Oracle: recursive reachability
     closure — an independent (transitive-closure) algorithm."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
@@ -1836,9 +1776,7 @@ def q_geo_variogram_dir(spark, sf_dir):
     """Directional (anisotropic) semivariogram of DEM elevation — the
     variogram reduction split by offset orientation (EW/NS/NE/NW), same
     single co-partitioned grid join. Oracle: identical tagged offsets."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.variogram_directional(dem)
 
 
@@ -1847,9 +1785,7 @@ def q_geo_stretch(spark, sf_dir):
     cross-scene contrast equalizer): ONE key window for percent_rank,
     extremes from a broadcast key agg. Oracle: identical window and
     stretch."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .select("doc_id", "x", "y", F.col("B8").alias("v")))
     return SP.percentile_stretch(px)
@@ -1862,11 +1798,9 @@ def q_geo_idw(spark, sf_dir):
     shuffles) + ONE map-side-combinable hash agg per point. Oracle:
     brute-force cross join with the identical weight formula — an
     independent candidate algorithm."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y"))
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     stations = dem.select(
         F.col("cell").alias("station_id"),
         ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * CELL_SIZE_M)
@@ -1885,14 +1819,12 @@ def q_geo_gwr(spark, sf_dir):
     then the variogram-shaped constant-offset explode + ONE
     co-partitioned grid join + closed-form weighted-moment readout.
     Oracle: identical literal weight table and moment folds."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     demg = dem.select(
         F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
         F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
         "elevation")
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside"))
     ndvi_cell = (px.groupBy(
         F.floor(F.col("x") / CELL_SIZE_M).cast("long").alias("ix"),
@@ -1908,9 +1840,7 @@ def q_geo_geary(spark, sf_dir):
     pair-difference autocorrelation twin of Moran's I): mean broadcast,
     8× queen explode + ONE grid equi-join, two 1-row reductions.
     Oracle: identical offsets, join, and readout."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     return SP.geary_c(SP.dem_pixels(dem, cell_m=CELL_SIZE_M))
 
 
@@ -1920,11 +1850,9 @@ def q_geo_join_counts(spark, sf_dir):
     green class clump?): 8× queen explode + ONE co-partitioned grid
     join, key-cardinality aggs. Oracle: identical offsets and
     expectation formulas."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside"))
-    scenes = (spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    scenes = (_geo(spark, sf_dir, "scenes")
               .select("doc_id", "target_gsd"))
     mask = (px.join(scenes, "doc_id")
             .select("doc_id",
@@ -1944,9 +1872,7 @@ def q_geo_dbscan(spark, sf_dir):
     min adjacent core label, noise NULL (-1 in this readout so the hash
     never sees a nullable int). Oracle: identical density rule with the
     recursive-closure labeling — an independent algorithm."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4")))
@@ -1967,11 +1893,9 @@ def q_geo_shadow(spark, sf_dir):
     cell) equi-join; receivers include cloud pixels (exclude_sources
     =False) since the synthetic mask is all-or-nothing per scene.
     Oracle: identical displacement and join."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y", "SCL"))
-    scenes = spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    scenes = _geo(spark, sf_dir, "scenes")
     return SP.shadow_project(px, scenes, height_m=100.0,
                              exclude_sources=False)
 
@@ -1990,9 +1914,7 @@ def q_geo_view_circular(spark, sf_dir):
     (the CORRECT mean for angles — arithmetic means break at the 0/360
     wrap): explode the detector array, ONE mergeable hash agg of
     (n, Σcos, Σsin), atan2 readout. Oracle: identical sums."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    scenes = spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    scenes = _geo(spark, sf_dir, "scenes")
     det = scenes.select(
         "doc_id", F.explode("view_azimuth_detectors").alias("az"))
     return CHK.circular_stats(det, "az")
@@ -2002,9 +1924,7 @@ def q_geo_hexbin(spark, sf_dir):
     """Hexagonal NDVI binning per doc (pointy-top axial grid, 40 m
     circumradius, cube rounding): map-only q/r chain + ONE hash agg at
     hex cardinality. Oracle: identical constants and rounding chain."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                       / (F.col("B8") + F.col("B4"))))
@@ -2103,11 +2023,9 @@ def q_geo_landform(spark, sf_dir):
     surface (±1σ sign grid, per-doc standardization): two focal_stats
     passes, one cell equi-join, key-cardinality moments broadcast
     back. Oracle: identical stencils and CASE ladder."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    scenes = (spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    scenes = (_geo(spark, sf_dir, "scenes")
               .select("doc_id", F.col("target_gsd").alias("gsd")))
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .join(F.broadcast(scenes), "doc_id")
           .select("doc_id", "x", "y", "gsd",
@@ -2117,9 +2035,7 @@ def q_geo_landform(spark, sf_dir):
 
 
 def _high_ndvi_cells(spark, sf_dir):
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    return (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    return (_geo(spark, sf_dir, "oracle_pixels")
             .filter("inside")
             .withColumn("ndvi", (F.col("B8") - F.col("B4"))
                         / (F.col("B8") + F.col("B4")))
@@ -2144,11 +2060,9 @@ def q_geo_change(spark, sf_dir):
     stack: lexicographic struct min/max in ONE hash agg (no window, no
     self-join), gain/loss/stable at ±0.05. Oracle: independent
     ROW_NUMBER first/last formulation."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    scenes = (spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    scenes = (_geo(spark, sf_dir, "scenes")
               .select("doc_id", F.col("target_gsd").alias("gsd")))
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .join(F.broadcast(scenes), "doc_id")
           .select("aoi", "x", "y", "gsd",
@@ -2206,11 +2120,9 @@ def q_events_peaks(spark, sf_dir):
 
 
 def _aoi_extreme_raster(spark, sf_dir, which: str):
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    scenes = (spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    scenes = (_geo(spark, sf_dir, "scenes")
               .select("doc_id", F.col("target_gsd").alias("gsd")))
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside")
           .join(F.broadcast(scenes), "doc_id")
           .select("aoi",
@@ -2746,9 +2658,7 @@ def q_geo_hull(spark, sf_dir):
     pixel cloud with shoelace area + perimeter — the AOI footprint
     sanity readout. Hull selection is data-dependent (non-SQL); pytest
     pins golden squares/collinear cases; the gate now compares VALUES against independent ground-truth parquet (groundtruth.py)."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    px = (spark.read.parquet(os.path.join(d, "oracle_pixels.parquet"))
+    px = (_geo(spark, sf_dir, "oracle_pixels")
           .filter("inside").select("doc_id", "x", "y"))
     return SP.convex_hull(px)
 
@@ -2758,9 +2668,7 @@ def q_geo_simplify(spark, sf_dir):
     120-vertex noisy-circle AOIs built per scene — vertex-subset +
     max-deviation guarantees pinned in pytest (the split recursion is
     non-SQL); the gate now compares VALUES against independent ground-truth parquet (groundtruth.py)."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    sc = spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    sc = _geo(spark, sf_dir, "scenes")
     rings = sc.select(
         "doc_id",
         F.expr(
@@ -2813,9 +2721,7 @@ def q_geo_clip(spark, sf_dir):
     areas — map-only Arrow kernel, zero shuffle. The edge-walk is
     non-SQL; pytest pins golden rectangle/triangle/containment cases;
     the gate now compares VALUES against independent ground-truth parquet (groundtruth.py)."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    sc = spark.read.parquet(os.path.join(d, "scenes.parquet"))
+    sc = _geo(spark, sf_dir, "scenes")
     rings = sc.select(
         "doc_id",
         F.expr(
@@ -2873,9 +2779,7 @@ def q_geo_kriging(spark, sf_dir):
     candidates -> unrounded-d2 kNN -> one mapInPandas OK solve per
     point. Per-point solve is non-SQL; pytest pins NumPy parity +
     exact interpolation; the gate now compares VALUES against independent ground-truth parquet (groundtruth.py)."""
-    tag = tag_for_sf_dir(sf_dir)
-    d = ensure_geodata(tag)
-    dem = spark.read.parquet(os.path.join(d, "dem.parquet"))
+    dem = _geo(spark, sf_dir, "dem")
     coords = dem.select(
         "cell", "elevation",
         ((F.col("cell") % 4294967296) * 160.0 + 80.0).alias("cx"),

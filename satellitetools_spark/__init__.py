@@ -12,10 +12,8 @@ per-partition lineage + exact resume).
 
 from .constants import (  # noqa: F401
     BIOPHYS_VARIABLES,
-    S2_BANDS,
     S2_BANDS_10_20,
     S2_FILTER1,
-    S2_FILTER2,
     SCL_CLASSES,
     SNAP_BIO_BANDS,
     SNAP_BIO_RMSE,

@@ -4,31 +4,19 @@ Semantics derived from the public reference `ollinevalainen/satellitetools`
 (see /root/reference/satellitetools/common/sentinel2.py:32-235 and
 biophys/biophys.py:80-96). This module defines the *data model*, not code
 ported from the reference.
+
+Spectral no-data is SQL NULL in this engine (the reference uses NaN; NULL
+is the relational equivalent and keeps Spark/DuckDB aggregate semantics
+identical).
 """
 
 from __future__ import annotations
 
 # Reflectance transport scaling (sentinel2.py:32): stored ints / 10000.
 S2_REFL_TRANS = 10000.0
-# SCL no-data sentinel (sentinel2.py:33). Spectral no-data is SQL NULL in
-# this engine (the reference uses NaN; NULL is the relational equivalent and
-# keeps Spark/DuckDB aggregate semantics identical).
-SCL_NODATA = 99
 
-# GEE-style band names (sentinel2.py:121-137) — the engine's canonical names.
-S2_BANDS = [
-    "B1", "B2", "B3", "B4", "B5", "B6", "B7", "B8", "B8A", "B9",
-    "B11", "B12", "AOT", "WVP", "SCL",
-]
+# GEE-style (canonical) names of the 10 m and 20 m bands (sentinel2.py:121-137).
 S2_BANDS_10_20 = ["B2", "B3", "B4", "B5", "B6", "B7", "B8", "B8A", "B11", "B12"]
-
-# AWS/COG asset names, index-aligned with S2_BANDS (sentinel2.py:171-198).
-S2_BANDS_COG = [
-    "coastal", "blue", "green", "red", "rededge1", "rededge2", "rededge3",
-    "nir", "nir08", "nir09", "swir16", "swir22", "aot", "wvp", "scl",
-]
-S2_BANDS_GEE_TO_AWS = dict(zip(S2_BANDS, S2_BANDS_COG))
-S2_BANDS_AWS_TO_GEE = dict(zip(S2_BANDS_COG, S2_BANDS))
 
 # Native ground-sample distance per band (meters), real Sentinel-2 values.
 S2_BAND_GSD = {
@@ -43,15 +31,10 @@ SCL_CLASSES = [
     "VEGETATION", "NOT_VEGETATED", "WATER", "UNCLASSIFIED",
     "CLOUD_MEDIUM_PROBA", "CLOUD_HIGH_PROBA", "THIN_CIRRUS", "SNOW_ICE",
 ]
-SCL_CLASS_VALUE = {name: i for i, name in enumerate(SCL_CLASSES)}
 
-# Default QI filter sets (sentinel2.py:216-235).
+# Default QI filter set (sentinel2.py:216-235).
 S2_FILTER1 = [
     "NODATA", "SATURATED_DEFECTIVE", "CLOUD_SHADOW", "UNCLASSIFIED",
-    "CLOUD_MEDIUM_PROBA", "CLOUD_HIGH_PROBA", "THIN_CIRRUS", "SNOW_ICE",
-]
-S2_FILTER2 = [
-    "NODATA", "SATURATED_DEFECTIVE", "CLOUD_SHADOW",
     "CLOUD_MEDIUM_PROBA", "CLOUD_HIGH_PROBA", "THIN_CIRRUS", "SNOW_ICE",
 ]
 
@@ -66,8 +49,6 @@ BIOPHYS_COLUMN = {
 SNAP_BIO_RMSE = {
     "FAPAR": 0.05, "FCOVER": 0.04, "LAI": 0.89, "LAI_Cab": 56.0, "LAI_Cw": 0.03,
 }
-
-VEGETATION_INDICES = ["ndvi", "ci_red_edge", "gcc"]
 
 # Confidence-interval z-scores and column suffixes (timeseries.py:266-277).
 CONFIDENCE_LEVELS = {

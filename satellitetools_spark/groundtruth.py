@@ -45,9 +45,6 @@ from satellitetools_spark.datagen import ensure_geodata, geodata_dir
 # bump to invalidate previously generated expected/ directories
 GT_VERSION = 1
 
-GT_NAMES = ("geo_hull", "geo_simplify", "geo_clip", "geo_kriging",
-            "docs_isotonic", "events_dtw", "docs_logistic")
-
 # shared with __spark_entry__ (kept textually identical there; these are
 # the DuckDB renderings used to pull model inputs)
 SCORE_SQL = ("(((doc_id * 1103515245 + 12345) % 1000) / 1000.0 * 0.7"

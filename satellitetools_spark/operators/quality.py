@@ -43,16 +43,25 @@ def filter_by_quality(qi: DataFrame, qi_threshold: float = 0.02) -> DataFrame:
     return qi.filter(non_null).filter(qsum <= F.lit(qi_threshold))
 
 
-def tile_mode(qi_or_dim: DataFrame) -> DataFrame:
-    """P5/A12: most-common tileid per AOI (ties broken by tileid for
-    determinism). Returns (aoi, tileid)."""
-    w = Window.partitionBy("aoi").orderBy(F.desc("cnt"), F.asc("tileid"))
+def keep_mode_tile(df: DataFrame) -> DataFrame:
+    """P5: keep each AOI's rows on its most-common tileid (ties broken by
+    the smallest tileid), as two windows: the per-(aoi, tileid) count,
+    then the first tileid in (count desc, tileid asc) order. A hash
+    partitioning on ``aoi`` satisfies both, so no join is needed."""
+    w_cnt = Window.partitionBy("aoi", "tileid")
+    w_mode = Window.partitionBy("aoi").orderBy(
+        F.desc("_tile_cnt"), F.asc("tileid"))
     return (
-        qi_or_dim.groupBy("aoi", "tileid").count().withColumnRenamed("count", "cnt")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("aoi", "tileid")
+        df.withColumn("_tile_cnt", F.count("*").over(w_cnt))
+        .withColumn("_mode_tile", F.first("tileid").over(w_mode))
+        .filter(F.col("tileid") == F.col("_mode_tile"))
+        .drop("_tile_cnt", "_mode_tile")
     )
+
+
+def tile_mode(qi_or_dim: DataFrame) -> DataFrame:
+    """P5/A12: most-common tileid per AOI. Returns (aoi, tileid)."""
+    return keep_mode_tile(qi_or_dim).select("aoi", "tileid").distinct()
 
 
 def dedup_products(df: DataFrame) -> DataFrame:
@@ -79,18 +88,7 @@ def select_survivors(qi: DataFrame, qi_threshold: float = 0.02) -> DataFrame:
     so Catalyst plans the whole chain with a SINGLE exchange."""
     passing = filter_by_quality(qi, qi_threshold)
     passing = passing.repartition("aoi")
-    deduped = dedup_products(passing)
-    # tile mode via windows: per-(aoi,tile) count, then the first tileid in
-    # (count desc, tileid asc) order — same semantics as tile_mode()
-    w_cnt = Window.partitionBy("aoi", "tileid")
-    w_mode = Window.partitionBy("aoi").orderBy(
-        F.desc("_tile_cnt"), F.asc("tileid"))
-    return (
-        deduped.withColumn("_tile_cnt", F.count("*").over(w_cnt))
-        .withColumn("_mode_tile", F.first("tileid").over(w_mode))
-        .filter(F.col("tileid") == F.col("_mode_tile"))
-        .drop("_tile_cnt", "_mode_tile")
-    )
+    return keep_mode_tile(dedup_products(passing))
 
 
 # --- P9: ragged-data consistency drop (reference gee.py:161-174) ----------

@@ -178,81 +178,65 @@ def zorder_key_sql(x: str, y: str, cell_m: float = CELL_SIZE_M) -> str:
     return f"({spread(cx)} | ({spread(cy)} << 1))"
 
 
-def focal_stats(px: DataFrame, value_col: str, radius: int = 1,
-                doc_col: str = "doc_id") -> DataFrame:
+def _shift(df: DataFrame, sign: int, offsets, tags=(),
+           xy=("ix", "iy")) -> DataFrame:
+    """The grid-neighbour primitive every stencil, lag and bucket probe
+    below is built on: each row of ``df`` once per entry of ``offsets``
+    (a constant fan-out explode, codegen), its grid cell ``xy`` moved to
+    ``(x + sign·dx, y + sign·dy)``. Entries are ``(dx, dy, *values)``;
+    ``values`` become the literal columns named by ``tags``. With
+    ``sign=-1`` a row reaches the cell that reads it at offset +d (a
+    stencil gather); with ``sign=1`` it reaches the cell at +d."""
+    x, y = xy
+    off = F.explode(F.array(*[
+        F.struct(F.lit(o[0]).alias("_dx"), F.lit(o[1]).alias("_dy"),
+                 *[F.lit(v).alias(t) for t, v in zip(tags, o[2:])])
+        for o in offsets])).alias("_o")
+    step = (lambda c, d: c + d) if sign > 0 else (lambda c, d: c - d)
+    rest = [c for c in df.columns if c not in xy]
+    return (df.select(*rest, x, y, off)
+            .select(*rest, step(F.col(x), F.col("_o._dx")).alias(x),
+                    step(F.col(y), F.col("_o._dy")).alias(y),
+                    *[F.col(f"_o.{t}").alias(t) for t in tags]))
+
+
+def _dem_key():
+    """Grid indices (ix, iy) of the DEM's packed cell key ``iy·2³² + ix``."""
+    return (F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long"),
+            F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long"))
+
+
+def _dem_grid(dem: DataFrame) -> DataFrame:
+    """(ix, iy, v) frame of the DEM: decoded key and double elevation."""
+    ix, iy = _dem_key()
+    return dem.select(ix.alias("ix"), iy.alias("iy"),
+                      F.col("elevation").cast("double").alias("v"))
+
+
+def focal_stats(px: DataFrame, value_col: str, radius: int = 1) -> DataFrame:
     """Raster focal statistics (moving-window mean) over the long pixel
     frame — per pixel, the mean of ``value_col`` over its
     ``(2r+1) x (2r+1)`` grid neighborhood within the same scene.
 
-    Grid indices come from the pixel's own coordinates: centers sit at
-    ``(k + 0.5) * gsd``, so ``floor(x / gsd)`` recovers the exact integer
-    column (the half-offset keeps the quotient a representable half-
-    integer — bit-identical across engines). Long-format shape, no dense
-    raster materialization and — crucially — NO self-join:
-
-    1. each pixel EXPLODES its value to the ``(2r+1)^2`` neighbor cells it
-       contributes to (constant fanout, codegen), tagging the ``(0, 0)``
-       offset as the center contribution and null-gating the pixel's own
-       payload columns onto that tagged copy only;
-    2. ONE hash aggregation on (doc, cell) sums neighbor values, counts
-       them, and recovers the center pixel's payload via per-column
-       ``max`` (exact: a raster has one pixel per cell; primitive
-       aggregation buffers keep this a HashAggregate — a struct-valued
-       carry would force SortAggregate). Partial map-side combine
-       applies, so the shuffle carries at most one row per touched cell,
-       not the x9 explode;
-    3. cells with no center contribution are grid positions with no real
-       pixel (explode frontier) and are filtered out.
-
-    A naive formulation joins the aggregate back to the pixel frame — but
-    the pixel frame here is the output of the (expensive) decode, and a
-    self-join makes Spark EXECUTE THE DECODE TWICE (once per subtree).
-    Folding the center row through the aggregation keeps a single scan,
-    a single shuffle, and no join at any input size.
+    A projection over :func:`focal_conv` with one box kernel (all
+    weights 1): ``focal_mean`` is the box sum over ``n_neigh``, so it
+    has focal_conv's shape — one constant-fanout explode, ONE hash
+    aggregation on (doc, cell) that folds the center pixel's payload
+    through, and NO self-join (the decode upstream runs once).
 
     NULL values (nodata) contribute nothing: ``n_neigh`` counts non-null
     neighbors and ``focal_mean`` is their mean (NULL when none); a nodata
-    center pixel still appears in the output (its neighbors' mean). At
-    100 TB the one wide op keys on (scene, cell) — cardinality ~= pixel
-    count, perfectly spreadable, no skew beyond scene size itself.
+    center pixel still appears in the output (its neighbors' mean).
     """
     if radius < 1:
         raise ValueError("focal_stats: radius must be >= 1")
-    ix = F.floor(F.col("x") / F.col("gsd")).cast("long")
-    iy = F.floor(F.col("y") / F.col("gsd")).cast("long")
-    base = px.withColumn("_ix", ix).withColumn("_iy", iy)
-    carry = [c for c in px.columns]
-    offs = [(dx, dy) for dx in range(-radius, radius + 1)
-            for dy in range(-radius, radius + 1)]
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in offs])).alias("_o")
-    center = (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)
-    pay = [c for c in carry if c != doc_col]
-    # center payload as per-column max-of-singleton (exact: one pixel per
-    # cell), NOT max over one struct — primitive aggregation buffers keep
-    # the aggregate a HashAggregate; a struct buffer forces SortAggregate
-    contrib = (base.select(doc_col, "_ix", "_iy",
-                           F.col(value_col).alias("_v"),
-                           *[F.col(c) for c in pay], off)
-                   .select(doc_col,
-                           (F.col("_ix") + F.col("_o.dx")).alias("_ix"),
-                           (F.col("_iy") + F.col("_o.dy")).alias("_iy"),
-                           "_v", center.alias("_isc"),
-                           *[F.when(center, F.col(c)).alias(c)
-                             for c in pay]))
-    agg = (contrib.groupBy(doc_col, "_ix", "_iy")
-                  .agg(F.sum("_v").alias("_s"),
-                       F.count("_v").alias("_n"),
-                       F.max("_isc").alias("_has_ctr"),
-                       *[F.max(c).alias(c) for c in pay]))
-    out = agg.filter(F.col("_has_ctr"))
-    return (out.select(
-        F.col(doc_col), *pay,
-        F.col("_ix").alias("ix"), F.col("_iy").alias("iy"),
-        F.col("_n").cast("int").alias("n_neigh"),
-        F.when(F.col("_n") > 0, F.col("_s") / F.col("_n"))
-         .alias("focal_mean")))
+    span = range(-radius, radius + 1)
+    box = {(dx, dy): 1.0 for dx in span for dy in span}
+    g = focal_conv(px, value_col, {"_box": box})
+    return (g.withColumn("focal_mean",
+                         F.when(F.col("n_neigh") > 0,
+                                F.col("_box") / F.col("n_neigh")))
+             .drop("_box"))
 
 
 def focal_stats_sql(pixels_sql: str, value_sql: str, radius: int = 1,
@@ -362,14 +346,19 @@ def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict]) -> DataF
     ``kernels`` maps output-column name → {(dx, dy): weight}; per pixel
     and kernel, the output is ``Σ w(dx,dy) · v(ix+dx, iy+dy)`` over the
     neighbors present (correlation orientation — flip the kernel for true
-    convolution). Same distributed shape as :func:`focal_stats`: each
-    pixel EXPLODES one weighted contribution per offset in the union
-    stencil (constant fanout), targeting cell ``(ix−dx, iy−dy)`` so the
-    receiving cell's sum realizes the +offset read; ONE hash aggregation
-    sums every kernel simultaneously and folds the center pixel's payload
-    through (no self-join → the decode upstream runs once). N kernels
-    share the explode and the shuffle — adding a kernel adds one sum
-    column, not a pass.
+    convolution). Grid indices come from the pixel's own coordinates:
+    centers sit at ``(k + 0.5) * gsd``, so ``floor(x / gsd)`` recovers
+    the exact integer column (bit-identical across engines). Each pixel
+    EXPLODES one weighted contribution per offset in the union stencil
+    (:func:`_shift`, constant fanout), targeting cell ``(ix−dx, iy−dy)``
+    so the receiving cell's sum realizes the +offset read; ONE hash
+    aggregation sums every kernel simultaneously and folds the center
+    pixel's payload through (no self-join → the decode upstream runs
+    once; joining back to the pixel frame would execute the decode once
+    per join side). Map-side partial aggregation combines the explode to
+    one row per touched cell before the exchange. N kernels share the
+    explode and the shuffle — adding a kernel adds one sum column, not
+    a pass.
 
     Border cells receive partial stencil sums (standard raster edge
     behavior); ``n_neigh`` counts non-null neighbors in the union stencil
@@ -384,25 +373,24 @@ def focal_conv(px: DataFrame, value_col: str, kernels: Dict[str, dict]) -> DataF
                   | {(0, 0)})
     ix = F.floor(F.col("x") / F.col("gsd")).cast("long")
     iy = F.floor(F.col("y") / F.col("gsd")).cast("long")
-    base = px.withColumn("_ix", ix).withColumn("_iy", iy)
     pay = [c for c in px.columns if c != "doc_id"]
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 *[F.lit(float(kernels[n].get((dx, dy), 0.0)))
-                   .alias(f"w_{n}") for n in names])
-        for dx, dy in offs])).alias("_o")
-    center = (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)
-    contrib = (base.select("doc_id", "_ix", "_iy",
-                           F.col(value_col).alias("_v"),
-                           *[F.col(c) for c in pay], off)
-                   .select("doc_id",
-                           (F.col("_ix") - F.col("_o.dx")).alias("_ix"),
-                           (F.col("_iy") - F.col("_o.dy")).alias("_iy"),
-                           "_v", center.alias("_isc"),
-                           *[(F.col(f"_o.w_{n}") * F.col("_v"))
-                             .alias(f"_wv_{n}") for n in names],
-                           *[F.when(center, F.col(c)).alias(c)
-                             for c in pay]))
+    base = px.select("doc_id", ix.alias("_ix"), iy.alias("_iy"),
+                     F.col(value_col).alias("_v"), *pay)
+    # each pixel sends one weighted copy per offset to the cell reading
+    # it there; the (0, 0) copy carries the center payload
+    sent = _shift(base, -1,
+                  [(dx, dy, (dx, dy) == (0, 0),
+                    *[float(kernels[n].get((dx, dy), 0.0)) for n in names])
+                   for dx, dy in offs],
+                  ("_isc", *[f"_w_{n}" for n in names]), ("_ix", "_iy"))
+    contrib = sent.select("doc_id", "_ix", "_iy", "_v", "_isc",
+                          *[(F.col(f"_w_{n}") * F.col("_v"))
+                            .alias(f"_wv_{n}") for n in names],
+                          *[F.when(F.col("_isc"), F.col(c)).alias(c)
+                            for c in pay])
+    # center payload as per-column max-of-singleton (exact: one pixel per
+    # cell), NOT max over one struct — primitive aggregation buffers keep
+    # the aggregate a HashAggregate; a struct buffer forces SortAggregate
     agg = (contrib.groupBy("doc_id", "_ix", "_iy")
                   .agg(F.count("_v").alias("_n"),
                        F.max("_isc").alias("_has_ctr"),
@@ -629,14 +617,7 @@ def hillshade(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     driver-side. Edge cells with partial stencils are dropped
     (``n_neigh == 9``), standard raster edge behavior.
     """
-    px = dem.select(
-        F.lit("dem").alias("doc_id"),
-        ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * cell_m)
-        .alias("x"),
-        ((F.floor(F.col("cell") / F.lit(2 ** 32)) + 0.5) * cell_m)
-        .alias("y"),
-        F.col("elevation"),
-        F.lit(float(cell_m)).alias("gsd"))
+    px = dem_pixels(dem, cell_m)
     g = focal_conv(px, "elevation", {"gx": SOBEL_GX, "gy": SOBEL_GY})
     # single precomputed multiplier, written identically in the oracle —
     # gx*k and (gx*z)/8c differ in the last ulp and round 6 can't always
@@ -851,10 +832,11 @@ D8 = [  # (dx, dy, code, dist)
 def dem_pixels(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     """Long pixel frame (doc_id, x, y, gsd, value) from the packed-cell
     DEM dimension — the same codegen decode :func:`hillshade` uses."""
+    ix, iy = _dem_key()
     return dem.select(
         F.lit("dem").alias("doc_id"),
-        ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * cell_m).alias("x"),
-        ((F.floor(F.col("cell") / F.lit(2 ** 32)) + 0.5) * cell_m).alias("y"),
+        ((ix + 0.5) * cell_m).alias("x"),
+        ((iy + 0.5) * cell_m).alias("y"),
         F.col("elevation"),
         F.lit(float(cell_m)).alias("gsd"))
 
@@ -931,19 +913,9 @@ def flow_direction(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     takes the argmax via struct-max (built only for positive drops, so
     NULL-field ordering can never enter the comparison).
     """
-    base = dem.select(
-        F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
-        F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col("elevation").cast("double").alias("v"))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(c).alias("code"), F.lit(d).alias("dist"))
-        for dx, dy, c, d in D8])).alias("_o")
-    contrib = (base.select("ix", "iy", F.col("v").alias("vs"), off)
-               .select((F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"),
-                       "vs", F.col("_o.code").alias("code"),
-                       F.col("_o.dist").alias("dist")))
+    base = _dem_grid(dem)
+    contrib = _shift(base.select("ix", "iy", F.col("v").alias("vs")), -1,
+                     D8, ("code", "dist"))
     j = contrib.join(base, ["ix", "iy"])
     drop = (F.col("v") - F.col("vs")) / F.col("dist")
     best = F.max(F.when(drop > 0,
@@ -1225,18 +1197,10 @@ def variogram(dem: DataFrame, max_d2: int = 8) -> DataFrame:
     |offsets|·cells rows through one local join, nothing quadratic.
     """
     offs = _variogram_offsets(max_d2)
-    base = dem.select(
-        F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
-        F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col("elevation").cast("double").alias("v"))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(dx * dx + dy * dy).alias("d2"))
-        for dx, dy in offs])).alias("_o")
-    contrib = (base.select("ix", "iy", F.col("v").alias("vs"), off)
-               .select((F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"),
-                       "vs", F.col("_o.d2").alias("d2")))
+    base = _dem_grid(dem)
+    contrib = _shift(base.select("ix", "iy", F.col("v").alias("vs")), -1,
+                     [(dx, dy, dx * dx + dy * dy) for dx, dy in offs],
+                     ("d2",))
     j = contrib.join(base, ["ix", "iy"])
     dd = F.col("v") - F.col("vs")
     return (j.groupBy("d2")
@@ -1380,14 +1344,7 @@ def wetness_index(dem: DataFrame, cell_m: float = CELL_SIZE_M) -> DataFrame:
     pick their floor. Border cells (partial stencil) are dropped as in
     hillshade.
     """
-    px = dem.select(
-        F.lit("dem").alias("doc_id"),
-        ((F.pmod(F.col("cell"), F.lit(2 ** 32)) + 0.5) * cell_m)
-        .alias("x"),
-        ((F.floor(F.col("cell") / F.lit(2 ** 32)) + 0.5) * cell_m)
-        .alias("y"),
-        F.col("elevation"),
-        F.lit(float(cell_m)).alias("gsd"))
+    px = dem_pixels(dem, cell_m)
     g = (focal_conv(px, "elevation", {"gx": SOBEL_GX, "gy": SOBEL_GY})
          .filter(F.col("n_neigh") == 9))
     k = 1.0 / (8.0 * float(cell_m))
@@ -1585,18 +1542,10 @@ def contour_segments(dem: DataFrame, threshold: float) -> DataFrame:
     slots 1 and 2 are a 2-arm union of the same frame, lazily
     checkpointed so the gather runs once.
     """
-    base = dem.select(
-        F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
-        F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col("elevation").cast("double").alias("v"))
+    base = _dem_grid(dem)
     corners = [("v00", 0, 0), ("v10", 1, 0), ("v01", 0, 1), ("v11", 1, 1)]
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(n).alias("tag")) for n, dx, dy in corners])).alias("_o")
-    contrib = (base.select("ix", "iy", "v", off)
-               .select((F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"),
-                       "v", F.col("_o.tag").alias("tag")))
+    contrib = _shift(base, -1, [(dx, dy, n) for n, dx, dy in corners],
+                     ("tag",))
     blocks = (contrib.groupBy("ix", "iy")
               .agg(F.count("*").alias("_nc"),
                    *[F.max(F.when(F.col("tag") == n, F.col("v")))
@@ -1664,10 +1613,6 @@ UNION ALL
 """
 
 
-_NEIGH8 = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-           if (dx, dy) != (0, 0)]
-
-
 def terrain_indices(dem: DataFrame) -> DataFrame:
     """Terrain position / ruggedness indices per DEM cell — the
     morphometry trio every terrain stack derives right after slope:
@@ -1682,18 +1627,11 @@ def terrain_indices(dem: DataFrame) -> DataFrame:
     raster, no window over cell order. At 10¹² cells: 8×cells rows
     through one equi-join, all map-side combinable.
     """
-    base = dem.select(
-        F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
-        F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col("elevation").cast("double").alias("v"))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in _NEIGH8])).alias("_o")
+    base = _dem_grid(dem)
     # each cell SENDS its value to the 8 surrounding cells; the
     # receiver aggregates what arrives
-    sent = (base.select("ix", "iy", F.col("v").alias("vs"), off)
-            .select((F.col("ix") + F.col("_o.dx")).alias("ix"),
-                    (F.col("iy") + F.col("_o.dy")).alias("iy"), "vs"))
+    sent = _shift(base.select("ix", "iy", F.col("v").alias("vs")), 1,
+                  sorted(QUEEN))
     cj = (sent.join(base, ["ix", "iy"])
           .groupBy("ix", "iy")
           .agg(F.count("*").cast("int").alias("n_neighbors"),
@@ -1715,7 +1653,7 @@ def terrain_indices_sql(dem_path: str, value_col: str = "elevation"
                         ) -> str:
     """DuckDB oracle: identical decode, 8-neighbor send, and per-cell
     reductions."""
-    rows = ", ".join(f"({dx}, {dy})" for dx, dy in _NEIGH8)
+    rows = ", ".join(f"({dx}, {dy})" for dx, dy in sorted(QUEEN))
     return f"""
 WITH tib AS (
   SELECT CAST(cell % 4294967296 AS BIGINT) AS ix,
@@ -1773,16 +1711,9 @@ def ripley_k(points: DataFrame) -> DataFrame:
         F.count("*").cast("long").alias("n_points"),
         ((F.max("x") - F.min("x") + 20.0)
          * (F.max("y") - F.min("y") + 20.0)).alias("area"))
-    probe = (base.select(
-        "doc_id", F.col("x").alias("ax"), F.col("y").alias("ay"),
-        "bx", "by",
-        F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
-                                     F.lit(dy).alias("dy"))
-                            for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
-        .alias("_o"))
-        .select("doc_id", "ax", "ay",
-                (F.col("bx") + F.col("_o.dx")).alias("bx"),
-                (F.col("by") + F.col("_o.dy")).alias("by")))
+    probe = _shift(base.select("doc_id", F.col("x").alias("ax"),
+                               F.col("y").alias("ay"), "bx", "by"),
+                   1, sorted(GSTAR), xy=("bx", "by"))
     cand = (probe.join(base, ["doc_id", "bx", "by"])
             .filter((F.col("ax") < F.col("x"))
                     | ((F.col("ax") == F.col("x"))
@@ -1884,16 +1815,9 @@ def clark_evans(points: DataFrame) -> DataFrame:
         F.count("*").cast("long").alias("n_points"),
         ((F.max("x") - F.min("x") + 20.0)
          * (F.max("y") - F.min("y") + 20.0)).alias("area"))
-    probe = (base.select(
-        "doc_id", F.col("x").alias("ax"), F.col("y").alias("ay"),
-        "bx", "by",
-        F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
-                                     F.lit(dy).alias("dy"))
-                            for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
-        .alias("_o"))
-        .select("doc_id", "ax", "ay",
-                (F.col("bx") + F.col("_o.dx")).alias("bx"),
-                (F.col("by") + F.col("_o.dy")).alias("by")))
+    probe = _shift(base.select("doc_id", F.col("x").alias("ax"),
+                               F.col("y").alias("ay"), "bx", "by"),
+                   1, sorted(GSTAR), xy=("bx", "by"))
     nn = (probe.join(base, ["doc_id", "bx", "by"])
           .filter((F.col("ax") != F.col("x"))
                   | (F.col("ay") != F.col("y")))
@@ -2003,17 +1927,11 @@ def kde_grid(points: DataFrame,
                 ((F.col("cy") + 0.5) * cell_m).alias("ey"))
         .withColumn("bx", F.floor(F.col("ex") / cutoff).cast("long"))
         .withColumn("by", F.floor(F.col("ey") / cutoff).cast("long")))
-    sent = (base.select(
+    sent = _shift(base.select(
         "doc_id", "x", "y",
-        F.floor(F.col("x") / cutoff).cast("long").alias("pbx"),
-        F.floor(F.col("y") / cutoff).cast("long").alias("pby"),
-        F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
-                                     F.lit(dy).alias("dy"))
-                            for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
-        .alias("_o"))
-        .select("doc_id", "x", "y",
-                (F.col("pbx") + F.col("_o.dx")).alias("bx"),
-                (F.col("pby") + F.col("_o.dy")).alias("by")))
+        F.floor(F.col("x") / cutoff).cast("long").alias("bx"),
+        F.floor(F.col("y") / cutoff).cast("long").alias("by")),
+        1, sorted(GSTAR), xy=("bx", "by"))
     h2 = bandwidth * bandwidth
     j = (sent.join(cells, ["doc_id", "bx", "by"])
          .withColumn("d2", (F.col("x") - F.col("ex")) ** 2
@@ -2125,16 +2043,10 @@ def knox_test(points: DataFrame) -> DataFrame:
     within = hist.groupBy("aoi").agg(
         F.sum(F.col("c") * (F.col("c") - 1) / 2.0).alias("nt_within"))
     # Ns and X from one bucketed join
-    probe = (base.select(
-        "aoi", F.col("x").alias("ax"), F.col("y").alias("ay"),
-        F.col("td").alias("atd"), "bx", "by",
-        F.explode(F.array(*[F.struct(F.lit(dx).alias("dx"),
-                                     F.lit(dy).alias("dy"))
-                            for dx in (-1, 0, 1) for dy in (-1, 0, 1)]))
-        .alias("_o"))
-        .select("aoi", "ax", "ay", "atd",
-                (F.col("bx") + F.col("_o.dx")).alias("bx"),
-                (F.col("by") + F.col("_o.dy")).alias("by")))
+    probe = _shift(base.select("aoi", F.col("x").alias("ax"),
+                               F.col("y").alias("ay"),
+                               F.col("td").alias("atd"), "bx", "by"),
+                   1, sorted(GSTAR), xy=("bx", "by"))
     lex = ((F.col("ax") < F.col("x"))
            | ((F.col("ax") == F.col("x")) & (F.col("ay") < F.col("y")))
            | ((F.col("ax") == F.col("x")) & (F.col("ay") == F.col("y"))
@@ -2259,14 +2171,8 @@ def region_label(cells: DataFrame,
         neigh = sorted(QUEEN)
     else:
         raise ValueError("region_label: connectivity must be 4 or 8")
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in neigh])).alias("_o")
     for _ in range(64):
-        sent = (lab.select("doc_id", "ix", "iy", "label", off)
-                .select("doc_id", (F.col("ix") + F.col("_o.dx")).alias("ix"),
-                        (F.col("iy") + F.col("_o.dy")).alias("iy"),
-                        "label"))
+        sent = _shift(lab, 1, neigh)
         best = (sent.groupBy("doc_id", "ix", "iy")
                 .agg(F.min("label").alias("_nb")))
         lab = (lab.join(best, ["doc_id", "ix", "iy"], "left")
@@ -2345,20 +2251,10 @@ def variogram_directional(dem: DataFrame) -> DataFrame:
             return "NS"
         return "NE" if dx * dy > 0 else "NW"
 
-    base = dem.select(
-        F.pmod(F.col("cell"), F.lit(2 ** 32)).cast("long").alias("ix"),
-        F.floor(F.col("cell") / F.lit(2 ** 32)).cast("long").alias("iy"),
-        F.col("elevation").cast("double").alias("v"))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(dx * dx + dy * dy).alias("d2"),
-                 F.lit(_dir(dx, dy)).alias("dir"))
-        for dx, dy in offs])).alias("_o")
-    contrib = (base.select("ix", "iy", F.col("v").alias("vs"), off)
-               .select((F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"),
-                       "vs", F.col("_o.d2").alias("d2"),
-                       F.col("_o.dir").alias("direction")))
+    base = _dem_grid(dem)
+    contrib = _shift(base.select("ix", "iy", F.col("v").alias("vs")), -1,
+                     [(dx, dy, dx * dx + dy * dy, _dir(dx, dy))
+                      for dx, dy in offs], ("d2", "direction"))
     j = contrib.join(base, ["ix", "iy"])
     dd = F.col("v") - F.col("vs")
     return (j.groupBy("direction", "d2")
@@ -2556,17 +2452,11 @@ def local_regression(cells: DataFrame, x_col: str, y_col: str,
         F.col("iy").cast("long").alias("iy"),
         F.col(x_col).cast("double").alias("xv"),
         F.col(y_col).cast("double").alias("yv"))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(math.exp(-(dx * dx + dy * dy)
-                                / (2.0 * 2.0 * 2.0)))  # 2·bw²
-                 .alias("w"))
-        for dx, dy in offs])).alias("_o")
     # sender (ix,iy) contributes its (xv,yv) to center (ix-dx, iy-dy)
-    contrib = (base.select("ix", "iy", "xv", "yv", off)
-               .select((F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"),
-                       "xv", "yv", F.col("_o.w").alias("w")))
+    contrib = _shift(base, -1,
+                     [(dx, dy, math.exp(-(dx * dx + dy * dy)
+                                        / (2.0 * 2.0 * 2.0)))  # 2·bw²
+                      for dx, dy in offs], ("w",))
     centers = base.select("ix", "iy")
     j = contrib.join(centers, ["ix", "iy"])
     w, xv, yv = F.col("w"), F.col("xv"), F.col("yv")
@@ -2650,12 +2540,8 @@ def geary_c(px: DataFrame) -> DataFrame:
                     .alias("iy"),
                     (F.col("elevation").cast("double") - F.col("_mu"))
                     .alias("z")))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in sorted(QUEEN)])).alias("_o")
-    contrib = (base.select("d", "ix", "iy", F.col("z").alias("zs"), off)
-               .select("d", (F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"), "zs"))
+    contrib = _shift(base.select("d", "ix", "iy", F.col("z").alias("zs")),
+                     -1, sorted(QUEEN))
     dz = F.col("z") - F.col("zs")
     pairs = (contrib.join(base, ["d", "ix", "iy"])
              .agg(F.count("*").cast("long").alias("w_links"),
@@ -2720,12 +2606,8 @@ def join_counts(cells: DataFrame, bool_col: str) -> DataFrame:
         *keys, F.col("ix").cast("long").alias("ix"),
         F.col("iy").cast("long").alias("iy"),
         F.col(bool_col).cast("boolean").cast("int").alias("b"))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in sorted(QUEEN)])).alias("_o")
-    contrib = (base.select(*keys, "ix", "iy", F.col("b").alias("bs"), off)
-               .select(*keys, (F.col("ix") - F.col("_o.dx")).alias("ix"),
-                       (F.col("iy") - F.col("_o.dy")).alias("iy"), "bs"))
+    contrib = _shift(base.select(*keys, "ix", "iy", F.col("b").alias("bs")),
+                     -1, sorted(QUEEN))
     pairs = (contrib.join(base, keys + ["ix", "iy"])
              .groupBy(*keys)
              .agg(F.count("*").cast("long").alias("w_links"),
@@ -2825,12 +2707,7 @@ def grid_dbscan(cells: DataFrame,
                          F.col("iy").cast("long").alias("iy"))
             .dropDuplicates()
             .localCheckpoint(eager=False))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in sorted(QUEEN) + [(0, 0)]])).alias("_o")
-    sent = (base.select(*keys, "ix", "iy", off)
-            .select(*keys, (F.col("ix") - F.col("_o.dx")).alias("ix"),
-                    (F.col("iy") - F.col("_o.dy")).alias("iy")))
+    sent = _shift(base, -1, sorted(GSTAR))
     dens = (sent.join(base, keys + ["ix", "iy"])
             .groupBy(*keys, "ix", "iy")
             .agg(F.count("*").cast("int").alias("n_in_neigh"))
@@ -2842,12 +2719,7 @@ def grid_dbscan(cells: DataFrame,
                         F.lit("core").alias("role")))
     # borders: non-core foreground adjacent to >=1 core, min label wins
     noncore = dens.filter(F.col("n_in_neigh") < min_pts)
-    off2 = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in sorted(QUEEN)])).alias("_o")
-    csent = (lab.select(*keys, "ix", "iy", "label", off2)
-             .select(*keys, (F.col("ix") + F.col("_o.dx")).alias("ix"),
-                     (F.col("iy") + F.col("_o.dy")).alias("iy"), "label"))
+    csent = _shift(lab.select(*keys, "ix", "iy", "label"), 1, sorted(QUEEN))
     bl = (csent.groupBy(*keys, "ix", "iy")
           .agg(F.min("label").alias("_bl")))
     rest = (noncore.join(bl, keys + ["ix", "iy"], "left")
@@ -3112,11 +2984,11 @@ def tpi_landform(px: DataFrame, r_large: int = 3) -> DataFrame:
     base = px.select(*keys, "x", "y", "gsd",
                      F.col("v").alias("_z"))
     ns, nl = 9, (2 * r_large + 1) ** 2
-    fs = (focal_stats(base, "_z", radius=1, doc_col=keys[0])
+    fs = (focal_stats(base, "_z", radius=1)
           .filter(F.col("n_neigh") == ns)
           .select(*keys, "ix", "iy", "_z",
                   F.col("focal_mean").alias("_ms")))
-    fl = (focal_stats(base, "_z", radius=r_large, doc_col=keys[0])
+    fl = (focal_stats(base, "_z", radius=r_large)
           .filter(F.col("n_neigh") == nl)
           .select(*keys, "ix", "iy", F.col("focal_mean").alias("_ml")))
     j = (fs.join(fl, [*keys, "ix", "iy"])
@@ -3226,14 +3098,8 @@ def patch_stats(labeled: DataFrame) -> DataFrame:
              .agg(F.count("*").cast("long").alias("n_patches"),
                   F.sum("_sz").cast("long").alias("total_cells"),
                   F.max("_sz").cast("long").alias("max_patch")))
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in _NEIGH4])).alias("_o")
-    sent = (base.select(*keys, "ix", "iy", "label", off)
-            .select(*keys,
-                    (F.col("ix") + F.col("_o.dx")).alias("ix"),
-                    (F.col("iy") + F.col("_o.dy")).alias("iy"),
-                    F.col("label").alias("_from")))
+    sent = _shift(base.select(*keys, "ix", "iy",
+                              F.col("label").alias("_from")), 1, _NEIGH4)
     same = (sent.join(base, [*keys, "ix", "iy"])
             .filter(F.col("_from") == F.col("label"))
             .groupBy(*keys)
@@ -3387,15 +3253,9 @@ def raster_xcorr(pxa: DataFrame, pxb: DataFrame,
     m = int(max_offset)
     offs = [(dx, dy) for dx in range(-m, m + 1)
             for dy in range(-m, m + 1)]
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in offs])).alias("_o")
-    a = (pxa.select(*keys, "ix", "iy",
-                    F.col("v").cast("double").alias("_a"), off)
-         .select(*keys, F.col("_o.dx").alias("dx"),
-                 F.col("_o.dy").alias("dy"),
-                 (F.col("ix") + F.col("_o.dx")).alias("ix"),
-                 (F.col("iy") + F.col("_o.dy")).alias("iy"), "_a"))
+    a = _shift(pxa.select(*keys, "ix", "iy",
+                          F.col("v").cast("double").alias("_a")),
+               1, [(dx, dy, dx, dy) for dx, dy in offs], ("dx", "dy"))
     b = pxb.select(*keys, "ix", "iy",
                    F.col("v").cast("double").alias("_b"))
     j = a.join(b, [*keys, "ix", "iy"])

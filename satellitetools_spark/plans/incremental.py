@@ -31,9 +31,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATE_COLS = ("n", "s", "ss", "mn", "mx")
-
-
 def partial_stats(df: DataFrame, keys: Sequence[str],
                   value_col: str) -> DataFrame:
     """Mergeable per-key state from one increment: one hash agg."""

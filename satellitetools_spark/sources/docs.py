@@ -16,13 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-SPAN_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("offset", T.IntegerType()),
-]))
-
 # scene-metadata text span (reference Sentinel2Metadata, sentinel2.py:306-379)
 SCENE_META_SCHEMA = T.StructType([
     T.StructField("type", T.StringType()),

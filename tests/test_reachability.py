@@ -1,7 +1,8 @@
-"""Every library module and module-level function is reached from a
-program entry point, not only from tests; every optional parameter of a
-library function is passed a value other than its default by some call;
-every module-level import is used.
+"""Every library module, module-level function and module-level constant
+is reached from a program entry point, not only from tests; every
+optional parameter of a library function is passed a value other than
+its default by some call; every module-level import is used; the grid
+operators build their offset explodes through one helper.
 
 The checks parse source with ``ast`` and import nothing, so they run in
 a few seconds. Program roots are the driver contract
@@ -131,18 +132,35 @@ def _names_used(*nodes) -> set:
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
-def unreached_functions(library: dict | None = None,
-                        roots: list | None = None) -> set:
-    """``module:name`` of every module-level ``def``/``class`` of a
-    library file outside ``EXEMPT_FILES`` that no program root reaches.
+def _constant_names(node: ast.stmt) -> list:
+    """Names a module-level ``NAME = value`` binds (dunders excepted)."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    if not all(isinstance(t, ast.Name) for t in targets):
+        return []
+    return [t.id for t in targets
+            if not (t.id.startswith("__") and t.id.endswith("__"))]
+
+
+def unreached_definitions(library: dict | None = None,
+                          roots: list | None = None) -> dict:
+    """``module:name`` -> kind (``"function"`` or ``"constant"``) of every
+    module-level ``def``/``class`` and ``NAME = value`` of a library file
+    that no program root reaches.
 
     ``library`` maps a module name to its parsed source and ``roots``
     lists the parsed program roots; both default to this repository.
     Reach is by name: a root's names, and the names in library
-    module-level statements other than ``def``/``class`` and imports,
-    reach every definition of that name, whose source then reaches more
-    names in turn. A library import alone reaches nothing, so a package
-    ``__init__`` re-export does not keep a test-only function alive."""
+    module-level statements other than definitions and imports, reach
+    every definition of that name, whose source (a constant's value)
+    then reaches more names in turn. A library import alone reaches
+    nothing, so a package ``__init__`` re-export does not keep a
+    test-only function or constant alive. Functions of ``EXEMPT_FILES``
+    are not reported; they keep alive the constants they read."""
     if library is None:
         library = {}
         for path in sorted((REPO / PKG).rglob("*.py")):
@@ -150,23 +168,44 @@ def unreached_functions(library: dict | None = None,
             library[rel[:-len(".py")].replace("/", ".")] = _parse(path)
     if roots is None:
         roots = [_parse(p) for p in _program_roots()]
+    exempt = {f[:-len(".py")].replace("/", ".") for f in EXEMPT_FILES}
     defs: dict = {}
     todo = _names_used(*roots)
+    const_todo = set()
     for mod, tree in library.items():
         for node in tree.body:
             if isinstance(node, _DEFS):
-                defs.setdefault(node.name, []).append((f"{mod}:{node.name}", node))
+                defs.setdefault(node.name, []).append(
+                    (f"{mod}:{node.name}", "function", node))
+                if mod in exempt:
+                    const_todo |= _names_used(node)
+            elif _constant_names(node):
+                for name in _constant_names(node):
+                    defs.setdefault(name, []).append(
+                        (f"{mod}:{name}", "constant", node.value))
             elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                 todo |= _names_used(node)
-    seen = set()
-    while todo:
-        name = todo.pop()
-        seen.add(name)
-        for _, node in defs.get(name, []):
-            todo |= _names_used(node) - seen
-    exempt = {f[:-len(".py")].replace("/", ".") for f in EXEMPT_FILES}
-    return {key for name, found in defs.items() if name not in seen
-            for key, _ in found if key.partition(":")[0] not in exempt}
+
+    def walk(todo: set) -> set:
+        seen = set()
+        while todo:
+            name = todo.pop()
+            seen.add(name)
+            for _, _, node in defs.get(name, []):
+                todo |= _names_used(node) - seen
+        return seen
+
+    seen = walk(set(todo))
+    seen_const = walk(todo | const_todo)
+    return {key: kind for name, found in defs.items() for key, kind, _ in found
+            if name not in (seen_const if kind == "constant" else seen)
+            and not (kind == "function" and key.partition(":")[0] in exempt)}
+
+
+def unreached_functions(library: dict | None = None,
+                        roots: list | None = None) -> set:
+    return {k for k, kind in unreached_definitions(library, roots).items()
+            if kind == "function"}
 
 
 def test_every_library_function_is_reached_from_a_program_root():
@@ -174,6 +213,16 @@ def test_every_library_function_is_reached_from_a_program_root():
     assert not unreached, (
         "library functions and classes that no entry point, script or "
         f"benchmark reaches (only tests do): {sorted(unreached)}")
+
+
+def test_every_library_constant_is_read_from_a_program_root():
+    """A module-level constant that only tests, a re-export or another
+    unread constant read is dead data: delete it."""
+    unread = {k for k, kind in unreached_definitions().items()
+              if kind == "constant"}
+    assert not unread, (
+        "library constants that no entry point, script or benchmark "
+        f"reads (only tests do): {sorted(unread)}")
 
 
 def _module_constants(tree: ast.Module) -> dict:
@@ -339,3 +388,32 @@ def test_every_module_level_import_is_used():
     unused = {f"{p.relative_to(REPO).as_posix()}:{name}"
               for p in _import_guard_files() for name in unused_imports(_parse(p))}
     assert not unused, f"module-level imports that the file never uses: {sorted(unused)}"
+
+
+# ``cell_pyramid`` explodes dyadic level tiers, not grid offsets.
+OFFSET_EXPLODE_OWNERS = {"_shift", "cell_pyramid"}
+
+
+def offset_explode_builders(tree: ast.Module) -> set:
+    """Module-level functions of ``tree`` that build an
+    ``F.explode(F.array(F.struct(...)))`` table."""
+    def is_call(node, name):
+        return (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == name)
+
+    def builds(node):
+        return (is_call(node, "explode") and node.args and is_call(node.args[0], "array")
+                and any(is_call(a, "struct") for n in node.args[0].args
+                        for a in ast.walk(n)))
+
+    return {fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
+            and any(builds(n) for n in ast.walk(fn))}
+
+
+def test_grid_offsets_go_through_one_helper():
+    """Every grid-offset explode in the spatial operators goes through
+    ``spatial._shift``; a hand-written offset table is a second copy of
+    the grid-neighbour primitive."""
+    tree = _parse(REPO / PKG / "operators" / "spatial.py")
+    extra = offset_explode_builders(tree) - OFFSET_EXPLODE_OWNERS
+    assert not extra, f"functions with their own offset explode: {sorted(extra)}"
